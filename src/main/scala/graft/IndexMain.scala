@@ -11,18 +11,13 @@ import graft.ext.{AnnIndex, GraphIndex, Similarity}
   * manifest, and prove the round trip by re-loading the artifact and
   * serving a probe search from it.
   *
-  * Usage: `IndexMain [--opq] <embeddingsDir> <indexDir> [numSub]`
-  *        (`--opq`, r15/E319: learn the OPQ rotation at build, persist
-  *        it in the artifact, serve queries through it)
+  * Usage: `IndexMain <embeddingsDir> <indexDir> [numSub]`
   *    or: `IndexMain --graph <embeddingsDir> <indexDir> [graphK] [ef]`
   *        (E291/E304: build the persisted GRAPH index — vectors,
-  *        binary seed signatures, kNN edges — and probe-search it.
-  *        r16, VERDICT r15 #4: the probe serve is the FLAT-SEEDED
-  *        ef-bounded beam — SCALING.md's sweep measured it as the
-  *        recall/volume frontier (0.38@341 vs layered+beam 0.26@324);
-  *        `ef` is exposed as the fourth arg, default
-  *        [[DefaultBeamEf]]. Layered/hnsw serves remain available as
-  *        named GraphIndex variants with their recorded verdicts)
+  *        binary seed signatures, kNN edges — and probe-search it
+  *        through the FLAT-SEEDED ef-bounded beam, SCALING.md's
+  *        measured recall/volume frontier; `ef` is the fourth arg,
+  *        default [[DefaultBeamEf]])
   *    or: `IndexMain --tx <fixtureDir> <tableDir>`
   *        (E314/E317 service surface: commit the documents table,
   *        commit a filtered rewrite, read back snapshot + version-0
@@ -49,13 +44,9 @@ object IndexMain {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--graph")) return graphMain(args.drop(1))
     if (args.headOption.contains("--tx")) return txMain(args.drop(1))
-    // --opq (r15, E319): train + persist the learned OPQ rotation in
-    // the artifact; queries rotate through it automatically at serve
-    val opq = args.headOption.contains("--opq")
-    val rest = if (opq) args.drop(1) else args
-    require(rest.length >= 2,
-      "usage: IndexMain [--opq] <embeddingsDir> <indexDir> [numSub]")
-    val numSub = if (rest.length > 2) rest(2).toInt else DefaultSubspaces
+    require(args.length >= 2,
+      "usage: IndexMain <embeddingsDir> <indexDir> [numSub]")
+    val numSub = if (args.length > 2) args(2).toInt else DefaultSubspaces
     val spark = SparkSession.builder()
       .master("local[32]")
       .appName("graft-index")
@@ -65,31 +56,30 @@ object IndexMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val (nVectors, rotated, served) =
-      runPq(spark, rest(0), rest(1), numSub, opq)
-    val idx = AnnIndex.load(spark, rest(1))
-    println(s"""{"metric":"index","n_vectors":$nVectors,"n_cells":${idx.centroids.count()},"n_codebook_rows":${idx.codebooks.count()},"num_sub":${idx.numSub},"sub_dim":${idx.subDim},"rotated":$rotated,"probe_rows":$served}""")
+    val (nVectors, served) = runPq(spark, args(0), args(1), numSub)
+    val idx = AnnIndex.load(spark, args(1))
+    println(s"""{"metric":"index","n_vectors":$nVectors,"n_cells":${idx.centroids.count()},"n_codebook_rows":${idx.codebooks.count()},"num_sub":${idx.numSub},"sub_dim":${idx.subDim},"probe_rows":$served}""")
     spark.stop()
   }
 
   /** The PQ build + read-back-probe flow behind the default mode —
     * extracted so the spec drives it on the shared session. Returns
-    * (n_vectors indexed, rotation persisted?, probe rows served).
+    * (n_vectors indexed, probe rows served).
     */
   private[graft] def runPq(spark: SparkSession, embDir: String,
-      indexDir: String, numSub: Int, opq: Boolean): (Long, Boolean, Long) = {
+      indexDir: String, numSub: Int): (Long, Long) = {
     val vecs = Tables.embeddings(spark, embDir).select(
       col("vec_id").as("id"), col("label").as("part"),
       Similarity.toDouble(col("embedding")).as("vec"))
     val dim = vecs.select(size(col("vec"))).head().getInt(0)
     require(dim % numSub == 0, s"dim $dim not divisible by numSub $numSub")
-    AnnIndex.build(vecs, numSub, dim / numSub, indexDir, opq = opq)
+    AnnIndex.build(vecs, numSub, dim / numSub, indexDir)
     // read-back proof: load (manifest re-asserted) and serve one probe
     // query from the persisted artifact
     val idx = AnnIndex.load(spark, indexDir)
     val q = vecs.limit(1).select(col("id").as("qid"), col("vec").as("qv"))
     val served = AnnIndex.searchTopK(spark, indexDir, q, 3, 2).count()
-    (idx.codes.count(), idx.rotation.isDefined, served)
+    (idx.codes.count(), served)
   }
 
   /** `--graph` mode: build + read-back-probe the persisted graph
@@ -202,9 +192,8 @@ object IndexMain {
   /** The `--graph` flow against a caller-owned session (spec-testable;
     * the main wrapper owns session lifecycle). Returns
     * (n_vectors, n_edges, probe_rows). The read-back probe serves
-    * through the FLAT-SEEDED BEAM (r16: callers are routed to the
-    * measured recall/volume frontier by default; layered/hnsw stay
-    * available as named variants).
+    * through the FLAT-SEEDED BEAM, the measured recall/volume
+    * frontier.
     */
   def runGraph(spark: SparkSession, embDir: String, indexDir: String,
       graphK: Int, ef: Int = DefaultBeamEf): (Long, Long, Long) = {

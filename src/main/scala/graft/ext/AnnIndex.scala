@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   *                                                    by coarse cell
   *   tombstones.parquet (id)                        — deleted, not yet
   *                                                    compacted away
+  *   cellstats.parquet  (cell, n)                   — per-cell physical
+  *                                                    population
   *   manifest.parquet   (1 row: format/geometry/counts)
   *
   * The cell-partitioned code layout is the on-disk form of IVF's
@@ -57,37 +59,21 @@ object AnnIndex {
     * `codes.parquet` by `cell` and moves count verification off the
     * per-search path; v4 adds `cellstats.parquet` (cell, n) so the
     * ADAPTIVE probe rule reads build-time population STATISTICS
-    * instead of aggregating the whole code table per search; v5 (r15,
-    * VERDICT r14 #1) adds the OPTIONAL learned OPQ rotation
-    * (`rotation.parquet` + `n_rot_rows`): when present, base vectors
-    * were rotated BEFORE coarse training and PQ encoding, and every
-    * serve entry rotates its query vectors with the SAME persisted
-    * matrix — the Ge 2013 deployment shape, rotation owned by the
-    * index artifact. Each bump keeps an older reader from mis-reading
-    * the layout.
+    * instead of aggregating the whole code table per search; v5 added
+    * an optional learned OPQ rotation (`rotation.parquet`,
+    * `n_rot_rows`); v6 removes it again — measured below raw PQ recall
+    * on the served artifact (SCALING.md, "Round-15 OPQ-composed
+    * serving"). The v6 bump matters most there: a rotated v5
+    * artifact served with unrotated queries would lose recall
+    * silently, so [[load]] refuses it instead. Each bump keeps a
+    * reader from mis-reading another version's layout.
     */
-  val FormatVersion = 5
-
-  /** The persisted OPQ rotation: rotate as R·(v − means). 64×64 at
-    * the fixture geometry — driver-collected once per session at
-    * load, broadcast into the query-rotation UDF.
-    */
-  final case class Rotation(means: Array[Double], r: Array[Array[Double]])
+  val FormatVersion = 6
 
   /** Loaded, validated artifact handles. */
   final case class Index(numSub: Int, subDim: Int,
       centroids: DataFrame, codebooks: DataFrame, codes: DataFrame,
-      tombstones: DataFrame, cellStats: DataFrame,
-      rotation: Option[Rotation]) {
-    /** Queries enter the index's coordinate system: identity on an
-      * unrotated artifact, the persisted R·(q − means) on a rotated
-      * one. EVERY serve entry routes its query vectors through this
-      * — the one place the rotated/raw decision lives at search time.
-      */
-    def rotateQueries(q: DataFrame, vecCol: String): DataFrame =
-      rotation.map(rot => Opq.rotateCol(q, vecCol, rot.means, rot.r))
-        .getOrElse(q)
-
+      tombstones: DataFrame, cellStats: DataFrame) {
     /** Codes visible to a search: physical rows minus tombstoned ids
       * (the Lucene/FAISS soft-delete read path; [[compact]] makes it
       * physical).
@@ -141,22 +127,14 @@ object AnnIndex {
     val nVecs = spark.read.parquet(s"$dir/codes.parquet").count()
     val nTomb = spark.read.parquet(s"$dir/tombstones.parquet").count()
     val nStat = spark.read.parquet(s"$dir/cellstats.parquet").count()
-    // v5: the rotation is optional; its recorded count (dim rows + the
-    // means row, or 0) is re-read from disk like every other table
-    val rotPath = new org.apache.hadoop.fs.Path(s"$dir/rotation.parquet")
-    val nRot =
-      if (rotPath.getFileSystem(spark.sessionState.newHadoopConf())
-          .exists(rotPath))
-        spark.read.parquet(s"$dir/rotation.parquet").count()
-      else 0L
     import spark.implicits._
     Seq((FormatVersion, numSub, subDim, numSub * subDim,
         Similarity.PqCodewords, Similarity.PqTrainIters,
-        nCells, nBook, nVecs, nTomb, nStat, nRot))
+        nCells, nBook, nVecs, nTomb, nStat))
       .toDF("format_version", "num_sub", "sub_dim", "dim",
         "num_codewords", "train_iters",
         "n_cells", "n_codebook_rows", "n_vectors", "n_tombstones",
-        "n_stat_rows", "n_rot_rows")
+        "n_stat_rows")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/manifest.parquet")
     invalidate(dir)
@@ -179,44 +157,13 @@ object AnnIndex {
 
   /** Build and persist the index for `vecs (id, part, vec)` under
     * `outDir` (`part` seeds the coarse quantizer, the repo-wide IVF
-    * convention). With `opq = true` (r15, VERDICT r14 #1) the learned
-    * OPQ rotation (Ge 2013 parametric: Jacobi PCA + eigenvalue
-    * allocation, [[Opq.rotationFor]]) is trained on the corpus,
-    * PERSISTED into the artifact (`rotation.parquet`: rows (j, rvec)
-    * = Rᵀ's columns as R's rows, plus the j = −1 means row), and the
-    * base vectors are rotated BEFORE coarse training and PQ encoding
-    * — so the measured recall lift of the rotated codes (OpqSpec)
-    * rides the served artifact instead of staying shelf-ware. Every
-    * serve entry rotates queries with the same stored matrix
-    * ([[Index.rotateQueries]]); exact-L2 truth is unchanged because
-    * the rotation is orthogonal.
+    * convention).
     */
   def build(vecs: DataFrame, numSub: Int, subDim: Int,
-      outDir: String, opq: Boolean = false): Unit = {
+      outDir: String): Unit = {
     val spark = vecs.sparkSession
-    val base =
-      if (!opq) {
-        // r16 (ADVICE): a re-build WITHOUT opq over a dir previously
-        // built WITH it must drop the stale rotation — writeManifest
-        // re-counts whatever rotation.parquet it finds on disk and
-        // load() would re-attach it, silently rotating queries against
-        // codes built from unrotated vectors.
-        val rot = new org.apache.hadoop.fs.Path(s"$outDir/rotation.parquet")
-        val f = rot.getFileSystem(spark.sessionState.newHadoopConf())
-        if (f.exists(rot)) f.delete(rot, true)
-        vecs
-      } else {
-        val dim = numSub * subDim
-        val (means, r) = Opq.rotationFor(vecs, dim, numSub, subDim)
-        import spark.implicits._
-        val rows = (-1, means.toArray.toSeq) +:
-          r.toSeq.zipWithIndex.map { case (row, j) => (j, row.toSeq) }
-        rows.toDF("j", "rvec").coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/rotation.parquet")
-        Opq.rotate(vecs, means, r)
-      }
     val (cvecs, cw, codes) = Similarity.residualIndexBuild(
-      base, numSub, subDim)
+      vecs, numSub, subDim)
     cvecs.write.mode("overwrite").parquet(s"$outDir/centroids.parquet")
     cw.write.mode("overwrite").parquet(s"$outDir/codebooks.parquet")
     codes.write.mode("overwrite").partitionBy("cell")
@@ -261,20 +208,7 @@ object AnnIndex {
     check("codes", codes, ml("n_vectors"))
     check("tombstones", tomb, ml("n_tombstones"))
     check("cellstats", stats, ml("n_stat_rows"))
-    val rotation = if (ml("n_rot_rows") == 0L) None else {
-      val dim = mi("dim")
-      require(ml("n_rot_rows") == dim + 1L,
-        s"rotation table has ${ml("n_rot_rows")} rows, geometry wants " +
-          s"${dim + 1} (dim rows + the means row)")
-      val rows = spark.read.parquet(s"$dir/rotation.parquet")
-        .collect() // dim+1 rows — bounded by geometry, once per session
-        .map(r => r.getAs[Int]("j") ->
-          r.getAs[Seq[Double]]("rvec").toArray).toMap
-      Some(Rotation(rows(-1),
-        Array.tabulate(dim)(j => rows(j))))
-    }
-    Index(mi("num_sub"), mi("sub_dim"), cvecs, cw, codes, tomb, stats,
-      rotation)
+    Index(mi("num_sub"), mi("sub_dim"), cvecs, cw, codes, tomb, stats)
   }
 
   /** Incrementally APPEND `newVecs (id, vec)` to a persisted index
@@ -305,12 +239,7 @@ object AnnIndex {
     require(dup == 0,
       s"append batch shares $dup ids with the indexed set — " +
         "append is add, not upsert")
-    // a rotated artifact encodes its append batch in the SAME rotated
-    // coordinate system the base corpus was encoded in
-    val batch = idx.rotation
-      .map(rot => Opq.rotateCol(newVecs, "vec", rot.means, rot.r))
-      .getOrElse(newVecs)
-    Similarity.residualEncodeFrozen(batch, idx.centroids,
+    Similarity.residualEncodeFrozen(newVecs, idx.centroids,
         idx.codebooks, idx.numSub, idx.subDim)
       .write.mode("append").partitionBy("cell")
       .parquet(s"$dir/codes.parquet")
@@ -387,14 +316,13 @@ object AnnIndex {
   def searchTopK(spark: SparkSession, dir: String, q: DataFrame,
       k: Int, probe: Int): DataFrame = {
     val idx = loadCached(spark, dir)
-    val qr = idx.rotateQueries(q, "qv") // rotated artifact ⇒ rotated queries
     // the probe picker only consults queries × centroids (tiny);
     // checkpoint so resolving the pruned cell set does not re-plan it
     val probes = Similarity.fixedProbePicker(probe)(
-        qr, idx.centroids,
+        q, idx.centroids,
         idx.codes.select(col("id").as("aid"), col("cell")))
       .localCheckpoint(false)
-    servePruned(idx, qr, k, probes)
+    servePruned(idx, q, k, probes)
   }
 
   /** Serve top-k with the ADAPTIVE probe rule (E258's picker over the
@@ -421,12 +349,11 @@ object AnnIndex {
     // physical-stats contract, see writeCellStats)
     val n = idx.cellStats.agg(sum(col("n"))).head().getLong(0)
     val target = (targetNum * n + targetDen - 1) / targetDen
-    val qr = idx.rotateQueries(q, "qv")
     val probes = Similarity.adaptiveProbePickerWithPop(target,
         idx.cellStats.select(col("cell"), col("n").as("np")))(
-        qr, idx.centroids)
+        q, idx.centroids)
       .localCheckpoint(false)
-    servePruned(idx, qr, k, probes)
+    servePruned(idx, q, k, probes)
   }
 
   /** Shared pruned-serve tail: resolve the probed cell set (bounded

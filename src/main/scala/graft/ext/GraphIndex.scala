@@ -20,6 +20,8 @@ import org.apache.spark.sql.functions._
   *   edges.parquet    (src, dst / bucket=B/)     — kNN out-edges,
   *                                                 HIVE-PARTITIONED by
   *                                                 src bucket
+  *   tombstones.parquet (id)                     — deleted, not yet
+  *                                                 compacted away
   *   manifest.parquet (1 row: format/geometry/counts)
   *
   * The bucket-partitioned edge layout (v3, VERDICT r13 #1) prices the
@@ -58,23 +60,14 @@ object GraphIndex {
   /** v2 added the tombstone table (E310); v3 hive-partitions
     * `edges.parquet` by `bucket = pmod(src, edge_buckets)` (recorded
     * in the manifest) and moves count verification off the per-search
-    * path; v4 (r15, E321) adds the HIERARCHICAL ENTRY LAYER — the
-    * HNSW-style upper layer: a deterministic node sample
-    * (`id % layer_mod = 0`, recorded in the manifest) with its own
-    * kNN edge table (`layeredges.parquet`, bucket-partitioned like
-    * level 0). [[searchTopKLayered]] seeds on the LAYER's signatures,
-    * walks the small upper graph, descends through the best visited
-    * layer nodes into the level-0 walk — entry points near the query
-    * at a fraction of the full seed scan. Each bump keeps an older
-    * reader from mis-reading the layout.
+    * path; v4 added an HNSW-style entry layer (`layeredges.parquet`,
+    * `layer_mod`, `n_layer_edges`); v5 removes it again — measured
+    * dominated by the flat-seeded beam at equal candidate volume
+    * (SCALING.md, "Round-15 layered graph entry"), and its all-pairs
+    * kNN over N/layer_mod nodes was quadratic in the corpus. Each bump
+    * keeps an older reader from mis-reading the layout.
     */
-  val FormatVersion = 4
-
-  /** Default upper-layer sampling modulus: 1/4 of the nodes form the
-    * entry layer (HNSW's level-1 occupancy for M = 4). Deterministic
-    * (id-derived), so the layer is replayable by any engine.
-    */
-  val DefaultLayerMod = 4
+  val FormatVersion = 5
 
   /** Default edge-bucket count. At fixture scale this already yields
     * measurable directory pruning; a billion-vector deployment raises
@@ -84,8 +77,8 @@ object GraphIndex {
   val DefaultEdgeBuckets = 16
 
   final case class Index(dim: Int, graphK: Int, edgeBuckets: Int,
-      layerMod: Int, vectors: DataFrame, sigs: DataFrame,
-      edges: DataFrame, layerEdges: DataFrame, tombstones: DataFrame) {
+      vectors: DataFrame, sigs: DataFrame, edges: DataFrame,
+      tombstones: DataFrame) {
     /** Soft-delete read paths: tombstoned ids neither seed, relay,
       * nor return — vectors and signatures anti-join the tombstones,
       * and an edge dies if EITHER endpoint is tombstoned (a deleted
@@ -97,10 +90,6 @@ object GraphIndex {
       sigs.join(tombstones.select(col("id")), Seq("id"), "left_anti")
     def liveEdges: DataFrame =
       edges
-        .join(tombstones.select(col("id").as("src")), Seq("src"), "left_anti")
-        .join(tombstones.select(col("id").as("dst")), Seq("dst"), "left_anti")
-    def liveLayerEdges: DataFrame =
-      layerEdges
         .join(tombstones.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(tombstones.select(col("id").as("dst")), Seq("dst"), "left_anti")
   }
@@ -132,18 +121,16 @@ object GraphIndex {
       pmod(col("src"), lit(buckets.toLong)).cast("int"))
 
   private def writeManifest(spark: SparkSession, dir: String,
-      dim: Int, graphK: Int, edgeBuckets: Int, layerMod: Int): Unit = {
+      dim: Int, graphK: Int, edgeBuckets: Int): Unit = {
     val nVecs = spark.read.parquet(s"$dir/vectors.parquet").count()
     val nSigs = spark.read.parquet(s"$dir/sigs.parquet").count()
     val nEdges = spark.read.parquet(s"$dir/edges.parquet").count()
-    val nLay = spark.read.parquet(s"$dir/layeredges.parquet").count()
     val nTomb = spark.read.parquet(s"$dir/tombstones.parquet").count()
     import spark.implicits._
-    Seq((FormatVersion, dim, graphK, edgeBuckets, layerMod,
-        nVecs, nSigs, nEdges, nLay, nTomb))
+    Seq((FormatVersion, dim, graphK, edgeBuckets,
+        nVecs, nSigs, nEdges, nTomb))
       .toDF("format_version", "dim", "graph_k", "edge_buckets",
-        "layer_mod", "n_vectors", "n_sigs", "n_edges", "n_layer_edges",
-        "n_tombstones")
+        "n_vectors", "n_sigs", "n_edges", "n_tombstones")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/manifest.parquet")
     invalidate(dir)
@@ -154,10 +141,9 @@ object GraphIndex {
     * convention).
     */
   def build(vecs: DataFrame, dim: Int, graphK: Int, outDir: String,
-      edgeBuckets: Int = DefaultEdgeBuckets,
-      layerMod: Int = DefaultLayerMod): Unit = {
+      edgeBuckets: Int = DefaultEdgeBuckets): Unit = {
     val spark = vecs.sparkSession
-    val v = vecs.localCheckpoint(false) // four table writes, one scan
+    val v = vecs.localCheckpoint(false) // three table writes, one scan
     v.write.mode("overwrite").parquet(s"$outDir/vectors.parquet")
     Similarity.binarySigs(v, dim)
       .write.mode("overwrite").parquet(s"$outDir/sigs.parquet")
@@ -166,29 +152,12 @@ object GraphIndex {
         edgeBuckets)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$outDir/edges.parquet")
-    // v4 entry layer: kNN edges over the deterministic node sample.
-    // The upper layer's job is GLOBAL navigability — a walk must be
-    // able to route ACROSS coarse buckets to reach the query's region
-    // — so its kNN is UNRESTRICTED (constant part ⇒ all-pairs among
-    // layer nodes; measured: the label-restricted variant strands the
-    // descent in the seed's bucket and recall collapses). Cost is
-    // (N/layerMod)² pair work — 1/layerMod² of naive level-0 all-
-    // pairs; a billion-vector deployment recurses the same sampling
-    // into a layer hierarchy (each level all-pairs over a geometric
-    // fraction) exactly as HNSW's log-layers do.
-    withBucket(Similarity.knnGraph(
-          v.filter(col("id") % layerMod === 0)
-            .withColumn("part", lit(0L)), graphK)
-        .select(col("src_id").as("src"), col("dst_id").as("dst")),
-        edgeBuckets)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$outDir/layeredges.parquet")
     // empty tombstone set with the VECTORS id type — delete() appends
     // to this file, and parquet append demands an identical schema
     spark.read.parquet(s"$outDir/vectors.parquet").select(col("id"))
       .limit(0)
       .write.mode("overwrite").parquet(s"$outDir/tombstones.parquet")
-    writeManifest(spark, outDir, dim, graphK, edgeBuckets, layerMod)
+    writeManifest(spark, outDir, dim, graphK, edgeBuckets)
   }
 
   /** Soft-DELETE `ids (id)` (E310, the E263 design for the graph
@@ -215,8 +184,7 @@ object GraphIndex {
       s"$already ids are already tombstoned — double delete")
     ids.select(col("id"))
       .write.mode("append").parquet(s"$dir/tombstones.parquet")
-    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets,
-      idx.layerMod)
+    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets)
   }
 
   /** COMPACT (E310): physically drop tombstoned vectors, signatures,
@@ -241,13 +209,9 @@ object GraphIndex {
     idx.liveEdges.write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/edges.compacting.parquet")
     IndexFiles.swapIn(spark, dir, "edges")
-    idx.liveLayerEdges.write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dir/layeredges.compacting.parquet")
-    IndexFiles.swapIn(spark, dir, "layeredges")
     spark.read.parquet(s"$dir/vectors.parquet").select(col("id")).limit(0)
       .write.mode("overwrite").parquet(s"$dir/tombstones.parquet")
-    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets,
-      idx.layerMod)
+    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets)
   }
 
   /** Incrementally APPEND `newVecs (id, part, vec)` to a persisted
@@ -312,33 +276,15 @@ object GraphIndex {
       .select(col("src0").as("src"),
         explode(col("t.items")).as("it"))
       .select(col("src"), col("it.id").as("dst"))
-    // v4: batch nodes that SAMPLE into the entry layer get their own
-    // upper-layer out-edges against the full post-append LAYER
-    // population — the same frozen-existing discipline as level 0
-    val layNew = q.filter(col("nid") % idx.layerMod === 0)
-    val layFull = full.filter(col("id") % idx.layerMod === 0)
-    // upper-layer edges are UNRESTRICTED (global navigability — see
-    // build): new layer nodes rank against the whole layer population
-    val newLayerEdges = layNew.join(layFull,
-        col("nid") =!= col("id"))
-      .select(col("nid").as("src0"), col("id").as("dst0"), cs.as("cs"))
-      .groupBy(col("src0"))
-      .agg(Similarity.topkUdaf(idx.graphK)(col("cs"), col("dst0")).as("t"))
-      .select(col("src0").as("src"), explode(col("t.items")).as("it"))
-      .select(col("src"), col("it.id").as("dst"))
     // edges FIRST (see scaladoc): the plan reads idx.vectors, so it
     // must execute before vectors.parquet changes underneath it
     withBucket(newEdges, idx.edgeBuckets)
       .write.mode("append").partitionBy("bucket")
       .parquet(s"$dir/edges.parquet")
-    withBucket(newLayerEdges, idx.edgeBuckets)
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$dir/layeredges.parquet")
     nv.write.mode("append").parquet(s"$dir/vectors.parquet")
     Similarity.binarySigs(nv, idx.dim)
       .write.mode("append").parquet(s"$dir/sigs.parquet")
-    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets,
-      idx.layerMod)
+    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets)
   }
 
   /** Load + validate. Throws (IllegalArgumentException) on a missing,
@@ -355,7 +301,6 @@ object GraphIndex {
     val vectors = spark.read.parquet(s"$dir/vectors.parquet")
     val sigs = spark.read.parquet(s"$dir/sigs.parquet")
     val edges = spark.read.parquet(s"$dir/edges.parquet")
-    val layerEdges = spark.read.parquet(s"$dir/layeredges.parquet")
     val tomb = spark.read.parquet(s"$dir/tombstones.parquet")
     def check(name: String, df: DataFrame, want: Long): Unit = {
       val got = df.count()
@@ -366,12 +311,11 @@ object GraphIndex {
     check("vectors", vectors, ml("n_vectors"))
     check("sigs", sigs, ml("n_sigs"))
     check("edges", edges, ml("n_edges"))
-    check("layeredges", layerEdges, ml("n_layer_edges"))
     check("tombstones", tomb, ml("n_tombstones"))
     require(ml("n_sigs") == ml("n_vectors"),
       "every vector needs a signature: artifact inconsistent")
-    Index(mi("dim"), mi("graph_k"), mi("edge_buckets"), mi("layer_mod"),
-      vectors, sigs, edges, layerEdges, tomb)
+    Index(mi("dim"), mi("graph_k"), mi("edge_buckets"),
+      vectors, sigs, edges, tomb)
   }
 
   /** Serve top-k from the persisted artifact: seeds from the stored
@@ -434,97 +378,6 @@ object GraphIndex {
       .select(col("src").as("esrc"), col("dst").as("edst"))
   }
 
-  /** The upper layer's pruned hop slice — same bucket pruning as
-    * [[hopEdges]], over `layeredges.parquet`.
-    */
-  private[ext] def layerHopEdges(idx: Index, cand: DataFrame): DataFrame = {
-    val bks = cand
-      .select(pmod(col("id"), lit(idx.edgeBuckets.toLong))
-        .cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    idx.liveLayerEdges.filter(col("bucket").isin(bks: _*))
-      .select(col("src").as("esrc"), col("dst").as("edst"))
-  }
-
-  /** HIERARCHICAL serve (r15, E321 — the HNSW entry-layer shape in
-    * batch form): seed on the UPPER LAYER's signatures (a
-    * 1/layer_mod-sized scan), walk `layerHops` rounds over the small
-    * upper graph, pick each query's `seeds` best VISITED layer nodes
-    * by exact cosine (the batched greedy descent), and start the
-    * level-0 walk from those entries — same `hops` expansion and
-    * exact rerank as [[searchTopK]], so the two tiers differ ONLY in
-    * where the walk enters. Upper-layer visits do not join the
-    * candidate set (the HNSW convention: upper layers route, layer 0
-    * answers); candidate volume is therefore directly comparable to
-    * the flat walk at equal seed count, which is what the layered
-    * sweep row measures.
-    */
-  def searchTopKLayered(spark: SparkSession, dir: String,
-      numQueries: Int, seeds: Int, layerHops: Int, hops: Int,
-      k: Int): DataFrame = {
-    val idx = loadCached(spark, dir)
-    Similarity.graphRerank(idx.liveVectors.localCheckpoint(false),
-      expandCandidatesLayered(spark, dir, numQueries, seeds, layerHops,
-        hops),
-      numQueries, k)
-  }
-
-  /** The candidate half of [[searchTopKLayered]] — visited level-0
-    * set `(query_id, id)`, self-hits excluded; public for composed
-    * pipelines, like [[expandCandidates]].
-    */
-  def expandCandidatesLayered(spark: SparkSession, dir: String,
-      numQueries: Int, seeds: Int, layerHops: Int,
-      hops: Int): DataFrame = {
-    require(layerHops >= 1 && hops >= 1, "need at least one hop per tier")
-    val idx = loadCached(spark, dir)
-    var cand = entriesLayered(idx, numQueries, seeds, layerHops)
-      .localCheckpoint(false)
-    for (_ <- 1 to hops) {
-      val expanded = cand.join(hopEdges(idx, cand), col("id") === col("esrc"))
-        .select(col("query_id"), col("edst").as("id"))
-      cand = cand.union(expanded).distinct().localCheckpoint(false)
-    }
-    cand.filter(col("query_id") =!= col("id"))
-  }
-
-  /** The UPPER tier's routing output — each query's `seeds` best
-    * visited layer nodes by exact cosine, the level-0 entry points
-    * shared by the blind ([[searchTopKLayered]]) and beam
-    * ([[searchTopKHnsw]]) descents.
-    */
-  private def entriesLayered(idx: Index, numQueries: Int, seeds: Int,
-      layerHops: Int): DataFrame = {
-    val sigs = idx.liveSigs.localCheckpoint(false)
-    // entry seeds: Hamming over the LAYER's signatures only — queries
-    // still come from the full table (a query need not be a layer node)
-    var lc = Similarity.hammingTopKSigsFrom(
-        sigs.filter(col("id") % idx.layerMod === 0), sigs,
-        numQueries, seeds)
-      .select(col("query_id"), col("neighbor_id").as("id"))
-      .localCheckpoint(false)
-    for (_ <- 1 to layerHops) {
-      val ex = lc.join(layerHopEdges(idx, lc), col("id") === col("esrc"))
-        .select(col("query_id"), col("edst").as("id"))
-      lc = lc.union(ex).distinct().localCheckpoint(false)
-    }
-    // batched greedy descent: the `seeds` closest visited layer nodes
-    // per query (exact cosine, the heap's (cs DESC, id) tie order)
-    // become the level-0 entry points
-    val qv = idx.liveVectors.filter(col("id") < numQueries)
-      .select(col("id").as("qid"), col("vec").as("qv"))
-    lc.filter(col("query_id") =!= col("id"))
-      .join(idx.liveVectors.select(col("id").as("vid"), col("vec")),
-        col("id") === col("vid"))
-      .join(broadcast(qv), col("query_id") === col("qid"))
-      .select(col("query_id"), col("id"),
-        Similarity.cosine(col("qv"), col("vec")).as("cs"))
-      .groupBy(col("query_id"))
-      .agg(Similarity.topkUdaf(seeds)(col("cs"), col("id")).as("t"))
-      .select(col("query_id"), explode(col("t.items")).as("it"))
-      .select(col("query_id"), col("it.id").as("id"))
-  }
-
   /** BEAM-bounded serve (r15, E325 — the HNSW/DiskANN ef-search shape
     * in batch form): instead of expanding EVERY visited node each hop
     * (the blind walk, whose frontier grows (graphK+1)^hop), each hop
@@ -556,18 +409,6 @@ object GraphIndex {
       numQueries: Int, seeds: Int, hops: Int, ef: Int): DataFrame = {
     require(hops >= 1 && ef >= 1, "need at least one hop and one beam slot")
     val idx = loadCached(spark, dir)
-    beamWalk(idx,
-      Similarity.hammingTopKSigs(
-          idx.liveSigs.localCheckpoint(false), numQueries, seeds)
-        .select(col("query_id"), col("neighbor_id").as("id")),
-      numQueries, hops, ef)
-  }
-
-  /** The ef-bounded level-0 walk from a given entry set — shared by
-    * the flat-seeded beam serve and the full-HNSW composition.
-    */
-  private def beamWalk(idx: Index, entries: DataFrame, numQueries: Int,
-      hops: Int, ef: Int): DataFrame = {
     val v = idx.liveVectors.localCheckpoint(false)
     val qv = v.filter(col("id") < numQueries)
       .select(col("id").as("qid"), col("vec").as("qv"))
@@ -583,7 +424,10 @@ object GraphIndex {
         .agg(Similarity.topkUdaf(ef)(col("cs"), col("id")).as("t"))
         .select(col("query_id"), explode(col("t.items")).as("it"))
         .select(col("query_id"), col("it.id").as("id"))
-    var visited = entries.localCheckpoint(false)
+    var visited = Similarity.hammingTopKSigs(
+        idx.liveSigs.localCheckpoint(false), numQueries, seeds)
+      .select(col("query_id"), col("neighbor_id").as("id"))
+      .localCheckpoint(false)
     for (_ <- 1 to hops) {
       val beam = beamOf(visited).localCheckpoint(false)
       val expanded = beam
@@ -592,80 +436,5 @@ object GraphIndex {
       visited = visited.union(expanded).distinct().localCheckpoint(false)
     }
     visited.filter(col("query_id") =!= col("id"))
-  }
-
-  /** The FULL HNSW shape (r15, E327): hierarchical entry
-    * ([[entriesLayered]] — layer-restricted seeds, upper-graph walk,
-    * cosine descent) composed with the ef-bounded level-0 walk
-    * ([[beamWalk]]) — what HNSW actually runs: upper layers route,
-    * efSearch explores layer 0 under a volume budget. Candidate
-    * volume ≤ seeds + hops·ef·graphK per query at any corpus size,
-    * entries cost a 1/layer_mod-sized seed scan. The two tiers are
-    * the SAME shared definitions their standalone rows gate, so the
-    * composition adds no new arithmetic — only the wiring.
-    *
-    * NOT the recommended serve (r16, VERDICT r15 #3): SCALING.md's
-    * sweep measured the FLAT-seeded beam ([[searchTopKBeam]])
-    * dominating this composition on recall at comparable candidate
-    * volume (0.38@341 vs 0.26@324 at depth 3) — layered entry saves
-    * seed-scan cost but loses deep-hop recall on this corpus
-    * geometry. `IndexMain --graph` serves through the beam frontier;
-    * this stays available as the named composition with its recorded
-    * verdict.
-    */
-  def searchTopKHnsw(spark: SparkSession, dir: String, numQueries: Int,
-      seeds: Int, layerHops: Int, hops: Int, ef: Int,
-      k: Int): DataFrame = {
-    val idx = loadCached(spark, dir)
-    Similarity.graphRerank(idx.liveVectors.localCheckpoint(false),
-      expandCandidatesHnsw(spark, dir, numQueries, seeds, layerHops,
-        hops, ef),
-      numQueries, k)
-  }
-
-  /** Candidate half of [[searchTopKHnsw]]. */
-  def expandCandidatesHnsw(spark: SparkSession, dir: String,
-      numQueries: Int, seeds: Int, layerHops: Int, hops: Int,
-      ef: Int): DataFrame = {
-    require(layerHops >= 1 && hops >= 1 && ef >= 1,
-      "need at least one hop per tier and one beam slot")
-    val idx = loadCached(spark, dir)
-    beamWalk(idx, entriesLayered(idx, numQueries, seeds, layerHops),
-      numQueries, hops, ef)
-  }
-
-  /** E301's hop-recall sweep re-run over the LAYERED walk (r15): one
-    * pass, the level-0 visited set snapshotted at every depth 0..hops
-    * (depth 0 = the entry points the upper layer routed to), each
-    * snapshot reranked and priced against the exact cosine top-k —
-    * recall and candidate volume per depth, directly comparable to
-    * the flat `emb_graph_hop_sweep` curve at equal seed count (that
-    * comparison is the "does the entry layer buy recall at fixed
-    * candidate volume" question, answered by measurement in
-    * SCALING.md).
-    */
-  def layeredHopSweep(spark: SparkSession, dir: String, numQueries: Int,
-      seeds: Int, layerHops: Int, hops: Int, k: Int): DataFrame = {
-    val idx = loadCached(spark, dir)
-    val v = idx.liveVectors.localCheckpoint(false)
-    // depth 0 = the ENTRY set (the upper tier's routing output),
-    // computed once; deeper snapshots expand it over level 0
-    val entries = entriesLayered(idx, numQueries, seeds, layerHops)
-      .localCheckpoint(false)
-    var cand = entries
-    var snaps = List((0, cand))
-    for (h <- 1 to hops) {
-      val expanded = cand.join(hopEdges(idx, cand), col("id") === col("esrc"))
-        .select(col("query_id"), col("edst").as("id"))
-      cand = cand.union(expanded).distinct().localCheckpoint(false)
-      snaps ::= ((h, cand))
-    }
-    val q = v.filter(col("id") < numQueries)
-      .select(col("id").as("qid"), col("vec").as("qvec"))
-    val exact = Similarity.topK(v, q, k)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
-    // r16: one grouped rerank + count over all depths (identical
-    // per-hop results; see Similarity.hopSweepRows).
-    Similarity.hopSweepRows(v, snaps.reverse, exact, numQueries, k)
   }
 }

@@ -346,7 +346,7 @@ object Similarity {
     // gone. Norm folds, score expression order, and the
     // (score, -cpart) tie rule are replicated exactly — bit-identical
     // assignments (see the expression's doc).
-    val cands = collectedCentroids(centVecs)
+    val cands = collectedCentroids(centVecs) // non-empty: the kernel requires it
     val best = vecs.select(col("id"),
       graft.functions.CosineArgmaxCell.of(col("vec"), cands).as("best"))
     best.select(col("id"), col("best.cell").as("cell"),
@@ -891,60 +891,17 @@ object Similarity {
 
   /** Per-subspace candidate lists for [[graft.functions.PqEncodeCodes]]
     * from a collected codebook — ascending codeword id per subspace
-    * (the strict-< tie rule's required order).
+    * (the strict-< tie rule's required order). Every subspace
+    * 0..numSub−1 must carry codewords: a malformed codebook fails here,
+    * naming the missing subspace, not as a bare key-miss on the driver.
     */
   private def codebookCands(cw: DataFrame, numSub: Int)
       : IndexedSeq[IndexedSeq[(Long, IndexedSeq[Double])]] = {
     val byM = collectedCodebook(cw)
-    (0 until numSub).map(byM)
-  }
-
-  /** PQ encoding: each vector becomes `numSub` small integer codes —
-    * the argmin-L2 codeword per subspace. This is the 64× storage
-    * shrink that makes billion-vector ANN memory-resident: downstream
-    * search scans codes and a per-query lookup table (ADC), never raw
-    * vectors. The codebook is tiny by construction and broadcast; the
-    * subvector explode is narrow (numSub rows per vector); squared
-    * distances fold left-to-right over dims (`zip_with`+`aggregate` —
-    * interpreted, but over numSub × cells tiny arrays per row), so the
-    * DuckDB oracle reproduces every distance bit-for-bit and ties
-    * break to the smaller codeword. Output: (id, c0..c{numSub-1}).
-    */
-  /** Variance-balanced dimension permutation (E273 — OPQ's cheap
-    * cousin): Ge et al. 2013 motivate the learned OPQ rotation by
-    * subspace-variance IMBALANCE — a subspace that carries most of the
-    * energy wastes the other subspaces' codebooks. The parametric
-    * shortcut is a permutation: rank dimensions by variance and DEAL
-    * them snake-wise across the numSub subspaces so each carries
-    * comparable energy — zero training cost, and L2 is EXACTLY
-    * preserved (a permutation is the cheapest orthogonal transform),
-    * so exact ground truth is unchanged and any recall delta is pure
-    * quantizer quality. Variances are 6-rounded fixed points and the
-    * rank ties break on dimension index, so the oracle re-derives the
-    * identical permutation from raw data. Returns srcAt: position j of
-    * the permuted vector reads raw dimension srcAt(j); O(d) driver
-    * state.
-    */
-  def balancedPerm(vecs: DataFrame, numSub: Int, subDim: Int)
-      : IndexedSeq[Int] = {
-    val dim = numSub * subDim
-    val dv = vecs.select(posexplode(col("vec")).as(Seq("d", "val")))
-      .groupBy("d")
-      .agg(round(
-        sum(col("val") * col("val")) / count(lit(1)) -
-          (sum(col("val")) / count(lit(1))) *
-          (sum(col("val")) / count(lit(1))), 6).as("vr"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1)))
-    require(dv.length == dim, s"saw ${dv.length} dims, expected $dim")
-    val ranked = dv.sortBy { case (d, v) => (-v, d) }.map(_._1)
-    val srcAt = new Array[Int](dim)
-    ranked.zipWithIndex.foreach { case (d, k) =>
-      val block = k / numSub
-      val pos = k % numSub
-      val m = if (block % 2 == 0) pos else numSub - 1 - pos
-      srcAt(m * subDim + block) = d
-    }
-    srcAt.toIndexedSeq
+    (0 until numSub).map(m => byM.get(m).getOrElse(
+      throw new IllegalArgumentException(
+        s"codebook has no codewords for subspace $m of $numSub " +
+          s"(present: ${byM.keys.toSeq.sorted.mkString(",")})")))
   }
 
   /** ADC (asymmetric distance computation) top-k over PQ codes — the
@@ -1451,6 +1408,15 @@ object Similarity {
       pqCodebooksTrained(vecs, numSub, subDim, PqTrainIters, numCodewords))
       .localCheckpoint(false)
 
+  /** PQ encoding: each vector becomes `numSub` small integer codes —
+    * the argmin-L2 codeword per subspace. This is the 64× storage
+    * shrink that makes billion-vector ANN memory-resident: downstream
+    * search scans codes and a per-query lookup table (ADC), never raw
+    * vectors. The codebook is tiny by construction and collected once;
+    * squared distances fold left-to-right over dims, so the DuckDB
+    * oracle reproduces every distance bit-for-bit and ties break to
+    * the smaller codeword. Output: (id, c0..c{numSub-1}).
+    */
   def pqEncode(vecs: DataFrame, numSub: Int, subDim: Int,
       numCodewords: Int = PqCodewords): DataFrame =
     pqEncodeWith(vecs, numSub, subDim,
@@ -1741,18 +1707,9 @@ object Similarity {
     * Caller materializes `sigs` if it feeds multiple consumers.
     */
   def hammingTopKSigs(sigs: DataFrame, numQueries: Int,
-      k: Int): DataFrame = hammingTopKSigsFrom(sigs, sigs, numQueries, k)
-
-  /** [[hammingTopKSigs]] with the CANDIDATE set decoupled from the
-    * query source (r15, E321): the layered graph entry seeds from the
-    * UPPER-LAYER signatures only, while queries keep coming from the
-    * full signature table — same scoring, same (distance, id) heap
-    * tie order.
-    */
-  def hammingTopKSigsFrom(cands: DataFrame, qsigs: DataFrame,
-      numQueries: Int, k: Int): DataFrame = {
-    val c = cands.withColumn("bk", pmod(col("id"), lit(BruteForceBuckets.toLong)))
-    val q = qsigs.filter(col("id") < numQueries)
+      k: Int): DataFrame = {
+    val c = sigs.withColumn("bk", pmod(col("id"), lit(BruteForceBuckets.toLong)))
+    val q = sigs.filter(col("id") < numQueries)
       .select(col("id").as("qid"), col("h0").as("q0"), col("h1").as("q1"),
         bucketFanout.as("qbk"))
     val dist = bit_count(col("c.h0").bitwiseXOR(col("q.q0"))) +
@@ -1858,9 +1815,8 @@ object Similarity {
     * Per-(hop, query) heap contents, candidate counts, and hit counts
     * are identical to the per-hop loop — the same topkUdaf ordering
     * ((-score, id)) over the same scored set, grouped one level wider.
-    * Shared by [[graphHopSweep]] and GraphIndex.layeredHopSweep.
     */
-  private[graft] def hopSweepRows(v: DataFrame,
+  private def hopSweepRows(v: DataFrame,
       snapsAsc: Seq[(Int, DataFrame)], exact: DataFrame,
       numQueries: Int, k: Int): DataFrame = {
     val tagged = snapsAsc.map { case (h, c0) =>

@@ -148,11 +148,16 @@ case class CosineArgmaxCell(child: Expression,
 
 object CosineArgmaxCell {
   /** `cands` in ASCENDING cpart order (the strict-compare tie rule's
-    * required order).
+    * required order), and non-empty: an argmax over no cells has no
+    * answer, and the generated loop would read `cl[0]` out of bounds.
     */
-  def of(vec: Column, cands: IndexedSeq[(Long, IndexedSeq[Double])]): Column =
+  def of(vec: Column, cands: IndexedSeq[(Long, IndexedSeq[Double])]): Column = {
+    require(cands.nonEmpty,
+      "CosineArgmaxCell needs at least one centroid; the candidate " +
+        "table is empty")
     GraftBridge.column(CosineArgmaxCell(GraftBridge.expression(vec),
       cands.map(_._1), cands.map(_._2)))
+  }
 }
 
 /** The whole two-level (coarse probe → fine argmax) assignment of

@@ -71,16 +71,6 @@ object SimilarityQueries {
       col("vec_id").as("id"), col("label").as("part"),
       Similarity.toDouble(col("embedding")).as("vec"))
 
-  /** E273: the corpus with dimensions snake-dealt by variance rank
-    * ([[Similarity.balancedPerm]] — O(d) driver state).
-    */
-  private def balancedCorpus(s: SparkSession, dir: String): DataFrame = {
-    val c = corpus(s, dir)
-    val perm = Similarity.balancedPerm(c, PqSubspaces, PqSubDim)
-    c.select(col("id"), col("part"),
-      array(perm.map(i => col("vec").getItem(i)): _*).as("vec"))
-  }
-
   /** The shared residual IVF-PQ artifact for this fixture state —
     * built ONCE (Materialize.once) and served by every fixed/adaptive
     * residual consumer, where each used to retrain identical
@@ -91,20 +81,6 @@ object SimilarityQueries {
   private def annIdxDir(s: SparkSession, dir: String): String =
     Materialize.once("annindex", dir) { p =>
       graft.ext.AnnIndex.build(corpus(s, dir), PqSubspaces, PqSubDim, p)
-    }
-
-  /** The OPQ-ROTATED twin of the canonical artifact (r15, E319): same
-    * corpus and geometry, learned rotation trained at build and
-    * persisted in the artifact (v5). Kept SEPARATE from `annindex` —
-    * the raw artifact's rows hash against full DuckDB value oracles
-    * (the whole raw chain is SQL-replayable), while the rotated chain
-    * is gated by machine-checked parity/integrity rows because a
-    * Jacobi eigendecomposition has no reasonable SQL replay.
-    */
-  private def annOpqIdxDir(s: SparkSession, dir: String): String =
-    Materialize.once("annindex_opq", dir) { p =>
-      graft.ext.AnnIndex.build(corpus(s, dir), PqSubspaces, PqSubDim, p,
-        opq = true)
     }
 
   /** The shared ADAPTIVE k-means assignment (id, assigned, cos) for
@@ -145,18 +121,17 @@ object SimilarityQueries {
     s.read.parquet(s"$p/asg.parquet")
   }
 
-  /** Trained FLAT-PQ artifact (codebooks + codes) per corpus variant,
-    * built once per fixture state (VERDICT r13 #5): `variant` keys
-    * the Materialize entry ("raw" / "balanced" / a learned rotation),
-    * `mk` produces the corpus to train on. Parquet round-trips the
-    * 6-rounded codebook doubles and integer codes bit-exactly, so
-    * [[Similarity.pqAdcTopKFrom]] over the read-back tables equals
-    * the one-shot [[Similarity.pqAdcTopK]] (one shared search half).
+  /** Trained FLAT-PQ artifact (codebooks + codes) over the corpus,
+    * built once per fixture state (VERDICT r13 #5). Parquet
+    * round-trips the 6-rounded codebook doubles and integer codes
+    * bit-exactly, so [[Similarity.pqAdcTopKFrom]] over the read-back
+    * tables equals the one-shot [[Similarity.pqAdcTopK]] (one shared
+    * search half).
     */
-  private def pqFlat(s: SparkSession, dir: String, variant: String,
-      mk: => DataFrame): (DataFrame, DataFrame) = {
-    val p = Materialize.once(s"pqflat_$variant", dir) { out =>
-      val (cw, codes) = Similarity.pqAdcBuild(mk, PqSubspaces, PqSubDim)
+  private def pqFlat(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val p = Materialize.once("pqflat", dir) { out =>
+      val (cw, codes) = Similarity.pqAdcBuild(corpus(s, dir), PqSubspaces,
+        PqSubDim)
       cw.write.parquet(s"$out/codebooks.parquet")
       codes.write.parquet(s"$out/codes.parquet")
     }
@@ -164,12 +139,6 @@ object SimilarityQueries {
       s.read.parquet(s"$p/codes.parquet"))
   }
 
-  /** E226/E274 shared recall audit: ADC candidates come from the
-    * (cw, codes) artifact with `qvecs` queries (raw or
-    * balanced-permuted), exact-L2 truth from the RAW corpus `c` —
-    * ids compare directly because L2 is invariant under the
-    * permutation.
-    */
   /** Exact L2 ground-truth top-k per query — (query_id, neighbor_id).
     * r17 (VERDICT r16 #5): every recall audit's exact leg was a theta
     * join (BroadcastNestedLoopJoin, not codegen-fusable) feeding a
@@ -199,9 +168,13 @@ object SimilarityQueries {
       .select(col("query_id"), col("item.id").as("neighbor_id"))
   }
 
+  /** E226 recall audit: ADC candidates from the (cw, codes) artifact
+    * for the first NumQueries vectors of `c`, exact-L2 truth from `c`.
+    */
   private def adcRecallOver(c: DataFrame, cw: DataFrame,
-      codes: DataFrame, qvecs: DataFrame): DataFrame = {
-    val adcAll = Similarity.pqAdcTopKFrom(cw, codes, qvecs,
+      codes: DataFrame): DataFrame = {
+    val adcAll = Similarity.pqAdcTopKFrom(cw, codes,
+      c.filter(col("id") < NumQueries).select(col("id"), col("vec")),
       PqSubspaces, PqSubDim, K * AdcRerankMult)
       .select(col("query_id"), col("rank"), col("neighbor_id"))
       .localCheckpoint(false)
@@ -520,35 +493,6 @@ object SimilarityQueries {
       Similarity.mmrOverCandidates(rel, c, K, MmrLambda, MmrOneMinusLambda)
     }),
 
-    // E321 (r15, VERDICT r14 #5): HIERARCHICAL entry layer — the
-    // HNSW upper-layer shape over the persisted artifact (v4): seed
-    // on the LAYER's signatures (a 1/layer_mod-sized scan), walk the
-    // small upper graph, descend through each query's best visited
-    // layer nodes into the level-0 walk, rerank. Differs from
-    // emb_graph_persisted ONLY in where the walk enters; the oracle
-    // replays the full two-tier chain value-for-value.
-    "emb_graph_layered" -> ((s, dir) => {
-      val idxDir = Materialize.once(s"graph_index:$dir", dir) { p =>
-        graft.ext.GraphIndex.build(corpus(s, dir), EmbDim, KnnK, p)
-      }
-      graft.ext.GraphIndex.searchTopKLayered(s, idxDir, NumQueries,
-        GraphSeeds, LayerHops, GraphHops, K)
-    }),
-
-    // E322 (r15): the E301 hop-recall sweep re-run over the LAYERED
-    // walk — recall@K and candidate volume at every level-0 depth,
-    // depth 0 = the entry points the upper layer routed to. Read next
-    // to emb_graph_hop_sweep (flat, same seed count) this answers
-    // "does the entry layer buy recall at fixed candidate volume"
-    // by measurement; SCALING.md carries the side-by-side curve.
-    "emb_graph_layered_sweep" -> ((s, dir) => {
-      val idxDir = Materialize.once(s"graph_index:$dir", dir) { p =>
-        graft.ext.GraphIndex.build(corpus(s, dir), EmbDim, KnnK, p)
-      }
-      graft.ext.GraphIndex.layeredHopSweep(s, idxDir, NumQueries,
-        GraphSeeds, LayerHops, GraphHops, K)
-    }),
-
     // E325 (r15): BEAM-bounded graph serve — the HNSW/DiskANN
     // ef-search shape: each hop expands only the query's BeamEf best
     // visited candidates by exact cosine instead of the whole visited
@@ -562,23 +506,6 @@ object SimilarityQueries {
       }
       graft.ext.GraphIndex.searchTopKBeam(s, idxDir, NumQueries,
         GraphSeeds, GraphHops, BeamEf, K)
-    }),
-
-    // E327 (r15): the FULL HNSW shape — hierarchical entry (E321's
-    // upper tier: layer-restricted seeds, upper-graph walk, cosine
-    // descent) composed with the ef-bounded level-0 walk (E325's
-    // beam). Upper layers route, efSearch explores layer 0 under a
-    // volume budget: candidates ≤ seeds + hops·ef·graphK per query
-    // at any corpus size, entry seeding scans 1/layer_mod of the
-    // signatures. Both tiers are the same shared definitions their
-    // standalone rows gate — the composition adds wiring, not
-    // arithmetic — and the oracle composes the same two CTE builders.
-    "emb_graph_hnsw" -> ((s, dir) => {
-      val idxDir = Materialize.once(s"graph_index:$dir", dir) { p =>
-        graft.ext.GraphIndex.build(corpus(s, dir), EmbDim, KnnK, p)
-      }
-      graft.ext.GraphIndex.searchTopKHnsw(s, idxDir, NumQueries,
-        GraphSeeds, LayerHops, GraphHops, BeamEf, K)
     }),
 
     // E310: graph-index soft DELETE: build on the full population,
@@ -887,7 +814,7 @@ object SimilarityQueries {
     // the artifact codebook IS trainedCodewordVecs output round-
     // tripped through parquet (the pqFlat contract).
     "emb_pq_codes" -> ((s, dir) => {
-      val (cw, _) = pqFlat(s, dir, "raw", corpus(s, dir))
+      val (cw, _) = pqFlat(s, dir)
       Similarity.pqEncodeFromCodebook(corpus(s, dir), PqSubspaces, PqSubDim,
         cw)
     }),
@@ -901,33 +828,11 @@ object SimilarityQueries {
     // order-stable; ties (adc, id). The oracle rebuilds codebooks,
     // codes, tables, and ranking from the raw table.
     "emb_pq_adc_topk" -> ((s, dir) => {
-      val (cw, codes) = pqFlat(s, dir, "raw", corpus(s, dir))
+      val (cw, codes) = pqFlat(s, dir)
       Similarity.pqAdcTopKFrom(cw, codes,
         corpus(s, dir).filter(col("id") < NumQueries)
           .select(col("id"), col("vec")),
         PqSubspaces, PqSubDim, K)
-    }),
-
-    // E273: variance-balanced PQ (OPQ's parametric shortcut) — same
-    // ADC search over dimensions snake-dealt across subspaces by
-    // variance rank, so each subspace carries comparable energy.
-    "emb_pq_balanced" -> ((s, dir) => {
-      val (cw, codes) = pqFlat(s, dir, "balanced", balancedCorpus(s, dir))
-      Similarity.pqAdcTopKFrom(cw, codes,
-        balancedCorpus(s, dir).filter(col("id") < NumQueries)
-          .select(col("id"), col("vec")),
-        PqSubspaces, PqSubDim, K)
-    }),
-
-    // E274: the E226 audit over the balanced chain — exact truth over
-    // RAW vectors (L2 invariant under permutation), so the recall
-    // delta vs emb_adc_recall is pure quantizer quality.
-    "emb_pq_balanced_recall" -> ((s, dir) => {
-      val c = corpus(s, dir).localCheckpoint(false)
-      val (cw, codes) = pqFlat(s, dir, "balanced", balancedCorpus(s, dir))
-      adcRecallOver(c, cw, codes,
-        balancedCorpus(s, dir).filter(col("id") < NumQueries)
-          .select(col("id"), col("vec")))
     }),
 
     // SRP-bucketed near-dup pairs, exact-cosine verified: the bucketed
@@ -1267,97 +1172,6 @@ object SimilarityQueries {
       graft.ext.AnnIndex.searchTopK(s, idx, q, KIvf, MProbe)
     }),
 
-    // E319 (r15, VERDICT r14 #1): the OPQ rotation COMPOSED into the
-    // persisted build/serve path — a v5 artifact carries the learned
-    // rotation (Jacobi PCA + eigenvalue allocation, trained at build,
-    // stored in rotation.parquet), base vectors were rotated before
-    // coarse training and PQ encoding, and searchTopK rotates queries
-    // with the SAME stored matrix. The learned rotation has no DuckDB
-    // replay (a 64×64 eigendecomposition has no reasonable SQL form —
-    // the Opq scaladoc's standing caveat), so this row gates the E66
-    // machine-checked-bound way: Spark runs BOTH the served-rotated
-    // chain and the in-memory rotated chain (same pure-function
-    // rotation, same shared search half) and emits the comparison —
-    // parity_ok is true iff every (query, rank) agrees on neighbor
-    // AND bit-rounded ADC. The oracle pins the CONSTANTS the contract
-    // demands; the hard equality itself is computed by the gate row.
-    // Recall verdicts for the rotated chain live in OpqServeSpec +
-    // SCALING.md (measured honestly: ≈ raw within binomial noise at
-    // wide query samples — the r14 "+19%" was a 10-query artifact).
-    "emb_opq_served_parity" -> ((s, dir) => {
-      val c = corpus(s, dir)
-      val q = c.filter(col("id") < NumQueries)
-        .select(col("id").as("qid"), col("vec").as("qv"))
-      val served = graft.ext.AnnIndex.searchTopK(s, annOpqIdxDir(s, dir),
-        q, KIvf, MProbe)
-      // the in-memory twin trains ONCE per fixture state (the VERDICT
-      // r13 #5 discipline — the chain is a pure function of the
-      // corpus; parquet round-trips its 6-rounded doubles bit-exactly)
-      val memDir = Materialize.once("opq_mem_topk", dir) { p =>
-        val (means, r) = graft.ext.Opq.rotationFor(c, EmbDim,
-          PqSubspaces, PqSubDim)
-        Similarity.pqResidualIvfTopK(
-          graft.ext.Opq.rotate(c, means, r), PqSubspaces, PqSubDim,
-          NumQueries, KIvf, MProbe)
-          .write.parquet(s"$p/mem.parquet")
-      }
-      val mem = s.read.parquet(s"$memDir/mem.parquet")
-      served
-        .select(col("query_id"), col("rank"), col("neighbor_id").as("n1"),
-          col("adc").as("a1"))
-        .join(mem.select(col("query_id"), col("rank"),
-          col("neighbor_id").as("n2"), col("adc").as("a2")),
-          Seq("query_id", "rank"), "full_outer")
-        .agg(countDistinct(col("query_id")).as("n_queries"),
-          (sum(when(col("n1") === col("n2") && col("a1") === col("a2"),
-            lit(0)).otherwise(lit(1))) === 0).as("parity_ok"))
-    }),
-
-    // E320 (r15): integrity of the PERSISTED rotation — the artifact's
-    // rotation matrix is orthonormal (R·Rᵀ = I to double noise) and
-    // the rotated serve frame preserves L2 on a fixture sample (the
-    // property that keeps exact-L2 truth valid for every rotated
-    // audit). Machine-checked-bound row: the oracle pins the expected
-    // constants (row count = dim + means row; both checks true).
-    "emb_opq_rotation_integrity" -> ((s, dir) => {
-      val idxDir = annOpqIdxDir(s, dir)
-      val rot = s.read.parquet(s"$idxDir/rotation.parquet")
-      val rows = rot.collect() // dim+1 rows, bounded by geometry
-        .map(rw => rw.getAs[Int]("j") ->
-          rw.getAs[Seq[Double]]("rvec").toArray).toMap
-      val rr = Array.tabulate(EmbDim)(j => rows(j))
-      val m = rows(-1)
-      var maxDev = 0.0
-      var a = 0
-      while (a < EmbDim) {
-        var b = 0
-        while (b < EmbDim) {
-          var dot0 = 0.0
-          var i = 0
-          while (i < EmbDim) { dot0 += rr(a)(i) * rr(b)(i); i += 1 }
-          val want = if (a == b) 1.0 else 0.0
-          maxDev = math.max(maxDev, math.abs(dot0 - want))
-          b += 1
-        }
-        a += 1
-      }
-      val c = corpus(s, dir).filter(col("id") < 40)
-      val rc = graft.ext.Opq.rotateCol(c, "vec", m, rr)
-      val l2 = (x: String, y: String) =>
-        Similarity.l2sqUnrolled(col(x), col(y), EmbDim) // r16: codegen fold
-      def pairD(df: org.apache.spark.sql.DataFrame) =
-        df.alias("x").join(df.alias("y"), col("x.id") < col("y.id"))
-          .select(col("x.id").as("i"), col("y.id").as("j2"),
-            l2("x.vec", "y.vec").as("d"))
-      val drift = pairD(c).alias("p").join(pairD(rc).alias("q"),
-          col("p.i") === col("q.i") && col("p.j2") === col("q.j2"))
-        .agg(max(abs(col("p.d") - col("q.d"))).as("m"))
-        .head().getDouble(0)
-      import s.implicits._
-      Seq((rot.count(), maxDev < 1e-9, drift < 1e-9))
-        .toDF("n_rot_rows", "orthonormal_ok", "l2_preserved_ok")
-    }),
-
     // E262: incremental index APPEND (the FAISS `add` semantics) —
     // the index is built on the BASE corpus (id % 7 ≠ 3), then the
     // held-out batch is appended under the FROZEN centroids and
@@ -1469,9 +1283,8 @@ object SimilarityQueries {
     // and more codewords; the audit re-prices them every round.
     "emb_adc_recall" -> ((s, dir) => {
       val c = corpus(s, dir).localCheckpoint(false)
-      val (cw, codes) = pqFlat(s, dir, "raw", corpus(s, dir))
-      adcRecallOver(c, cw, codes,
-        c.filter(col("id") < NumQueries).select(col("id"), col("vec")))
+      val (cw, codes) = pqFlat(s, dir)
+      adcRecallOver(c, cw, codes)
     }),
 
     // E218: per-dimension embedding statistics + dead-dimension triage
@@ -2056,33 +1869,7 @@ object SimilarityQueries {
 
   private lazy val pqResidualChainCte: String = pqResidualChainSql()
 
-  /** E273 balanced chain: per-dim 6-rounded variances over the
-    * exploded x, snake-deal rank → new position np, then the standard
-    * chain over the REMAPPED dims (mirrors Similarity.balancedPerm).
-    */
-  private lazy val pqBalancedChainCte: String = {
-    val prologue =
-      s"""
-         |bdv AS (SELECT dim, round(sum(val * val) / count(*)
-         |          - (sum(val) / count(*)) * (sum(val) / count(*)), 6)
-         |          AS vr
-         |        FROM x GROUP BY dim),
-         |bprk AS (SELECT dim,
-         |           row_number() OVER (ORDER BY vr DESC, dim) - 1 AS k
-         |         FROM bdv),
-         |bpm AS (SELECT dim,
-         |          (CASE WHEN ((k // $PqSubspaces) % 2) = 0
-         |                THEN k % $PqSubspaces
-         |                ELSE $PqSubspaces - 1 - (k % $PqSubspaces) END)
-         |            * $PqSubDim + (k // $PqSubspaces) AS np
-         |        FROM bprk),
-         |xbal AS MATERIALIZED (SELECT x.vec_id,
-         |          CAST(bpm.np AS INTEGER) AS dim, x.val
-         |        FROM x JOIN bpm ON bpm.dim = x.dim),""".stripMargin
-    pqChainSql(graft.ext.Similarity.PqTrainIters, prologue, "xbal")
-  }
-
-  /** E220/E273 shared ADC top-k tail over a given PQ chain. */
+  /** E220 ADC top-k tail over a given PQ chain. */
   private def adcTopKSql(chain: String): String =
     s"""$chain,
        |co AS (SELECT id, m, cl FROM b WHERE rn = 1),
@@ -2104,9 +1891,8 @@ object SimilarityQueries {
        |       id AS neighbor_id, adc
        |FROM rr WHERE rank <= $K""".stripMargin
 
-  /** E226/E274 shared recall-audit tail over a given PQ chain — the
-    * exact truth always reads the RAW vectors (L2 is invariant under
-    * the balanced permutation, so neighbor ids compare directly).
+  /** E226 recall-audit tail over a given PQ chain — the exact truth
+    * reads the raw vectors.
     */
   private def adcRecallSql(chain: String): String =
     s"""$chain,
@@ -2262,17 +2048,14 @@ object SimilarityQueries {
   private lazy val graphExpandCtes: String = graphExpandCtesOver(
     s"$knnTopCte,\ngedges AS (SELECT src, dst FROM ktop)")
 
-  /** Level-0 walk depth of the LAYERED serve's upper tier (E321). */
-  private val LayerHops = 2
-
   /** Beam width for the ef-bounded serve (E325) — the efSearch knob. */
   private val BeamEf = 8
 
-  /** The beam hop chain + rescore/rerank tail over a given `v0` —
-    * shared by the flat-seeded beam oracle (E325) and the full-HNSW
-    * composition oracle (E327).
+  /** E325 oracle: the beam walk replayed hop by hop — visited_{h+1} =
+    * visited_h ∪ expand(top-ef(visited_h) by (cos DESC, id), self
+    * excluded) — then the rescore/rerank tail.
     */
-  private def beamHopTailCtes: String = {
+  private lazy val beamExpandCtes: String = {
     val hopChain = (1 to GraphHops).map { h =>
       s"""bs${h - 1} AS (SELECT v.qid, v.id, ${cosSql("q2.v", "e.v")} AS cs
          |     FROM v${h - 1} v JOIN e q2 ON q2.vec_id = v.qid
@@ -2286,33 +2069,6 @@ object SimilarityQueries {
          |  UNION SELECT b.qid, k.dst FROM bm${h - 1} b
          |  JOIN gedges k ON k.src = b.id)""".stripMargin
     }.mkString(",\n")
-    s"""$hopChain,
-       |cf AS MATERIALIZED (SELECT qid, id FROM v$GraphHops WHERE id <> qid),
-       |gsc AS (SELECT cf.qid, cf.id, ${cosSql("q2.v", "e.v")} AS cs
-       |        FROM cf JOIN e q2 ON q2.vec_id = cf.qid
-       |                JOIN e ON e.vec_id = cf.id),
-       |gtop AS MATERIALIZED (SELECT qid, id, cs, rnk FROM (
-       |    SELECT qid, id, cs, row_number() OVER (PARTITION BY qid
-       |      ORDER BY cs DESC, id) AS rnk FROM gsc) WHERE rnk <= $K)""".stripMargin
-  }
-
-  /** E327 oracle: layered entry (the E321 upper-tier CTEs' `ent`)
-    * feeding the E325 beam chain — the full HNSW composition, each
-    * half textually identical to its standalone oracle.
-    */
-  private lazy val hnswExpandCtes: String =
-    s"""$embCte,
-       |$layeredEntryCtes,
-       |$knnTopCte,
-       |gedges AS (SELECT src, dst FROM ktop),
-       |v0 AS (SELECT qid, id FROM ent),
-       |$beamHopTailCtes""".stripMargin
-
-  /** E325 oracle: the beam walk replayed hop by hop — visited_{h+1} =
-    * visited_h ∪ expand(top-ef(visited_h) by (cos DESC, id), self
-    * excluded) — then the shared rescore/rerank tail.
-    */
-  private lazy val beamExpandCtes: String =
     s"""$embCte,
        |sg AS MATERIALIZED (SELECT vec_id AS id, ${binPackSql(0)} AS h0,
        |       ${binPackSql(EmbDim / 2)} AS h1 FROM e),
@@ -2328,113 +2084,14 @@ object SimilarityQueries {
        |$knnTopCte,
        |gedges AS (SELECT src, dst FROM ktop),
        |v0 AS (SELECT qid, id FROM sd),
-       |$beamHopTailCtes""".stripMargin
-  private def layerModSql: Int = graft.ext.GraphIndex.DefaultLayerMod
-
-  /** E321 upper-tier CTEs: layer-restricted Hamming seeds, the layer's
-    * own kNN edge set, `LayerHops` union-expansion rounds, exact-
-    * cosine descent to the per-query entry set `ent` — mirrors
-    * GraphIndex.expandCandidatesLayered's upper half exactly (the
-    * heap's (dist, id) / (cs DESC, id) tie orders).
-    */
-  private lazy val layeredEntryCtes: String = {
-    val layerHopChain = (1 to LayerHops).map(h =>
-      s"""l$h AS (SELECT qid, id FROM l${h - 1}
-         |  UNION SELECT l${h - 1}.qid, k.dst FROM l${h - 1}
-         |  JOIN ledges k ON k.src = l${h - 1}.id)""".stripMargin)
-      .mkString(",\n")
-    s"""sg AS MATERIALIZED (SELECT vec_id AS id, ${binPackSql(0)} AS h0,
-       |       ${binPackSql(EmbDim / 2)} AS h1 FROM e),
-       |qs AS (SELECT id AS qid, h0 AS q0, h1 AS q1 FROM sg
-       |       WHERE id < $NumQueries),
-       |dl AS (SELECT qs.qid, sg.id,
-       |             CAST(bit_count(xor(sg.h0, qs.q0)) +
-       |                  bit_count(xor(sg.h1, qs.q1)) AS BIGINT) AS dist
-       |      FROM qs JOIN sg ON sg.id <> qs.qid
-       |                     AND sg.id % $layerModSql = 0),
-       |sdl AS (SELECT qid, id FROM (
-       |    SELECT qid, id, row_number() OVER (PARTITION BY qid
-       |      ORDER BY dist, id) AS rnk FROM dl) WHERE rnk <= $GraphSeeds),
-       |lvv AS MATERIALIZED (SELECT vec_id AS id, label, v FROM e
-       |      WHERE vec_id % $layerModSql = 0),
-       |lksc AS MATERIALIZED (SELECT a.id AS src, b.id AS dst,
-       |        ${cosSql("a.v", "b.v")} AS cs
-       |      FROM lvv a JOIN lvv b ON a.id <> b.id),
-       |lktp AS (SELECT src, dst, row_number() OVER (PARTITION BY src
-       |        ORDER BY cs DESC, dst) AS rn FROM lksc),
-       |ledges AS MATERIALIZED (SELECT src, dst FROM lktp
-       |      WHERE rn <= $KnnK),
-       |l0 AS (SELECT qid, id FROM sdl),
-       |$layerHopChain,
-       |lf AS (SELECT qid, id FROM l$LayerHops WHERE id <> qid),
-       |lsc AS (SELECT lf.qid, lf.id, ${cosSql("q2.v", "e.v")} AS cs
-       |        FROM lf JOIN e q2 ON q2.vec_id = lf.qid
-       |                JOIN e ON e.vec_id = lf.id),
-       |ent AS MATERIALIZED (SELECT qid, id FROM (
-       |    SELECT qid, id, row_number() OVER (PARTITION BY qid
-       |      ORDER BY cs DESC, id) AS rnk FROM lsc)
-       |    WHERE rnk <= $GraphSeeds)""".stripMargin
-  }
-
-  /** E321/E322 full chain: upper tier → entries as c0 → the SAME
-    * level-0 hop chain / visited set / rescore / rerank CTE names the
-    * flat oracle uses, so the two tails stay textually identical.
-    */
-  private lazy val layeredExpandCtes: String = {
-    val hopChain = (1 to GraphHops).map(h =>
-      s"""c$h AS (SELECT qid, id FROM c${h - 1}
-         |  UNION SELECT c${h - 1}.qid, k.dst FROM c${h - 1}
-         |  JOIN gedges k ON k.src = c${h - 1}.id)""".stripMargin)
-      .mkString(",\n")
-    s"""$embCte,
-       |$layeredEntryCtes,
-       |$knnTopCte,
-       |gedges AS (SELECT src, dst FROM ktop),
-       |c0 AS (SELECT qid, id FROM ent),
        |$hopChain,
-       |cf AS MATERIALIZED (SELECT qid, id FROM c$GraphHops WHERE id <> qid),
+       |cf AS MATERIALIZED (SELECT qid, id FROM v$GraphHops WHERE id <> qid),
        |gsc AS (SELECT cf.qid, cf.id, ${cosSql("q2.v", "e.v")} AS cs
        |        FROM cf JOIN e q2 ON q2.vec_id = cf.qid
        |                JOIN e ON e.vec_id = cf.id),
        |gtop AS MATERIALIZED (SELECT qid, id, cs, rnk FROM (
        |    SELECT qid, id, cs, row_number() OVER (PARTITION BY qid
        |      ORDER BY cs DESC, id) AS rnk FROM gsc) WHERE rnk <= $K)""".stripMargin
-  }
-
-  /** E322 oracle: graphHopSweepSql's per-depth rescoring over the
-    * LAYERED chain's snapshots (depth 0 = `ent`).
-    */
-  private lazy val layeredHopSweepSql: String = {
-    val perHop = (0 to GraphHops).map { h =>
-      s"""cf$h AS (SELECT qid, id FROM c$h WHERE id <> qid),
-         |gsc$h AS (SELECT cf$h.qid, cf$h.id, ${cosSql("q2.v", "e.v")} AS cs
-         |     FROM cf$h JOIN e q2 ON q2.vec_id = cf$h.qid
-         |               JOIN e ON e.vec_id = cf$h.id),
-         |gt$h AS (SELECT qid, id FROM (
-         |     SELECT qid, id, row_number() OVER (PARTITION BY qid
-         |       ORDER BY cs DESC, id) AS rnk FROM gsc$h) WHERE rnk <= $K),
-         |ht$h AS (SELECT count(*) AS n FROM gt$h
-         |     JOIN xr ON xr.qid = gt$h.qid AND xr.id = gt$h.id),
-         |nc$h AS (SELECT CAST(count(*) AS BIGINT) AS n FROM cf$h)""".stripMargin
-    }.mkString(",\n")
-    val rows = (0 to GraphHops).map { h =>
-      s"""SELECT CAST($h AS INTEGER) AS hop,
-         |  (SELECT n FROM nc$h) AS n_cand,
-         |  CAST((SELECT n FROM ht$h) AS BIGINT) AS n_hits,
-         |  round(CAST((SELECT n FROM ht$h) AS DOUBLE)
-         |        / ${NumQueries * K}, 6) AS recall_at_k""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""$layeredExpandCtes,
-       |s2 AS (SELECT q2.vec_id AS qid, e.vec_id AS id,
-       |              ${cosSql("q2.v", "e.v")} AS score
-       |       FROM e q2 JOIN e ON e.vec_id <> q2.vec_id
-       |       WHERE q2.vec_id < $NumQueries),
-       |xr AS (SELECT qid, id FROM (
-       |         SELECT qid, id, row_number() OVER (PARTITION BY qid
-       |           ORDER BY score DESC, id) AS rank FROM s2)
-       |       WHERE rank <= $K),
-       |$perHop
-       |$rows""".stripMargin
   }
 
   /** E299 edge set: base-population kNN edges FROZEN, appended nodes
@@ -3064,13 +2721,6 @@ object SimilarityQueries {
     // (6-rounded) and the lookup-sum ranking.
     "emb_pq_adc_topk" -> adcTopKSql(pqChainCte),
 
-    // E273: identical search tail over the variance-balanced chain.
-    "emb_pq_balanced" -> adcTopKSql(pqBalancedChainCte),
-
-    // E274: identical recall audit over the balanced chain — exact
-    // truth reads RAW vectors (L2 is permutation-invariant).
-    "emb_pq_balanced_recall" -> adcRecallSql(pqBalancedChainCte),
-
     "emb_srp_sig" ->
       s"""$srpSigCte
          |SELECT id, srp_sig FROM sg""".stripMargin,
@@ -3467,26 +3117,6 @@ object SimilarityQueries {
            |          JOIN e ON e.vec_id = cf.id)""".stripMargin +
         mmrRoundsSql(K)),
 
-    // E321: the two-tier chain replayed value-for-value — layer
-    // seeds, layer walk, cosine descent, level-0 walk, rerank.
-    "emb_graph_layered" ->
-      s"""$layeredExpandCtes
-         |SELECT qid AS query_id, CAST(rnk AS INTEGER) AS rank,
-         |       id AS neighbor_id, round(cs, 6) AS cos
-         |FROM gtop""".stripMargin,
-
-    // E322: per-depth rescoring of the layered chain's snapshots.
-    "emb_graph_layered_sweep" -> layeredHopSweepSql,
-
-    // E327: the full HNSW composition replayed — E321's upper-tier
-    // CTEs feed E325's beam chain, both textually identical to their
-    // standalone oracles.
-    "emb_graph_hnsw" ->
-      s"""$hnswExpandCtes
-         |SELECT qid AS query_id, CAST(rnk AS INTEGER) AS rank,
-         |       id AS neighbor_id, round(cs, 6) AS cos
-         |FROM gtop""".stripMargin,
-
     // E325: the ef-bounded walk replayed hop by hop.
     "emb_graph_beam" ->
       s"""$beamExpandCtes
@@ -3645,21 +3275,6 @@ object SimilarityQueries {
            |SELECT qid AS query_id, CAST(rank AS INTEGER) AS rank,
            |       id AS neighbor_id, adc
            |FROM rr2 WHERE rank <= $KIvf""".stripMargin),
-
-    // E319/E320: machine-checked-bound rows (the E66 pattern) — Spark
-    // computes the hard equality (served-rotated ≡ in-memory-rotated;
-    // persisted R orthonormal + L2-preserving) and the oracle pins the
-    // constants the contract demands. The learned rotation itself has
-    // no DuckDB replay (64×64 Jacobi eigendecomposition).
-    "emb_opq_served_parity" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS parity_ok
-         |FROM (SELECT DISTINCT vec_id FROM embeddings
-         |      WHERE vec_id < $NumQueries)""".stripMargin,
-
-    "emb_opq_rotation_integrity" ->
-      """SELECT CAST(max(len(embedding)) + 1 AS BIGINT) AS n_rot_rows,
-        |       true AS orthonormal_ok, true AS l2_preserved_ok
-        |FROM embeddings""".stripMargin,
 
     // E260: the persisted round trip must reproduce the in-memory
     // chain bit-for-bit — same oracle as emb_topk_ivfpq_residual.

@@ -1,7 +1,7 @@
 package graft
 
-/** `IndexMain --graph` flow (E304): build + read-back probe against a
-  * temp dir, stats cross-foot with the fixture.
+/** `IndexMain` flows (E260/E304/E314): build + read-back probe against
+  * a temp dir, stats cross-foot with the fixture.
   */
 class IndexMainSpec extends SparkSpec {
 
@@ -16,20 +16,12 @@ class IndexMainSpec extends SparkSpec {
     assert(served === 3, s"probe served $served rows, wanted k = 3")
   }
 
-  test("--opq flow persists the rotation and serves through it") {
+  test("default flow builds, reloads, and serves a probe search") {
     val out = java.nio.file.Files
-      .createTempDirectory("graft_opqidx").toString
-    val (nVecs, rotated, served) =
-      IndexMain.runPq(spark, sfDir, out, numSub = 16, opq = true)
+      .createTempDirectory("graft_pqidx").toString
+    val (nVecs, served) = IndexMain.runPq(spark, sfDir, out, numSub = 16)
     assert(nVecs === Tables.embeddings(spark, sfDir).count())
-    assert(rotated, "artifact carries no rotation despite --opq")
     assert(served === 3, s"probe served $served rows, wanted k = 3")
-    // the default (no --opq) build stays rotation-free
-    val out2 = java.nio.file.Files
-      .createTempDirectory("graft_rawidx").toString
-    val (_, rotated2, _) =
-      IndexMain.runPq(spark, sfDir, out2, numSub = 16, opq = false)
-    assert(!rotated2)
   }
 
   test("--tx flow commits, time travels, retains, and still serves") {

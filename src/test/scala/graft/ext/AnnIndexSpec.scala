@@ -38,17 +38,28 @@ class AnnIndexSpec extends SparkSpec {
   test("loader refuses a wrong-version manifest") {
     val dir = Files.createTempDirectory("annidx_v").toString
     AnnIndex.build(corpus, numSub, subDim, dir)
-    val m = spark.read.parquet(s"$dir/manifest.parquet")
-      .withColumn("format_version", lit(99)).collect()
-    val schema = spark.read.parquet(s"$dir/manifest.parquet").schema
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(m.toIndexedSeq), schema)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/manifest.parquet")
+    val manifest = spark.read.parquet(s"$dir/manifest.parquet")
+      .localCheckpoint()
+    def rewrite(m: org.apache.spark.sql.DataFrame): Unit = {
+      m.coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/manifest.parquet")
+      AnnIndex.invalidate(dir)
+    }
+    rewrite(manifest.withColumn("format_version", lit(99)))
     val e = intercept[IllegalArgumentException] {
       AnnIndex.load(spark, dir)
     }
-    assert(e.getMessage.contains("format"))
+    assert(e.getMessage.contains("format 99"))
+    // a v5 artifact that carried the (removed) OPQ rotation: serving it
+    // with unrotated queries would lose recall silently, so the version
+    // check must refuse it before anything else is read
+    rewrite(manifest.withColumn("format_version", lit(5))
+      .withColumn("n_rot_rows", lit(numSub * subDim + 1L)))
+    val e5 = intercept[IllegalArgumentException] {
+      AnnIndex.load(spark, dir)
+    }
+    assert(e5.getMessage.contains(
+      s"has format 5, this reader speaks ${AnnIndex.FormatVersion}"))
   }
 
   test("loader refuses a truncated code table (manifest count mismatch)") {
@@ -70,31 +81,6 @@ class AnnIndexSpec extends SparkSpec {
     intercept[Exception] {
       AnnIndex.load(spark, "/tmp/definitely-absent-annidx")
     }
-  }
-
-  test("re-building WITHOUT opq over an opq-built dir drops the stale " +
-      "rotation (r16 ADVICE: no silent query-rotation against " +
-      "unrotated codes)") {
-    val dir = Files.createTempDirectory("annidx_rot").toString
-    AnnIndex.build(corpus, numSub, subDim, dir, opq = true)
-    assert(spark.read.parquet(s"$dir/manifest.parquet")
-      .head().getAs[Long]("n_rot_rows") > 0L)
-    // the misuse path: IndexMain re-run on the same dir without --opq
-    AnnIndex.build(corpus, numSub, subDim, dir, opq = false)
-    val m2 = spark.read.parquet(s"$dir/manifest.parquet").head()
-    assert(m2.getAs[Long]("n_rot_rows") === 0L,
-      "manifest re-counted a leftover rotation.parquet")
-    assert(!new java.io.File(s"$dir/rotation.parquet").exists(),
-      "stale rotation.parquet survived the non-opq rebuild")
-    // and the rebuilt index serves identically to the plain in-memory
-    // chain (no rotation applied to queries)
-    val q = corpus.filter(col("id") < 10)
-      .select(col("id").as("qid"), col("vec").as("qv"))
-    val persisted = AnnIndex.searchTopK(spark, dir, q, 5, 2)
-    val inMem = Similarity.pqResidualIvfTopK(corpus, numSub, subDim,
-      10, 5, 2)
-    assert(persisted.exceptAll(inMem).isEmpty &&
-      inMem.exceptAll(persisted).isEmpty)
   }
 
   test("session caches key on a per-session token: a second session " +

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Persisted graph index (E291): build → read-back → search is
-  * row-identical to the in-memory chain, a truncated artifact refuses
-  * to load, and a crashed build (no manifest) never serves.
+  * row-identical to the in-memory chain, a truncated or wrong-version
+  * artifact refuses to load, and a crashed build (no manifest) never
+  * serves.
   */
 class GraphIndexSpec extends SparkSpec {
 
@@ -60,6 +61,29 @@ class GraphIndexSpec extends SparkSpec {
       GraphIndex.load(spark, dir)
     }
     assert(e.getMessage.contains("truncated"), e.getMessage)
+  }
+
+  test("loader refuses a wrong-version manifest, including a v4 " +
+      "artifact with the removed entry layer") {
+    val dir = tempDir("ver")
+    GraphIndex.build(corpus, Dim, GK, dir)
+    val manifest = spark.read.parquet(s"$dir/manifest.parquet")
+      .localCheckpoint()
+    for ((v, m) <- Seq(
+        99 -> manifest.withColumn("format_version", lit(99)),
+        4 -> manifest.withColumn("format_version", lit(4))
+          .withColumn("layer_mod", lit(4))
+          .withColumn("n_layer_edges", lit(1L)))) {
+      m.coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/manifest.parquet")
+      GraphIndex.invalidate(dir)
+      val e = intercept[IllegalArgumentException] {
+        GraphIndex.load(spark, dir)
+      }
+      assert(e.getMessage.contains(
+        s"has format $v, this reader speaks ${GraphIndex.FormatVersion}"),
+        e.getMessage)
+    }
   }
 
   test("a crashed build (manifest absent) never serves") {

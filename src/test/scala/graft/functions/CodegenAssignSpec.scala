@@ -56,6 +56,12 @@ class CodegenAssignSpec extends SparkSpec {
       .select(col("id"), col("m"), col("best.cl"))
       .as[(Long, Int, Long)].collect().toSet
     assert(got == want)
+    // a codebook with no codewords for one subspace fails at plan
+    // time, naming the subspace
+    val e = intercept[IllegalArgumentException](
+      Similarity.pqEncodeFromCodebook(vdf, numSub, subDim,
+        cw.filter(col("m") =!= 2)))
+    assert(e.getMessage.contains("subspace 2 of 4"))
   }
 
   test("CosineArgmaxCell equals the broadcast-join max_by bit-for-bit") {
@@ -80,6 +86,14 @@ class CodegenAssignSpec extends SparkSpec {
       .select(col("id"), col("best.cpart"), col("best.score"))
       .as[(Long, Long, Double)].collect().toSet
     assert(got == want)
+    // an empty centroid table fails at plan time, naming the
+    // precondition, in the kernel and in the assignment that feeds it
+    val e1 = intercept[IllegalArgumentException](
+      CosineArgmaxCell.of(col("vec"), IndexedSeq.empty))
+    assert(e1.getMessage.contains("at least one centroid"))
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.nearestCell(vdf, cdf.limit(0)))
+    assert(e2.getMessage.contains("at least one centroid"))
   }
 
   test("twoLevelAssign (codegen kernel) equals the legacy join chain") {
