@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * R3 filter → R4 route → R7 counter → R5 sink).
   *
   * Physical profile: a single narrow WholeStageCodegen stage — scan →
-  * `from_json` projection → blocklist filter → literal routing chain →
+  * native envelope decode → delete drop → `route_table` lookup →
   * null-drop → projection. No shuffle, no sort, no state. At 100 TB this
   * pipeline is embarrassingly parallel: throughput scales linearly with
   * input partitions (Kafka partitions / parquet splits), which is exactly
@@ -30,7 +30,7 @@ object Pipeline {
     * .filter(target.isNotNull)`; physically crucial: Catalyst pushes each
     * Filter through the parse projection by INLINING the aliased
     * expressions into the predicate, so the filter formulation re-runs the
-    * envelope decode (and the whole routing CASE chain) once per predicate
+    * envelope decode (and the route lookup) once per predicate
     * occurrence — ten decode sites in the optimized plan, measured 3×
     * slower on the forwarding hot path. A generator's condition is
     * evaluated once per row, emits 0 or 1 rows in place, and leaves no
@@ -42,12 +42,12 @@ object Pipeline {
     * The routing expression is computed ONCE, in its own projection the
     * generator consumes as a plain attribute. The naive
     * `when(cond && target.isNotNull, array(target))` duplicates the
-    * whole regex CASE chain inside the generator (condition + value),
-    * and GenerateExec codegen has no subexpression elimination — plan
-    * inspection showed every RLIKE twice, i.e. forwarded rows paid the
-    * fold 2×. The delete check folds INTO the projected target
-    * (`WHEN op <> 'd' THEN <chain>`), so deletes short-circuit to NULL
-    * without touching a regex and the generator's only predicate is one
+    * route lookup inside the generator (condition + value), and
+    * GenerateExec codegen has no subexpression elimination — plan
+    * inspection showed every regex twice, i.e. forwarded rows paid the
+    * lookup 2×. The delete check folds INTO the projected target
+    * (`WHEN op <> 'd' THEN route_table(...)`), so deletes short-circuit
+    * to NULL without touching a regex and the generator's only predicate is one
     * null probe. CollapseProject leaves the alias alone (multi-referenced,
     * non-cheap), and Project + Generate fuse into the same
     * WholeStageCodegen span, so the extra projection is free.
@@ -55,7 +55,7 @@ object Pipeline {
   private def forward(parsed: DataFrame, rules: Seq[TransformRule],
                       keep: Seq[String]): DataFrame = {
     val target = when(col("op") =!= lit("d"),
-      Routing.targetExpr(rules, col("topic"), col("db"), col("tbl")))
+      graft.functions.RouteTable(col("topic"), col("db"), col("tbl"), rules))
     parsed
       .select(keep.map(col) :+ target.as("_route_target"): _*)
       .select(keep.map(col) :+

@@ -328,14 +328,14 @@ object Similarity {
     math.max(1L, (n + targetPop - 1) / targetPop)
   }
 
-  /** Nearest-cell assignment against a broadcastable (cpart, cvec)
-    * table, argmax ties to the smaller cell — the [[assignToNearest]]
-    * shape without the carried source-partition column. Join + bounded
-    * aggregation rather than a generated literal-array argmax
-    * ([[kmeansIterated]]'s shape): at k in the hundreds the expression
-    * tree would blow past what the analyzer/codegen handle (the
-    * RouteScaleBench ≥300-rule cliff), while the join form scales as
-    * k·n scored rows with partial max_by aggregation.
+  /** Nearest-cell assignment against a (cpart, cvec) centroid table,
+    * argmax ties to the smaller cell — the [[assignToNearest]] shape
+    * without the carried source-partition column. The table is
+    * collected to the driver and scored by one native
+    * [[graft.functions.CosineArgmaxCell]] loop per vector, not by a
+    * generated literal-array argmax ([[kmeansIterated]]'s shape): the
+    * table rides as one reference object, so the generated code does
+    * not grow with k.
     */
   private def nearestOf(vecs: DataFrame, centVecs: DataFrame): DataFrame = {
     // r17: the broadcast-join × k expansion and its max_by hash
@@ -1945,6 +1945,13 @@ object Similarity {
     * candidates) and the E250 serving pipeline (residual-IVF-PQ
     * candidates after exact rerank), so the selection rule can never
     * drift between the two entry points.
+    *
+    * Precondition: every `cid` in `cand0` resolves to an `id` in
+    * `corpus`. Pools are built after the candidate-to-corpus vector
+    * join, so a dangling cid drops out of its pool and cannot be
+    * selected, even at rank 1. Both callers draw their candidates from
+    * the same corpus, so this holds; it is not re-checked, because a
+    * check would cost one more Spark job per call.
     */
   def mmrOverCandidates(cand0: DataFrame, corpus: DataFrame, k: Int,
       lambda: Double, oneMinusLambda: Double): DataFrame = {

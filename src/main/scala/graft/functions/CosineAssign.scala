@@ -347,13 +347,27 @@ case class TwoLevelCosineAssign(child: Expression,
 object TwoLevelCosineAssign {
   /** `groups` in ASCENDING gpart order; each group's cells in
     * ASCENDING cpart order (the strict-compare tie rules' required
-    * orders).
+    * orders). `groups` must be non-empty and `fine` must hold one
+    * non-empty cell list per group, as `coarsenCentroids` guarantees:
+    * a vector whose probed groups hold no cells would otherwise get a
+    * (cell 0, score 0.0) row where the join chain this kernel replaced
+    * dropped it.
     */
   def of(vec: Column,
       groups: IndexedSeq[(Long, IndexedSeq[Double])],
       fine: IndexedSeq[IndexedSeq[(Long, IndexedSeq[Double])]],
-      probe: Int): Column =
+      probe: Int): Column = {
+    require(groups.nonEmpty,
+      "TwoLevelCosineAssign needs at least one coarse group; the group " +
+        "table is empty")
+    require(fine.length == groups.length,
+      s"TwoLevelCosineAssign needs one fine group per coarse group; got " +
+        s"${fine.length} fine groups for ${groups.length} coarse groups")
+    require(fine.forall(_.nonEmpty),
+      "TwoLevelCosineAssign needs every fine group non-empty; group " +
+        s"${fine.indexWhere(_.isEmpty)} has no cells")
     GraftBridge.column(TwoLevelCosineAssign(GraftBridge.expression(vec),
       groups.map(_._1), groups.map(_._2),
       fine.map(_.map(_._1)), fine.map(_.map(_._2)), probe))
+  }
 }

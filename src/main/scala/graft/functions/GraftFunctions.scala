@@ -138,12 +138,6 @@ object GraftFunctions {
         require(args.length == 3,
           s"bpe_merge expects (sym, lhs, rhs) — got ${args.length} arguments")
         BpeMerge(args.head, args(1), args(2))
-      }),
-    (FunctionIdentifier("first_match"),
-      new ExpressionInfo(classOf[FirstMatch].getName, "first_match"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"first_match expects 2 arguments, got ${args.length}")
-        FirstMatch(args.head, args(1))
       }))
 
   /** Register on a live session (idempotent). */

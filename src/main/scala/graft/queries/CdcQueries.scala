@@ -138,15 +138,6 @@ object CdcQueries {
       Pipeline.route(
         Envelopes.fromEvents(s, dir, s.sparkContext.defaultParallelism), rules)),
 
-    // R4 (join formulation): same result via a broadcast equi-join on
-    // per-(topic, db) candidate arrays + an ordered first-match fold —
-    // the large-rule-set physical strategy (no shuffle, no row id).
-    "cdc_route_join" -> ((s, dir) => {
-      val parsed = Filter.dropDeletes(Parse.parse(Envelopes.fromEvents(s, dir)))
-      Routing.targetViaJoin(s, parsed, rules)
-        .select("target_topic", "key", "value")
-    }),
-
     // R6: consumed-event counter family by (topic, db, table, op).
     "cdc_events_by_label" -> ((s, dir) =>
       Pipeline.eventCounts(Envelopes.fromEvents(s, dir))),
@@ -467,11 +458,6 @@ object CdcQueries {
          |FROM parsed WHERE op <> 'd' AND ($routeCase) IS NOT NULL""".stripMargin,
 
     "cdc_route_typed" ->
-      s"""$parsedCte
-         |SELECT $routeCase AS target_topic, key, value
-         |FROM parsed WHERE op <> 'd' AND ($routeCase) IS NOT NULL""".stripMargin,
-
-    "cdc_route_join" ->
       s"""$parsedCte
          |SELECT $routeCase AS target_topic, key, value
          |FROM parsed WHERE op <> 'd' AND ($routeCase) IS NOT NULL""".stripMargin,

@@ -675,10 +675,10 @@ object CurationQueries {
     // scan as literals (a broadcast in spirit — zero shuffle, zero
     // join; Catalyst rewrites the IN to an O(1)-probe InSet), the
     // per-row work is one pass over the token array plus one
-    // contains() per phrase. BlocklistScaleBench MEASURED the
-    // crossover vs the join tier (E186): the literal fold wins at
-    // every size through 10⁵ entries (InSet probes are flat; only the
-    // plan-resident list grows) — the join tier's case is a
+    // contains() per phrase. SCALING.md ("Blocklist tiers") records
+    // the measured crossover vs the join tier (E186): the literal fold
+    // wins at every size through 10⁵ entries (InSet probes are flat;
+    // only the plan-resident list grows) — the join tier's case is a
     // dictionary too large or too DYNAMIC to live in the plan
     // (updated without re-deploying the query), not raw speed.
     "docs_blocklist" -> ((s, dir) => {
@@ -949,13 +949,13 @@ object CurationQueries {
     // E186: the dictionary-as-DATA blocklist tier — the SAME verdict
     // as E177's literal-folded projection, but with doc tokens (and
     // adjacent-bigram phrases) semi-joined against a broadcast
-    // blocklist table. BlocklistScaleBench measured the literal tier
-    // faster through 10⁵ entries (InSet probes are O(1)), so this
-    // tier's case is OPERATIONAL, not raw speed: a dictionary updated
-    // without re-planning the query, shared across jobs as a table,
-    // or too large to serialize into every task's plan. Candidate
-    // rows are DISTINCT doc terms, so the join input is bounded by
-    // vocabulary-per-doc, not token count. Equality with
+    // blocklist table. SCALING.md ("Blocklist tiers") records the
+    // literal tier measured faster through 10⁵ entries (InSet probes
+    // are O(1)), so this tier's case is OPERATIONAL, not raw speed: a
+    // dictionary updated without re-planning the query, shared across
+    // jobs as a table, or too large to serialize into every task's
+    // plan. Candidate rows are DISTINCT doc terms, so the join input is
+    // bounded by vocabulary-per-doc, not token count. Equality with
     // docs_blocklist is pinned in CurationGateSpec — same oracle SQL,
     // so the driver hashes both against the same truth.
     "docs_blocklist_join" -> ((s, dir) => {

@@ -172,8 +172,7 @@ object StreamingPipeline {
     * state store; the static side is broadcast (small dims), so each
     * micro-batch is a map-side hash join and the stream never
     * shuffles. This is the streaming twin of the batch broadcast-dim
-    * joins in RelationalQueries and the join-form router (`cdc/Routing
-    * .targetViaJoin`).
+    * joins in RelationalQueries.
     */
   def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
     stream.join(broadcast(dim), Seq(key), "left")

@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.cdc.Routing.TransformRule
+import graft.functions.RouteTable
 
 /** R4/R8 routing semantics (reference `transform.rs:26-65`): exact
   * topic/db equality, unanchored table regex, FIRST match wins, silent
@@ -18,7 +19,7 @@ class RoutingSpec extends SparkSpec {
 
   private def route(rows: (String, String, String)*) =
     rows.toSeq.toDF("topic", "db", "tbl")
-      .withColumn("target", Routing.targetExpr(rules, col("topic"), col("db"), col("tbl")))
+      .withColumn("target", RouteTable(col("topic"), col("db"), col("tbl"), rules))
       .select("tbl", "target").as[(String, String)].collect().toMap
 
   test("first matching rule wins on overlap; later rules still reachable") {
@@ -48,7 +49,7 @@ class RoutingSpec extends SparkSpec {
     assert(m("gsms_msg_ticket_mms_1") == null)
   }
 
-  test("targetViaJoin matches targetExpr, including duplicate Kafka keys") {
+  test("records sharing a Kafka key both survive the route") {
     // Two DISTINCT records share key k1 (routine in CDC): both must
     // survive — the round-1 window-over-key formulation collapsed them.
     val parsed = Seq(
@@ -57,14 +58,11 @@ class RoutingSpec extends SparkSpec {
       ("t1", "k2", "v3", "u", "db", "none"),
       ("t2", "k3", "v4", "u", "db", "gsms_msg_ticket_sms_5"))
       .toDF("topic", "key", "value", "op", "db", "tbl")
-    val viaJoin = Routing.targetViaJoin(spark, parsed, rules)
-      .select("key", "value", "target_topic").as[(String, String, String)].collect().toSet
-    val viaExpr = parsed
-      .withColumn("target_topic", Routing.targetExpr(rules, col("topic"), col("db"), col("tbl")))
-      .filter(col("target_topic").isNotNull)
-      .select("key", "value", "target_topic").as[(String, String, String)].collect().toSet
-    assert(viaJoin == viaExpr)
-    assert(viaJoin.map(_._2) == Set("v1", "v2", "v4"))
+    val routed = Pipeline.routeParsed(parsed, rules)
+      .select("key", "value", "target_topic").as[(String, String, String)].collect()
+    assert(routed.toSet == Set(("k1", "v1", "low"), ("k1", "v2", "rest"),
+      ("k3", "v4", "gsms")))
+    assert(routed.length == 3)
   }
 
   test("validate fails fast on an invalid regex, like transform.rs:33") {

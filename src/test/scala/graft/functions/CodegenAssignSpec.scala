@@ -140,6 +140,18 @@ class CodegenAssignSpec extends SparkSpec {
         col("n_fine_cand"))
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(got == want)
+    // degenerate tables fail at plan time, naming the precondition
+    val g = IndexedSeq((0L, IndexedSeq(1.0, 0.0)))
+    val f = IndexedSeq(IndexedSeq((5L, IndexedSeq(1.0, 0.0))))
+    def fails(groups: IndexedSeq[(Long, IndexedSeq[Double])],
+        fine: IndexedSeq[IndexedSeq[(Long, IndexedSeq[Double])]]): String =
+      intercept[IllegalArgumentException](
+        TwoLevelCosineAssign.of(col("vec"), groups, fine, 1)).getMessage
+    assert(fails(IndexedSeq.empty, IndexedSeq.empty)
+      .contains("at least one coarse group"))
+    assert(fails(g, IndexedSeq(IndexedSeq.empty))
+      .contains("every fine group non-empty"))
+    assert(fails(g, f ++ f).contains("one fine group per coarse group"))
   }
 
   test("mmrOverCandidates (per-query fold) equals the legacy rank loop") {

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter,
+  SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -502,12 +503,22 @@ class PlanAuditSpec extends SparkSpec {
       case n if !narrow.exists(n.nodeName.contains(_)) => n.nodeName
     }
     assert(wide.isEmpty, s"non-narrow operator(s) $wide in:\n$plan")
-    // the route when-chain itself must live inside a codegen span
-    val wsc = plan.collect {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    // the route kernel runs exactly once per row, inside a codegen span
+    // (a second copy is the fold-evaluated-twice-in-Generate regression)
+    def kernels(p: SparkPlan) =
+      p.expressions.flatMap(_.collect {
+        case r: graft.functions.RouteTable => r
+      })
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(fused)
     }
-    assert(wsc.exists(_.toString.contains("target_topic")),
-      s"route projection fell out of codegen:\n$plan")
+    assert(plan.flatMap(kernels).size == 1,
+      s"expected one route_table in the executed plan:\n$plan")
+    val inCodegen = plan.collect {
+      case w: WholeStageCodegenExec => fused(w.child).flatMap(kernels)
+    }.flatten
+    assert(inCodegen.size == 1, s"route kernel fell out of codegen:\n$plan")
   }
 
   test("Q6 shape: every predicate pushed to the scan, four-column read") {
@@ -600,7 +611,7 @@ class PlanAuditSpec extends SparkSpec {
     // the full registered-query surface (338 at r15). Plans only — nothing executes.
     val markers = Seq("regexp_extract", "regexp_replace", "xxhash64",
       "cdc_envelope", "from_json", "transform(", "aggregate(", "md5(",
-      "RLIKE", "split(", "sha2(")
+      "RLIKE", "route_table(", "split(", "sha2(")
     def count(h: String, n: String): Int = {
       var c = 0; var i = h.indexOf(n)
       while (i >= 0) { c += 1; i = h.indexOf(n, i + 1) }
