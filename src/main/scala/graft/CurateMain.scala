@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Curation, Dedup, TextOps}
+import graft.ext.{Curation, Dedup, IndexFiles, TextOps}
 
 /** End-to-end curation entrypoint — the training-data twin of
   * [[StreamMain]]: run the engine's curation flow over a documents
@@ -72,10 +72,11 @@ object CurateMain {
   def run(spark: SparkSession, docsDir: String, outDir: String,
           epochSalt: String = "epoch1:"): Summary = {
     val docs = Tables.documents(spark, docsDir)
-    val nInput = docs.count()
+    // input and gated counts in ONE pass over the documents
+    val counts = docs.agg(count(lit(1)), count_if(gateRule)).head()
+    val (nInput, nGated) = (counts.getLong(0), counts.getLong(1))
 
     val gated = gate(docs)
-    val nGated = gated.count()
 
     // near-dup removal over the GATED corpus (dedup after cheap gates:
     // the gates are projections, the dedup is the expensive stage —
@@ -97,8 +98,11 @@ object CurateMain {
       .parquet(s"$outDir/shards")
 
     // manifest from what was actually written (read-back, not the
-    // pre-write frame: the manifest must describe the artifact)
-    val manifest = spark.read.parquet(s"$outDir/shards")
+    // pre-write frame: the manifest must describe the artifact; the
+    // written data schema is the frame's minus the partition column,
+    // so no schema-inference job)
+    val manifest = spark.read.schema(sharded.drop("shard").schema)
+      .parquet(s"$outDir/shards")
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(TextOps.tokens(col("text"))).cast("long")).as("n_tokens"),
@@ -107,19 +111,25 @@ object CurateMain {
         sum(col("doc_id")).as("id_checksum"))
     manifest.write.mode("overwrite").parquet(s"$outDir/manifest")
 
-    val nKept = kept.count()
-    val nShards = spark.read.parquet(s"$outDir/manifest").count()
-    Summary(nInput, nGated, nKept, nShards)
+    // kept docs and shards from the manifest just written (≤ NumShards
+    // rows, read on the driver): recounting `kept` would re-run the
+    // gate, the near-dup pass and the anti-join
+    val shards = IndexFiles.driverRows(spark, s"$outDir/manifest",
+      "curate manifest")
+    Summary(nInput, nGated, shards.map(_("n_docs").asInstanceOf[Long]).sum,
+      shards.size.toLong)
   }
 
   /** The rule-gate stage: one narrow projection, pushdown-safe. */
-  def gate(docs: DataFrame): DataFrame = {
+  def gate(docs: DataFrame): DataFrame = docs.filter(gateRule)
+
+  /** The gate predicate over a documents row. */
+  private def gateRule: Column = {
     val ws = TextOps.tokens(col("text"))
     val n = size(ws)
-    docs.filter(
-      col("lang") === "en" &&
-        n >= MinTokens && n <= MaxTokens &&
-        TextOps.qualityScore(col("text")) >= MinQuality &&
-        size(filter(ws, t => t.isInCollection(BlockTerms))) === 0)
+    col("lang") === "en" &&
+      n >= MinTokens && n <= MaxTokens &&
+      TextOps.qualityScore(col("text")) >= MinQuality &&
+      size(filter(ws, t => t.isInCollection(BlockTerms))) === 0
   }
 }

@@ -57,8 +57,9 @@ object IndexMain {
     spark.sparkContext.setLogLevel("WARN")
 
     val (nVectors, served) = runPq(spark, args(0), args(1), numSub)
-    val idx = AnnIndex.load(spark, args(1))
-    println(s"""{"metric":"index","n_vectors":$nVectors,"n_cells":${idx.centroids.count()},"n_codebook_rows":${idx.codebooks.count()},"num_sub":${idx.numSub},"sub_dim":${idx.subDim},"probe_rows":$served}""")
+    // the counts the validated manifest recorded — no count jobs
+    val idx = AnnIndex.loadCached(spark, args(1))
+    println(s"""{"metric":"index","n_vectors":$nVectors,"n_cells":${idx.nCells},"n_codebook_rows":${idx.nCodebookRows},"num_sub":${idx.numSub},"sub_dim":${idx.subDim},"probe_rows":$served}""")
     spark.stop()
   }
 
@@ -75,11 +76,12 @@ object IndexMain {
     require(dim % numSub == 0, s"dim $dim not divisible by numSub $numSub")
     AnnIndex.build(vecs, numSub, dim / numSub, indexDir)
     // read-back proof: load (manifest re-asserted) and serve one probe
-    // query from the persisted artifact
+    // query from the persisted artifact; the vector count is the one
+    // the validated manifest recorded
     val idx = AnnIndex.load(spark, indexDir)
     val q = vecs.limit(1).select(col("id").as("qid"), col("vec").as("qv"))
     val served = AnnIndex.searchTopK(spark, indexDir, q, 3, 2).count()
-    (idx.codes.count(), served)
+    (idx.nVectors, served)
   }
 
   /** `--graph` mode: build + read-back-probe the persisted graph
@@ -205,6 +207,6 @@ object IndexMain {
     val idx = GraphIndex.load(spark, indexDir)
     val served = GraphIndex.searchTopKBeam(spark, indexDir,
       numQueries = 1, seeds = 3, hops = 2, ef = ef, k = 3).count()
-    (idx.vectors.count(), idx.edges.count(), served)
+    (idx.nVectors, idx.nEdges, served)
   }
 }

@@ -37,12 +37,17 @@ import org.apache.spark.sql.functions._
   * loadable index; [[load]] re-asserts it — format version, geometry
   * arithmetic, and the row count of every table against the counts
   * recorded at build time (a truncated or mixed-version artifact fails
-  * loudly, not as silent recall loss). Since v3 that integrity gate
-  * runs ONCE PER SESSION per artifact ([[loadCached]]), not once per
-  * search — counting four tables per query was serve-path overhead
-  * that re-verified what build/append/delete/compact already verified
-  * when they rewrote the manifest; writers invalidate the cache so
-  * the next search revalidates exactly once. Parquet round-trips IEEE
+  * loudly, not as silent recall loss). Both sides of that check read
+  * parquet FOOTERS on the driver ([[IndexFiles.tableMeta]]): the
+  * writers record footer row counts, and [[load]] compares footer row
+  * counts, pins every table's schema from one footer and reads the
+  * one-row manifest directly — the whole gate runs no Spark job, and
+  * its driver cost is one footer read per data file. A deleted data
+  * file shows as a short count; a file cut short loses its footer and
+  * fails naming its table. Searches go through [[loadCached]], which
+  * [[load]] itself fills, so a load followed by a search validates
+  * once; writers invalidate the cache so the next search revalidates
+  * exactly once. Parquet round-trips IEEE
   * doubles bit-exactly, so a search over the re-loaded artifact is
   * hash-identical to the in-memory chain — AnnIndexSpec pins that, and
   * the `emb_persisted_topk` gate row hashes the read-back search
@@ -70,21 +75,31 @@ object AnnIndex {
     */
   val FormatVersion = 6
 
-  /** Loaded, validated artifact handles. */
+  /** Error-message prefix of this artifact's integrity checks. */
+  private val Label = "index"
+
+  /** Loaded, validated artifact handles, with the row counts the
+    * validated manifest recorded (physical rows: `nVectors` includes
+    * tombstoned ids until a [[compact]]).
+    */
   final case class Index(numSub: Int, subDim: Int,
       centroids: DataFrame, codebooks: DataFrame, codes: DataFrame,
-      tombstones: DataFrame, cellStats: DataFrame) {
+      tombstones: DataFrame, cellStats: DataFrame,
+      nCells: Long, nCodebookRows: Long, nVectors: Long,
+      nTombstones: Long) {
     /** Codes visible to a search: physical rows minus tombstoned ids
       * (the Lucene/FAISS soft-delete read path; [[compact]] makes it
-      * physical).
+      * physical). With no tombstones the anti-join is skipped — it
+      * would cost every serve plan a broadcast job for nothing.
       */
     def liveCodes: DataFrame =
-      codes.join(tombstones.select(col("id")), Seq("id"), "left_anti")
+      if (nTombstones == 0) codes
+      else codes.join(tombstones.select(col("id")), Seq("id"), "left_anti")
   }
 
   /** Once-per-session validated loads, keyed by artifact directory:
-    * the serve path pays the four count scans on FIRST touch, then
-    * reuses the validated handles. Every writer [[invalidate]]s its
+    * the serve path pays the footer reads on FIRST touch, then reuses
+    * the validated handles. Every writer [[invalidate]]s its
     * directory, so a post-write search revalidates (and re-lists the
     * changed files) exactly once.
     */
@@ -111,22 +126,21 @@ object AnnIndex {
     * same-process writers invalidate explicitly.
     */
   def loadCached(spark: SparkSession, dir: String): Index =
-    cache.computeIfAbsent(
-      (SessionToken.of(spark), dir), _ => load(spark, dir))
+    Option(cache.get((SessionToken.of(spark), dir)))
+      .getOrElse(load(spark, dir))
 
   /** Manifest row describing the tables ON DISK — every writer calls
-    * this LAST, after its table writes, with counts re-read from the
-    * written files: a crashed build/append/delete/compact leaves a
-    * manifest whose counts fail [[load]]'s check, never a silently
-    * short or stale index.
+    * this LAST, after its table writes, with counts read from the
+    * written files' footers: a crashed build/append/delete/compact
+    * leaves a manifest whose counts fail [[load]]'s check, never a
+    * silently short or stale index.
     */
   private def writeManifest(spark: SparkSession, dir: String,
       numSub: Int, subDim: Int): Unit = {
-    val nCells = spark.read.parquet(s"$dir/centroids.parquet").count()
-    val nBook = spark.read.parquet(s"$dir/codebooks.parquet").count()
-    val nVecs = spark.read.parquet(s"$dir/codes.parquet").count()
-    val nTomb = spark.read.parquet(s"$dir/tombstones.parquet").count()
-    val nStat = spark.read.parquet(s"$dir/cellstats.parquet").count()
+    def rows(name: String): Long =
+      IndexFiles.tableMeta(spark, dir, name, Label).rows
+    val Seq(nCells, nBook, nVecs, nTomb, nStat) = Seq("centroids",
+      "codebooks", "codes", "tombstones", "cellstats").map(rows)
     import spark.implicits._
     Seq((FormatVersion, numSub, subDim, numSub * subDim,
         Similarity.PqCodewords, Similarity.PqTrainIters,
@@ -140,20 +154,30 @@ object AnnIndex {
     invalidate(dir)
   }
 
-  /** Per-cell PHYSICAL population statistics, recomputed from the
-    * WRITTEN code files (the manifest recount discipline) after every
-    * build/append/compact. Deliberately NOT maintained by [[delete]]:
+  /** Per-cell PHYSICAL population statistics, summed from the footers
+    * of the WRITTEN code files under each `cell=K` directory (the
+    * manifest discipline; no Spark job but the one-file write) after
+    * every build/append/compact. Deliberately NOT maintained by
+    * [[delete]]:
     * adaptive probe targeting is a statistics decision (a deployment
     * refreshes stats at compaction), while LIVENESS is enforced by the
     * tombstone anti-join on the candidate set — a slightly-stale
     * population can only widen a probe set, never return a deleted
     * row.
     */
-  private def writeCellStats(spark: SparkSession, dir: String): Unit =
-    spark.read.parquet(s"$dir/codes.parquet")
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
+  private def writeCellStats(spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    IndexFiles.tableMeta(spark, dir, "codes", Label).partRows.toSeq
+      .collect { case (part, n) if n > 0 =>
+        require(part.startsWith("cell="),
+          s"code file outside a cell=K directory under $dir: '$part'")
+        (part.stripPrefix("cell=").toInt, n)
+      }
+      .toDF("cell", "n")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/cellstats.parquet")
+  }
+
 
   /** Build and persist the index for `vecs (id, part, vec)` under
     * `outDir` (`part` seeds the coarse quantizer, the repo-wide IVF
@@ -168,47 +192,37 @@ object AnnIndex {
     cw.write.mode("overwrite").parquet(s"$outDir/codebooks.parquet")
     codes.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$outDir/codes.parquet")
-    // empty tombstone set with the CODES id type — delete() appends to
-    // this file, and parquet append demands an identical schema
-    spark.read.parquet(s"$outDir/codes.parquet").select(col("id"))
-      .limit(0)
-      .write.mode("overwrite").parquet(s"$outDir/tombstones.parquet")
+    IndexFiles.clearTombstones(spark, outDir, "codes", Label)
     writeCellStats(spark, outDir)
     writeManifest(spark, outDir, numSub, subDim)
   }
 
   /** Load + validate. Throws (IllegalArgumentException) on a missing,
-    * truncated, or wrong-version artifact. The count scans make this
-    * the INTEGRITY gate, not the serve path — searches go through
-    * [[loadCached]], which runs this once per session per artifact.
+    * truncated, corrupt or wrong-version artifact. The INTEGRITY gate:
+    * footer reads on the driver, no Spark job. The validated load
+    * fills the [[loadCached]] entry, so the search after a load does
+    * not validate again.
     */
   def load(spark: SparkSession, dir: String): Index = {
-    val m = spark.read.parquet(s"$dir/manifest.parquet").head()
-    def mi(f: String): Int = m.getAs[Int](f)
-    def ml(f: String): Long = m.getAs[Long](f)
+    val m = IndexFiles.manifest(spark, dir, Label)
+    def mi(f: String): Int = IndexFiles.field[Int](m, f, dir)
+    def ml(f: String): Long = IndexFiles.field[Long](m, f, dir)
     require(mi("format_version") == FormatVersion,
       s"index at $dir has format ${mi("format_version")}, " +
         s"this reader speaks $FormatVersion")
     require(mi("num_sub") * mi("sub_dim") == mi("dim"),
       s"manifest geometry inconsistent: ${mi("num_sub")}×${mi("sub_dim")}" +
         s" != ${mi("dim")}")
-    val cvecs = spark.read.parquet(s"$dir/centroids.parquet")
-    val cw = spark.read.parquet(s"$dir/codebooks.parquet")
-    val codes = spark.read.parquet(s"$dir/codes.parquet")
-    val tomb = spark.read.parquet(s"$dir/tombstones.parquet")
-    val stats = spark.read.parquet(s"$dir/cellstats.parquet")
-    def check(name: String, df: DataFrame, want: Long): Unit = {
-      val got = df.count()
-      require(got == want,
-        s"index table $name has $got rows, manifest says $want — " +
-          "truncated or mixed-version artifact")
-    }
-    check("centroids", cvecs, ml("n_cells"))
-    check("codebooks", cw, ml("n_codebook_rows"))
-    check("codes", codes, ml("n_vectors"))
-    check("tombstones", tomb, ml("n_tombstones"))
-    check("cellstats", stats, ml("n_stat_rows"))
-    Index(mi("num_sub"), mi("sub_dim"), cvecs, cw, codes, tomb, stats)
+    def table(name: String, count: String): DataFrame =
+      IndexFiles.readChecked(spark, dir, name, ml(count), Label)
+    val idx = Index(mi("num_sub"), mi("sub_dim"),
+      table("centroids", "n_cells"), table("codebooks", "n_codebook_rows"),
+      table("codes", "n_vectors"), table("tombstones", "n_tombstones"),
+      table("cellstats", "n_stat_rows"),
+      ml("n_cells"), ml("n_codebook_rows"), ml("n_vectors"),
+      ml("n_tombstones"))
+    cache.put((SessionToken.of(spark), dir), idx)
+    idx
   }
 
   /** Incrementally APPEND `newVecs (id, vec)` to a persisted index
@@ -293,12 +307,11 @@ object AnnIndex {
   def compact(dir: String): Unit = {
     val spark = SparkSession.active
     val idx = load(spark, dir)
-    if (idx.tombstones.isEmpty) return
+    if (idx.nTombstones == 0) return
     idx.liveCodes.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/codes.compacting.parquet")
     IndexFiles.swapIn(spark, dir, "codes")
-    spark.read.parquet(s"$dir/codes.parquet").select(col("id")).limit(0)
-      .write.mode("overwrite").parquet(s"$dir/tombstones.parquet")
+    IndexFiles.clearTombstones(spark, dir, "codes", Label)
     writeCellStats(spark, dir)
     writeManifest(spark, dir, idx.numSub, idx.subDim)
   }
@@ -316,12 +329,10 @@ object AnnIndex {
   def searchTopK(spark: SparkSession, dir: String, q: DataFrame,
       k: Int, probe: Int): DataFrame = {
     val idx = loadCached(spark, dir)
-    // the probe picker only consults queries × centroids (tiny);
-    // checkpoint so resolving the pruned cell set does not re-plan it
-    val probes = Similarity.fixedProbePicker(probe)(
-        q, idx.centroids,
-        idx.codes.select(col("id").as("aid"), col("cell")))
-      .localCheckpoint(false)
+    // the probe picker only consults queries × centroids (tiny); the
+    // collected probe set names the pruned cells with no further job
+    val probes = Similarity.local(Similarity.fixedProbePicker(probe)(
+      q, idx.centroids, idx.codes.select(col("id").as("aid"), col("cell"))))
     servePruned(idx, q, k, probes)
   }
 
@@ -349,21 +360,21 @@ object AnnIndex {
     // physical-stats contract, see writeCellStats)
     val n = idx.cellStats.agg(sum(col("n"))).head().getLong(0)
     val target = (targetNum * n + targetDen - 1) / targetDen
-    val probes = Similarity.adaptiveProbePickerWithPop(target,
-        idx.cellStats.select(col("cell"), col("n").as("np")))(
-        q, idx.centroids)
-      .localCheckpoint(false)
+    val probes = Similarity.local(Similarity.adaptiveProbePickerWithPop(
+      target, idx.cellStats.select(col("cell"), col("n").as("np")))(
+      q, idx.centroids))
     servePruned(idx, q, k, probes)
   }
 
-  /** Shared pruned-serve tail: resolve the probed cell set (bounded
-    * by n_cells), push `cell IN (…)` at the partitioned code scan,
-    * run the shared search half over the pruned slice.
+  /** Shared pruned-serve tail: read the probed cell set (bounded by
+    * n_cells) off the collected `probes`, push `cell IN (…)` at the
+    * partitioned code scan, run the shared search half over the pruned
+    * slice.
     */
   private def servePruned(idx: Index, q: DataFrame, k: Int,
       probes: DataFrame): DataFrame = {
-    val cells = probes.select(col("cpart")).distinct()
-      .collect().map(_.get(0)).toSeq // ≤ n_cells rows — bounded
+    val cells = probes.select(col("cpart")).collect() // local: no job
+      .map(_.get(0)).distinct.toSeq
     val pruned = idx.liveCodes.filter(col("cell").isin(cells: _*))
     Similarity.residualIndexSearch(idx.centroids, idx.codebooks,
       pruned, q, idx.numSub, idx.subDim, k, (_, _, _) => probes)

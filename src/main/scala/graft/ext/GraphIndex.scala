@@ -1,7 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 /** Persisted serving artifact for the graph-expansion ANN tier
   * (E291) — what [[AnnIndex]] (E260) is to residual IVF-PQ, this is
@@ -37,13 +41,17 @@ import org.apache.spark.sql.functions._
   * OUTPUT is unchanged — the bucket filter is exactly the set of
   * directories the equi-join on `src` could match.
   *
-  * The manifest is written LAST with counts re-read from the written
-  * files (the [[AnnIndex]] discipline): a crashed build never
+  * The manifest is written LAST with the written files' footer row
+  * counts (the [[AnnIndex]] discipline): a crashed build never
   * presents a loadable index, and [[load]] re-asserts version,
-  * geometry, and per-table counts so a truncated artifact fails
-  * loudly. Since v3 that integrity gate runs ONCE PER SESSION per
-  * artifact ([[loadCached]]) instead of once per search; writers
-  * invalidate the cache. Parquet round-trips IEEE doubles bit-exactly
+  * geometry, and per-table footer counts so a truncated artifact
+  * fails loudly — with no Spark job ([[IndexFiles.tableMeta]]). The
+  * validated load fills [[loadCached]], so a load followed by a
+  * search validates once; writers invalidate the cache. The walk's
+  * state — seeds, visited set, beam — is bounded per query, so it
+  * lives on the driver between hops: each hop is one pruned edge read
+  * (plus, for the beam, one scoring pass), not a checkpoint job chain.
+  * Parquet round-trips IEEE doubles bit-exactly
   * and the search half runs the same expansion arithmetic as the
   * in-memory chain, so the round trip is hash-identical —
   * GraphIndexSpec pins it, and the `emb_graph_persisted` gate row
@@ -76,20 +84,32 @@ object GraphIndex {
     */
   val DefaultEdgeBuckets = 16
 
+  /** Error-message prefix of this artifact's integrity checks. */
+  private val Label = "graph-index"
+
+  /** Loaded, validated artifact handles, with the row counts the
+    * validated manifest recorded (physical rows, tombstoned ids
+    * included until a [[compact]]).
+    */
   final case class Index(dim: Int, graphK: Int, edgeBuckets: Int,
       vectors: DataFrame, sigs: DataFrame, edges: DataFrame,
-      tombstones: DataFrame) {
+      tombstones: DataFrame,
+      nVectors: Long, nEdges: Long, nTombstones: Long) {
     /** Soft-delete read paths: tombstoned ids neither seed, relay,
       * nor return — vectors and signatures anti-join the tombstones,
       * and an edge dies if EITHER endpoint is tombstoned (a deleted
-      * node must not relay a walk).
+      * node must not relay a walk). With no tombstones the anti-joins
+      * are skipped — each would cost its plan a broadcast job.
       */
     def liveVectors: DataFrame =
-      vectors.join(tombstones.select(col("id")), Seq("id"), "left_anti")
+      if (nTombstones == 0) vectors
+      else vectors.join(tombstones.select(col("id")), Seq("id"), "left_anti")
     def liveSigs: DataFrame =
-      sigs.join(tombstones.select(col("id")), Seq("id"), "left_anti")
+      if (nTombstones == 0) sigs
+      else sigs.join(tombstones.select(col("id")), Seq("id"), "left_anti")
     def liveEdges: DataFrame =
-      edges
+      if (nTombstones == 0) edges
+      else edges
         .join(tombstones.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(tombstones.select(col("id").as("dst")), Seq("dst"), "left_anti")
   }
@@ -110,8 +130,8 @@ object GraphIndex {
     * same uniqueness/aliasing reasons as AnnIndex.
     */
   def loadCached(spark: SparkSession, dir: String): Index =
-    cache.computeIfAbsent(
-      (SessionToken.of(spark), dir), _ => load(spark, dir))
+    Option(cache.get((SessionToken.of(spark), dir)))
+      .getOrElse(load(spark, dir))
 
   /** Edge rows carry their hive-partition bucket derived from the
     * SOURCE id — the join side every hop probes.
@@ -120,12 +140,13 @@ object GraphIndex {
     edges.withColumn("bucket",
       pmod(col("src"), lit(buckets.toLong)).cast("int"))
 
+  /** Manifest row with the footer row counts of the written tables —
+    * every writer calls this LAST. */
   private def writeManifest(spark: SparkSession, dir: String,
       dim: Int, graphK: Int, edgeBuckets: Int): Unit = {
-    val nVecs = spark.read.parquet(s"$dir/vectors.parquet").count()
-    val nSigs = spark.read.parquet(s"$dir/sigs.parquet").count()
-    val nEdges = spark.read.parquet(s"$dir/edges.parquet").count()
-    val nTomb = spark.read.parquet(s"$dir/tombstones.parquet").count()
+    val Seq(nVecs, nSigs, nEdges, nTomb) =
+      Seq("vectors", "sigs", "edges", "tombstones")
+        .map(IndexFiles.tableMeta(spark, dir, _, Label).rows)
     import spark.implicits._
     Seq((FormatVersion, dim, graphK, edgeBuckets,
         nVecs, nSigs, nEdges, nTomb))
@@ -135,6 +156,7 @@ object GraphIndex {
       .write.mode("overwrite").parquet(s"$dir/manifest.parquet")
     invalidate(dir)
   }
+
 
   /** Build and persist the graph index for `vecs (id, part, vec)`
     * under `outDir` (`part` buckets the kNN pair stage, the E267
@@ -152,11 +174,7 @@ object GraphIndex {
         edgeBuckets)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$outDir/edges.parquet")
-    // empty tombstone set with the VECTORS id type — delete() appends
-    // to this file, and parquet append demands an identical schema
-    spark.read.parquet(s"$outDir/vectors.parquet").select(col("id"))
-      .limit(0)
-      .write.mode("overwrite").parquet(s"$outDir/tombstones.parquet")
+    IndexFiles.clearTombstones(spark, outDir, "vectors", Label)
     writeManifest(spark, outDir, dim, graphK, edgeBuckets)
   }
 
@@ -199,7 +217,7 @@ object GraphIndex {
   def compact(dir: String): Unit = {
     val spark = SparkSession.active
     val idx = load(spark, dir)
-    if (idx.tombstones.isEmpty) return
+    if (idx.nTombstones == 0) return
     idx.liveVectors.write.mode("overwrite")
       .parquet(s"$dir/vectors.compacting.parquet")
     IndexFiles.swapIn(spark, dir, "vectors")
@@ -209,8 +227,7 @@ object GraphIndex {
     idx.liveEdges.write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/edges.compacting.parquet")
     IndexFiles.swapIn(spark, dir, "edges")
-    spark.read.parquet(s"$dir/vectors.parquet").select(col("id")).limit(0)
-      .write.mode("overwrite").parquet(s"$dir/tombstones.parquet")
+    IndexFiles.clearTombstones(spark, dir, "vectors", Label)
     writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets)
   }
 
@@ -219,7 +236,7 @@ object GraphIndex {
     * new node gets its top-`graphK` within-bucket out-edges computed
     * against the FULL post-append population (existing ∪ batch), the
     * existing nodes' edge lists stay FROZEN (no rebuild), and the
-    * manifest is rewritten LAST with re-read counts (a crashed append
+    * manifest is rewritten LAST with footer counts (a crashed append
     * fails the count check, never serves a short index). Guards:
     * batch ids disjoint from the indexed set (add, not upsert), and
     * EVERY batch vector's width must match the manifest dim (min =
@@ -288,34 +305,28 @@ object GraphIndex {
   }
 
   /** Load + validate. Throws (IllegalArgumentException) on a missing,
-    * truncated, or wrong-version artifact. Searches go through
-    * [[loadCached]] — this runs once per session per artifact.
+    * truncated, corrupt or wrong-version artifact: footer reads on the
+    * driver, no Spark job. The validated load fills the
+    * [[loadCached]] entry, so the search after a load does not
+    * validate again.
     */
   def load(spark: SparkSession, dir: String): Index = {
-    val m = spark.read.parquet(s"$dir/manifest.parquet").head()
-    def mi(f: String): Int = m.getAs[Int](f)
-    def ml(f: String): Long = m.getAs[Long](f)
+    val m = IndexFiles.manifest(spark, dir, Label)
+    def mi(f: String): Int = IndexFiles.field[Int](m, f, dir)
+    def ml(f: String): Long = IndexFiles.field[Long](m, f, dir)
     require(mi("format_version") == FormatVersion,
       s"graph index at $dir has format ${mi("format_version")}, " +
         s"this reader speaks $FormatVersion")
-    val vectors = spark.read.parquet(s"$dir/vectors.parquet")
-    val sigs = spark.read.parquet(s"$dir/sigs.parquet")
-    val edges = spark.read.parquet(s"$dir/edges.parquet")
-    val tomb = spark.read.parquet(s"$dir/tombstones.parquet")
-    def check(name: String, df: DataFrame, want: Long): Unit = {
-      val got = df.count()
-      require(got == want,
-        s"graph-index table $name has $got rows, manifest says $want " +
-          "— truncated or mixed-version artifact")
-    }
-    check("vectors", vectors, ml("n_vectors"))
-    check("sigs", sigs, ml("n_sigs"))
-    check("edges", edges, ml("n_edges"))
-    check("tombstones", tomb, ml("n_tombstones"))
     require(ml("n_sigs") == ml("n_vectors"),
       "every vector needs a signature: artifact inconsistent")
-    Index(mi("dim"), mi("graph_k"), mi("edge_buckets"),
-      vectors, sigs, edges, tomb)
+    def table(name: String, count: String): DataFrame =
+      IndexFiles.readChecked(spark, dir, name, ml(count), Label)
+    val idx = Index(mi("dim"), mi("graph_k"), mi("edge_buckets"),
+      table("vectors", "n_vectors"), table("sigs", "n_sigs"),
+      table("edges", "n_edges"), table("tombstones", "n_tombstones"),
+      ml("n_vectors"), ml("n_edges"), ml("n_tombstones"))
+    cache.put((SessionToken.of(spark), dir), idx)
+    idx
   }
 
   /** Serve top-k from the persisted artifact: seeds from the stored
@@ -324,9 +335,10 @@ object GraphIndex {
     * in-memory chain runs ([[Similarity.graphExpandCandidatesFrom]]'s
     * arithmetic, inlined so each hop can PRUNE), with every hop's
     * edge scan partition-pruned to the frontier's source buckets.
-    * The per-hop bucket resolution is a bounded collect: the frontier
-    * is ≤ numQueries·seeds·(graphK+1)^hop ids at ANY corpus size, and
-    * the bucket set it maps to is ≤ min(frontier, edge_buckets).
+    * The walk state stays on the driver between hops ([[walk]]): the
+    * frontier is ≤ numQueries·seeds·(graphK+1)^hop ids at ANY corpus
+    * size, and the bucket set it maps to is ≤ min(frontier,
+    * edge_buckets).
     */
   def searchTopK(spark: SparkSession, dir: String, numQueries: Int,
       seeds: Int, hops: Int, k: Int): DataFrame = {
@@ -341,40 +353,68 @@ object GraphIndex {
     * composed pipelines (candidate generation → their own rerank →
     * MMR) can serve from the persisted artifact instead of rebuilding
     * the graph per query (the VERDICT r13 #5 shared-artifact
-    * discipline applied to the graph tier).
+    * discipline applied to the graph tier). Every hop expands the
+    * nodes the previous hop reached (older nodes' out-edges are
+    * already in the visited set — edges are static), so the result
+    * is the union-of-all-expansions walk.
     */
   def expandCandidates(spark: SparkSession, dir: String,
       numQueries: Int, seeds: Int, hops: Int): DataFrame = {
     require(hops >= 1, "need at least one expansion hop")
-    val idx = loadCached(spark, dir)
-    var cand = Similarity.hammingTopKSigs(
-        idx.liveSigs.localCheckpoint(false), numQueries, seeds)
-      .select(col("query_id"), col("neighbor_id").as("id"))
-      .localCheckpoint(false)
-    for (_ <- 1 to hops) {
-      val expanded = cand.join(hopEdges(idx, cand), col("id") === col("esrc"))
-        .select(col("query_id"), col("edst").as("id"))
-      // each hop's visited set feeds the next hop AND the final
-      // rerank; checkpoint so the union chain never re-walks
-      cand = cand.union(expanded).distinct().localCheckpoint(false)
-    }
-    cand.filter(col("query_id") =!= col("id"))
+    walk(spark, loadCached(spark, dir), numQueries, seeds, hops)(
+      (_, added) => added)
   }
 
-  /** One hop's PRUNED edge slice `(esrc, edst)` for the current
-    * frontier `cand (query_id, id)`: resolve the frontier's source
-    * buckets (a bounded collect — the frontier is per-query bounded
-    * at any corpus size) and push `bucket IN (…)` at the partitioned
-    * edge scan. Package-private so GraphPruneSpec pins the SERVE
-    * path's own scan (the hop output is checkpointed inside
-    * [[searchTopK]], which truncates the visible plan).
+  /** The driver-held walk both serves share: seed each query from the
+    * signature tier (one job set), then `hops` rounds of
+    * visited ∪= out-edges(frontier), where `pick(visited, added)`
+    * chooses the frontier from the visited pairs and the pairs the
+    * last hop added (the seeds, before the first hop). The state is bounded
+    * per query — seeds + hops·|frontier|·graphK pairs, independent of
+    * corpus size — so it stays on the driver; each hop reads only the
+    * frontier's pruned edge slice ([[hopEdges]]). Returns the visited
+    * set minus self-hits as a local relation `(query_id, id)`.
     */
-  private[ext] def hopEdges(idx: Index, cand: DataFrame): DataFrame = {
-    val bks = cand
-      .select(pmod(col("id"), lit(idx.edgeBuckets.toLong))
-        .cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    idx.liveEdges.filter(col("bucket").isin(bks: _*))
+  private def walk(spark: SparkSession, idx: Index, numQueries: Int,
+      seeds: Int, hops: Int)(
+      pick: (Seq[(Long, Long)], Seq[(Long, Long)]) => Seq[(Long, Long)])
+      : DataFrame = {
+    def pair(r: Row): (Long, Long) =
+      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
+    val visited = mutable.LinkedHashSet.empty[(Long, Long)]
+    visited ++= Similarity.hammingTopKSigs(
+        idx.liveSigs.localCheckpoint(false), numQueries, seeds)
+      .select(col("query_id"), col("neighbor_id")).collect().map(pair)
+    var added: Seq[(Long, Long)] = visited.toSeq
+    for (_ <- 1 to hops) {
+      val frontier = pick(visited.toSeq, added)
+      val before = visited.size
+      if (frontier.nonEmpty) {
+        val out = hopEdges(idx, frontier.map(_._2).distinct).collect()
+          .map(pair).groupMap(_._1)(_._2)
+        for ((q, id) <- frontier; dst <- out.getOrElse(id, Array.empty[Long]))
+          visited += ((q, dst))
+      }
+      added = visited.toSeq.drop(before)
+    }
+    spark.createDataFrame(
+      visited.toSeq.collect { case (q, id) if q != id => Row(q, id) }.asJava,
+      StructType(Seq(StructField("query_id", LongType),
+        StructField("id", LongType))))
+  }
+
+  /** One hop's PRUNED edge slice `(esrc, edst)` out of the frontier
+    * node `ids`: the frontier's source buckets (computed on the driver
+    * — the frontier is per-query bounded at any corpus size) reach the
+    * partitioned edge scan as a static `bucket IN (…)` filter, and the
+    * ids themselves as a `src IN (…)` filter. Package-private so
+    * GraphPruneSpec pins the SERVE path's own scan.
+    */
+  private[ext] def hopEdges(idx: Index, ids: Seq[Long]): DataFrame = {
+    val bks = ids.map(id => Math.floorMod(id, idx.edgeBuckets.toLong).toInt)
+      .distinct
+    idx.liveEdges
+      .filter(col("bucket").isin(bks: _*) && col("src").isin(ids: _*))
       .select(col("src").as("esrc"), col("dst").as("edst"))
   }
 
@@ -403,38 +443,39 @@ object GraphIndex {
   }
 
   /** The candidate half of [[searchTopKBeam]]: the ef-bounded walk's
-    * visited set `(query_id, id)`, self-hits excluded.
+    * visited set `(query_id, id)`, self-hits excluded. Each hop scores
+    * the visited pairs against their query by exact cosine in ONE
+    * narrow pass (the pairs ride as a local relation beside the query
+    * vector; only the corpus vectors stay distributed) and keeps the
+    * top-ef per query on the driver under the [[Similarity.topkUdaf]]
+    * order — (cs DESC, id ASC) — then expands those.
     */
   def expandCandidatesBeam(spark: SparkSession, dir: String,
       numQueries: Int, seeds: Int, hops: Int, ef: Int): DataFrame = {
     require(hops >= 1 && ef >= 1, "need at least one hop and one beam slot")
     val idx = loadCached(spark, dir)
     val v = idx.liveVectors.localCheckpoint(false)
-    val qv = v.filter(col("id") < numQueries)
-      .select(col("id").as("qid"), col("vec").as("qv"))
+      .select(col("id").as("vid"), col("vec"))
+    val qv: Map[Long, Seq[Double]] = v.filter(col("vid") < numQueries)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val pairSchema = StructType(Seq(StructField("query_id", LongType),
+      StructField("id", LongType),
+      StructField("qv", ArrayType(DoubleType, containsNull = false))))
     // per-query top-ef of the visited set by exact cosine — the beam
-    def beamOf(cand: DataFrame): DataFrame =
-      cand.filter(col("query_id") =!= col("id"))
-        .join(v.select(col("id").as("vid"), col("vec")),
-          col("id") === col("vid"))
-        .join(broadcast(qv), col("query_id") === col("qid"))
+    def beamOf(visited: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+      val pairs = visited.collect {
+        case (q, id) if q != id && qv.contains(q) => Row(q, id, qv(q))
+      }
+      spark.createDataFrame(pairs.asJava, pairSchema)
+        .join(v, col("id") === col("vid"))
         .select(col("query_id"), col("id"),
           Similarity.cosine(col("qv"), col("vec")).as("cs"))
-        .groupBy(col("query_id"))
-        .agg(Similarity.topkUdaf(ef)(col("cs"), col("id")).as("t"))
-        .select(col("query_id"), explode(col("t.items")).as("it"))
-        .select(col("query_id"), col("it.id").as("id"))
-    var visited = Similarity.hammingTopKSigs(
-        idx.liveSigs.localCheckpoint(false), numQueries, seeds)
-      .select(col("query_id"), col("neighbor_id").as("id"))
-      .localCheckpoint(false)
-    for (_ <- 1 to hops) {
-      val beam = beamOf(visited).localCheckpoint(false)
-      val expanded = beam
-        .join(hopEdges(idx, beam), col("id") === col("esrc"))
-        .select(col("query_id"), col("edst").as("id"))
-      visited = visited.union(expanded).distinct().localCheckpoint(false)
+        .collect()
+        .map(r => (r.getLong(0), Similarity.ScoredId(r.getDouble(2), r.getLong(1))))
+        .groupMap(_._1)(_._2).toSeq
+        .flatMap { case (q, cands) =>
+          cands.sorted(Similarity.topKOrder).take(ef).map(c => (q, c.id)) }
     }
-    visited.filter(col("query_id") =!= col("id"))
+    walk(spark, idx, numQueries, seeds, hops)((visited, _) => beamOf(visited))
   }
 }

@@ -69,13 +69,19 @@ object Similarity {
   case class ScoredId(score: Double, id: Long)
   case class TopKBuf(items: Seq[ScoredId])
 
-  /** Keep the k largest (score, id) pairs; ties break toward smaller id
-    * so results are deterministic. The buffer is a sorted Seq capped at
+  /** The top-k order: score descending, ties toward the smaller id. One
+    * definition for the aggregate below and for driver-side top-k over
+    * already-collected bounded state (the persisted graph beam).
+    */
+  val topKOrder: Ordering[ScoredId] =
+    Ordering.by((s: ScoredId) => (-s.score, s.id))
+
+  /** Keep the k largest (score, id) pairs under [[topKOrder]], so
+    * results are deterministic. The buffer is a sorted Seq capped at
     * k — k is small, so insertion cost beats heap-allocation churn.
     */
   class TopKAggregator(k: Int) extends Aggregator[ScoredId, TopKBuf, TopKBuf] {
-    private val ord: Ordering[ScoredId] =
-      Ordering.by((s: ScoredId) => (-s.score, s.id))
+    private val ord: Ordering[ScoredId] = topKOrder
     private def cap(items: Seq[ScoredId]): Seq[ScoredId] =
       items.sorted(ord).take(k)
     def zero: TopKBuf = TopKBuf(Nil)
@@ -352,6 +358,18 @@ object Similarity {
     best.select(col("id"), col("best.cell").as("cell"),
       col("best.score").as("score"))
   }
+
+  /** Bounded state — a centroid table, a codebook, a probe set —
+    * collected ONCE and re-entered into later plans as a
+    * `LocalRelation`: a driver-side read of it afterwards (a `collect`
+    * of a projection, e.g. [[collectedCentroids]]) runs no job, where
+    * a `localCheckpoint` pays its eager shuffle-map jobs up front and
+    * then a job per read. Only for state bounded by construction (the
+    * 100 TB rule): corpus-sized frames stay distributed.
+    */
+  private[graft] def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** A (cpart, cvec) centroid table pulled to the driver in ascending
     * cpart order — bounded (cells × dims) by construction; the
@@ -1176,7 +1194,8 @@ object Similarity {
     * codebooks on residuals ([[pqCodebooksTrained]], plumbing
     * unchanged) → codes → multi-probe pruned ADC exactly as
     * [[pqIvfTopK]]. Residuals are localCheckpointed once (they feed
-    * training AND encoding); centroid/codebook tables are broadcast.
+    * training AND encoding); centroid/codebook tables are collected
+    * once and ride as local relations.
     * Output: (query_id, rank, neighbor_id, adc).
     */
   def pqResidualIvfTopK(vecs: DataFrame, numSub: Int, subDim: Int,
@@ -1268,7 +1287,7 @@ object Similarity {
     */
   private[graft] def residualIndexBuild(vecs: DataFrame, numSub: Int,
       subDim: Int): (DataFrame, DataFrame, DataFrame) = {
-    val cvecs = centroidVectors(centroids(vecs)).localCheckpoint(false)
+    val cvecs = local(centroidVectors(centroids(vecs)))
     val resid = residualsAgainst(vecs, cvecs, numSub * subDim)
     val cw = trainedCodewordVecs(resid, numSub, subDim)
     (cvecs, cw, encodeResiduals(resid, numSub, subDim, cw))
@@ -1277,21 +1296,22 @@ object Similarity {
   /** Per-vector residuals v − centroid(argmax-cosine cell) against a
     * GIVEN centroid table — shared by the index build (centroids just
     * trained) and the incremental append path (centroids FROZEN from
-    * the persisted artifact). Checkpointed: every consumer reads it
-    * at least twice (training + encoding, or encoding + cell join).
+    * the persisted artifact). The assignment is the [[nearestOf]]
+    * kernel ([[graft.functions.CosineArgmaxCell]], ties to the smaller
+    * cell) over the collected table — one scan-side loop per vector,
+    * no join × k expansion, no aggregate, no self-join back onto the
+    * vectors; the winning centroid re-attaches through a broadcast
+    * equi-join on its cell. Checkpointed: every consumer reads it at
+    * least twice (training + encoding).
     */
   private def residualsAgainst(vecs: DataFrame, cvecs: DataFrame,
       dim: Int): DataFrame = {
-    val asg = vecs.join(broadcast(cvecs))
-      .select(col("id"), col("cpart"), col("cvec"),
-        cosine(col("vec"), col("cvec")).as("cs"))
-      .groupBy("id")
-      .agg(max_by(struct(col("cpart"), col("cvec")),
-        struct(col("cs"), -col("cpart"))).as("w"))
-      .select(col("id").as("aid"), col("w.cpart").as("cell"),
-        col("w.cvec").as("ccv"))
-    vecs.join(asg, col("id") === col("aid"))
-      .select(col("id"), col("cell"),
+    val best = graft.functions.CosineArgmaxCell.of(col("vec"),
+      collectedCentroids(cvecs)) // non-empty: the kernel requires it
+    vecs.select(col("id"), col("vec"), best.getField("cell").as("best"))
+      .join(broadcast(cvecs.select(col("cpart"), col("cvec").as("ccv"))),
+        col("best") === col("cpart"))
+      .select(col("id"), col("cpart").as("cell"),
         array((0 until dim).map(i =>
           col("vec").getItem(i) - col("ccv").getItem(i)): _*).as("vec"))
       .localCheckpoint(false)
@@ -1300,10 +1320,7 @@ object Similarity {
   /** Residuals → (id, c0..c{M−1}, cell) under a given codebook. */
   private def encodeResiduals(resid: DataFrame, numSub: Int, subDim: Int,
       cw: DataFrame): DataFrame =
-    pqEncodeWith(resid, numSub, subDim, cw)
-      .join(resid.select(col("id").as("rid"), col("cell")),
-        col("id") === col("rid"))
-      .drop("rid")
+    pqEncodeWith(resid, numSub, subDim, cw, carry = Seq("cell"))
 
   /** Incremental-append encoding (E262): assign + encode `newVecs`
     * under FROZEN quantizers — the persisted index's centroids and
@@ -1329,11 +1346,11 @@ object Similarity {
       pickProbes: (DataFrame, DataFrame, DataFrame) => DataFrame)
       : DataFrame = {
     val dim = numSub * subDim
-    val probes = pickProbes(q, cvecs,
-        codes.select(col("id").as("aid"), col("cell")))
-      // two consumers (query tables + candidate prune); without this
-      // the queries-vs-centroids scan re-executes per consumer
-      .localCheckpoint(false)
+    // two consumers (query tables + candidate prune): collected once
+    // (queries × probed cells rows), so neither re-executes the
+    // queries-vs-centroids scan
+    val probes = local(pickProbes(q, cvecs,
+      codes.select(col("id").as("aid"), col("cell"))))
     // query residual PER PROBED CELL — the residual-PQ asymmetry
     val qsub = probes
       .select(col("qid"), col("cpart"),
@@ -1396,17 +1413,16 @@ object Similarity {
       acc + (a.getItem(i) - b.getItem(i)) * (a.getItem(i) - b.getItem(i))
     }
 
-  /** TRAINED codebook in broadcastable (cl, m, cvec) form, checkpointed
-    * once: every PQ operator consumes it from 2+ subplans (distance
-    * tables + codes), and the training chain behind it is `iters`
-    * rounds of corpus aggregation that must not re-execute per
-    * consumer.
+  /** TRAINED codebook in broadcastable (cl, m, cvec) form, collected
+    * once ([[local]]; ≤ codewords × subspaces rows): every PQ operator
+    * consumes it from 2+ subplans (distance tables + codes), and the
+    * training chain behind it is `iters` rounds of corpus aggregation
+    * that must not re-execute per consumer.
     */
   private def trainedCodewordVecs(vecs: DataFrame, numSub: Int,
       subDim: Int, numCodewords: Int = PqCodewords): DataFrame =
-    pqCodewordVecs(
-      pqCodebooksTrained(vecs, numSub, subDim, PqTrainIters, numCodewords))
-      .localCheckpoint(false)
+    local(pqCodewordVecs(
+      pqCodebooksTrained(vecs, numSub, subDim, PqTrainIters, numCodewords)))
 
   /** PQ encoding: each vector becomes `numSub` small integer codes —
     * the argmin-L2 codeword per subspace. This is the 64× storage
@@ -1434,10 +1450,11 @@ object Similarity {
       cw: DataFrame): DataFrame = pqEncodeWith(vecs, numSub, subDim, cw)
 
   /** [[pqEncode]] against a caller-supplied (cl, m, cvec) codebook —
-    * so operators that also build distance tables train ONCE.
+    * so operators that also build distance tables train ONCE. `carry`
+    * columns of `vecs` ride through after the codes.
     */
   private def pqEncodeWith(vecs: DataFrame, numSub: Int, subDim: Int,
-      cw: DataFrame): DataFrame = {
+      cw: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     // r17 (VERDICT r16 #1): encoding was explode(numSub) → broadcast
     // join × codewords → argmin hash aggregate → re-pivot aggregate —
     // two exchanges and a numSub·codewords row expansion per vector.
@@ -1446,11 +1463,11 @@ object Similarity {
     // ([[graft.functions.PqEncodeCodes]] — identical distance folds,
     // identical tie rule — bit-identical codes).
     val cands = codebookCands(cw, numSub)
-    val coded = vecs.select(col("id"),
+    val coded = vecs.select((col("id") +: carry.map(col)) :+
       graft.functions.PqEncodeCodes.of(col("vec"), cands, subDim)
-        .as("codes"))
-    coded.select(col("id") +: (0 until numSub).map(m =>
-      col("codes").getItem(m).as(s"c$m")): _*)
+        .as("codes"): _*)
+    coded.select((col("id") +: (0 until numSub).map(m =>
+      col("codes").getItem(m).as(s"c$m"))) ++ carry.map(col): _*)
   }
 
   /** Cluster-bucketed cosine near-duplicate pairs: candidate pairs are

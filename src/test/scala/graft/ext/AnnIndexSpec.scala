@@ -77,6 +77,29 @@ class AnnIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("codes"))
   }
 
+  test("every table: a deleted data file and a file cut to half its " +
+      "bytes both refuse to load, naming the table") {
+    val dir = Files.createTempDirectory("annidx_torn").toString
+    AnnIndex.build(corpus, numSub, subDim, dir)
+    ArtifactFiles.assertTornTablesRefused(dir, Seq("centroids", "codebooks",
+      "codes", "tombstones", "cellstats", "manifest"))(
+      AnnIndex.load(spark, _))
+    ArtifactFiles.deleteTree(dir)
+  }
+
+  test("footer-pinned schemas equal the schemas spark.read.parquet " +
+      "infers, partition columns included") {
+    val dir = Files.createTempDirectory("annidx_schema").toString
+    AnnIndex.build(corpus, numSub, subDim, dir)
+    for (t <- Seq("centroids", "codebooks", "codes", "tombstones",
+        "cellstats", "manifest")) {
+      val pinned = IndexFiles.read(spark, dir, t,
+        IndexFiles.tableMeta(spark, dir, t, "index").schema).schema
+      assert(pinned == spark.read.parquet(s"$dir/$t.parquet").schema, t)
+    }
+    ArtifactFiles.deleteTree(dir)
+  }
+
   test("missing artifact fails loudly, not as an empty search") {
     intercept[Exception] {
       AnnIndex.load(spark, "/tmp/definitely-absent-annidx")

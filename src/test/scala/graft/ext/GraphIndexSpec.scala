@@ -86,6 +86,15 @@ class GraphIndexSpec extends SparkSpec {
     }
   }
 
+  test("every table: a deleted data file and a file cut to half its " +
+      "bytes both refuse to load, naming the table") {
+    val dir = tempDir("torn")
+    GraphIndex.build(corpus, Dim, GK, dir)
+    ArtifactFiles.assertTornTablesRefused(dir,
+      Seq("vectors", "sigs", "edges", "tombstones", "manifest"))(
+      GraphIndex.load(spark, _))
+  }
+
   test("a crashed build (manifest absent) never serves") {
     val dir = tempDir("crash")
     corpus.write.mode("overwrite").parquet(s"$dir/vectors.parquet")

@@ -74,14 +74,13 @@ class GraphPruneSpec extends SparkSpec {
       "frontier's source buckets") {
     val dir = Files.createTempDirectory("graphidx_prune").toString
     GraphIndex.build(corpus, 64, 4, dir)
-    // the walk checkpoints each hop (truncating the final plan), so
-    // pin the hop builder the serve path itself calls: 2 queries ×
-    // 2 seeds → ≤ 4 frontier ids → ≤ 4 of the 16 bucket directories
+    // the walk collects each hop's edges to the driver, so pin the
+    // hop builder the serve path itself calls: 2 queries × 2 seeds →
+    // ≤ 4 frontier ids → ≤ 4 of the 16 bucket directories
     val idx = GraphIndex.loadCached(spark, dir)
     val seeds = Similarity.hammingTopKSigs(idx.liveSigs, 2, 2)
-      .select(col("query_id"), col("neighbor_id").as("id"))
-      .localCheckpoint(false)
-    val df = GraphIndex.hopEdges(idx, seeds)
+      .select(col("neighbor_id")).collect().map(_.getLong(0)).distinct
+    val df = GraphIndex.hopEdges(idx, seeds.toSeq)
     val scans = df.queryExecution.sparkPlan.collect {
       case s: FileSourceScanExec
           if s.relation.partitionSchema.exists(_.name == "bucket") => s
