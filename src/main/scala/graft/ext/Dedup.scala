@@ -7,17 +7,18 @@ import org.apache.spark.sql.functions._
   * extension, SURVEY.md §7.4 — NOT from the reference, which has no
   * dedup surface).
   *
-  * Four families, all built from Catalyst built-ins (HOFs + `md5`) so the
-  * whole computation stays inside whole-stage codegen and is exactly
-  * reproducible by the DuckDB oracle (both engines agree on `md5` hex):
+  * Four families. Outputs the DuckDB oracle must reproduce bit for bit
+  * are built from Catalyst built-ins (both engines agree on `md5` hex);
+  * MinHash candidates come from a native signature kernel, since only
+  * their exact-Jaccard-verified output is oracle-checked:
   *
   *  1. '''Exact''' — group by content hash, keep one representative.
-  *  2. '''MinHash + LSH''' — shingle → k minhashes → b bands of r →
-  *     band-bucket self-join for candidates → exact-Jaccard verify.
-  *     Never all-pairs: the only shuffle is the band-key join, which is
-  *     linear in corpus size × band count. At a planted-dup similarity
-  *     s ≥ 0.9 and (k=32, b=16, r=2) the miss probability per pair is
-  *     (1 − s²)¹⁶ ≤ 4e-12 — and candidates are verified with the true
+  *  2. '''MinHash + LSH''' — one scan-side signature kernel (k=32)
+  *     → b=8 bands of r=4 → band buckets for candidates → exact-Jaccard
+  *     verify. Never all-pairs: the only shuffle is the band-bucket
+  *     groupBy, which is linear in corpus size × band count. At a
+  *     planted-dup similarity s ≥ 0.9 the miss probability per pair is
+  *     (1 − s⁴)⁸ ≤ 3e-7 — and candidates are verified with the true
   *     Jaccard, so false positives are impossible.
   *  3. '''SimHash''' — 60-bit sign-of-sum fingerprint over token hashes;
   *     near-dup = Hamming distance ≤ t, found via 4×15-bit chunk banding
@@ -73,10 +74,11 @@ object Dedup {
       .otherwise(array(text))
 
   /** (id, x) word n-gram shingle rows, flat codegen (possibly with
-    * duplicate shingles — [[nearDupPairsFromRows]] dedups once): explode
-    * a position sequence, assemble the n-gram with `element_at`. A doc
-    * with fewer than n words yields its whole text (position sequence
-    * clamps to [1,1] and `concat_ws` skips null words).
+    * duplicate shingles — [[verifyCandidates]] dedups with
+    * `collect_set`): explode a position sequence, assemble the n-gram
+    * with `element_at`. A doc with fewer than n words yields its whole
+    * text (position sequence clamps to [1,1] and `concat_ws` skips null
+    * words).
     */
   def wordShingleRows(df: DataFrame, idCol: Column, text: Column, n: Int): DataFrame = {
     val w = split(text, " ")
@@ -97,34 +99,19 @@ object Dedup {
     ex.select(col("id"), col("t").substr(col("i"), lit(n)).as("x"))
   }
 
-  /** MinHash signature as a single HOF expression: element s is the
-    * lexicographic minimum of `md5("<s>:" ++ shingle)` over the shingle
-    * set (min over fixed-width lowercase hex = min over the 128-bit
-    * hash values — a faithful min-wise permutation per seed).
-    *
-    * NOTE: higher-order functions run *interpreted* (no whole-stage
-    * codegen, no common-subexpression elimination), so this form is for
-    * small inputs and tests; the production pipeline uses
-    * [[minhashBands]], which keeps every hash inside codegen.
-    */
-  def minhashSignature(shingles: Column, numPerm: Int): Column =
-    array((0 until numPerm).map { s =>
-      array_min(transform(shingles, x => md5(concat(lit(s + ":"), x))))
-    }: _*)
-
-  /** MinHash layout for [[minhashBands]]: ONE string `xxhash64` per
-    * shingle (hashing the string is the expensive step), then 32
-    * permutations as `xxhash64(p, base)` over the resulting 8-byte
-    * long — re-hashing a fixed-width long costs nanoseconds, so the
-    * per-shingle cost is ~1 string hash regardless of permutation
-    * count (multiplicative mixing would be marginally cheaper but
-    * Spark 4's ANSI mode throws on the deliberate 64-bit overflow).
-    * Each permutation keeps its top 32 bits: 32-bit chunk space keeps
-    * tie/saturation probability negligible even for documents with
-    * millions of distinct shingles (16-bit chunks would drive every
-    * huge document's min to 0, funneling them all into one bucket);
-    * ties only ever *add* candidates (verified away later), never
-    * lose them. Band b (of 8) concatenates 4 consecutive mins.
+  /** MinHash layout of the signature kernels
+    * ([[graft.functions.MinHashClassicSig]], [[graft.functions.MinHashSig]]):
+    * ONE string `xxhash64` per shingle (hashing the string is the
+    * expensive step), then 32 permutations as `xxhash64(p, base)` over
+    * the resulting 8-byte long — re-hashing a fixed-width long costs
+    * nanoseconds, so the per-shingle cost is ~1 string hash regardless
+    * of permutation count. Each permutation keeps its top 32 bits:
+    * 32-bit chunk space keeps tie/saturation probability negligible
+    * even for documents with millions of distinct shingles (16-bit
+    * chunks would drive every huge document's min to 0, funneling them
+    * all into one bucket); ties only ever *add* candidates (verified
+    * away later), never lose them. Band b (of 8) concatenates 4
+    * consecutive mins ([[bandKeys]]).
     *
     * Oracle note: banding needs determinism and recall, not oracle
     * parity — the correctness oracle recomputes exact all-pairs
@@ -134,106 +121,6 @@ object Dedup {
   val NumBands = 8
   val RowsPerBand = 4
 
-  /** (id, bands) with bands an 8-element string array, computed the
-    * scale-correct way from (id, x) shingle rows: hash in a *flat
-    * projection* (whole-stage codegen + subexpression elimination — one
-    * xxhash64 per stream per shingle; the HOF formulation measured ~30×
-    * slower because lambda bodies are interpreted), then
-    * `groupBy(id).agg(min…)` over 32 primitive int buffers — a
-    * HashAggregate with map-side partial aggregation (string buffers
-    * would silently degrade to SortAggregate), so the shuffle carries
-    * 32 ints per document, not the shingles. Duplicate shingle rows are
-    * harmless: min is idempotent.
-    */
-  def minhashBandsFromRows(rows: DataFrame): DataFrame =
-    minhashBandsFromHashed(
-      rows.select(col("id"), xxhash64(col("x")).as("h")))
-
-  /** [[minhashBandsFromRows]] from pre-hashed (id, h = xxhash64(x))
-    * rows (r17): callers that need the base shingle hash for OTHER legs
-    * too (the recall audit's exact-truth key is the same hash) compute
-    * it once and share LONGS instead of re-hashing — and re-carrying —
-    * the shingle strings per consumer. Byte-identical bands: the
-    * permutation hashes consume only the base hash.
-    */
-  def minhashBandsFromHashed(rows: DataFrame): DataFrame = {
-    val base = col("h")
-    val chunkCols = (0 until NumPerms).map { p =>
-      shiftright(xxhash64(lit(p), base), 32)
-        .bitwiseAND(lit(0xffffffffL)).as(s"h_$p")
-    }
-    val hashed = rows.select(col("id") +: chunkCols: _*)
-    val aggs = (0 until NumPerms).map(p => min(col(s"h_$p")).as(s"m_$p"))
-    val sig = hashed.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-    val bands = array((0 until NumBands).map { b =>
-      concat_ws("|",
-        (0 until RowsPerBand).map(r => col(s"m_${b * RowsPerBand + r}")): _*)
-    }: _*)
-    sig.select(col("id"), bands.as("bands"))
-  }
-
-  /** Array-column adapter for [[minhashBandsFromRows]]. */
-  def minhashBands(docs: DataFrame, idCol: String, shinglesCol: String): DataFrame =
-    minhashBandsFromRows(
-      docs.select(col(idCol).as("id"), explode(col(shinglesCol)).as("x")))
-
-  /** One-permutation-hashing twin of [[minhashBandsFromRows]] (the
-    * composable form of the native kernel's `oph = true` mode, kept for
-    * A/B pinning — MinHashOphSpec): ONE `xxhash64` per shingle, whose
-    * top 5 bits pick the signature bin and low 32 bits compete for that
-    * bin's minimum — 32 conditional-min primitive buffers instead of 32
-    * re-hashes per shingle. Empty bins densify by borrowing the next
-    * non-empty bin cyclically (the coalesce chain), matching the kernel
-    * exactly.
-    */
-  def minhashSigOphFromRows(rows: DataFrame): DataFrame =
-    minhashSigOphFromHashed(
-      rows.select(col("id"), xxhash64(col("x")).as("h")))
-
-  /** OPH signature from pre-hashed (id, h) rows — the
-    * [[minhashBandsFromHashed]] discipline (byte-identical signature).
-    */
-  def minhashSigOphFromHashed(rows: DataFrame): DataFrame = {
-    val base = col("h")
-    val hashed = rows.select(col("id"),
-      shiftrightunsigned(base, 59).cast("int").as("bin"),
-      base.bitwiseAND(lit(0xffffffffL)).as("chunk"))
-    val aggs = (0 until NumPerms).map(p =>
-      min(when(col("bin") === p, col("chunk"))).as(s"m_$p"))
-    val sig = hashed.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-    val dense = (0 until NumPerms).map { p =>
-      coalesce((0 until NumPerms).map(q => col(s"m_${(p + q) % NumPerms}")): _*)
-    }
-    sig.select(col("id"), array(dense: _*).as("sig"))
-  }
-
-  /** Band strings derived from [[minhashSigOphFromRows]]'s signature. */
-  def minhashBandsOphFromRows(rows: DataFrame): DataFrame =
-    ophSigToBands(minhashSigOphFromRows(rows))
-
-  /** Band strings from pre-hashed (id, h) rows. */
-  def minhashBandsOphFromHashed(rows: DataFrame): DataFrame =
-    ophSigToBands(minhashSigOphFromHashed(rows))
-
-  private def ophSigToBands(s: DataFrame): DataFrame = {
-    val bands = array((0 until NumBands).map { b =>
-      concat_ws("|",
-        (0 until RowsPerBand).map(r => col("sig").getItem(b * RowsPerBand + r)): _*)
-    }: _*)
-    s.select(col("id"), bands.as("bands"))
-  }
-
-  /** Candidate pairs from band buckets, in ONE pass over the signature:
-    * explode (band_idx, band_hash), group each bucket's member ids with
-    * `collect_list`, and emit every unordered in-bucket pair (id_a <
-    * id_b, via sorted ids). A self-join formulation would evaluate the
-    * whole minhash pipeline once per join branch (Spark does not share
-    * non-exchanged subplans); here the signature is computed exactly
-    * once and the only shuffle is the bucket groupBy. Bucket pair
-    * expansion is quadratic per bucket — which is the point of banding:
-    * buckets stay tiny (the HOF pair generator runs over a handful of
-    * ids). `distinct` collapses pairs that collide in several bands.
-    */
   /** Pair expansion is quadratic per bucket, so a degenerate bucket (a
     * giant cluster of identical content, or adversarial input) is
     * capped at [[MaxBucketSize]] members: the overflow ids (beyond the
@@ -246,44 +133,12 @@ object Dedup {
     */
   val MaxBucketSize = 4096
 
-  def lshCandidates(df: DataFrame, idCol: String, bandsCol: Column): DataFrame = {
-    val e = df.select(col(idCol).as("id"),
-      posexplode(bandsCol).as(Seq("band_idx", "band_hash")))
-    val buckets = e.groupBy(col("band_idx"), col("band_hash"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .withColumn("ids", slice(col("ids"), 1, MaxBucketSize))
-    val pairs = flatten(transform(col("ids"), (a, i) =>
-      transform(slice(col("ids"), i + 2, size(col("ids"))),
-        b => struct(a.as("id_a"), b.as("id_b")))))
-    buckets
-      .select(explode(pairs).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-      .distinct()
-  }
-
-  /** [[lshCandidates]] over a raw 32-bin OPH signature column
-    * (array<long>, from [[graft.functions.MinHashSig]]), with an
-    * agreement prefilter: band keys are derived from the signature
-    * in-plan, buckets carry (id, sig) structs, and an in-bucket pair is
-    * emitted only when ≥ `minAgree` of the 32 bins agree. Per-bin
-    * collision probability ≈ the pair's true Jaccard, so
-    * `minAgree = threshold × 32` is the sketch-side estimate of the
-    * verify threshold: it discards the (dominant, by construction)
-    * false candidates before the expensive exact-Jaccard verification
-    * ever shingles their documents. Probabilistic-recall caveat: a pair
-    * NEAR the threshold can be prefiltered despite true J ≥ threshold —
-    * the same caveat 8×4 banding itself already carries (miss
-    * probability 0.6 at J = 0.5!); both rest on the corpus similarity
-    * gap that LshRecallInvariantSpec asserts (pairs ≥ 0.9 or < 0.3,
-    * where both filters are ~lossless). Verification stays exact, so
-    * false positives remain impossible.
+  /** Per-band bucket keys of a 32-bin signature column: band b joins
+    * bins 4b..4b+3 with `"|"`. The one band projection, shared by the
+    * batch and incremental candidate tiers and the recall audit so a
+    * banding parameter change cannot de-sync them.
     */
-  /** Per-band bucket keys derived from a 32-bin signature column —
-    * shared by the batch and incremental candidate tiers so a banding
-    * parameter change cannot de-sync them.
-    */
-  private def bandKeys(sigCol: Column): Column =
+  def bandKeys(sigCol: Column): Column =
     array((0 until NumBands).map { b =>
       concat_ws("|",
         (0 until RowsPerBand).map(r => sigCol.getItem(b * RowsPerBand + r)): _*)
@@ -297,6 +152,30 @@ object Dedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v)
 
+  /** Candidate pairs from band buckets, in ONE pass over a 32-bin
+    * signature column (array<long>, from [[graft.functions.MinHashSig]]
+    * or [[graft.functions.MinHashClassicSig]]), with an agreement
+    * prefilter: band keys are derived from the signature in-plan
+    * ([[bandKeys]]), each bucket's (id, sig) structs are collected and
+    * sorted by id, and an in-bucket pair (id_a < id_b) is emitted only
+    * when ≥ `minAgree` of the 32 bins agree (`minAgree = 0` emits every
+    * in-bucket pair). A self-join formulation would evaluate the whole
+    * signature pipeline once per join branch (Spark does not share
+    * non-exchanged subplans); here the signature is computed exactly
+    * once and the only shuffle is the bucket groupBy. `distinct`
+    * collapses pairs that collide in several bands. Per-bin
+    * collision probability ≈ the pair's true Jaccard, so
+    * `minAgree = threshold × 32` is the sketch-side estimate of the
+    * verify threshold: it discards the (dominant, by construction)
+    * false candidates before the expensive exact-Jaccard verification
+    * ever shingles their documents. Probabilistic-recall caveat: a pair
+    * NEAR the threshold can be prefiltered despite true J ≥ threshold —
+    * the same caveat 8×4 banding itself already carries (miss
+    * probability 0.6 at J = 0.5!); both rest on the corpus similarity
+    * gap that LshRecallInvariantSpec asserts (pairs ≥ 0.9 or < 0.3,
+    * where both filters are ~lossless). Verification stays exact, so
+    * false positives remain impossible.
+    */
   def lshCandidatesSig(df: DataFrame, idCol: String, sigCol: Column,
                        minAgree: Int): DataFrame = {
     val e = df.select(
@@ -403,100 +282,16 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
 
-  /** Full MinHash-LSH near-dup pipeline over (id, x) shingle rows:
-    * candidates via [[minhashBandsFromRows]] banding (8 bands × 4 rows:
-    * at planted-dup similarity s ≥ 0.9 the per-pair miss probability is
-    * (1 − s⁴)⁸ ≤ 3e-7; the r=4 rows keep background candidates at
-    * J < 0.25 rare), then exact-Jaccard verification at `threshold`.
-    *
-    * Verification is the distributed set-similarity join, not array
-    * intersection: dedup the shingle rows once, count each pair's
-    * common shingles with an equi-join on (partner id, shingle), and
-    * derive |A∪B| = |A| + |B| − |A∩B| from per-doc set sizes. Every
-    * step is a codegen'd shuffle join/aggregate — no arrays are ever
-    * materialized, so a 100 TB corpus never holds a document's shingle
-    * set in one row. Output: (id_a, id_b, jaccard), id_a < id_b.
-    */
-  def nearDupPairsFromRows(shingleRows: DataFrame, threshold: Double): DataFrame = {
-    // No pre-distinct anywhere: a .distinct() on the shingle rows would
-    // cost a full shuffle per plan branch, and every consumer here is
-    // duplicate-proof (minhash mins are idempotent, collect_set dedups).
-    //
-    // Verification exploits candidate sparsity: only documents that
-    // appear in some candidate pair have their shingle SET materialized
-    // (left-semi against the candidate ids prunes the rest map-side),
-    // so the collect_set shuffle carries candidate docs only — banding
-    // keeps that a tiny fraction of the corpus. The exact Jaccard then
-    // runs per pair over the two arrays. If candidates ever stopped
-    // being sparse, the set-similarity join formulation (equi-join on
-    // (id, shingle) + count_distinct) trades this for three corpus-wide
-    // shuffles — sparse candidates are the point of LSH, so this path
-    // optimizes for them.
-    val rows = shingleRows.select(col("id"), col("x"))
-    // The candidate set fans out to THREE consumers below (candDocs and
-    // the final pair join) — Spark does not share non-exchanged
-    // subplans, so without materialization every consumer would re-run
-    // the corpus-wide minhash pass. The pair set is tiny by LSH
-    // construction; lazy localCheckpoint (not persist) materializes it
-    // once while letting the ContextCleaner reclaim the blocks when the
-    // plan is garbage-collected — a bare persist with no unpersist call
-    // leaks one cache entry per invocation for the session's lifetime.
-    val cands = lshCandidates(minhashBandsFromRows(rows), "id", col("bands"))
-      .localCheckpoint(false)
-    // Both pair endpoints in ONE pass over cands (not a union of two
-    // selects, which would be two more scans of the cached set).
-    val candDocs = cands
-      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val sets = rows.join(candDocs, Seq("id"), "left_semi")
-      .groupBy(col("id")).agg(collect_set(col("x")).as("sh"))
-    cands
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Array-column adapter for [[nearDupPairsFromRows]]. */
-  def nearDupPairs(docs: DataFrame, idCol: String, shinglesCol: String,
-                   threshold: Double): DataFrame =
-    nearDupPairsFromRows(
-      docs.select(col(idCol).as("id"), explode(col(shinglesCol)).as("x")), threshold)
-
-  /** [[nearDupPairsFromRows]] with the verify pass pruned BEFORE
-    * shingling: the corpus-wide shingle explosion runs exactly once
-    * (for the minhash signatures). The verification sets are built by
-    * re-shingling only the candidate documents — a broadcast left-semi
-    * of the raw docs against the (tiny, persisted) candidate-id set,
-    * then `shingler` over that sliver. [[nearDupPairsFromRows]] instead
-    * semi-joins the *exploded* rows, which must re-generate every
-    * shingle of every document just to discard the non-candidates: at
-    * 100 TB that is a second corpus-wide hash/substring pass for
-    * nothing. Cost here: one extra scan of the doc table's (id, text)
-    * columns — IO only, no compute, and column-pruned at the source.
-    *
-    * @param docs     raw documents (any schema containing `idColName`
-    *                 and whatever `shingler` reads)
-    * @param shingler maps a subset of `docs` to (id, x) shingle rows —
-    *                 pass the same producer used for the full corpus,
-    *                 e.g. `d => wordShingleRows(d, col("doc_id"),
-    *                 col("text"), n)`
-    */
-  def nearDupPairsPruned(docs: DataFrame, idColName: String,
-                         shingler: DataFrame => DataFrame,
-                         threshold: Double): DataFrame =
-    verifyCandidates(
-      lshCandidates(minhashBandsFromRows(shingler(docs)), "id", col("bands")),
-      docs, idColName, shingler, threshold)
-
-  /** [[nearDupPairsPruned]] with candidate generation via the native
-    * [[graft.functions.MinHashBands]] expression: the signature is a
-    * scan-side projection (one expression call per document), so the
-    * corpus-wide shingle explode AND the 32-min aggregate shuffle both
-    * vanish from the plan. Only candidate documents are ever shingled
-    * into rows (for exact-Jaccard verification). The expression's hash
-    * chain is bit-identical to [[minhashBandsFromRows]] (A/B-pinned by
-    * MinHashBandsSpec), so this is a pure plan improvement.
+  /** The MinHash-LSH near-dup pipeline: scan-side OPH signatures
+    * ([[graft.functions.MinHashSig]], one expression call per document,
+    * so no corpus-wide shingle explode and no signature aggregate
+    * shuffle), 8 bands × 4 rows of candidates with the agreement
+    * prefilter ([[lshCandidatesSig]]; at planted-dup similarity
+    * s ≥ 0.9 the per-pair banding miss probability is (1 − s⁴)⁸ ≤ 3e-7,
+    * and the r=4 rows keep background candidates at J < 0.25 rare),
+    * then exact-Jaccard verification at `threshold` that shingles only
+    * the candidate documents. Output: (id_a, id_b, jaccard),
+    * id_a < id_b.
     */
   def nearDupPairsNative(docs: DataFrame, idColName: String, textColName: String,
                          n: Int, word: Boolean, threshold: Double): DataFrame =
@@ -504,12 +299,6 @@ object Dedup {
       nearDupCandidatesNative(docs, idColName, textColName, n, word, threshold),
       docs, idColName, shinglerFor(idColName, textColName, n, word), threshold)
 
-  /** Candidate stage of [[nearDupPairsNative]], exposed so PlanAuditSpec
-    * can pin its physical shape: the signature projection must stay
-    * scan-side (no shingle `Generate`, no `groupBy(id)` signature
-    * exchange) — the property that makes this the 100 TB candidate
-    * generator.
-    */
   /** Shared signature preamble for the batch and incremental candidate
     * tiers — one implementation of the guard and projection so a
     * tuning change reaches both paths.
@@ -543,6 +332,12 @@ object Dedup {
     if (word) d => wordShingleRows(d, col(idColName), col(textColName), n)
     else d => charShingleRows(d, col(idColName), col(textColName), n)
 
+  /** Candidate stage of [[nearDupPairsNative]], exposed so PlanAuditSpec
+    * can pin its physical shape: the signature projection must stay
+    * scan-side (no shingle `Generate`, no `groupBy(id)` signature
+    * exchange) — the property that makes this the 100 TB candidate
+    * generator.
+    */
   def nearDupCandidatesNative(docs: DataFrame, idColName: String,
                               textColName: String, n: Int, word: Boolean,
                               threshold: Double): DataFrame = {
@@ -566,6 +361,25 @@ object Dedup {
     * belongs at the application level. On a flaky large cluster, swap
     * for a reliable `checkpoint()` against fault-tolerant storage.
     */
+  private[graft] def verifyCandidates(candidates: DataFrame, docs: DataFrame,
+                                      idColName: String,
+                                      shingler: DataFrame => DataFrame,
+                                      threshold: Double): DataFrame = {
+    val cands = candidates.localCheckpoint(false)
+    val candDocIds = cands
+      .select(explode(array(col("id_a"), col("id_b"))).as("cand_id")).distinct()
+    val candRows = shingler(
+      docs.join(broadcast(candDocIds),
+        docs(idColName) === candDocIds("cand_id"), "left_semi"))
+    val sets = candRows.groupBy(col("id")).agg(collect_set(col("x")).as("sh"))
+    cands
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
   /** Containment near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|) over
     * word n-gram shingles — the asymmetric complement of Jaccard that
     * catches a short document EMBEDDED in a longer one (quote
@@ -682,11 +496,12 @@ object Dedup {
     // r17: both legs aggregated per-source mins by exploding the
     // 32-element signature into 32 rows per input through a
     // (source, perm)-keyed hash aggregate — 32 hash probes per input
-    // row. One groupBy(source) with 32 PRIMITIVE long min buffers
-    // (the minhashBandsFromRows discipline) reads the same signature
-    // elements with one probe per row; the per-perm long form is
-    // re-derived from the 32 aggregated columns (identical values —
-    // min over the same multisets, posexplode pos = the same perm).
+    // row. One groupBy(source) with 32 PRIMITIVE long min buffers (a
+    // HashAggregate; string buffers would degrade it to SortAggregate)
+    // reads the same signature elements with one probe per row; the
+    // per-perm long form is re-derived from the 32 aggregated columns
+    // (identical values — min over the same multisets, posexplode pos =
+    // the same perm).
     def permMins(rows: DataFrame, sig: Column, out: String): DataFrame = {
       val aggs = (0 until NumPerms).map(p =>
         min(col("sig").getItem(p)).as(s"m_$p"))
@@ -790,24 +605,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("dist"))
   }
 
-  private def verifyCandidates(candidates: DataFrame, docs: DataFrame,
-                               idColName: String, shingler: DataFrame => DataFrame,
-                               threshold: Double): DataFrame = {
-    val cands = candidates.localCheckpoint(false)
-    val candDocIds = cands
-      .select(explode(array(col("id_a"), col("id_b"))).as("cand_id")).distinct()
-    val candRows = shingler(
-      docs.join(broadcast(candDocIds),
-        docs(idColName) === candDocIds("cand_id"), "left_semi"))
-    val sets = candRows.groupBy(col("id")).agg(collect_set(col("x")).as("sh"))
-    cands
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
   /** 60-bit SimHash: bit j of the fingerprint is the sign of
     * Σ_tokens (2·bit_j(md5(token)) − 1), where bit_j reads bit (3−j%4)
     * of hex nibble j/4 — i.e. ONE md5 per token supplies all 60 bits.
@@ -838,8 +635,8 @@ object Dedup {
       when(s >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** (id, simhash) the scale-correct way (same explode/flat-projection/
-    * partial-agg shape as [[minhashBands]], same rationale): one
+  /** (id, simhash) the scale-correct way (explode, flat projection,
+    * partial aggregate over primitive buffers): one
     * codegen'd md5 per token (subexpression-eliminated across the 60
     * bit extracts), 60 `sum` partial aggregates, fingerprint assembled
     * post-agg. The shuffle carries 60 small ints per document.
@@ -873,7 +670,7 @@ object Dedup {
     val chunks = array((0 until 4).map { c =>
       shiftright(col(simhashCol), c * chunkBits).bitwiseAND(lit((1L << chunkBits) - 1))
     }: _*)
-    // One pass like lshCandidates: bucket by chunk, carry (id, simhash)
+    // One pass like lshCandidatesSig: bucket by chunk, carry (id, simhash)
     // structs into the bucket, emit in-bucket pairs with both
     // fingerprints in hand — the upstream simhash aggregation is
     // evaluated exactly once and no join-back is needed.
@@ -925,15 +722,11 @@ object Dedup {
   def lshRecallMeasured(universe: DataFrame, n: Int,
       taus: Seq[Double]): DataFrame = {
     require(taus.nonEmpty, "need at least one tau")
-    // three consumers (ground truth + two banding passes): r17 — the
-    // shared base is the per-shingle xxhash64 LONG, not the shingle
-    // string: the truth key IS that hash and both banding passes
-    // consume only it, so the shingle build + string hash run once and
-    // the checkpoint carries 8 bytes/row instead of the n-gram text.
-    val hashed = wordShingleRows(universe, col("id"), col("text"), n)
-      .select(col("id"), xxhash64(col("x")).as("h"))
-      .localCheckpoint(false)
-    val dsh = hashed.select(col("id"), col("h").as("k")).distinct()
+    // The truth key is the per-shingle xxhash64 LONG, not the shingle
+    // string, so the checkpoint carries 8 bytes/row instead of the
+    // n-gram text.
+    val dsh = wordShingleRows(universe, col("id"), col("text"), n)
+      .select(col("id"), xxhash64(col("x")).as("k")).distinct()
       .localCheckpoint(false)
     // r17 NEGATIVE RESULT (measured, reverted): routing the exact
     // ground truth through the prefix-filter candidate tier
@@ -961,9 +754,16 @@ object Dedup {
       // exact set-similarity self-join (the audit's most expensive leg)
       // executed once per config.
       .localCheckpoint(false)
+    // Both configs band scan-side kernel signatures of the universe
+    // text; minAgree = 0 keeps every in-bucket pair, so recall is the
+    // banding's own.
+    def bucketed(sig: Column): DataFrame =
+      lshCandidatesSig(universe.select(col("id"), sig.as("sig")), "id",
+        col("sig"), minAgree = 0)
     val configs = Seq(
-      "banded32" -> lshCandidates(minhashBandsFromHashed(hashed), "id", col("bands")),
-      "oph" -> lshCandidates(minhashBandsOphFromHashed(hashed), "id", col("bands")))
+      "banded32" -> bucketed(
+        graft.functions.MinHashClassicSig(col("text"), n, word = true)),
+      "oph" -> bucketed(graft.functions.MinHashSig(col("text"), n, word = true)))
     val flagged = configs.map { case (name, cands) =>
       truth.join(cands.withColumn("hit", lit(1L)), Seq("id_a", "id_b"), "left")
         .select(lit(name).as("config"), col("j"),

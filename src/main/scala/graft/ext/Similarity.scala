@@ -1472,7 +1472,7 @@ object Similarity {
 
   /** Cluster-bucketed cosine near-duplicate pairs: candidate pairs are
     * generated only within a coarse partition (IVF bucketing — the
-    * embedding-space analogue of [[Dedup.lshCandidates]]), then verified
+    * embedding-space analogue of [[Dedup.lshCandidatesSig]]), then verified
     * with the exact cosine at `threshold`. Per-bucket cost is m², but m
     * is the bucket size, not the corpus. Output: (id_a, id_b, cos).
     */

@@ -91,7 +91,7 @@ object Srp {
     * positives are impossible, recall follows the banding curve.
     * Input: (id, vec); output: (id_a, id_b, cos), id_a < id_b.
     *
-    * Candidate generation follows [[Dedup.lshCandidates]]'s one-pass
+    * Candidate generation follows [[Dedup.lshCandidatesSig]]'s one-pass
     * bucket-group shape (not a band self-join): the signature is
     * computed ONCE, buckets carry sorted id lists capped at
     * [[Dedup.MaxBucketSize]] (a dense hub bucket degrades recall past

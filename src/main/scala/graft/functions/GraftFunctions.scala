@@ -18,6 +18,29 @@ import org.apache.spark.sql.graftbridge.GraftBridge
   */
 object GraftFunctions {
 
+  /** `(text, n, word)` arguments of the MinHash signature functions:
+    * `n` and `word` must be literals, since they select the kernel's
+    * shingle shape at plan time.
+    */
+  private def minhashArgs(name: String,
+                          args: Seq[Expression]): (Expression, Int, Boolean) = {
+    require(args.length == 3,
+      s"$name expects (text, n, word) — got ${args.length} arguments")
+    require(args(1).foldable && args(2).foldable,
+      s"$name n and word must be literals")
+    val n = args(1).eval() match {
+      case i: Number => i.intValue()
+      case other => throw new IllegalArgumentException(
+        s"$name n must be an integer literal, got $other")
+    }
+    val word = args(2).eval() match {
+      case b: java.lang.Boolean => b.booleanValue()
+      case other => throw new IllegalArgumentException(
+        s"$name word must be a boolean literal, got $other")
+    }
+    (args.head, n, word)
+  }
+
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
@@ -31,63 +54,18 @@ object GraftFunctions {
         require(args.length == 1, s"simhash60 expects 1 argument, got ${args.length}")
         SimHash60(args.head)
       }),
-    (FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"minhash_bands expects (text, n, word) — got ${args.length} arguments")
-        require(args(1).foldable && args(2).foldable,
-          "minhash_bands n and word must be literals")
-        val n = args(1).eval() match {
-          case i: Number => i.intValue()
-          case other => throw new IllegalArgumentException(
-            s"minhash_bands n must be an integer literal, got $other")
-        }
-        val word = args(2).eval() match {
-          case b: java.lang.Boolean => b.booleanValue()
-          case other => throw new IllegalArgumentException(
-            s"minhash_bands word must be a boolean literal, got $other")
-        }
-        MinHashBands(args.head, n, word)
-      }),
     (FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
       (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"minhash_sig expects (text, n, word) — got ${args.length} arguments")
-        require(args(1).foldable && args(2).foldable,
-          "minhash_sig n and word must be literals")
-        val n = args(1).eval() match {
-          case i: Number => i.intValue()
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig n must be an integer literal, got $other")
-        }
-        val word = args(2).eval() match {
-          case b: java.lang.Boolean => b.booleanValue()
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig word must be a boolean literal, got $other")
-        }
-        MinHashSig(args.head, n, word)
+        val (text, n, word) = minhashArgs("minhash_sig", args)
+        MinHashSig(text, n, word)
       }),
     (FunctionIdentifier("minhash_classic_sig"),
       new ExpressionInfo(classOf[MinHashClassicSig].getName,
         "minhash_classic_sig"),
       (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"minhash_classic_sig expects (text, n, word) — got ${args.length} arguments")
-        require(args(1).foldable && args(2).foldable,
-          "minhash_classic_sig n and word must be literals")
-        val n = args(1).eval() match {
-          case i: Number => i.intValue()
-          case other => throw new IllegalArgumentException(
-            s"minhash_classic_sig n must be an integer literal, got $other")
-        }
-        val word = args(2).eval() match {
-          case b: java.lang.Boolean => b.booleanValue()
-          case other => throw new IllegalArgumentException(
-            s"minhash_classic_sig word must be a boolean literal, got $other")
-        }
-        MinHashClassicSig(args.head, n, word)
+        val (text, n, word) = minhashArgs("minhash_classic_sig", args)
+        MinHashClassicSig(text, n, word)
       }),
     (FunctionIdentifier("media_dims"),
       new ExpressionInfo(classOf[MediaDims].getName, "media_dims"),

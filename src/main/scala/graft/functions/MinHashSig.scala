@@ -10,29 +10,33 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native MinHash-LSH band keys for one document in ONE expression
+/** Native MinHash signatures for one document in ONE expression
   * evaluation: shingle the text (word or char n-grams), hash every
-  * shingle, fold 32 permutation minima, and emit the 8 band-key
-  * strings — without ever materializing a shingle row.
+  * shingle and fold the 32 signature minima, without ever
+  * materializing a shingle row. Two forms share the one kernel,
+  * [[MinHashImpl.signature]]: [[MinHashSig]] (one-permutation hashing,
+  * densified) and [[MinHashClassicSig]] (32 permutations). Band keys
+  * come from [[graft.ext.Dedup.bandKeys]] over either.
   *
   * Why a custom `Expression` (SURVEY.md §7.5's escalation path, same
-  * rationale as [[DotProduct]]): the composable formulation
-  * ([[graft.ext.Dedup.minhashBandsFromRows]]) explodes ~len(text)
-  * shingle rows per document through the row pipeline and re-groups
-  * them to take the 32 minima — at sf0.1 that is 10M generated rows
-  * and a corpus-wide HashAggregate for what is logically a per-row
-  * scalar computation; profiled, the explode+aggregate machinery (not
-  * the hashing) dominates the near-dup queries. Here the whole
-  * signature is computed scan-side inside whole-stage codegen: no
-  * generated rows, NO groupBy — the shuffle the aggregate needed
-  * disappears from the plan entirely. At 100 TB this turns the
-  * signature stage from (corpus-wide explode + shuffle) into a narrow
-  * projection pipelined with the parquet scan.
+  * rationale as [[DotProduct]]): the composable formulation explodes
+  * ~len(text) shingle rows per document through the row pipeline and
+  * re-groups them to take the 32 minima — at sf0.1 that is 10M
+  * generated rows and a corpus-wide HashAggregate for what is
+  * logically a per-row scalar computation; profiled, the
+  * explode+aggregate machinery (not the hashing) dominates the
+  * near-dup queries. Here the whole signature is computed scan-side
+  * inside whole-stage codegen: no generated rows, NO groupBy — the
+  * shuffle the aggregate needed disappears from the plan entirely. At
+  * 100 TB this turns the signature stage from (corpus-wide explode +
+  * shuffle) into a narrow projection pipelined with the parquet scan.
   *
-  * Hash chain is bit-identical to the row pipeline
-  * (`xxhash64(lit(p), xxhash64(x))`, top-32-bit chunks, `"|"`-joined
-  * bands — pinned by `MinHashBandsSpec`'s A/B test), so candidate
-  * generation is unchanged, just cheaper.
+  * The hash chain is bit-identical to the row pipeline
+  * (`xxhash64(lit(p), xxhash64(x))`, top-32-bit chunks for the classic
+  * form; the one `xxhash64(x)`'s top 5 bits and low 32 bits for OPH),
+  * pinned by `MinHashBandsSpec` and `MinHashOphSpec` against the
+  * test-scope row chains, so candidate generation is unchanged, just
+  * cheaper.
   *
   * Shingle windows are byte ranges over the original UTF-8 buffer —
   * nothing is copied per shingle:
@@ -44,44 +48,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `concat_ws(" ", slice(tokens, i, n))` because single-space
   *    joins reproduce the original bytes. Fewer than n tokens yields
   *    the whole text.
-  */
-case class MinHashBands(child: Expression, n: Int, word: Boolean,
-                        oph: Boolean = false)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands requires a string input, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "minhash_bands"
-
-  override def nullSafeEval(s: Any): Any =
-    MinHashImpl.bands(s.asInstanceOf[UTF8String], n, word, oph)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashImpl.bands($c, $n, $word, $oph);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
-    copy(child = newChild)
-}
-
-object MinHashBands {
-  /** Column-level entry points. */
-  def apply(text: Column, n: Int, word: Boolean): Column =
-    apply(text, n, word, oph = false)
-  def apply(text: Column, n: Int, word: Boolean, oph: Boolean): Column =
-    GraftBridge.column(MinHashBands(GraftBridge.expression(text), n, word, oph))
-}
-
-/** The raw densified OPH signature (32 longs) instead of band strings:
-  * lets consumers derive band keys AND compare per-bin values — the
-  * agreement prefilter in [[graft.ext.Dedup.lshCandidatesSig]] needs
-  * both from one scan-side projection.
+  *
+  * This form is the densified OPH signature (32 longs): consumers
+  * derive band keys AND compare per-bin values from it — the agreement
+  * prefilter in [[graft.ext.Dedup.lshCandidatesSig]] needs both from
+  * one scan-side projection.
   */
 case class MinHashSig(child: Expression, n: Int, word: Boolean)
     extends UnaryExpression {
@@ -161,7 +132,7 @@ object MinHashClassicSig {
   */
 object MinHashImpl {
 
-  import graft.ext.Dedup.{NumBands, NumPerms, RowsPerBand}
+  import graft.ext.Dedup.NumPerms
 
   /** Per-permutation seeds: `xxhash64(lit(p), base)` evaluates as
     * `hashLong(base, hashInt(p, 42))`, so the `hashInt(p, 42)` prefix
@@ -170,45 +141,19 @@ object MinHashImpl {
   private val PermSeeds: Array[Long] =
     Array.tabulate(NumPerms)(p => XXH64.hashInt(p, 42L))
 
-  def bands(text: UTF8String, n: Int, word: Boolean): ArrayData =
-    bands(text, n, word, oph = false)
-
-  /** `oph = true` selects one-permutation hashing: instead of folding
-    * all 32 permutation minima per shingle (32 `hashLong` calls), the
-    * single shingle hash's top 5 bits pick ONE of the 32 signature bins
-    * and its low 32 bits compete for that bin's minimum — one hash and
-    * one compare per shingle, a 32× cut in fold work. Empty bins are
-    * densified by borrowing the next non-empty bin's value (cyclic,
-    * ascending — Shrivastava & Li's densified OPH), so every band key
-    * is always defined. Per-bin collision probability for two J-similar
-    * shingle sets is ≈ J, so the 8×4 banding recall analysis is
-    * unchanged. This is the 100 TB default for candidate generation;
-    * the 32-permutation chain remains for A/B pinning
-    * ([[graft.ext.Dedup.minhashBandsFromRows]] vs
-    * [[graft.ext.Dedup.minhashBandsOphFromRows]]).
-    */
-  def bands(text: UTF8String, n: Int, word: Boolean, oph: Boolean): ArrayData = {
-    val mins = signature(text, n, word, oph)
-    val out = new Array[UTF8String](NumBands)
-    val sb = new java.lang.StringBuilder(48)
-    var bIdx = 0
-    while (bIdx < NumBands) {
-      sb.setLength(0)
-      var r = 0
-      while (r < RowsPerBand) {
-        if (r > 0) sb.append('|')
-        sb.append(mins(bIdx * RowsPerBand + r))
-        r += 1
-      }
-      out(bIdx) = UTF8String.fromString(sb.toString)
-      bIdx += 1
-    }
-    new GenericArrayData(out.asInstanceOf[Array[Any]])
-  }
-
-  /** The raw 32-element signature (densified when `oph`): exposed for
-    * [[MinHashSig]], whose consumers need per-bin values (band derivation
-    * AND pair-agreement prefiltering) rather than opaque band strings.
+  /** The raw 32-element signature. `oph = true` selects
+    * one-permutation hashing: instead of folding all 32 permutation
+    * minima per shingle (32 `hashLong` calls), the single shingle
+    * hash's top 5 bits pick ONE of the 32 signature bins and its low 32
+    * bits compete for that bin's minimum — one hash and one compare per
+    * shingle, a 32× cut in fold work. Empty bins are densified by
+    * borrowing the next non-empty bin's value (cyclic, ascending —
+    * Shrivastava & Li's densified OPH), so every band key is always
+    * defined. Per-bin collision probability for two J-similar shingle
+    * sets is ≈ J, so the 8×4 banding recall analysis is unchanged.
+    * This is the 100 TB default for candidate generation
+    * ([[MinHashSig]]); the 32-permutation form ([[MinHashClassicSig]])
+    * keeps the min-merge property.
     */
   def signature(text: UTF8String, n: Int, word: Boolean, oph: Boolean): Array[Long] = {
     val base = text.getBaseObject
@@ -278,7 +223,7 @@ object MinHashImpl {
       // Densification: an empty bin borrows the value of the next
       // non-empty bin (cyclic ascending scan). At least one bin is
       // non-empty (windows > 0), so the scan always terminates. Must
-      // stay in lockstep with Dedup.minhashBandsOphFromRows' coalesce
+      // stay in lockstep with the test-scope OPH row chain's coalesce
       // chain — pinned by MinHashOphSpec.
       val dense = new Array[Long](NumPerms)
       var p = 0

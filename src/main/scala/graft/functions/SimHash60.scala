@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 60-bit SimHash of a whitespace-tokenized text in one
   * expression evaluation (same escalation rationale as
-  * [[MinHashBands]]): the composable form
+  * [[MinHashSig]]): the composable form
   * ([[graft.ext.Dedup.simhashAgg]]) explodes every token occurrence
   * into a row and runs a 60-column sum aggregate — a corpus-wide
   * generate + shuffle for a per-document scalar. Here the token loop,

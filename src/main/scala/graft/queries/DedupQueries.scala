@@ -194,7 +194,7 @@ object DedupQueries {
 
     // MinHash-LSH near-dup over word 3-gram shingles, exact-Jaccard
     // verified at 0.5. Never all-pairs: candidates come from the band
-    // bucket join (Dedup.lshCandidates).
+    // buckets (Dedup.lshCandidatesSig).
     "docs_dedup_near" -> ((s, dir) =>
       Dedup.nearDupPairsNative(Tables.documents(s, dir), "doc_id", "text",
         WordN, word = true, JaccardThreshold)),

@@ -11,24 +11,16 @@ import graft.cdc.{Pipeline, Routing}
   * 5 + §7.4 streaming extensions).
   *
   * The CDC forwarding path is *stateless*, so the batch and streaming
-  * plans share every operator: [[route]] literally applies
-  * [[graft.cdc.Pipeline.route]] to a streaming DataFrame — the
-  * MemoryStream parity suite asserts the two produce identical rows on
-  * identical input. Windowed aggregations add watermarked event-time
-  * state; [[dedupStream]] shows keyed arbitrary state
-  * (`flatMapGroupsWithState`) doing streaming exact-dedup, the
+  * plans share every operator: [[graft.cdc.Pipeline.route]] applies to
+  * a streaming (topic, key, value) frame as it is — append mode, no
+  * watermark — and [[routeObserved]] adds the live counters; the
+  * MemoryStream parity suite asserts batch and streaming produce
+  * identical rows on identical input. Windowed aggregations add
+  * watermarked event-time state; [[dedupStream]] shows keyed arbitrary
+  * state (`flatMapGroupsWithState`) doing streaming exact-dedup, the
   * streaming tier of [[graft.ext.Dedup]].
   */
 object StreamingPipeline {
-
-  /** The reference pipeline over a streaming (topic, key, value) frame:
-    * parse → drop deletes → first-match route → silent drop. Stateless ⇒
-    * append-mode, no watermark needed (SURVEY.md §2.2: the reference has
-    * no event time).
-    */
-  def route(stream: DataFrame,
-            rules: Seq[Routing.TransformRule] = Routing.DefaultRules): DataFrame =
-    Pipeline.route(stream, rules)
 
   /** Tumbling event-time counts with a watermark bounding state: the
     * streaming form of WindowQueries.events_window_tumbling. Late rows
@@ -41,15 +33,6 @@ object StreamingPipeline {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
         col("event_type"), col("n"))
-
-  /** Sliding-window streaming counts (30m/15m shape in the batch twin). */
-  def slidingCounts(events: DataFrame, size: String, slide: String,
-                    lateness: String): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), size, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("event_type"), col("n"))
 
   /** Session windows per user under a watermark — streaming twin of
     * WindowQueries.events_session.

@@ -25,8 +25,8 @@ object DedupPropsSpec extends Properties("Dedup") {
       import spark.implicits._
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val pairs = Dedup.nearDupPairsFromRows(
-        Dedup.wordShingleRows(df, col("doc_id"), col("text"), 2), 0.6)
+      val pairs = Dedup.nearDupPairsNative(df, "doc_id", "text", 2,
+          word = true, 0.6)
         .as[(Long, Long, Double)].collect()
       pairs.forall { case (a, b, j) => a < b && j >= 0.6 && j <= 1.0 }
     }
@@ -35,8 +35,8 @@ object DedupPropsSpec extends Properties("Dedup") {
     Prop.forAllNoShrink(genDoc) { doc =>
       import spark.implicits._
       val df = Seq((0L, doc), (1L, doc)).toDF("doc_id", "text")
-      val pairs = Dedup.nearDupPairsFromRows(
-        Dedup.wordShingleRows(df, col("doc_id"), col("text"), 2), 0.9)
+      val pairs = Dedup.nearDupPairsNative(df, "doc_id", "text", 2,
+          word = true, 0.9)
         .as[(Long, Long, Double)].collect()
       pairs.toSeq == Seq((0L, 1L, 1.0))
     }

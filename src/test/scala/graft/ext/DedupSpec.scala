@@ -1,7 +1,10 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{CodegenSize, SparkSpec}
+import graft.functions.{MinHashClassicSig, MinHashSig}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -46,16 +49,16 @@ class DedupSpec extends SparkSpec {
   }
 
   test("near-dup pipeline finds the 1-word edit and not the unrelated doc") {
-    val pairs = Dedup.nearDupPairsFromRows(
-      Dedup.wordShingleRows(docs3, col("doc_id"), col("text"), 3), 0.5)
+    val pairs = Dedup.nearDupPairsNative(docs3, "doc_id", "text", 3,
+        word = true, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((0L, 1L)))
   }
 
   test("identical docs produce jaccard exactly 1.0") {
     val df = Seq((0L, docA), (1L, docA)).toDF("doc_id", "text")
-    val out = Dedup.nearDupPairsFromRows(
-      Dedup.wordShingleRows(df, col("doc_id"), col("text"), 3), 0.9)
+    val out = Dedup.nearDupPairsNative(df, "doc_id", "text", 3,
+        word = true, 0.9)
       .collect().head
     assert(out.getAs[Double]("jaccard") == 1.0)
   }
@@ -268,5 +271,67 @@ class DedupSpec extends SparkSpec {
       r.getAs[Double]("tau") == RecallTaus.min).get
     assert(loosest.getAs[Long]("n_caught") < loosest.getAs[Long]("n_true_pairs"),
       "every pair caught at the loosest tau — the mid-J planting is gone")
+  }
+
+  test("docs_lsh_recall on the signature kernels: both configs' band keys " +
+      "equal the row chains', and the measured rows equal the row-chain " +
+      "audit's") {
+    import graft.queries.DedupQueries._
+    val universe = recallUniverse(graft.Tables.documents(spark, sfDir))
+    val rows = Dedup.wordShingleRows(universe, col("id"), col("text"), WordN)
+    def bandsOf(df: DataFrame): Map[Long, Seq[String]] =
+      df.as[(Long, Seq[String])].collect().toMap
+    val configs = Seq(
+      "banded32" -> (MinHashClassicSig(col("text"), WordN, word = true),
+        MinHashRows.classicSig(rows)),
+      "oph" -> (MinHashSig(col("text"), WordN, word = true),
+        MinHashRows.ophSig(rows)))
+    // Row-chain candidates: every pair in a band bucket, each bucket
+    // sorted by id and capped at MaxBucketSize.
+    val candidates = configs.map { case (name, (kernel, chain)) =>
+      val native = bandsOf(
+        universe.select(col("id"), Dedup.bandKeys(kernel).as("bands")))
+      val viaRows = bandsOf(MinHashRows.bands(chain))
+      assert(native == viaRows, s"$name band keys differ from the row chain")
+      val buckets = viaRows.toSeq
+        .flatMap { case (id, bs) => bs.zipWithIndex.map(b => b -> id) }
+        .groupBy(_._1).values
+        .map(_.map(_._2).sorted.take(Dedup.MaxBucketSize))
+      name -> buckets.flatMap(_.combinations(2).map(p => (p(0), p(1)))).toSet
+    }
+    // Exact truth over distinct shingle hashes, all pairs, collected.
+    val sets = rows.select(col("id"), xxhash64(col("x")))
+      .as[(Long, Long)].collect().groupBy(_._1)
+      .map { case (id, hs) => id -> hs.map(_._2).toSet }
+    val ids = sets.keys.toSeq.sorted
+    val truth = for {
+      a <- ids; b <- ids if a < b
+      inter = (sets(a) & sets(b)).size if inter > 0
+    } yield (a, b) ->
+      inter.toDouble / (sets(a).size + sets(b).size - inter).toDouble
+    val expected = for ((name, cands) <- candidates; tau <- RecallTaus) yield {
+      val t = truth.filter(_._2 >= tau)
+      (name, tau, t.size.toLong, t.count(p => cands.contains(p._1)).toLong)
+    }
+    val measured = Dedup.lshRecallMeasured(universe, WordN, RecallTaus)
+      .select("config", "tau", "n_true_pairs", "n_caught")
+      .as[(String, Double, Long, Long)].collect()
+    assert(measured.toSet == expected.toSet && measured.length == expected.size)
+  }
+
+  test("docs_lsh_recall: no generated method reaches HotSpot's " +
+      "8,000-byte JIT limit") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val plan = try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      graft.queries.DedupQueries.queries("docs_lsh_recall")(spark, sfDir)
+        .queryExecution.executedPlan
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val sizes = plan.collect {
+      case w: WholeStageCodegenExec => CodegenSize.maxMethodBytes(w)
+    }
+    assert(sizes.nonEmpty, s"no codegen stage:\n$plan")
+    assert(sizes.forall(_ < CodegenSize.HugeMethodLimit),
+      s"stage past the JIT limit: ${sizes.sorted.reverse}")
   }
 }

@@ -29,7 +29,7 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(ex.getMessage.toLowerCase.contains("array<double>"))
   }
 
-  test("simhash60 and minhash_bands are callable from SQL") {
+  test("simhash60 is callable from SQL") {
     GraftFunctions.register(spark)
     val sh = spark.sql("SELECT simhash60('the quick brown fox') AS s")
       .as[Long].collect().head
@@ -37,11 +37,6 @@ class GraftFunctionsSpec extends SparkSpec {
       .select(SimHash60(org.apache.spark.sql.functions.col("t")))
       .as[Long].collect().head
     assert(sh == shCol && sh >= 0 && sh < (1L << 60))
-
-    val bands = spark.sql(
-      "SELECT minhash_bands('the quick brown fox jumps', 3, true) AS b")
-      .as[Seq[String]].collect().head
-    assert(bands.length == graft.ext.Dedup.NumBands)
   }
 
   test("minhash_sig and media_dims are callable from SQL") {
@@ -72,12 +67,15 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(dims == ((1, 1)))
   }
 
-  test("minhash_bands requires literal parameters") {
+  test("minhash_sig and minhash_classic_sig require literal parameters") {
     GraftFunctions.register(spark)
-    val ex = intercept[Exception] {
-      spark.sql(
-        "SELECT minhash_bands('x', n, true) FROM (SELECT 3 AS n)").collect()
+    for (fn <- Seq("minhash_sig", "minhash_classic_sig");
+         call <- Seq(s"$fn('x', n, true)", s"$fn('x', 3, n > 0)")) {
+      val ex = intercept[Exception] {
+        spark.sql(s"SELECT $call FROM (SELECT 3 AS n)").collect()
+      }
+      assert(ex.getMessage.contains(s"$fn n and word must be literals"),
+        s"$call: ${ex.getMessage}")
     }
-    assert(ex.getMessage.contains("literal"))
   }
 }

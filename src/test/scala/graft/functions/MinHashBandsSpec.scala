@@ -3,12 +3,12 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.ext.Dedup
+import graft.ext.{Dedup, MinHashRows}
 
-/** The native MinHashBands expression must produce byte-identical band
-  * keys to the composable row pipeline (explode → hash → groupBy-min):
-  * candidates, and therefore verified pairs, must not shift when the
-  * plan improves.
+/** Band keys of the classic signature kernel ([[MinHashClassicSig]]
+  * through [[Dedup.bandKeys]]) must be byte-identical to the composable
+  * row pipeline's (explode → hash → groupBy-min): candidates, and
+  * therefore verified pairs, must not shift when the plan improves.
   */
 class MinHashBandsSpec extends SparkSpec {
   import spark.implicits._
@@ -17,12 +17,12 @@ class MinHashBandsSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     val native = df.select(col("id"),
-        MinHashBands(col("text"), n, word).as("bands"))
+        Dedup.bandKeys(MinHashClassicSig(col("text"), n, word)).as("bands"))
       .as[(Long, Seq[String])].collect().toMap
     val rows =
       if (word) Dedup.wordShingleRows(df, col("id"), col("text"), n)
       else Dedup.charShingleRows(df, col("id"), col("text"), n)
-    val viaRows = Dedup.minhashBandsFromRows(rows)
+    val viaRows = MinHashRows.bands(MinHashRows.classicSig(rows))
       .as[(Long, Seq[String])].collect().toMap
     assert(native.keySet == viaRows.keySet)
     for (id <- native.keySet)
@@ -61,7 +61,7 @@ class MinHashBandsSpec extends SparkSpec {
     val native = Dedup.nearDupPairsNative(docs, "doc_id", "text", 3,
         word = true, 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    val classic = Dedup.nearDupPairsPruned(docs, "doc_id",
+    val classic = MinHashRows.classicNearDupPairs(docs, "doc_id",
         d => Dedup.wordShingleRows(d, col("doc_id"), col("text"), 3), 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(native == classic && native.nonEmpty)

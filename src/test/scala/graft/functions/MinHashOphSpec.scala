@@ -3,13 +3,13 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.ext.Dedup
+import graft.ext.{Dedup, MinHashRows}
 
-/** The native OPH mode (one-permutation hashing, the production
-  * candidate generator) must produce byte-identical band keys to the
-  * composable conditional-min + coalesce-densification pipeline, and
-  * the end-to-end OPH near-dup output must equal the classic
-  * 32-permutation pipeline's verified pairs on the fixture (both
+/** The native OPH signature ([[MinHashSig]], one-permutation hashing,
+  * the production candidate generator) must produce byte-identical band
+  * keys to the composable conditional-min + coalesce-densification
+  * pipeline, and the end-to-end OPH near-dup output must equal the
+  * classic 32-permutation pipeline's verified pairs on the fixture (both
   * schemes have full recall on the planted similarity gap; exact
   * Jaccard verification makes candidate-set differences invisible).
   */
@@ -20,12 +20,12 @@ class MinHashOphSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     val native = df.select(col("id"),
-        MinHashBands(col("text"), n, word, oph = true).as("bands"))
+        Dedup.bandKeys(MinHashSig(col("text"), n, word)).as("bands"))
       .as[(Long, Seq[String])].collect().toMap
     val rows =
       if (word) Dedup.wordShingleRows(df, col("id"), col("text"), n)
       else Dedup.charShingleRows(df, col("id"), col("text"), n)
-    val viaRows = Dedup.minhashBandsOphFromRows(rows)
+    val viaRows = MinHashRows.bands(MinHashRows.ophSig(rows))
       .as[(Long, Seq[String])].collect().toMap
     assert(native.keySet == viaRows.keySet)
     for (id <- native.keySet)
@@ -65,7 +65,7 @@ class MinHashOphSpec extends SparkSpec {
       val rows =
         if (word) Dedup.wordShingleRows(df, col("id"), col("text"), n)
         else Dedup.charShingleRows(df, col("id"), col("text"), n)
-      val viaRows = Dedup.minhashSigOphFromRows(rows)
+      val viaRows = MinHashRows.ophSig(rows)
         .as[(Long, Seq[Long])].collect().toMap
       assert(native == viaRows)
     }
@@ -77,7 +77,7 @@ class MinHashOphSpec extends SparkSpec {
       MinHashSig(col("text"), 6, word = false).as("sig"))
     val pre = Dedup.lshCandidatesSig(sigs, "id", col("sig"), minAgree = 16)
       .as[(Long, Long)].collect().toSet
-    val verified = Dedup.nearDupPairsPruned(docs, "doc_id",
+    val verified = MinHashRows.classicNearDupPairs(docs, "doc_id",
         d => Dedup.charShingleRows(d, col("doc_id"), col("text"), 6), 0.5)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
     assert(verified.subsetOf(pre),
@@ -89,7 +89,7 @@ class MinHashOphSpec extends SparkSpec {
     val oph = Dedup.nearDupPairsNative(docs, "doc_id", "text", 6,
         word = false, 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    val classic = Dedup.nearDupPairsPruned(docs, "doc_id",
+    val classic = MinHashRows.classicNearDupPairs(docs, "doc_id",
         d => Dedup.charShingleRows(d, col("doc_id"), col("text"), 6), 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(oph == classic && oph.nonEmpty)

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{CodegenSize, SparkSpec}
 import graft.cdc.Pipeline
 import graft.cdc.Routing.TransformRule
 
@@ -40,14 +39,14 @@ class RouteTableSpec extends SparkSpec {
           _.expressions.exists(_.exists(_.isInstanceOf[RouteTable]))) => w
     }
     assert(stages.size == 1, s"expected one route stage:\n$plan")
-    val (_, code) = stages.head.doCodeGen()
-    CodeGenerator.compile(code)._2.maxMethodCodeSize
+    CodegenSize.maxMethodBytes(stages.head)
   }
 
   test("route stage's largest method is one size, under 8,000 bytes, " +
     "at 1 to 10,000 rules") {
     val sizes = Seq(1, 32, 1000, 10000).map(n => n -> routeStageMaxMethod(n))
-    assert(sizes.forall(_._2 < 8000), s"stage past the JIT limit: $sizes")
+    assert(sizes.forall(_._2 < CodegenSize.HugeMethodLimit),
+      s"stage past the JIT limit: $sizes")
     assert(sizes.map(_._2).distinct.size == 1, s"code grows with rules: $sizes")
   }
 

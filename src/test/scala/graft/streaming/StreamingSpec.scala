@@ -77,7 +77,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[(String, String, String)]
     stream.addData(rows)
     val streamed = runStream(
-      StreamingPipeline.route(stream.toDF().toDF("topic", "key", "value")),
+      Pipeline.route(stream.toDF().toDF("topic", "key", "value")),
       OutputMode.Append, "route_parity")
 
     val expected = Pipeline.route(batchIn).as[(String, String, String)].collect()
