@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * A null op (malformed envelope in permissive mode) is NOT equal to "d",
   * and `=!=` on null yields null → filtered out. That matches the reference,
   * where a malformed envelope never reaches the filter (it panics earlier);
-  * permissive mode routes such rows to [[Parse.parseErrors]] instead.
+  * permissive mode flags such rows `_malformed` instead.
   */
 object Filter {
   def dropDeletes(parsed: DataFrame): DataFrame =

@@ -2,13 +2,12 @@ package graft.cdc
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 
 /** Projection-only JSON decode of the CDC envelope (reference R2,
   * `reference/src/mq/kafka.rs:53-55,119-143`).
   *
-  * `from_json` with the partial [[CdcSchema.CDC_SCHEMA]] decodes exactly the
-  * fields the pipeline inspects; the raw `value` column is carried through
+  * The native envelope kernel decodes exactly the fields the pipeline
+  * inspects (those of the partial [[CdcSchema.CDC_SCHEMA]]); the raw `value` column is carried through
   * untouched next to the parsed fields so the sink can forward the original
   * bytes bit-identically (reference R5, `kafka.rs:80-82`). Everything stays
   * inside whole-stage codegen — no UDFs.
@@ -16,29 +15,17 @@ import org.apache.spark.sql.types.StringType
   * Malformed-input divergence (deliberate, SURVEY.md §7.6.5): the reference
   * panics on bad JSON (`kafka.rs:54-55` `.unwrap()`); a 100 TB batch job must
   * not die on one bad record, so the default here is permissive — malformed
-  * envelopes are *flagged* (`_malformed`) and surfaced by [[parseErrors]] —
-  * and `strict = true` restores fail-fast semantics.
+  * envelopes are *flagged* (`_malformed`) — and `strict = true` restores
+  * fail-fast semantics.
   *
-  * "Malformed" means the value is not a JSON object: a corrupt-record column
-  * (`columnNameOfCorruptRecord`) distinguishes a genuine parse failure from a
-  * valid object that merely lacks `op`/`source` — `{"x":1}` is well-formed
+  * "Malformed" means the value is not a JSON object: a genuine parse
+  * failure is told apart from a valid object that merely lacks
+  * `op`/`source` — `{"x":1}` is well-formed
   * (serde would decode it to empty strings-absent, not panic the parser),
   * while `[1,2]` or `{not json` is not. This matches the DuckDB oracle
   * predicate `json_valid(value) AND json_type(value) = 'OBJECT'`.
   */
 object Parse {
-
-  /** Corrupt-record capture field. The name is deliberately obscure: the
-    * capture column lives in the same namespace as the payload's own
-    * fields, so an envelope legitimately containing a top-level
-    * `"_corrupt"` key would have been falsely flagged malformed (and
-    * killed the job in strict mode).
-    */
-  private val CorruptField = "_graft_corrupt_x9q"
-
-  /** Decode schema + corrupt-record capture field. */
-  private val PARSE_SCHEMA =
-    CdcSchema.CDC_SCHEMA.add(CorruptField, StringType)
 
   /** Decode `value` → (`op`, `db`, `tbl`, `_malformed`) columns, keeping
     * `topic`, `key`, and the raw `value` intact. (`tbl` not `table`: avoids
@@ -47,8 +34,8 @@ object Parse {
     * Decoding runs through the native single-pass
     * [[graft.functions.CdcEnvelopeParse]] kernel (codegen-resident, no
     * Jackson, no cast-to-string copy — binary Kafka payloads parse
-    * directly); [[parseJackson]] keeps the `from_json` formulation as the
-    * differential-test reference implementation.
+    * directly); the test-scope `ParseJackson` keeps the `from_json`
+    * formulation as the differential-test reference implementation.
     */
   def parse(raw: DataFrame, strict: Boolean = false): DataFrame = {
     val parsed = raw
@@ -68,27 +55,4 @@ object Parse {
           .otherwise(col("op")))
     } else parsed
   }
-
-  /** Rows whose envelope failed to decode (not a JSON object). */
-  def parseErrors(parsed: DataFrame): DataFrame =
-    parsed.filter(col("_malformed"))
-
-  /** The original `from_json` decode, kept as the reference implementation
-    * for CdcEnvelopeSpec's differential tests. Known, spec-pinned
-    * divergences vs [[parse]]: a schema-mismatched nested `source` (e.g.
-    * `{"source":5}`) corrupt-flags the whole row here but yields NULL
-    * fields with `_malformed=false` in the native path (DuckDB semantics).
-    */
-  private[graft] def parseJackson(raw: DataFrame): DataFrame =
-    raw
-      .withColumn("_cdc",
-        from_json(col("value").cast("string"), PARSE_SCHEMA,
-          Map("columnNameOfCorruptRecord" -> CorruptField)))
-      .select(
-        col("topic"), col("key"), col("value"),
-        col("_cdc.op").as("op"),
-        col("_cdc.source.db").as("db"),
-        col("_cdc.source.table").as("tbl"),
-        (col("_cdc").isNull || col(s"_cdc.$CorruptField").isNotNull)
-          .as("_malformed"))
 }

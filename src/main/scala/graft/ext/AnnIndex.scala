@@ -331,8 +331,8 @@ object AnnIndex {
     val idx = loadCached(spark, dir)
     // the probe picker only consults queries × centroids (tiny); the
     // collected probe set names the pruned cells with no further job
-    val probes = Similarity.local(Similarity.fixedProbePicker(probe)(
-      q, idx.centroids, idx.codes.select(col("id").as("aid"), col("cell"))))
+    val probes = Similarity.local(
+      Similarity.fixedProbePicker(probe)(q, idx.centroids))
     servePruned(idx, q, k, probes)
   }
 
@@ -343,14 +343,16 @@ object AnnIndex {
     * cellstats.parquet counts code rows including tombstoned ids
     * (writeCellStats is deliberately not delete-maintained). On a
     * delete-free artifact this equals the in-memory
-    * [[Similarity.pqResidualAdaptiveTopK]] target exactly (same
-    * picker definition, so they cannot drift); AFTER deletes the two
-    * derive different targets/probe sets, and the divergence is in
-    * the SAFE direction only — the stale (larger) n can only WIDEN
-    * the probe list, and liveness is enforced downstream by the
-    * tombstone anti-join regardless. Cell populations come from the
-    * same stats table, and the ADC scan is partition-pruned to the
-    * probed cells exactly like the fixed-probe serve.
+    * [[Similarity.residualIndexSearch]] under
+    * [[Similarity.adaptiveProbePickerWithPop]] with populations
+    * recounted from the codes (same picker definition, so they cannot
+    * drift); AFTER deletes the two derive different targets/probe
+    * sets, and the divergence is in the SAFE direction only — the
+    * stale (larger) n can only WIDEN the probe list, and liveness is
+    * enforced downstream by the tombstone anti-join regardless. Cell
+    * populations come from the same stats table, and the ADC scan is
+    * partition-pruned to the probed cells exactly like the
+    * fixed-probe serve.
     */
   def searchTopKAdaptive(spark: SparkSession, dir: String, q: DataFrame,
       k: Int, targetNum: Long, targetDen: Long): DataFrame = {
@@ -377,6 +379,6 @@ object AnnIndex {
       .map(_.get(0)).distinct.toSeq
     val pruned = idx.liveCodes.filter(col("cell").isin(cells: _*))
     Similarity.residualIndexSearch(idx.centroids, idx.codebooks,
-      pruned, q, idx.numSub, idx.subDim, k, (_, _, _) => probes)
+      pruned, q, idx.numSub, idx.subDim, k, (_, _) => probes)
   }
 }

@@ -620,7 +620,7 @@ object Dedup {
     * conv's base conversion measured ~1.7× slower across the 60 bit
     * extracts.
     */
-  private def bitContrib(h: Column, j: Int): Column = {
+  private[graft] def bitContrib(h: Column, j: Int): Column = {
     val a = ascii(substring(h, j / 4 + 1, 1))
     val nib = a - when(a >= 97, 87).otherwise(48)
     shiftright(nib, 3 - j % 4).bitwiseAND(lit(1)) * 2 - 1
@@ -634,25 +634,6 @@ object Dedup {
       val s = aggregate(tokens, lit(0), (acc, w) => acc + bitContrib(md5(w), j))
       when(s >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  /** (id, simhash) the scale-correct way (explode, flat projection,
-    * partial aggregate over primitive buffers): one
-    * codegen'd md5 per token (subexpression-eliminated across the 60
-    * bit extracts), 60 `sum` partial aggregates, fingerprint assembled
-    * post-agg. The shuffle carries 60 small ints per document.
-    */
-  def simhashAgg(docs: DataFrame, idCol: String, tokensCol: String): DataFrame = {
-    val ex = docs.select(col(idCol).as("id"), explode(col(tokensCol)).as("w"))
-    val h = md5(col("w"))
-    val contribs = (0 until SimhashBits).map(j => bitContrib(h, j).as(s"b_$j"))
-    val hashed = ex.select(col("id") +: contribs: _*)
-    val aggs = (0 until SimhashBits).map(j => sum(col(s"b_$j")).as(s"s_$j"))
-    val agg = hashed.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-    val fp = (0 until SimhashBits)
-      .map(j => when(col(s"s_$j") >= 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    agg.select(col("id"), fp.as("simhash"))
-  }
 
   /** SimHash near-dup pairs at Hamming distance ≤ maxHamming (< 4), via
     * 4 chunks of `chunkBits` bits: hd ≤ 3 guarantees an identical chunk

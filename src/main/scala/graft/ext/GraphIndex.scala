@@ -1,6 +1,5 @@
 package graft.ext
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -276,15 +275,14 @@ object GraphIndex {
         "append is add, not upsert")
     val full = idx.vectors.select(col("id"), col("part"), col("vec"))
       .unionByName(nv.select(col("id"), col("part"), col("vec")))
-      .withColumn("nrm", sqrt(Similarity.dot(col("vec"), col("vec"))))
+      .withColumn("nrm", Similarity.norm(col("vec")))
       .localCheckpoint(false)
     val q = nv
-      .withColumn("qnrm", sqrt(Similarity.dot(col("vec"), col("vec"))))
+      .withColumn("qnrm", Similarity.norm(col("vec")))
       .select(col("id").as("nid"), col("part").as("npart"),
         col("vec").as("nvec"), col("qnrm"))
-    val denom = col("qnrm") * col("nrm")
-    val cs = when(denom === 0.0, lit(0.0))
-      .otherwise(Similarity.dot(col("nvec"), col("vec")) / denom)
+    val cs = Similarity.cosineNormed(col("nvec"), col("vec"), col("qnrm"),
+      col("nrm"))
     val newEdges = q.join(full,
         col("npart") === col("part") && col("nid") =!= col("id"))
       .select(col("nid").as("src0"), col("id").as("dst0"), cs.as("cs"))
@@ -331,14 +329,13 @@ object GraphIndex {
 
   /** Serve top-k from the persisted artifact: seeds from the stored
     * signatures, `hops` expansion rounds over the stored edges, exact
-    * rerank against the stored vectors — the same expansion the
-    * in-memory chain runs ([[Similarity.graphExpandCandidatesFrom]]'s
-    * arithmetic, inlined so each hop can PRUNE), with every hop's
-    * edge scan partition-pruned to the frontier's source buckets.
-    * The walk state stays on the driver between hops ([[walk]]): the
-    * frontier is ≤ numQueries·seeds·(graphK+1)^hop ids at ANY corpus
-    * size, and the bucket set it maps to is ≤ min(frontier,
-    * edge_buckets).
+    * rerank against the stored vectors — the same walk the in-memory
+    * chain runs ([[Similarity.graphExpandCandidatesFrom]]), reading
+    * each hop's edges through [[hopEdges]], partition-pruned to the
+    * frontier's source buckets. The walk state stays on the driver
+    * between hops ([[Similarity.graphWalk]]): the frontier is
+    * ≤ numQueries·seeds·(graphK+1)^hop ids at ANY corpus size, and the
+    * bucket set it maps to is ≤ min(frontier, edge_buckets).
     */
   def searchTopK(spark: SparkSession, dir: String, numQueries: Int,
       seeds: Int, hops: Int, k: Int): DataFrame = {
@@ -353,54 +350,15 @@ object GraphIndex {
     * composed pipelines (candidate generation → their own rerank →
     * MMR) can serve from the persisted artifact instead of rebuilding
     * the graph per query (the VERDICT r13 #5 shared-artifact
-    * discipline applied to the graph tier). Every hop expands the
-    * nodes the previous hop reached (older nodes' out-edges are
-    * already in the visited set — edges are static), so the result
-    * is the union-of-all-expansions walk.
+    * discipline applied to the graph tier). It is the blind walk:
+    * every hop expands the pairs the previous hop reached
+    * ([[Similarity.blindFrontier]]).
     */
   def expandCandidates(spark: SparkSession, dir: String,
       numQueries: Int, seeds: Int, hops: Int): DataFrame = {
-    require(hops >= 1, "need at least one expansion hop")
-    walk(spark, loadCached(spark, dir), numQueries, seeds, hops)(
-      (_, added) => added)
-  }
-
-  /** The driver-held walk both serves share: seed each query from the
-    * signature tier (one job set), then `hops` rounds of
-    * visited ∪= out-edges(frontier), where `pick(visited, added)`
-    * chooses the frontier from the visited pairs and the pairs the
-    * last hop added (the seeds, before the first hop). The state is bounded
-    * per query — seeds + hops·|frontier|·graphK pairs, independent of
-    * corpus size — so it stays on the driver; each hop reads only the
-    * frontier's pruned edge slice ([[hopEdges]]). Returns the visited
-    * set minus self-hits as a local relation `(query_id, id)`.
-    */
-  private def walk(spark: SparkSession, idx: Index, numQueries: Int,
-      seeds: Int, hops: Int)(
-      pick: (Seq[(Long, Long)], Seq[(Long, Long)]) => Seq[(Long, Long)])
-      : DataFrame = {
-    def pair(r: Row): (Long, Long) =
-      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
-    val visited = mutable.LinkedHashSet.empty[(Long, Long)]
-    visited ++= Similarity.hammingTopKSigs(
-        idx.liveSigs.localCheckpoint(false), numQueries, seeds)
-      .select(col("query_id"), col("neighbor_id")).collect().map(pair)
-    var added: Seq[(Long, Long)] = visited.toSeq
-    for (_ <- 1 to hops) {
-      val frontier = pick(visited.toSeq, added)
-      val before = visited.size
-      if (frontier.nonEmpty) {
-        val out = hopEdges(idx, frontier.map(_._2).distinct).collect()
-          .map(pair).groupMap(_._1)(_._2)
-        for ((q, id) <- frontier; dst <- out.getOrElse(id, Array.empty[Long]))
-          visited += ((q, dst))
-      }
-      added = visited.toSeq.drop(before)
-    }
-    spark.createDataFrame(
-      visited.toSeq.collect { case (q, id) if q != id => Row(q, id) }.asJava,
-      StructType(Seq(StructField("query_id", LongType),
-        StructField("id", LongType))))
+    val idx = loadCached(spark, dir)
+    Similarity.graphExpandCandidatesFrom(idx.liveSigs.localCheckpoint(false),
+      hopEdges(idx, _), numQueries, seeds, hops)
   }
 
   /** One hop's PRUNED edge slice `(esrc, edst)` out of the frontier
@@ -476,6 +434,9 @@ object GraphIndex {
         .flatMap { case (q, cands) =>
           cands.sorted(Similarity.topKOrder).take(ef).map(c => (q, c.id)) }
     }
-    walk(spark, idx, numQueries, seeds, hops)((visited, _) => beamOf(visited))
+    Similarity.graphWalk(Similarity.graphSeeds(
+        idx.liveSigs.localCheckpoint(false), numQueries, seeds),
+      hops, hopEdges(idx, _))((visited, _) => beamOf(visited))
+      .select(col("query_id"), col("id"))
   }
 }

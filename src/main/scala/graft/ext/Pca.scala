@@ -179,37 +179,6 @@ object Pca {
     (m, powerIterate(c, PowerIters))
   }
 
-  /** Per-dim means (round 6) and the FULL symmetric covariance matrix
-    * (round 6, E[XY] − E[X]E[Y] over the 6-rounded fixed points),
-    * collected to the driver: d + d² doubles of driver state.
-    * EXPLODE formulation — kept as the Gram aggregator's differential
-    * twin (PcaSpec pins them equal); [[fit]] runs the aggregator.
-    */
-  def covarianceExplode(vecs: DataFrame, dim: Int)
-      : (IndexedSeq[Double], Array[Array[Double]]) = {
-    val x = vecs.select(posexplode(col("vec")).as(Seq("d", "val")))
-    val means = x.groupBy(col("d")).agg(round(avg(col("val")), 6).as("m"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val m = IndexedSeq.tabulate(dim)(means)
-    // Upper-triangle index-pair products built scan-side: the inner
-    // slice starts at the outer index, so each (i ≤ j) pair appears
-    // once per row — N·d(d+1)/2 exploded rows into ONE aggregation.
-    val s = vecs.select(explode(expr(
-        "flatten(transform(vec, (xi, i) -> " +
-          "transform(slice(vec, i + 1, size(vec) - i), (xj, jj) -> " +
-          "struct(i AS i, i + jj AS j, xi * xj AS p))))")).as("t"))
-      .select(col("t.i").as("i"), col("t.j").as("j"), col("t.p").as("p"))
-      .groupBy(col("i"), col("j")).agg(round(avg(col("p")), 6).as("s"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2))
-      .toMap
-    val c = Array.tabulate(dim, dim) { (i, j) =>
-      val key = (math.min(i, j), math.max(i, j))
-      BigDecimal(s(key) - m(i) * m(j))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    (m, c)
-  }
-
   /** Dominant eigenvector by fixed-count power iteration over the
     * driver-resident matrix: v₀ = 1⃗, then `iters` rounds of
     * wᵢ = round(Σⱼ Cᵢⱼ·vⱼ, 9), v = round(w/‖w‖, 6). The per-step
@@ -233,7 +202,7 @@ object Pca {
 
   /** Production covariance = the kernel the round-12 witness probe
     * selected (SCALING.md): the Gram aggregator. The explode twin
-    * stays for the differential spec.
+    * is PcaSpec's test-scope reference.
     */
   def covariance(vecs: DataFrame, dim: Int)
       : (IndexedSeq[Double], Array[Array[Double]]) =

@@ -1,14 +1,18 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over an embedding column (north-star extension,
   * SURVEY.md §7.4 — absent from the reference).
   *
-  * The cosine kernel is pure Catalyst HOFs (`zip_with` + `aggregate`) in
-  * double precision with a left-to-right fold, which makes the result
+  * The cosine kernel is the native [[graft.functions.DotProduct]] fold
+  * in double precision, left to right, which makes the result
   * bit-reproducible by the DuckDB oracle (same fold order, same IEEE
   * arithmetic).
   *
@@ -46,21 +50,25 @@ object Similarity {
     */
   def dot(a: Column, b: Column): Column = graft.functions.DotProduct(a, b)
 
-  /** Dot product as pure built-in HOFs — kept as the reference-semantics
-    * twin for tests and for environments that reject custom expressions.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+  /** Euclidean norm `sqrt(dot(v, v))` — the fold every cosine divides by. */
+  def norm(v: Column): Column = sqrt(dot(v, v))
 
-  /** Cosine similarity: dot / (‖a‖·‖b‖), norms folded the same way.
-    * A zero (or denormal-norm) vector is defined as similarity 0.0 to
-    * everything — without the guard 0/0 = NaN, whose ordering/filter
-    * behavior differs between Spark and the DuckDB oracles.
+  /** Cosine similarity over PRECOMPUTED norms `na`, `nb` (each the
+    * [[norm]] of its vector): dot / (na·nb). A zero (or denormal-norm)
+    * vector is defined as similarity 0.0 to everything — without the
+    * guard 0/0 = NaN, whose ordering/filter behavior differs between
+    * Spark and the DuckDB oracles. Pair-scoring operators compute each
+    * side's norm once per row and call this per pair: one d-dim dot
+    * per pair instead of three, bit-identical to [[cosine]].
     */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = sqrt(dot(a, a)) * sqrt(dot(b, b))
+  def cosineNormed(a: Column, b: Column, na: Column, nb: Column): Column = {
+    val denom = na * nb
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
+
+  /** Cosine similarity: [[cosineNormed]] with both norms computed inline. */
+  def cosine(a: Column, b: Column): Column =
+    cosineNormed(a, b, norm(a), norm(b))
 
   // ---------------------------------------------------------------------
   // Bounded top-k heap aggregate
@@ -103,14 +111,26 @@ object Similarity {
   def topkUdaf(k: Int) =
     udaf(new TopKAggregator(k), Encoders.product[ScoredId])
 
-  /** Expand an aggregated TopKBuf column into (rank, id, score) rows. */
-  private def explodeTopK(df: DataFrame, groupCols: Seq[String]): DataFrame =
-    df.select(groupCols.map(col) :+
+  /** The one ranked top-k tail: per `keys` group, the k best rows of
+    * `scored` by (`score` desc, `id` asc) through the bounded-heap
+    * [[topkUdaf]] (partial aggregation caps every map-side buffer at k,
+    * so the shuffle carries O(k) rows per group, never the scored
+    * table), expanded into (keys…, rank, `idAs`, `scoreAs`) rows, rank
+    * 1 the best. `out` maps the heap's score to the emitted value: the
+    * 6-decimal round of a cosine, or the negation that turns a
+    * smallest-distance heap (scored by negated distance) back into
+    * distances.
+    */
+  private[graft] def rankedTopK(scored: DataFrame, keys: Seq[String], k: Int,
+      scoreAs: String, out: Column => Column = c => round(c, 6),
+      score: String = "score", id: String = "id",
+      idAs: String = "neighbor_id"): DataFrame =
+    scored.groupBy(keys.map(col): _*)
+      .agg(topkUdaf(k)(col(score), col(id)).as("topk"))
+      .select(keys.map(col) :+
         posexplode(col("topk").getField("items")).as(Seq("pos", "item")): _*)
-      .select(groupCols.map(col) :+
-        (col("pos") + 1).as("rank") :+
-        col("item.id").as("neighbor_id") :+
-        round(col("item.score"), 6).as("cos"): _*)
+      .select(keys.map(col) ++ Seq((col("pos") + 1).as("rank"),
+        col("item.id").as(idAs), out(col("item.score")).as(scoreAs)): _*)
 
   /** Bucket fan-out of the brute-force join's equi-key reformulation. */
   val BruteForceBuckets = 16
@@ -138,27 +158,20 @@ object Similarity {
     */
   private def bucketedTopK(corpus: DataFrame, q: DataFrame, k: Int,
                            admit: Column): DataFrame = {
-    // Norms PRE-computed once per row on each side (the nearestOf
-    // discipline, r16): the one-shot cosine does three d-dim dot
-    // products per (query, corpus) pair — 3·N·Q — where ‖vec‖ is
-    // constant across queries and ‖qvec‖ across the corpus. Same
-    // expressions in the same order (sqrt(dot(x,x)), norm product,
-    // divide), so every score is bit-identical to cosine() and the
-    // SQL oracle.
+    // Norms PRE-computed once per row on each side (r16): the one-shot
+    // cosine does three d-dim dot products per (query, corpus) pair —
+    // 3·N·Q — where ‖vec‖ is constant across queries and ‖qvec‖ across
+    // the corpus ([[cosineNormed]], bit-identical to cosine()).
     val c = corpus
       .withColumn("bk", pmod(col("id"), lit(BruteForceBuckets.toLong)))
-      .withColumn("nrm", sqrt(dot(col("vec"), col("vec"))))
-    val qn = q.withColumn("qn", sqrt(dot(col("qvec"), col("qvec"))))
-    val denom = col("q.qn") * col("c.nrm")
-    val score = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("q.qvec"), col("c.vec")) / denom)
+      .withColumn("nrm", norm(col("vec")))
+    val qn = q.withColumn("qn", norm(col("qvec")))
     val scored = c.alias("c")
       .join(broadcast(qn.alias("q")), col("c.bk") === col("q.qbk") && admit)
       .select(col("q.qid").as("query_id"), col("c.id").as("id"),
-        score.as("score"))
-    val agg = scored.groupBy("query_id")
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-    explodeTopK(agg, Seq("query_id"))
+        cosineNormed(col("q.qvec"), col("c.vec"), col("q.qn"), col("c.nrm"))
+          .as("score"))
+    rankedTopK(scored, Seq("query_id"), k, "cos")
   }
 
   private def bucketFanout: Column =
@@ -190,21 +203,17 @@ object Similarity {
     * vectors only. Output: (query_id, rank, neighbor_id, cos).
     */
   def topKWithinPartition(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    // Per-row norm precompute (the nearestOf discipline, r16): one dot
-    // per scored pair instead of three; bit-identical scores.
-    val c = corpus.withColumn("nrm", sqrt(dot(col("vec"), col("vec"))))
-    val qn = queries.withColumn("qn", sqrt(dot(col("qvec"), col("qvec"))))
-    val denom = col("q.qn") * col("c.nrm")
-    val score = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("q.qvec"), col("c.vec")) / denom)
+    // Per-row norm precompute (r16): one dot per scored pair instead of
+    // three; bit-identical scores.
+    val c = corpus.withColumn("nrm", norm(col("vec")))
+    val qn = queries.withColumn("qn", norm(col("qvec")))
     val scored = c.alias("c")
       .join(qn.alias("q"),
         col("c.part") === col("q.part") && col("c.id") =!= col("q.qid"))
       .select(col("q.qid").as("query_id"), col("c.id").as("id"),
-        score.as("score"))
-    val agg = scored.groupBy("query_id")
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-    explodeTopK(agg, Seq("query_id"))
+        cosineNormed(col("q.qvec"), col("c.vec"), col("q.qn"), col("c.nrm"))
+          .as("score"))
+    rankedTopK(scored, Seq("query_id"), k, "cos")
   }
 
   /** Filtered ANN search (VERDICT r11 #3): attribute-constrained top-k
@@ -240,32 +249,27 @@ object Similarity {
       .groupBy(col("part"), col("dim"))
       .agg(round(sum(col("v")) / count(lit(1)), 6).as("c"))
 
-  /** Nearest-centroid assignment (the k-means assignment step / IVF
-    * routing step): broadcast the centroid table (cells × dims — tiny
-    * by construction), score every vector against each centroid with
-    * the codegen'd cosine, keep the argmax. Output:
-    * (id, part, assigned, cos).
-    */
   /** Long-form centroids (part, dim, c) → one (cpart, cvec) array row
-    * per cell, dims ordered — the broadcastable form every
-    * centroid-probing consumer (assignment, multi-probe search) uses.
+    * per cell, dims ordered — the table every centroid-probing consumer
+    * (assignment, multi-probe search) reads.
     */
   def centroidVectors(cents: DataFrame): DataFrame =
     cents.groupBy(col("part").as("cpart"))
       .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
       .select(col("cpart"), transform(col("dc"), x => x.getField("c")).as("cvec"))
 
+  /** Nearest-centroid assignment (the k-means assignment step / IVF
+    * routing step) of (id, part, vec) against long-form centroids
+    * (part, dim, c): [[nearestCell]], keeping the source partition.
+    * Output: (id, part, assigned, cos), `assigned` in the type of the
+    * centroid table's cell ids.
+    */
   def assignToNearest(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    // long form -> one array per cell, dims ordered
     val centVecs = centroidVectors(cents)
-    val scored = vecs.join(broadcast(centVecs))
-      .select(col("id"), col("part"), col("cpart"),
-        cosine(col("vec"), col("cvec")).as("score"))
-    val agg = scored.groupBy(col("id"), col("part"))
-      .agg(max_by(struct(col("score"), col("cpart")), struct(col("score"), -col("cpart")))
-        .as("best"))
-    agg.select(col("id"), col("part"),
-      col("best.cpart").as("assigned"), round(col("best.score"), 6).as("cos"))
+    nearestCell(vecs, centVecs, carry = Seq("part"))
+      .select(col("id"), col("part"),
+        col("cell").cast(centVecs.schema("cpart").dataType).as("assigned"),
+        round(col("score"), 6).as("cos"))
   }
 
   /** Iterated Lloyd k-means over (id, part, vec), `iters` rounds of
@@ -276,13 +280,13 @@ object Similarity {
     * Each round aggregates centroids distributed (the only shuffle —
     * long-form (cell, dim) partial sums, like [[centroids]]), then
     * '''collects''' the centroid table to the driver: it is O(cells ×
-    * dims) doubles by construction, never corpus-sized, and folding the
-    * centroids back in as array literals makes the reassignment a pure
-    * narrow projection (argmax over a struct array) — the same
-    * broadcast-centers loop Spark MLlib's KMeans runs at scale. At
-    * 100 TB the input should be persisted by the caller so each round's
-    * centroid pass rereads cache instead of parquet; the assignment
-    * lineage itself stays narrow (one projection per round).
+    * dims) doubles by construction, never corpus-sized, and the
+    * reassignment is [[nearestCell]] over the collected table — one
+    * narrow projection per round whose generated code does not grow
+    * with the cell count, the broadcast-centers loop Spark MLlib's
+    * KMeans runs at scale. At 100 TB the input should be persisted by
+    * the caller so each round's centroid pass rereads cache instead of
+    * parquet.
     *
     * Determinism across engines: centroids are rounded to 6 decimals
     * every round (double summation fold-order noise is ~1e-13, far
@@ -295,25 +299,45 @@ object Similarity {
     var cur = vecs.select(col("id"), col("part").as("cell"), col("vec"))
     for (_ <- 1 to iters) {
       val centRows = centroids(cur.select(col("cell").as("part"), col("vec"))).collect()
-      val cents: Seq[(Long, Array[Double])] = centRows
+      val cents = centRows
         .groupBy(r => r.getAs[Number]("part").longValue)
         .map { case (cid, rs) =>
           cid -> rs.sortBy(_.getAs[Int]("dim")).map(_.getAs[Double]("c"))
+            .toIndexedSeq
         }
-        .toSeq.sortBy(_._1)
-      // struct ordering is lexicographic (score, then -cell), so
-      // array_max IS the deterministic argmax.
-      val cand = array(cents.map { case (cid, cv) =>
-        struct(cosine(col("vec"), typedLit(cv)).as("score"),
-          lit(-cid).as("neg"))
-      }: _*)
-      val best = array_max(cand)
-      cur = cur.select(col("id"),
-        (lit(0L) - best.getField("neg")).as("cell"),
-        col("vec"), best.getField("score").as("score"))
+        .toIndexedSeq.sortBy(_._1)
+      cur = nearestCell(cur, cents, Seq("vec"))
     }
     cur.select(col("id"), col("cell").as("assigned"),
       round(col("score"), 6).as("cos"))
+  }
+
+  /** Nearest-cell assignment — the one cell-assignment function every
+    * operator calls: each (id, vec) is scored against a (cpart, cvec)
+    * centroid table by one native [[graft.functions.CosineArgmaxCell]]
+    * loop per vector; the highest cosine wins and ties go to the
+    * smaller cell. The table is collected to the driver (bounded:
+    * cells × dims by construction) and rides the projection as one
+    * reference object, so no join × k expansion, no argmax aggregate
+    * and no generated literal-array argmax (whose code grows with k)
+    * is planned. `carry` columns of `vecs` ride through. Output:
+    * (id, carry…, cell: long, score).
+    */
+  def nearestCell(vecs: DataFrame, centVecs: DataFrame,
+      carry: Seq[String] = Nil): DataFrame =
+    nearestCell(vecs, collectedCentroids(centVecs), carry)
+
+  /** [[nearestCell]] over a table already on the driver, ascending cell
+    * id (non-empty: the kernel requires it).
+    */
+  def nearestCell(vecs: DataFrame,
+      cents: IndexedSeq[(Long, IndexedSeq[Double])],
+      carry: Seq[String]): DataFrame = {
+    val keep = col("id") +: carry.map(col)
+    vecs.select(keep :+
+        graft.functions.CosineArgmaxCell.of(col("vec"), cents).as("best"): _*)
+      .select(keep ++ Seq(col("best.cell").as("cell"),
+        col("best.score").as("score")): _*)
   }
 
   // ---------------------------------------------------------------------
@@ -332,31 +356,6 @@ object Similarity {
   def adaptiveK(n: Long, targetPop: Int): Long = {
     require(targetPop >= 1, "targetPop must be positive")
     math.max(1L, (n + targetPop - 1) / targetPop)
-  }
-
-  /** Nearest-cell assignment against a (cpart, cvec) centroid table,
-    * argmax ties to the smaller cell — the [[assignToNearest]] shape
-    * without the carried source-partition column. The table is
-    * collected to the driver and scored by one native
-    * [[graft.functions.CosineArgmaxCell]] loop per vector, not by a
-    * generated literal-array argmax ([[kmeansIterated]]'s shape): the
-    * table rides as one reference object, so the generated code does
-    * not grow with k.
-    */
-  private def nearestOf(vecs: DataFrame, centVecs: DataFrame): DataFrame = {
-    // r17: the broadcast-join × k expansion and its max_by hash
-    // aggregate collapse into ONE codegen loop per vector
-    // ([[graft.functions.CosineArgmaxCell]]): the centroid table is
-    // O(cells × dims) by construction and was already broadcast, so
-    // collecting it is the same bytes with the join and aggregate
-    // gone. Norm folds, score expression order, and the
-    // (score, -cpart) tie rule are replicated exactly — bit-identical
-    // assignments (see the expression's doc).
-    val cands = collectedCentroids(centVecs) // non-empty: the kernel requires it
-    val best = vecs.select(col("id"),
-      graft.functions.CosineArgmaxCell.of(col("vec"), cands).as("best"))
-    best.select(col("id"), col("best.cell").as("cell"),
-      col("best.score").as("score"))
   }
 
   /** Bounded state — a centroid table, a codebook, a probe set —
@@ -477,7 +476,7 @@ object Similarity {
     if (cents.count() >= crossoverK)
       twoLevelAssign(v, cents, TwoLevelProbe)
         .select(col("id"), col("cell"), col("score"))
-    else nearestOf(v, cents)
+    else nearestCell(v, cents)
   }
 
   /** [[adaptiveClusters]] with the two-level probe FORCED on every
@@ -582,18 +581,11 @@ object Similarity {
         .orderBy(col("cpart"))) - 1)
     val seeds = rk.filter(pmod(col("rn"), lit(stride)) === 0)
       .select(col("cpart").as("gpart"), col("cvec").as("gvec"))
-    def argmaxGroup(fine: DataFrame, coarse: DataFrame): DataFrame = {
-      val f = fine.withColumn("fn", sqrt(dot(col("cvec"), col("cvec"))))
-      val c = coarse.withColumn("gn", sqrt(dot(col("gvec"), col("gvec"))))
-      val denom = col("fn") * col("gn")
-      val score = when(denom === 0.0, lit(0.0))
-        .otherwise(dot(col("cvec"), col("gvec")) / denom)
-      f.join(broadcast(c))
-        .select(col("cpart"), col("gpart"), score.as("score"))
-        .groupBy(col("cpart"))
-        .agg(max_by(col("gpart"), struct(col("score"), -col("gpart")))
-          .as("gpart"))
-    }
+    // each fine centroid's nearest coarse group: (cpart, gpart)
+    def argmaxGroup(fine: DataFrame, coarse: DataFrame): DataFrame =
+      nearestCell(fine.select(col("cpart").as("id"), col("cvec").as("vec")),
+        coarse.select(col("gpart").as("cpart"), col("gvec").as("cvec")))
+        .select(col("id").as("cpart"), col("cell").as("gpart"))
     val a0 = argmaxGroup(fineCents, seeds)
     // coarse and fineG are k-bounded (≤ k×d doubles) but each feeds
     // 2+ consumers, and every consumer would re-run the 3-4-shuffle
@@ -682,14 +674,6 @@ object Similarity {
     }
     graft.functions.TwoLevelCosineAssign.of(col("vec"), groups, fine, probe)
   }
-
-  /** Exact nearest-cell assignment against a (cpart, cvec) centroid
-    * table — [[assignToNearest]]'s join shape without the carried
-    * source-partition column; the exact twin `emb_twolevel_agreement`
-    * audits [[twoLevelAssign]] against.
-    */
-  def nearestCell(vecs: DataFrame, centVecs: DataFrame): DataFrame =
-    nearestOf(vecs.select(col("id"), col("vec")), centVecs)
 
   // ---------------------------------------------------------------------
   // Diversity coreset (farthest-point / k-center maximin)
@@ -962,51 +946,63 @@ object Similarity {
     * definition with the one-shot entry so the two cannot drift.
     */
   def pqAdcTopKFrom(cw: DataFrame, codes: DataFrame, qvecs: DataFrame,
-      numSub: Int, subDim: Int, k: Int): DataFrame = {
-    val qsub = qvecs
-      .select(col("id").as("qid"),
-        explode(sequence(lit(0), lit(numSub - 1))).as("m"), col("vec"))
-      .select(col("qid"), col("m"),
-        slice(col("vec"), col("m") * subDim + 1, lit(subDim)).as("sv"))
+      numSub: Int, subDim: Int, k: Int): DataFrame =
+    adcTopK(qvecs.select(col("id").as("qid"), col("vec").as("qv")), cw,
+      codes, Nil, numSub, subDim, k)
+
+  /** The one ADC scoring tail (asymmetric distance computation) behind
+    * the flat, IVF-pruned and residual PQ searches. Each query vector
+    * `qv` of `q (qid, keys…, qv)` is split into `numSub` subvectors and
+    * builds a distance table against the codebook `cw (cl, m, cvec)`
+    * (queries × numSub × codewords rows — tiny, broadcast); table
+    * entries are 6-rounded fixed points so the numSub-term sum is
+    * order-stable across engines. Each candidate of `cand (keys…, id,
+    * c0..c{numSub−1})` looks its codes up on (keys…, m, cl), its
+    * distance is round(Σ, 6), self-matches are excluded, and the
+    * top-k ranks (adc asc, id asc). `keys` are the query-side columns a
+    * candidate already carries: none for the flat tier (every code
+    * meets every query), `qid` for the IVF-pruned tier, (`qid`,
+    * `cpart`) for residual tables built per probed cell. The corpus
+    * side touches integer codes only, never raw vectors.
+    * Output: (query_id, rank, neighbor_id, adc).
+    */
+  private def adcTopK(q: DataFrame, cw: DataFrame, cand: DataFrame,
+      keys: Seq[String], numSub: Int, subDim: Int, k: Int): DataFrame = {
+    val qkeys = q.columns.filterNot(_ == "qv").toSeq.map(col)
+    val qsub = q.select(qkeys ++ Seq(
+        explode(sequence(lit(0), lit(numSub - 1))).as("m"), col("qv")): _*)
+      .select(qkeys ++ Seq(col("m"),
+        slice(col("qv"), col("m") * subDim + 1, lit(subDim)).as("sv")): _*)
     val d = l2sqUnrolled(col("sv"), col("cvec"), subDim)
     val tables = qsub.join(broadcast(cw), "m")
-      .select(col("qid"), col("m"), col("cl"), round(d, 6).as("dt"))
-    val longCodes = codes.select(col("id"), posexplode(
+      .select(qkeys ++ Seq(col("m"), col("cl"), round(d, 6).as("dt")): _*)
+    val longCodes = cand.select(keys.map(col) ++ Seq(col("id"), posexplode(
         array((0 until numSub).map(m => col(s"c$m")): _*))
-      .as(Seq("m", "cl")))
-    val scored = longCodes.join(broadcast(tables), Seq("m", "cl"))
+      .as(Seq("m", "cl"))): _*)
+    val scored = longCodes.join(broadcast(tables), keys ++ Seq("m", "cl"))
       .filter(col("id") =!= col("qid"))
       .groupBy(col("qid"), col("id"))
       .agg(round(sum(col("dt")), 6).as("adc"))
     // Top-k via the bounded-heap UDAF, not a per-query window: a
     // row_number partitioned by qid sort-shuffles the ENTIRE scored
-    // table (measured 7.6× second-decade slope before the swap); the
-    // heap partial-aggregates map-side and shuffles O(k) rows per
-    // query. Negated distance turns the largest-score heap into a
-    // smallest-distance heap with the identical (adc asc, id asc)
-    // tie rule; rounding happened before negation, so values are
-    // untouched.
-    scored.select(col("qid"), col("id"), (-col("adc")).as("score"))
-      .groupBy(col("qid"))
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-      .select(col("qid").as("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("item.id").as("neighbor_id"),
-        (-col("item.score")).as("adc"))
+    // table (measured 7.6× second-decade slope before the swap).
+    // Negated distance turns the largest-score heap into a
+    // smallest-distance heap with the identical (adc asc, id asc) tie
+    // rule; rounding happened before negation, so values are untouched.
+    rankedTopK(scored.select(col("qid").as("query_id"), col("id"),
+        (-col("adc")).as("score")), Seq("query_id"), k, "adc", c => -c)
   }
 
   /** Composed IVF-PQ search — the full ladder in one operator
     * (brute force → IVF cells → PQ codes → THIS): each query routes
-    * to its `probe` best cells by centroid cosine (the E167 multi-
-    * probe rule), and ADC-ranks ONLY those cells' codes — candidate
-    * volume ≈ queries · probe · N/cells instead of queries · N, and
-    * the scan still touches integer codes only. This is the shape a
-    * billion-vector serving index actually runs: coarse quantizer
-    * prunes, product quantizer scores, (optionally) exact rerank on
-    * the survivors — E226 prices that last step. Same fixed-point
-    * table entries, same (adc, id) ties, same bounded-heap top-k as
-    * [[pqAdcTopK]].
+    * to its `probe` best cells by centroid cosine ([[fixedProbePicker]],
+    * the E167 multi-probe rule), and ADC-ranks ONLY those cells' codes
+    * — candidate volume ≈ queries · probe · N/cells instead of
+    * queries · N, and the scan still touches integer codes only. This
+    * is the shape a billion-vector serving index actually runs: coarse
+    * quantizer prunes, product quantizer scores, (optionally) exact
+    * rerank on the survivors — E226 prices that last step. Same
+    * [[adcTopK]] tail as [[pqAdcTopK]].
     */
   def pqIvfTopK(vecs: DataFrame, numSub: Int, subDim: Int,
       numQueries: Int, k: Int, probe: Int): DataFrame = {
@@ -1014,43 +1010,14 @@ object Similarity {
     val cvecs = centroidVectors(centroids(vecs))
     val q = vecs.filter(col("id") < numQueries)
       .select(col("id").as("qid"), col("vec").as("qv"))
-    // probe list: queries × cells rows — tiny, window fine
-    val probes = q.join(broadcast(cvecs))
-      .select(col("qid"), col("cpart"),
-        cosine(col("qv"), col("cvec")).as("cs"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("cs").desc, col("cpart"))))
-      .filter(col("rn") <= probe)
+    val probes = fixedProbePicker(probe)(q, cvecs)
       .select(col("qid"), col("cpart"))
-    val qsub = q
-      .select(col("qid"),
-        explode(sequence(lit(0), lit(numSub - 1))).as("m"), col("qv"))
-      .select(col("qid"), col("m"),
-        slice(col("qv"), col("m") * subDim + 1, lit(subDim)).as("sv"))
-    val d = l2sqUnrolled(col("sv"), col("cvec"), subDim)
-    val tables = qsub.join(broadcast(cw), "m")
-      .select(col("qid"), col("m"), col("cl"), round(d, 6).as("dt"))
     // IVF prune FIRST: codes of probed cells only, per query
-    val codes = pqEncodeWith(vecs, numSub, subDim, cw)
+    val cand = pqEncodeWith(vecs, numSub, subDim, cw)
       .join(vecs.select(col("id").as("pid"), col("part")),
         col("id") === col("pid"))
       .join(broadcast(probes), col("part") === col("cpart"))
-      .filter(col("id") =!= col("qid"))
-    val longCodes = codes.select(col("qid"), col("id"), posexplode(
-        array((0 until numSub).map(m => col(s"c$m")): _*))
-      .as(Seq("m", "cl")))
-    val scored = longCodes.join(broadcast(tables), Seq("qid", "m", "cl"))
-      .groupBy(col("qid"), col("id"))
-      .agg(round(sum(col("dt")), 6).as("adc"))
-    scored.select(col("qid"), col("id"), (-col("adc")).as("score"))
-      .groupBy(col("qid"))
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-      .select(col("qid").as("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("item.id").as("neighbor_id"),
-        (-col("item.score")).as("adc"))
+    adcTopK(q, cw, cand, Seq("qid"), numSub, subDim, k)
   }
 
   /** ADAPTIVE multi-probe top-k (E252): instead of a FIXED probe
@@ -1066,12 +1033,11 @@ object Similarity {
     *
     * The target is computed in EXACT INTEGER arithmetic
     * (ceil(num·N/den) = (num·N + den − 1) div den) so the oracle can
-    * never drift through decimal-vs-double division. Probe selection:
-    * a cell is kept while the cumulative population EXCLUDING it is
-    * still below target — so the first cell always survives and the
-    * probe set is minimal. Scoring inside probed cells is the exact
-    * cosine (isolating the coverage knob from quantization error);
-    * the per-query work is bounded by the target, not the corpus.
+    * never drift through decimal-vs-double division. Probe selection
+    * is [[adaptiveProbePickerWithPop]] over the assignment's cell
+    * populations. Scoring inside probed cells is the exact cosine
+    * (isolating the coverage knob from quantization error); the
+    * per-query work is bounded by the target, not the corpus.
     * Output: (query_id, rank, neighbor_id, cos).
     */
   def adaptiveProbeTopK(vecs: DataFrame, numQueries: Int, k: Int,
@@ -1080,41 +1046,20 @@ object Similarity {
     val n = c.count()
     val target = (targetNum * n + targetDen - 1) / targetDen
     val cvecs = centroidVectors(centroids(c)).localCheckpoint(false)
-    val asg = c.join(broadcast(cvecs))
-      .select(col("id"), col("cpart"),
-        cosine(col("vec"), col("cvec")).as("cs"))
-      .groupBy("id")
-      .agg(max_by(col("cpart"), struct(col("cs"), -col("cpart"))).as("cell"))
-      .localCheckpoint(false) // feeds cell populations AND the candidate join
+    val asg = nearestCell(c, cvecs, Seq("vec"))
+      .localCheckpoint(false) // feeds cell populations AND the candidates
     val pop = asg.groupBy("cell").agg(count(lit(1)).as("np"))
     val q = c.filter(col("id") < numQueries)
-      .select(col("id").as("qid"), col("vec").as("qvec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cs").desc, col("cpart"))
-    val probes = q.join(broadcast(cvecs))
-      .select(col("qid"), col("cpart"),
-        cosine(col("qvec"), col("cvec")).as("cs"))
-      .join(broadcast(pop), col("cpart") === col("cell"))
-      .withColumn("cum", sum(col("np")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)))
-      .filter(col("cum") - col("np") < target)
+      .select(col("id").as("qid"), col("vec").as("qv"))
+    val probes = adaptiveProbePickerWithPop(target, pop)(q, cvecs)
       .select(col("qid"), col("cpart"))
       .localCheckpoint(false)
-    val scored = c.join(asg.select(col("id").as("aid"), col("cell")),
-        col("id") === col("aid"))
-      .join(broadcast(probes), col("cell") === col("cpart"))
+    val scored = asg.join(broadcast(probes), col("cell") === col("cpart"))
       .filter(col("id") =!= col("qid"))
       .join(broadcast(q), Seq("qid"))
       .select(col("qid").as("query_id"), col("id"),
-        cosine(col("qvec"), col("vec")).as("score"))
-    val agg = scored.groupBy("query_id")
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-    agg.select(col("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("item.id").as("neighbor_id"),
-        round(col("item.score"), 6).as("cos"))
+        cosine(col("qv"), col("vec")).as("score"))
+    rankedTopK(scored, Seq("query_id"), k, "cos")
   }
 
   /** Probe-recall sweep (E254): the full recall-vs-coverage CURVE the
@@ -1122,48 +1067,34 @@ object Similarity {
     * single points of — for every probe width p = 1..pMax, each
     * query's exact-cosine top-k inside its p best cells is
     * intersected with the global exact top-k. One corpus scoring
-    * pass at p = pMax (cell ranks ride along), checkpointed; each
-    * narrower p is a filter + bounded-heap re-rank over that frame,
-    * so the sweep costs one search plus pMax cheap re-ranks, not
-    * pMax searches. Output: (probe, query_id, n_hits, recall_at_k).
+    * pass at p = pMax (the [[fixedProbePicker]] cell ranks ride
+    * along), checkpointed; each narrower p is a filter + bounded-heap
+    * re-rank over that frame, so the sweep costs one search plus pMax
+    * cheap re-ranks, not pMax searches. Output: (probe, query_id,
+    * n_hits, recall_at_k).
     */
   def probeRecallSweep(vecs: DataFrame, numQueries: Int, k: Int,
       pMax: Int): DataFrame = {
     val c = vecs.localCheckpoint(false)
     val cvecs = centroidVectors(centroids(c)).localCheckpoint(false)
-    val asg = c.join(broadcast(cvecs))
-      .select(col("id"), col("cpart"),
-        cosine(col("vec"), col("cvec")).as("cs"))
-      .groupBy("id")
-      .agg(max_by(col("cpart"), struct(col("cs"), -col("cpart"))).as("cell"))
     val q = c.filter(col("id") < numQueries)
-      .select(col("id").as("qid"), col("vec").as("qvec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cs").desc, col("cpart"))
-    val ranks = q.join(broadcast(cvecs))
-      .select(col("qid"), col("cpart"),
-        cosine(col("qvec"), col("cvec")).as("cs"))
-      .withColumn("cellrank", row_number().over(w))
-      .filter(col("cellrank") <= pMax)
-      .select(col("qid"), col("cpart"), col("cellrank"))
-    val cand = c.join(asg.select(col("id").as("aid"), col("cell")),
-        col("id") === col("aid"))
+      .select(col("id").as("qid"), col("vec").as("qv"))
+    val ranks = fixedProbePicker(pMax)(q, cvecs)
+      .select(col("qid"), col("cpart"), col("rn").as("cellrank"))
+    val cand = nearestCell(c, cvecs, Seq("vec"))
       .join(broadcast(ranks), col("cell") === col("cpart"))
       .filter(col("id") =!= col("qid"))
       .join(broadcast(q), Seq("qid"))
       .select(col("qid").as("query_id"), col("id"),
-        cosine(col("qvec"), col("vec")).as("score"), col("cellrank"))
+        cosine(col("qv"), col("vec")).as("score"), col("cellrank"))
       .localCheckpoint(false)
-    val exact = topK(c, q, k)
+    val exact = topK(c, q.select(col("qid"), col("qv").as("qvec")), k)
       .select(col("query_id"), col("neighbor_id"))
       .localCheckpoint(false)
     val perP = (1 to pMax).map { p =>
-      val top = cand.filter(col("cellrank") <= p)
-        .groupBy("query_id")
-        .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-        .select(col("query_id"),
-          explode(col("topk").getField("items").getField("id"))
-            .as("neighbor_id"))
+      val top = rankedTopK(cand.filter(col("cellrank") <= p),
+          Seq("query_id"), k, "cos")
+        .select(col("query_id"), col("neighbor_id"))
       val hits = top.join(exact, Seq("query_id", "neighbor_id"))
         .groupBy("query_id").agg(count(lit(1)).as("h"))
       q.select(col("qid").as("query_id"))
@@ -1188,61 +1119,36 @@ object Similarity {
     * lookups from its own cell's table.
     *
     * Pipeline: coarse centroids (label-seeded, 6-rounded — the shared
-    * IVF quantizer) → per-vector residuals (argmax-cosine assignment,
-    * ties → smaller cell; subtraction unrolled into a flat codegen
-    * array, no interpreted HOF) → per-subspace k-means-TRAINED
-    * codebooks on residuals ([[pqCodebooksTrained]], plumbing
-    * unchanged) → codes → multi-probe pruned ADC exactly as
+    * IVF quantizer) → per-vector residuals ([[nearestCell]]
+    * assignment; subtraction unrolled into a flat codegen array, no
+    * interpreted HOF) → per-subspace k-means-TRAINED codebooks on
+    * residuals ([[pqCodebooksTrained]], plumbing unchanged) → codes →
+    * [[fixedProbePicker]] pruning and the [[adcTopK]] tail, as
     * [[pqIvfTopK]]. Residuals are localCheckpointed once (they feed
     * training AND encoding); centroid/codebook tables are collected
     * once and ride as local relations.
     * Output: (query_id, rank, neighbor_id, adc).
     */
   def pqResidualIvfTopK(vecs: DataFrame, numSub: Int, subDim: Int,
-      numQueries: Int, k: Int, probe: Int): DataFrame =
-    pqResidualSearchCore(vecs, numSub, subDim, numQueries, k,
+      numQueries: Int, k: Int, probe: Int): DataFrame = {
+    val (cvecs, cw, codes) = residualIndexBuild(vecs, numSub, subDim)
+    val q = vecs.filter(col("id") < numQueries)
+      .select(col("id").as("qid"), col("vec").as("qv"))
+    residualIndexSearch(cvecs, cw, codes, q, numSub, subDim, k,
       fixedProbePicker(probe))
-
-  /** RESIDUAL IVF-PQ search with the ADAPTIVE probe rule (E258,
-    * VERDICT r12 #2): the composition of [[adaptiveProbeTopK]]'s
-    * population-targeted cell selection with [[pqResidualIvfTopK]]'s
-    * residual ADC chain. Each query probes cells in centroid rank
-    * order until the cumulative candidate population reaches
-    * ceil(targetNum/targetDen · N) — exact integer target, first cell
-    * always survives, probe set minimal — then builds one distance
-    * table per PROBED cell against its per-cell residual exactly as
-    * the fixed-probe chain does. Per-query candidate volume is
-    * uniform by construction (the tail-latency property), and the
-    * recall lift the E252/E253 study measured for exact-cosine
-    * scoring is re-priced under quantized scoring by
-    * `emb_serving_adaptive_recall`.
-    */
-  def pqResidualAdaptiveTopK(vecs: DataFrame, numSub: Int, subDim: Int,
-      numQueries: Int, k: Int, targetNum: Long, targetDen: Long)
-      : DataFrame = {
-    val c = vecs.localCheckpoint(false) // count + the whole chain
-    val target = (targetNum * c.count() + targetDen - 1) / targetDen
-    pqResidualSearchCore(c, numSub, subDim, numQueries, k,
-      adaptiveProbePicker(target))
   }
 
-  /** The population-adaptive probe rule as a picker (one definition
-    * shared by [[pqResidualAdaptiveTopK]] and the persisted-index
-    * adaptive serve [[AnnIndex.searchTopKAdaptive]], the
-    * [[fixedProbePicker]] discipline): cells in centroid-cosine rank
-    * order until the cumulative candidate population reaches
-    * `target`; first cell always survives, probe set minimal.
-    */
-  private[graft] def adaptiveProbePicker(target: Long)
-      : (DataFrame, DataFrame, DataFrame) => DataFrame =
-    (q, cvecs, asg) => adaptiveProbePickerWithPop(target,
-      asg.groupBy("cell").agg(count(lit(1)).as("np")))(q, cvecs)
-
-  /** The same rule over a CALLER-SUPPLIED population table
-    * `pop (cell, np)` — the v4 persisted-index serve passes its
-    * build-time statistics so targeting never aggregates the code
-    * table per search. One body for both faces, so they cannot
-    * drift.
+  /** The population-adaptive probe rule, one of the two probe rules
+    * (with [[fixedProbePicker]]): cells in centroid-cosine rank order
+    * until the cumulative candidate population reaches `target`; a
+    * cell is kept while the cumulative population EXCLUDING it is
+    * still below target, so the first cell always survives and the
+    * probe set is minimal. Populations come from the caller as
+    * `pop (cell, np)` — the in-memory search counts its assignment,
+    * the persisted-index serve ([[AnnIndex.searchTopKAdaptive]])
+    * passes its build-time statistics so targeting never aggregates
+    * the code table per search. Output (qid, cpart, cvec, qv) per
+    * probed cell of `q (qid, qv)`.
     */
   private[graft] def adaptiveProbePickerWithPop(target: Long,
       pop: DataFrame): (DataFrame, DataFrame) => DataFrame =
@@ -1260,23 +1166,6 @@ object Similarity {
         .select(col("qid"), col("cpart"), col("cvec"), col("qv"))
     }
 
-  /** The shared residual-PQ chain behind the fixed-probe and adaptive
-    * entries: coarse assignment, residuals, trained codebooks, codes,
-    * then the caller's probe picker `(q, cvecs, asg) → (qid, cpart,
-    * cvec, qv, …)` chooses which cells each query searches. The picker
-    * result is checkpointed here (two consumers: per-cell query
-    * distance tables + the candidate prune).
-    */
-  private def pqResidualSearchCore(vecs: DataFrame, numSub: Int,
-      subDim: Int, numQueries: Int, k: Int,
-      pickProbes: (DataFrame, DataFrame, DataFrame) => DataFrame)
-      : DataFrame = {
-    val (cvecs, cw, codes) = residualIndexBuild(vecs, numSub, subDim)
-    val q = vecs.filter(col("id") < numQueries)
-      .select(col("id").as("qid"), col("vec").as("qv"))
-    residualIndexSearch(cvecs, cw, codes, q, numSub, subDim, k, pickProbes)
-  }
-
   /** The BUILD half of the residual IVF-PQ chain — everything a
     * serving deployment computes once and persists (E260): coarse
     * centroid vectors `(cpart, cvec)`, trained residual codebooks
@@ -1293,29 +1182,24 @@ object Similarity {
     (cvecs, cw, encodeResiduals(resid, numSub, subDim, cw))
   }
 
-  /** Per-vector residuals v − centroid(argmax-cosine cell) against a
-    * GIVEN centroid table — shared by the index build (centroids just
+  /** Per-vector residuals v − centroid(nearest cell) against a GIVEN
+    * centroid table — shared by the index build (centroids just
     * trained) and the incremental append path (centroids FROZEN from
-    * the persisted artifact). The assignment is the [[nearestOf]]
-    * kernel ([[graft.functions.CosineArgmaxCell]], ties to the smaller
-    * cell) over the collected table — one scan-side loop per vector,
-    * no join × k expansion, no aggregate, no self-join back onto the
-    * vectors; the winning centroid re-attaches through a broadcast
-    * equi-join on its cell. Checkpointed: every consumer reads it at
-    * least twice (training + encoding).
+    * the persisted artifact). The assignment is [[nearestCell]] — one
+    * scan-side loop per vector, no join × k expansion, no aggregate, no
+    * self-join back onto the vectors; the winning centroid re-attaches
+    * through a broadcast equi-join on its cell. Checkpointed: every
+    * consumer reads it at least twice (training + encoding).
     */
   private def residualsAgainst(vecs: DataFrame, cvecs: DataFrame,
-      dim: Int): DataFrame = {
-    val best = graft.functions.CosineArgmaxCell.of(col("vec"),
-      collectedCentroids(cvecs)) // non-empty: the kernel requires it
-    vecs.select(col("id"), col("vec"), best.getField("cell").as("best"))
+      dim: Int): DataFrame =
+    nearestCell(vecs, cvecs, Seq("vec"))
       .join(broadcast(cvecs.select(col("cpart"), col("cvec").as("ccv"))),
-        col("best") === col("cpart"))
+        col("cell") === col("cpart"))
       .select(col("id"), col("cpart").as("cell"),
         array((0 until dim).map(i =>
           col("vec").getItem(i) - col("ccv").getItem(i)): _*).as("vec"))
       .localCheckpoint(false)
-  }
 
   /** Residuals → (id, c0..c{M−1}, cell) under a given codebook. */
   private def encodeResiduals(resid: DataFrame, numSub: Int, subDim: Int,
@@ -1335,63 +1219,41 @@ object Similarity {
     encodeResiduals(residualsAgainst(newVecs, cvecs, numSub * subDim),
       numSub, subDim, cw)
 
-  /** The SEARCH half: serve top-k from a built (or persisted and
-    * re-loaded) index. `pickProbes(q, cvecs, cellOf)` chooses the
-    * probed cells per query — fixed rank or population-adaptive;
-    * `cellOf (aid, cell)` derives from the code table, so probe
-    * population targeting needs no artifact beyond the index itself.
+  /** The SEARCH half: serve top-k for `q (qid, qv)` from a built (or
+    * persisted and re-loaded) index. `pickProbes(q, cvecs)` — one of
+    * the two probe rules, or the persisted serve's already-picked set —
+    * chooses the probed cells per query; each query then builds its
+    * residual q − centroid per probed cell and the [[adcTopK]] tail
+    * scores the probed cells' codes against those tables.
     */
   private[graft] def residualIndexSearch(cvecs: DataFrame, cw: DataFrame,
       codes: DataFrame, q: DataFrame, numSub: Int, subDim: Int, k: Int,
-      pickProbes: (DataFrame, DataFrame, DataFrame) => DataFrame)
-      : DataFrame = {
+      pickProbes: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val dim = numSub * subDim
     // two consumers (query tables + candidate prune): collected once
     // (queries × probed cells rows), so neither re-executes the
     // queries-vs-centroids scan
-    val probes = local(pickProbes(q, cvecs,
-      codes.select(col("id").as("aid"), col("cell"))))
+    val probes = local(pickProbes(q, cvecs))
     // query residual PER PROBED CELL — the residual-PQ asymmetry
-    val qsub = probes
-      .select(col("qid"), col("cpart"),
-        array((0 until dim).map(i =>
-          col("qv").getItem(i) - col("cvec").getItem(i)): _*).as("rv"))
-      .select(col("qid"), col("cpart"),
-        explode(sequence(lit(0), lit(numSub - 1))).as("m"), col("rv"))
-      .select(col("qid"), col("cpart"), col("m"),
-        slice(col("rv"), col("m") * subDim + 1, lit(subDim)).as("sv"))
-    val d = l2sqUnrolled(col("sv"), col("cvec"), subDim)
-    val tables = qsub.join(broadcast(cw), "m")
-      .select(col("qid"), col("cpart"), col("m"), col("cl"),
-        round(d, 6).as("dt"))
+    val qres = probes.select(col("qid"), col("cpart"),
+      array((0 until dim).map(i =>
+        col("qv").getItem(i) - col("cvec").getItem(i)): _*).as("qv"))
     val cand = codes
       .join(broadcast(probes.select(col("qid"), col("cpart"))),
         col("cell") === col("cpart"))
-      .filter(col("id") =!= col("qid"))
-    val longCodes = cand.select(col("qid"), col("cpart"), col("id"),
-      posexplode(array((0 until numSub).map(m => col(s"c$m")): _*))
-        .as(Seq("m", "cl")))
-    val scored = longCodes
-      .join(broadcast(tables), Seq("qid", "cpart", "m", "cl"))
-      .groupBy(col("qid"), col("id"))
-      .agg(round(sum(col("dt")), 6).as("adc"))
-    scored.select(col("qid"), col("id"), (-col("adc")).as("score"))
-      .groupBy(col("qid"))
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-      .select(col("qid").as("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("item.id").as("neighbor_id"),
-        (-col("item.score")).as("adc"))
+    adcTopK(qres, cw, cand, Seq("qid", "cpart"), numSub, subDim, k)
   }
 
-  /** The fixed-rank probe picker, shared by [[pqResidualIvfTopK]] and
-    * the persisted-index serving path (E260) — one definition so the
-    * in-memory and read-back searches cannot drift.
+  /** The fixed-rank probe rule, one of the two probe rules (with
+    * [[adaptiveProbePickerWithPop]]): each query of `q (qid, qv)`
+    * keeps its `probe` best cells by centroid cosine, ties to the
+    * smaller cell. Output (qid, cpart, cvec, cs, qv, rn) per probed
+    * cell, `rn` the cell's rank. Shared by the in-memory searches and
+    * the persisted-index serve (E260), so they cannot drift.
     */
   private[graft] def fixedProbePicker(probe: Int)
-      : (DataFrame, DataFrame, DataFrame) => DataFrame =
-    (q, cvecs, _) => q.join(broadcast(cvecs))
+      : (DataFrame, DataFrame) => DataFrame =
+    (q, cvecs) => q.join(broadcast(cvecs))
       .select(col("qid"), col("cpart"), col("cvec"),
         cosine(col("qv"), col("cvec")).as("cs"), col("qv"))
       .withColumn("rn", row_number().over(
@@ -1481,10 +1343,9 @@ object Similarity {
     // the bucket shuffle as one extra double per row (same arithmetic
     // order as cosine(), so values — and the oracle hash — are
     // bit-identical).
-    val v = vecs.withColumn("nrm", sqrt(dot(col("vec"), col("vec"))))
-    val denom = col("a.nrm") * col("b.nrm")
-    val cs = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("a.vec"), col("b.vec")) / denom)
+    val v = vecs.withColumn("nrm", norm(col("vec")))
+    val cs = cosineNormed(col("a.vec"), col("b.vec"), col("a.nrm"),
+      col("b.nrm"))
     v.alias("a")
       .join(v.alias("b"),
         col("a.part") === col("b.part") && col("a.id") < col("b.id"))
@@ -1505,19 +1366,15 @@ object Similarity {
     * (src_id, rank, dst_id, cos, mutual).
     */
   def knnGraph(vecs: DataFrame, k: Int): DataFrame = {
-    val v = vecs.withColumn("nrm", sqrt(dot(col("vec"), col("vec"))))
-    val denom = col("a.nrm") * col("b.nrm")
-    val cs = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("a.vec"), col("b.vec")) / denom)
-    val top = v.alias("a")
+    val v = vecs.withColumn("nrm", norm(col("vec")))
+    val cs = cosineNormed(col("a.vec"), col("b.vec"), col("a.nrm"),
+      col("b.nrm"))
+    val pairs = v.alias("a")
       .join(v.alias("b"),
         col("a.part") === col("b.part") && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("src"), col("b.id").as("dst"), cs.as("cs"))
-      .groupBy(col("src"))
-      .agg(topkUdaf(k)(col("cs"), col("dst")).as("t"))
-      .select(col("src"), posexplode(col("t.items")).as(Seq("pos", "it")))
-      .select(col("src"), (col("pos") + 1).as("rank"),
-        col("it.id").as("dst"), col("it.score").as("cs"))
+    val top = rankedTopK(pairs, Seq("src"), k, "cs", identity,
+        score = "cs", id = "dst", idAs = "dst")
       .localCheckpoint(false) // consumed twice: edges + mutual probe
     val back = top.select(col("src").as("bsrc"), col("dst").as("bdst"))
     top.join(back,
@@ -1536,16 +1393,16 @@ object Similarity {
     *
     * Stages: (1) seeds = per-query binary-Hamming top-`seeds`
     * ([[binaryHammingTopK]], the E247 integer-only tier); (2) H
-    * expansion rounds — each round unions the frontier with its
-    * [[knnGraph]] out-neighbors (a candidates⋈edges hash join; the
-    * UNION-distinct keeps the visited set a set); (3) exact cosine
-    * rerank of the visited set against the query, bounded-heap top-k.
+    * expansion rounds of [[graphWalk]] — each round adds the
+    * frontier's [[knnGraph]] out-neighbors to the driver-held visited
+    * set; (3) exact cosine rerank of the visited set against the
+    * query, bounded-heap top-k.
     *
     * Scale shape: the visited set is ≤ seeds·(graphK+1)^hops rows per
     * query — independent of N (IVF probing scans N/cells·probe). The
     * graph build is the E267 bucketed cost, paid once and persisted in
-    * a real deployment (the E260 artifact discipline); expansion joins
-    * touch (query_id, id) pairs only; vectors are fetched solely for
+    * a real deployment (the E260 artifact discipline); expansion
+    * reads touch (esrc, edst) edges only; vectors are fetched solely for
     * the visited set's rerank. Recall is measured, never assumed:
     * `emb_graph_recall` prices the walk against the exact top-k every
     * round (at sf0.01: seed tier 0.16 → expanded 0.34 at ~97 of 500
@@ -1570,23 +1427,15 @@ object Similarity {
       k: Int): DataFrame = {
     val q = vecs.filter(col("id") < numQueries)
       .select(col("id").as("qid"), col("vec").as("qvec"),
-        sqrt(dot(col("vec"), col("vec"))).as("qn"))
-    // per-row norms (the nearestOf discipline, r16): bit-identical
-    val denom = col("qn") * col("nrm")
-    val cs = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("qvec"), col("vec")) / denom)
+        norm(col("vec")).as("qn"))
     val scored = cand
-      .join(vecs.select(col("id"), col("vec"),
-        sqrt(dot(col("vec"), col("vec"))).as("nrm")), Seq("id"))
+      .join(vecs.select(col("id"), col("vec"), norm(col("vec")).as("nrm")),
+        Seq("id"))
       .join(broadcast(q), col("query_id") === col("qid"))
-      .select(col("query_id"), col("id"), cs.as("cs"))
-    scored.groupBy("query_id")
-      .agg(topkUdaf(k)(col("cs"), col("id")).as("topk"))
-      .select(col("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("item.id").as("neighbor_id"),
-        round(col("item.score"), 6).as("cos"))
+      .select(col("query_id"), col("id"),
+        cosineNormed(col("qvec"), col("vec"), col("qn"), col("nrm"))
+          .as("cs"))
+    rankedTopK(scored, Seq("query_id"), k, "cos", score = "cs")
   }
 
   /** The visited set [[graphExpandTopK]] reranks: seed tier plus
@@ -1598,32 +1447,99 @@ object Similarity {
   def graphExpandCandidates(vecs: DataFrame, dim: Int, numQueries: Int,
       seeds: Int, hops: Int, graphK: Int): DataFrame = {
     val v = vecs.localCheckpoint(false)
-    // Edge list probed once per hop: (src, dst) pairs only.
-    val edges = knnGraph(v, graphK)
-      .select(col("src_id").as("esrc"), col("dst_id").as("edst"))
-      .localCheckpoint(false)
     graphExpandCandidatesFrom(binarySigs(v, dim).localCheckpoint(false),
-      edges, numQueries, seeds, hops)
+      edgesOut(graphEdges(v, graphK)), numQueries, seeds, hops)
   }
 
-  /** [[graphExpandCandidates]] over PRE-BUILT artifact tables: seed
-    * signatures (id, h0, h1) and graph edges (esrc, edst) — the walk
-    * the persisted index serves without touching raw vectors until
-    * the rerank. Caller materializes both inputs.
+  /** [[graphExpandCandidates]] over a signature table (id, h0, h1) and
+    * an edge reader (see [[graphWalk]]) — the blind walk, which expands
+    * every pair the previous hop reached. The persisted index serves
+    * through it with its pruned edge reader, the in-memory chain with
+    * [[edgesOut]]. Caller materializes `sigs`.
     */
-  def graphExpandCandidatesFrom(sigs: DataFrame, edges: DataFrame,
-      numQueries: Int, seeds: Int, hops: Int): DataFrame = {
+  def graphExpandCandidatesFrom(sigs: DataFrame,
+      edgesOf: Seq[Long] => DataFrame, numQueries: Int, seeds: Int,
+      hops: Int): DataFrame = {
     require(hops >= 1, "need at least one expansion hop")
-    var cand = hammingTopKSigs(sigs, numQueries, seeds)
+    graphWalk(graphSeeds(sigs, numQueries, seeds), hops, edgesOf)(
+      blindFrontier).select(col("query_id"), col("id"))
+  }
+
+  /** The in-memory kNN graph's out-edges `(esrc, edst)`, materialized
+    * once: every hop of a walk reads it.
+    */
+  private def graphEdges(v: DataFrame, graphK: Int): DataFrame =
+    knnGraph(v, graphK)
+      .select(col("src_id").as("esrc"), col("dst_id").as("edst"))
+      .localCheckpoint(false)
+
+  /** Edge reader over an in-memory `(esrc, edst)` edge table: the
+    * out-edges of the frontier `ids`, as an `esrc IN (…)` filter.
+    */
+  private[graft] def edgesOut(edges: DataFrame): Seq[Long] => DataFrame =
+    ids => edges.filter(col("esrc").isin(ids: _*))
+
+  /** The walk's seed frame `(query_id, id)`: each query's binary-Hamming
+    * top-`seeds` over the signature table ([[hammingTopKSigs]]).
+    */
+  private[graft] def graphSeeds(sigs: DataFrame, numQueries: Int,
+      seeds: Int): DataFrame =
+    hammingTopKSigs(sigs, numQueries, seeds)
       .select(col("query_id"), col("neighbor_id").as("id"))
-    for (_ <- 1 to hops) {
-      val expanded = cand.join(edges, col("id") === col("esrc"))
-        .select(col("query_id"), col("edst").as("id"))
-      // Each hop's visited set feeds the next hop AND the final rerank;
-      // checkpoint so the union chain never re-walks earlier hops.
-      cand = cand.union(expanded).distinct().localCheckpoint(false)
+
+  /** Frontier rule of the blind walk: expand the pairs the last hop
+    * added (the seeds, before the first hop). Because edges are
+    * static, the older pairs' out-edges are already visited, so this
+    * reaches exactly the union-of-all-expansions set of expanding every
+    * visited pair each hop, hop for hop.
+    */
+  private[graft] val blindFrontier
+      : (Seq[(Long, Long)], Seq[(Long, Long)]) => Seq[(Long, Long)] =
+    (_, added) => added
+
+  /** The one graph walk, shared by the in-memory chain and the
+    * persisted index's blind and beam serves. It collects the seed
+    * frame `(query_id, id)`, then runs `hops` rounds of
+    * visited ∪= out-edges(frontier): `pick(visited, added)` chooses the
+    * frontier from the visited pairs and the pairs the last hop added,
+    * and `edgesOf(ids)` reads the out-edges `(esrc, edst)` of the
+    * frontier's node ids — the persisted index prunes that read to the
+    * frontier's edge buckets, the in-memory graph filters its edge
+    * table ([[edgesOut]]). The visited state is bounded per query —
+    * seeds + hops·|frontier|·graphK pairs, independent of corpus size —
+    * so it stays on the driver between hops (the EDBT 2020 incremental
+    * top-k discipline: carry the state, do not recompute it), and a hop
+    * costs one edge read. Each pair is tagged with the hop that first reached it
+    * (seeds: 0), so the visited set after hop h is the pairs tagged
+    * ≤ h. Returns the visited set minus query self-hits as a local
+    * relation `(query_id, id, hop)`.
+    */
+  private[graft] def graphWalk(seeds: DataFrame, hops: Int,
+      edgesOf: Seq[Long] => DataFrame)(
+      pick: (Seq[(Long, Long)], Seq[(Long, Long)]) => Seq[(Long, Long)])
+      : DataFrame = {
+    def pair(r: Row): (Long, Long) =
+      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
+    val visited = mutable.LinkedHashMap.empty[(Long, Long), Int]
+    seeds.select(col("query_id"), col("id")).collect()
+      .foreach(r => visited.getOrElseUpdate(pair(r), 0))
+    var added: Seq[(Long, Long)] = visited.keys.toSeq
+    for (h <- 1 to hops) {
+      val frontier = pick(visited.keys.toSeq, added)
+      val before = visited.size
+      if (frontier.nonEmpty) {
+        val out = edgesOf(frontier.map(_._2).distinct).collect()
+          .map(pair).groupMap(_._1)(_._2)
+        for ((q, id) <- frontier; dst <- out.getOrElse(id, Array.empty[Long]))
+          visited.getOrElseUpdate((q, dst), h)
+      }
+      added = visited.keys.toSeq.drop(before)
     }
-    cand.filter(col("query_id") =!= col("id")) // a hop can reach the query
+    seeds.sparkSession.createDataFrame(
+      visited.toSeq.collect { case ((q, id), h) if q != id => Row(q, id, h) }
+        .asJava,
+      StructType(Seq(StructField("query_id", LongType),
+        StructField("id", LongType), StructField("hop", IntegerType))))
   }
 
   /** Semantic dedup over LEARNED clusters (the SemDeDup shape,
@@ -1667,13 +1583,12 @@ object Similarity {
     // (the Dedup lesson, VERDICT r02 #2).
     val clustered = vecs.join(assigned, col("id") === col("aid"))
       .select(col("id"), col("assigned"), col("vec"))
-      .withColumn("nrm", sqrt(dot(col("vec"), col("vec")))) // once per
-      // row, MATERIALIZED by the checkpoint — the pair filter below
-      // then does one dot per candidate instead of three
+      .withColumn("nrm", norm(col("vec"))) // once per row, MATERIALIZED
+      // by the checkpoint — the pair filter below then does one dot per
+      // candidate instead of three
       .localCheckpoint(false)
-    val denom = col("a.nrm") * col("b.nrm")
-    val cs = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("a.vec"), col("b.vec")) / denom)
+    val cs = cosineNormed(col("a.vec"), col("b.vec"), col("a.nrm"),
+      col("b.nrm"))
     val dropped = clustered.alias("a")
       .join(clustered.alias("b"),
         col("a.assigned") === col("b.assigned") && col("a.id") < col("b.id"))
@@ -1736,13 +1651,8 @@ object Similarity {
         col("c.bk") === col("q.qbk") && col("c.id") =!= col("q.qid"))
       .select(col("q.qid").as("query_id"), col("c.id").as("id"),
         (-dist).cast("double").as("score"))
-    scored.groupBy("query_id")
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-      .select(col("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("item.id").as("neighbor_id"),
-        (-col("item.score")).cast("long").as("hamming"))
+    rankedTopK(scored, Seq("query_id"), k, "hamming",
+      c => (-c).cast("long"))
   }
 
   /** int8 scalar-quantized codes (E294) — the SQ8 rung between raw
@@ -1784,13 +1694,7 @@ object Similarity {
         col("c.bk") === col("q.qbk") && col("c.id") =!= col("q.qid"))
       .select(col("q.qid").as("query_id"), col("c.id").as("id"),
         graft.functions.DotProduct(col("q.qq"), col("c.q8")).as("score"))
-    scored.groupBy("query_id")
-      .agg(topkUdaf(k)(col("score"), col("id")).as("topk"))
-      .select(col("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("item.id").as("neighbor_id"),
-        col("item.score").cast("long").as("dot_q"))
+    rankedTopK(scored, Seq("query_id"), k, "dot_q", _.cast("long"))
   }
 
   /** Hop-recall sweep (E301) — the E254 discipline for the graph
@@ -1804,58 +1708,43 @@ object Similarity {
   def graphHopSweep(vecs: DataFrame, dim: Int, numQueries: Int,
       seeds: Int, hops: Int, graphK: Int, k: Int): DataFrame = {
     val v = vecs.localCheckpoint(false)
-    val edges = knnGraph(v, graphK)
-      .select(col("src_id").as("esrc"), col("dst_id").as("edst"))
-      .localCheckpoint(false)
-    val sigs = binarySigs(v, dim).localCheckpoint(false)
-    var cand = hammingTopKSigs(sigs, numQueries, seeds)
-      .select(col("query_id"), col("neighbor_id").as("id"))
-    var snaps = List((0, cand))
-    for (h <- 1 to hops) {
-      val expanded = cand.join(edges, col("id") === col("esrc"))
-        .select(col("query_id"), col("edst").as("id"))
-      cand = cand.union(expanded).distinct().localCheckpoint(false)
-      snaps ::= ((h, cand))
-    }
+    val walked = graphWalk(
+      graphSeeds(binarySigs(v, dim).localCheckpoint(false), numQueries, seeds),
+      hops, edgesOut(graphEdges(v, graphK)))(blindFrontier)
     val q = v.filter(col("id") < numQueries)
       .select(col("id").as("qid"), col("vec").as("qvec"))
     val exact = topK(v, q, k)
       .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
-    hopSweepRows(v, snaps.reverse, exact, numQueries, k)
+    hopSweepRows(v, walked, hops, exact, numQueries, k)
   }
 
-  /** One grouped rerank + hit count over tagged hop snapshots (r16):
-    * the per-hop sweep loops used to pay a rerank plus TWO blocking
-    * counts per hop (~12 driver-synced jobs for a 4-depth sweep); this
-    * computes the whole sweep as one tagged union → one (hop, query)
-    * bounded-heap aggregation → one hit join → one per-hop count.
+  /** One grouped rerank + hit count over the hop-tagged walk (r16): the
+    * hop-h snapshot is the pairs first reached at hop ≤ h, so each pair
+    * fans out to the depths first-hop..hops and the whole sweep is one
+    * (hop, query) bounded-heap aggregation → one hit join → one per-hop
+    * count, instead of a rerank plus two blocking counts per hop.
     * Per-(hop, query) heap contents, candidate counts, and hit counts
-    * are identical to the per-hop loop — the same topkUdaf ordering
+    * are identical to a per-hop loop — the same topkUdaf ordering
     * ((-score, id)) over the same scored set, grouped one level wider.
     */
-  private def hopSweepRows(v: DataFrame,
-      snapsAsc: Seq[(Int, DataFrame)], exact: DataFrame,
-      numQueries: Int, k: Int): DataFrame = {
-    val tagged = snapsAsc.map { case (h, c0) =>
-      c0.filter(col("query_id") =!= col("id")).withColumn("hop", lit(h))
-    }.reduce(_ unionAll _).localCheckpoint(false) // counts + rerank
+  private def hopSweepRows(v: DataFrame, walked: DataFrame, hops: Int,
+      exact: DataFrame, numQueries: Int, k: Int): DataFrame = {
+    val tagged = walked.select(col("query_id"), col("id"),
+      explode(sequence(col("hop"), lit(hops))).as("hop"))
     val nCand = tagged.groupBy("hop").agg(count(lit(1)).as("n_cand"))
     val qn = v.filter(col("id") < numQueries)
       .select(col("id").as("qid"), col("vec").as("qvec"),
-        sqrt(dot(col("vec"), col("vec"))).as("qn"))
-    val denom = col("qn") * col("nrm")
-    val cs = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("qvec"), col("vec")) / denom)
-    val top = tagged
-      .join(v.select(col("id"), col("vec"),
-        sqrt(dot(col("vec"), col("vec"))).as("nrm")), Seq("id"))
+        norm(col("vec")).as("qn"))
+    val scored = tagged
+      .join(v.select(col("id"), col("vec"), norm(col("vec")).as("nrm")),
+        Seq("id"))
       .join(broadcast(qn), col("query_id") === col("qid"))
-      .select(col("hop"), col("query_id"), col("id"), cs.as("cs"))
-      .groupBy("hop", "query_id")
-      .agg(topkUdaf(k)(col("cs"), col("id")).as("topk"))
-      .select(col("hop"), col("query_id"),
-        explode(col("topk").getField("items")).as("item"))
-      .select(col("hop"), col("query_id"), col("item.id").as("neighbor_id"))
+      .select(col("hop"), col("query_id"), col("id"),
+        cosineNormed(col("qvec"), col("vec"), col("qn"), col("nrm"))
+          .as("cs"))
+    val top = rankedTopK(scored, Seq("hop", "query_id"), k, "cos",
+        score = "cs")
+      .select(col("hop"), col("query_id"), col("neighbor_id"))
     val nHits = top.join(exact, Seq("query_id", "neighbor_id"))
       .groupBy("hop").agg(count(lit(1)).as("n_hits"))
     nCand.join(nHits, Seq("hop"), "left")

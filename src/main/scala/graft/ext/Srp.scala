@@ -115,15 +115,13 @@ object Srp {
     val cands = buckets.select(explode(pairs).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
-    // Per-row norm precompute on the verify join-backs (the nearestOf
-    // discipline, r16): one dot per candidate pair instead of three;
-    // same expressions in the same order, so every cosine is
-    // bit-identical to the one-shot form and the SQL oracle.
+    // Per-row norm precompute on the verify join-backs (r16): one dot
+    // per candidate pair instead of three, bit-identical to the
+    // one-shot cosine and the SQL oracle.
     val withNrm = vecs.select(col("id"), col("vec"),
-      sqrt(Similarity.dot(col("vec"), col("vec"))).as("nrm"))
-    val denom = col("na") * col("nb")
-    val cs = when(denom === 0.0, lit(0.0))
-      .otherwise(Similarity.dot(col("va"), col("vb")) / denom)
+      Similarity.norm(col("vec")).as("nrm"))
+    val cs = Similarity.cosineNormed(col("va"), col("vb"), col("na"),
+      col("nb"))
     cands
       .join(withNrm.select(col("id").as("id_a"), col("vec").as("va"),
         col("nrm").as("na")), "id_a")

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native 60-bit SimHash of a whitespace-tokenized text in one
   * expression evaluation (same escalation rationale as
   * [[MinHashSig]]): the composable form
-  * ([[graft.ext.Dedup.simhashAgg]]) explodes every token occurrence
+  * (the test-scope `SimHashRows.simhashAgg`) explodes every token occurrence
   * into a row and runs a 60-column sum aggregate — a corpus-wide
   * generate + shuffle for a per-document scalar. Here the token loop,
   * the md5 per token, and the 60 sign counters all run inside one

@@ -384,7 +384,7 @@ object TxTable {
   }
 
   /** The txn token in version `v`'s manifest header, if any. */
-  private def headerTxn(spark: SparkSession, dir: String,
+  private[graft] def headerTxn(spark: SparkSession, dir: String,
       v: Long): Option[(String, Long)] = {
     headerReads.incrementAndGet()
     val f = fs(spark, dir)
@@ -484,15 +484,6 @@ object TxTable {
     accumulatedTxns(spark, dir, v, ckptAtOrBelow = v)
       .collect { case (a, t) if a == appId => t }
   }
-
-  /** The pre-checkpoint full-history token scan — retained for the
-    * spec's checkpoint-equivalence pin only.
-    */
-  private[graft] def committedTxnsBrute(spark: SparkSession, dir: String,
-      appId: String): Set[Long] =
-    versions(spark, dir)
-      .flatMap(headerTxn(spark, dir, _))
-      .collect { case (a, t) if a == appId => t }.toSet
 
   /** EXACTLY-ONCE APPEND under at-least-once delivery (E317, the
     * Delta `txn`/`foreachBatch(batchId)` pattern): append `df` tagged

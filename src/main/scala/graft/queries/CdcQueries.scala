@@ -178,27 +178,11 @@ object CdcQueries {
         .groupBy("target_topic").agg(count(lit(1)).as("n"))),
 
     // Latest-state compaction — the materialization a CDC consumer
-    // keeps (SCD-1 snapshot): one surviving row per entity = argmax
-    // over (ts, event_id), computed as a single partial-aggregatable
-    // struct-max (no window, no per-key sort — map-side combine means
-    // the shuffle carries one candidate row per entity per partition);
-    // an entity whose LATEST op is a delete tombstone leaves the
-    // snapshot entirely.
-    "cdc_compact" -> ((s, dir) => {
-      val ev = graft.Tables.events(s, dir).select(
-        col("user_id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("event_id"),
-        Envelopes.opExpr(col("event_type")).as("op"),
-        floor(col("value") * 100).cast("long").as("value_cents"))
-      ev.groupBy("user_id")
-        .agg(max(struct(col("ts"), col("event_id"), col("op"),
-          col("value_cents"))).as("last"))
-        .select(col("user_id"), col("last.ts").as("ts"),
-          col("last.event_id").as("event_id"), col("last.op").as("op"),
-          col("last.value_cents").as("value_cents"))
-        .filter(col("op") =!= "d")
-    }),
+    // keeps (SCD-1 snapshot): one surviving row per entity
+    // (latestState); an entity whose LATEST op is a delete tombstone
+    // leaves the snapshot entirely.
+    "cdc_compact" -> ((s, dir) =>
+      latestState(labelledEvents(s, dir)).filter(col("op") =!= "d")),
 
     // CDC MERGE apply (E280): the Debezium→lakehouse materialization —
     // a base snapshot (latest state before the cutoff, tombstones
@@ -211,23 +195,11 @@ object CdcQueries {
     // At scale only the delta is re-scanned; the snapshot is
     // yesterday's table.
     "cdc_merge_apply" -> ((s, dir) => {
-      val ev = graft.Tables.events(s, dir).select(
-        col("user_id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("event_id"),
-        Envelopes.opExpr(col("event_type")).as("op"),
-        floor(col("value") * 100).cast("long").as("value_cents"))
+      val ev = labelledEvents(s, dir)
       val cutoff = lit("2024-01-25").cast("timestamp")
-      def latest(df: org.apache.spark.sql.DataFrame) =
-        df.groupBy("user_id")
-          .agg(max(struct(col("ts"), col("event_id"), col("op"),
-            col("value_cents"))).as("last"))
-          .select(col("user_id"), col("last.ts").as("ts"),
-            col("last.event_id").as("event_id"), col("last.op").as("op"),
-            col("last.value_cents").as("value_cents"))
-      val target = latest(ev.filter(col("ts") < cutoff))
+      val target = latestState(ev.filter(col("ts") < cutoff))
         .filter(col("op") =!= "d")
-      val delta = latest(ev.filter(col("ts") >= cutoff))
+      val delta = latestState(ev.filter(col("ts") >= cutoff))
         .withColumn("is_delete", col("op") === "d")
       // E314: the materialization lands through the transactional
       // table (base snapshot = version 0, merged = version 1), so a
@@ -253,22 +225,13 @@ object CdcQueries {
     // the cutoffs. This is the table-diff primitive behind incremental
     // reconciliation and audit between snapshot versions.
     "cdc_snapshot_diff" -> ((s, dir) => {
-      def snap(cutoff: String, prefix: String) = {
-        val ev = graft.Tables.events(s, dir).select(
-          col("user_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("event_id"),
-          Envelopes.opExpr(col("event_type")).as("op"),
-          floor(col("value") * 100).cast("long").as("value_cents"))
-        ev.filter(col("ts") < lit(cutoff).cast("timestamp"))
-          .groupBy("user_id")
-          .agg(max(struct(col("ts"), col("event_id"), col("op"),
-            col("value_cents"))).as("last"))
-          .filter(col("last.op") =!= "d")
+      def snap(cutoff: String, prefix: String) =
+        latestState(labelledEvents(s, dir)
+            .filter(col("ts") < lit(cutoff).cast("timestamp")))
+          .filter(col("op") =!= "d")
           .select(col("user_id"),
-            col("last.event_id").as(s"${prefix}_event_id"),
-            col("last.value_cents").as(s"${prefix}_value_cents"))
-      }
+            col("event_id").as(s"${prefix}_event_id"),
+            col("value_cents").as(s"${prefix}_value_cents"))
       snap("2024-01-15", "old")
         .join(snap("2024-01-30", "new"), Seq("user_id"), "full_outer")
         .withColumn("change",
@@ -289,14 +252,9 @@ object CdcQueries {
     // cdc_compact's latest-state view: same input, full history.
     "cdc_scd2" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val ev = graft.Tables.events(s, dir).select(
-        col("user_id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("event_id"),
-        Envelopes.opExpr(col("event_type")).as("op"),
-        floor(col("value") * 100).cast("long").as("value_cents"))
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      ev.withColumn("effective_to", lead(col("ts"), 1).over(w))
+      labelledEvents(s, dir)
+        .withColumn("effective_to", lead(col("ts"), 1).over(w))
         .filter(col("op") =!= "d")
         .select(col("user_id"), col("event_id"), col("op"),
           col("value_cents"), col("ts").as("effective_from"),
@@ -318,14 +276,8 @@ object CdcQueries {
     // version and drop out.
     "cdc_temporal_join" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val ev = graft.Tables.events(s, dir).select(
-        col("user_id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("event_id"),
-        Envelopes.opExpr(col("event_type")).as("op"),
-        floor(col("value") * 100).cast("long").as("value_cents"))
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val versions = ev
+      val versions = labelledEvents(s, dir)
         .withColumn("effective_to", lead(col("ts"), 1).over(w))
         .filter(col("op") =!= "d")
         .select(col("user_id").as("v_user"),
@@ -343,6 +295,33 @@ object CdcQueries {
         .select(col("user_id"), col("event_id"), col("ts"),
           col("version_event"), col("version_value_cents"))
     }))
+
+  /** The event stream labelled as CDC changes — (user_id, ts, event_id,
+    * op, value_cents), op by [[Envelopes.opExpr]] — the input of every
+    * change-stream row (compact, merge-apply, snapshot diff, SCD2,
+    * temporal join).
+    */
+  private def labelledEvents(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.events(s, dir).select(
+      col("user_id"),
+      col("ts").cast("timestamp").as("ts"),
+      col("event_id"),
+      Envelopes.opExpr(col("event_type")).as("op"),
+      floor(col("value") * 100).cast("long").as("value_cents"))
+
+  /** Latest state per entity of labelled events: argmax over
+    * (ts, event_id) as ONE partial-aggregatable struct-max (no window,
+    * no per-key sort — map-side combine means the shuffle carries one
+    * candidate row per entity per partition). Delete tombstones are
+    * kept; each caller decides what a latest `d` means.
+    */
+  private def latestState(ev: DataFrame): DataFrame =
+    ev.groupBy("user_id")
+      .agg(max(struct(col("ts"), col("event_id"), col("op"),
+        col("value_cents"))).as("last"))
+      .select(col("user_id"), col("last.ts").as("ts"),
+        col("last.event_id").as("event_id"), col("last.op").as("op"),
+        col("last.value_cents").as("value_cents"))
 
   /** Rules from the YAML fixture (R8). Loaded once; both the Spark query
     * and its oracle derive from this single parse.

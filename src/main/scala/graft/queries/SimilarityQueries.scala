@@ -158,14 +158,11 @@ object SimilarityQueries {
       pmod(col("id"), lit(nB)).as("bk"))
     val qf = q.select(col("qid"), col("qv"),
       explode(sequence(lit(0L), lit(nB - 1))).as("fb"))
-    cb.join(broadcast(qf),
+    val scored = cb.join(broadcast(qf),
         col("bk") === col("fb") && col("id") =!= col("qid"))
-      .select(col("qid"), col("id"), (-l2).as("score"))
-      .groupBy(col("qid"))
-      .agg(Similarity.topkUdaf(k)(col("score"), col("id")).as("topk"))
-      .select(col("qid").as("query_id"),
-        posexplode(col("topk").getField("items")).as(Seq("pos", "item")))
-      .select(col("query_id"), col("item.id").as("neighbor_id"))
+      .select(col("qid").as("query_id"), col("id"), (-l2).as("score"))
+    Similarity.rankedTopK(scored, Seq("query_id"), k, "l2", c => -c)
+      .select(col("query_id"), col("neighbor_id"))
   }
 
   /** E226 recall audit: ADC candidates from the (cw, codes) artifact
@@ -562,13 +559,10 @@ object SimilarityQueries {
       val seed = Similarity
         .binaryHammingTopK(c, EmbDim, NumQueries, GraphSeeds)
         .select(col("query_id"), col("neighbor_id"))
+      // the walk's visited set is a driver-side local relation: the
+      // candidate counts and the rerank both read it without re-walking
       val cand = Similarity.graphExpandCandidates(c, EmbDim, NumQueries,
-        GraphSeeds, GraphHops, KnnK).localCheckpoint(false)
-      // r16: rerank the ALREADY-checkpointed candidate set instead of
-      // graphExpandTopK (which re-runs the identical seed+walk chain a
-      // second time inside this row — graphExpandTopK IS
-      // graphRerank(graphExpandCandidates(...)) by definition, so the
-      // output is unchanged while the walk executes once).
+        GraphSeeds, GraphHops, KnnK)
       val g = Similarity.graphRerank(c, cand, NumQueries, K)
         .select(col("query_id"), col("neighbor_id"))
       val nCand = cand.groupBy("query_id").agg(count(lit(1)).as("nc"))
@@ -750,7 +744,7 @@ object SimilarityQueries {
       Similarity.centroids(corpus(s, dir))),
 
     // k-means assignment step: nearest centroid per vector (broadcast
-    // centroids, codegen cosine, max_by argmax).
+    // centroids collected once, one CosineArgmaxCell loop per vector).
     "emb_kmeans_assign" -> ((s, dir) => {
       val c = corpus(s, dir)
       Similarity.assignToNearest(c, Similarity.centroids(c))
@@ -858,10 +852,9 @@ object SimilarityQueries {
     // 1−(1−q^b)^bands averaged — so a drifting adaptive width shows
     // up as expected-vs-realized divergence, not silence.
     "emb_srp_recall" -> ((s, dir) => {
-      // r16: per-row norm rides the checkpointed table (the nearestOf
-      // discipline) — the quadratic exact-truth join then does ONE dot
-      // per pair instead of three; same expressions in the same order,
-      // so every cosine (and the oracle hash) is bit-identical.
+      // r16: per-row norm rides the checkpointed table — the quadratic
+      // exact-truth join then does ONE dot per pair instead of three
+      // (Similarity.cosineNormed), bit-identical to the one-shot cosine.
       // r17 (VERDICT r16 #5): the SRP signature rides the checkpoint
       // too (identical Srp.sig expression → identical longs), so the
       // two per-pair sig joins are gone; and the all-pairs truth join
@@ -872,14 +865,13 @@ object SimilarityQueries {
       // filter → agg chain whole-stage-codegen-fuses. Same pair set,
       // same expression order, bit-identical aggregates.
       val v = corpus(s, dir).select(col("id"), col("vec"),
-          sqrt(Similarity.dot(col("vec"), col("vec"))).as("nrm"),
+          Similarity.norm(col("vec")).as("nrm"),
           Srp.sig(col("vec"), EmbDim).as("sg"))
         .localCheckpoint(false)
       val bits = Srp.adaptiveBits(v.count())
       val nB = Similarity.BruteForceBuckets.toLong
-      val tpDenom = col("na") * col("nb")
-      val tpCos = when(tpDenom === 0.0, lit(0.0))
-        .otherwise(Similarity.dot(col("va"), col("vb")) / tpDenom)
+      val tpCos = Similarity.cosineNormed(col("va"), col("vb"), col("na"),
+        col("nb"))
       val vb = v.select(col("id").as("id_b"), col("vec").as("vb"),
         col("nrm").as("nb"), col("sg").as("sig_b"),
         pmod(col("id"), lit(nB)).as("bk"))
@@ -992,14 +984,13 @@ object SimilarityQueries {
     "emb_semantic_decontam" -> ((s, dir) => {
       val c = corpus(s, dir)
       val ev = c.filter(col("id") < EvalN).select(col("vec").as("evec"),
-        sqrt(Similarity.dot(col("vec"), col("vec"))).as("en"))
+        Similarity.norm(col("vec")).as("en"))
       // r16: per-row norms — one dot per (corpus, eval) pair instead of
-      // three, bit-identical (the nearestOf discipline).
-      val dDenom = col("en") * col("cn")
-      val dCos = when(dDenom === 0.0, lit(0.0))
-        .otherwise(Similarity.dot(col("evec"), col("vec")) / dDenom)
+      // three, bit-identical.
+      val dCos = Similarity.cosineNormed(col("evec"), col("vec"), col("en"),
+        col("cn"))
       c.filter(col("id") >= EvalN)
-        .withColumn("cn", sqrt(Similarity.dot(col("vec"), col("vec"))))
+        .withColumn("cn", Similarity.norm(col("vec")))
         .crossJoin(broadcast(ev))
         .select(col("id"), dCos.as("cs"))
         .groupBy("id").agg(max(col("cs")).as("mc"))

@@ -36,7 +36,7 @@ class ParseSpec extends SparkSpec {
       ("tp", "ok-empty", "{}"),
       ("tp", "ok-partial", """{"op":"c"}"""))
     val parsed = Parse.parse(rows)
-    val flagged = Parse.parseErrors(parsed).select("key").as[String].collect().toSet
+    val flagged = parsed.filter($"_malformed").select("key").as[String].collect().toSet
     assert(flagged == Set("bad1", "bad2", "bad3"))
     // {} parses to all-null fields but is a well-formed envelope object
     val okEmpty = parsed.filter($"key" === "ok-empty").collect().head

@@ -26,8 +26,14 @@ class AdaptiveServeSpec extends SparkSpec {
     val q = corpus.filter(col("id") < 10)
       .select(col("id").as("qid"), col("vec").as("qv"))
     val persisted = AnnIndex.searchTopKAdaptive(spark, dir, q, 5, 1L, 10L)
-    val inMem = Similarity.pqResidualAdaptiveTopK(corpus, numSub, subDim,
-      10, 5, 1L, 10L)
+    // in-memory reference: the residual build and search halves under
+    // the adaptive rule, populations recounted from the built codes
+    val (cvecs, cw, codes) =
+      Similarity.residualIndexBuild(corpus, numSub, subDim)
+    val pop = codes.groupBy(col("cell")).agg(count(lit(1)).as("np"))
+    val target = (1L * corpus.count() + 10L - 1) / 10L
+    val inMem = Similarity.residualIndexSearch(cvecs, cw, codes, q,
+      numSub, subDim, 5, Similarity.adaptiveProbePickerWithPop(target, pop))
     assert(persisted.count() > 0, "vacuous")
     assert(persisted.exceptAll(inMem).isEmpty &&
       inMem.exceptAll(persisted).isEmpty,

@@ -47,7 +47,7 @@ object DedupPropsSpec extends Properties("Dedup") {
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val toks = df.select(col("doc_id"), split(col("text"), " ").as("toks"))
-      val viaAgg = Dedup.simhashAgg(toks, "doc_id", "toks")
+      val viaAgg = SimHashRows.simhashAgg(toks, "doc_id", "toks")
         .as[(Long, Long)].collect().toMap
       val viaHof = df.select(col("doc_id"), Dedup.simhash(split(col("text"), " ")))
         .as[(Long, Long)].collect().toMap

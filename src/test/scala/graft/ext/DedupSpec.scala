@@ -64,7 +64,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashAgg equals the HOF simhash formula") {
-    val viaAgg = Dedup.simhashAgg(
+    val viaAgg = SimHashRows.simhashAgg(
       docs3.select(col("doc_id"), split(col("text"), " ").as("toks")), "doc_id", "toks")
       .as[(Long, Long)].collect().toMap
     val viaHof = docs3
@@ -74,7 +74,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashPairs: near-identical docs within hamming 3, disjoint docs not paired") {
-    val sh = Dedup.simhashAgg(
+    val sh = SimHashRows.simhashAgg(
       docs3.select(col("doc_id"), split(col("text"), " ").as("toks")), "doc_id", "toks")
     val all = Dedup.simhashPairs(sh, "id", "simhash", 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -85,7 +85,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash fingerprints stay within 60 bits (sign-safe in both engines)") {
-    val sh = Dedup.simhashAgg(
+    val sh = SimHashRows.simhashAgg(
       docs3.select(col("doc_id"), split(col("text"), " ").as("toks")), "doc_id", "toks")
       .as[(Long, Long)].collect()
     assert(sh.forall { case (_, v) => v >= 0 && v < (1L << 60) })

@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -30,6 +31,47 @@ class GraphSearchSpec extends SparkSpec {
     graphExpandCandidates(c, Dim, NQ, Seeds, Hops, GK).localCheckpoint(false)
   private lazy val top =
     graphExpandTopK(c, Dim, NQ, Seeds, Hops, GK, K).localCheckpoint(false)
+
+  /** The distributed union → distinct walk the shared driver-held walk
+    * replaced: each hop unions the visited set with ALL its out-edges;
+    * self-hits are kept during the walk and dropped from each snapshot.
+    * Snapshots for hops 0..Hops.
+    */
+  private def unionDistinctWalk(sigs: DataFrame,
+      edges: DataFrame): Seq[DataFrame] = {
+    var cand = hammingTopKSigs(sigs, NQ, Seeds)
+      .select(col("query_id"), col("neighbor_id").as("id"))
+    val snaps = scala.collection.mutable.ArrayBuffer(cand)
+    for (_ <- 1 to Hops) {
+      val expanded = cand.join(edges, col("id") === col("esrc"))
+        .select(col("query_id"), col("edst").as("id"))
+      cand = cand.union(expanded).distinct().localCheckpoint(false)
+      snaps += cand
+    }
+    snaps.toSeq.map(_.filter(col("query_id") =!= col("id")))
+  }
+
+  test("the shared walk's visited set equals the union → distinct " +
+      "reference at every hop") {
+    val sigs = binarySigs(c, Dim).localCheckpoint(false)
+    val edges = knnGraph(c, GK)
+      .select(col("src_id").as("esrc"), col("dst_id").as("edst"))
+      .localCheckpoint(false)
+    val walked = graphWalk(graphSeeds(sigs, NQ, Seeds), Hops,
+      edgesOut(edges))(blindFrontier)
+    val ref = unionDistinctWalk(sigs, edges)
+    assert(ref.size == Hops + 1)
+    ref.zipWithIndex.foreach { case (want, h) =>
+      val got = walked.filter(col("hop") <= h).select("query_id", "id")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"visited set after hop $h differs from the reference")
+    }
+    assert(walked.select("query_id", "id").distinct().count() ==
+      walked.count(), "a pair was visited twice")
+    assert(cand.exceptAll(ref.last).isEmpty &&
+      ref.last.exceptAll(cand).isEmpty,
+      "graphExpandCandidates is not the walk's final visited set")
+  }
 
   test("visited set contains every seed and never the query itself") {
     val seeds = binaryHammingTopK(c, Dim, NQ, Seeds)

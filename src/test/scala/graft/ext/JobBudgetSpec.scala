@@ -72,8 +72,20 @@ class JobBudgetSpec extends SparkSpec {
     within("GraphIndex.searchTopKBeam after load", nSearch, SearchBeam)
   }
 
+  test("in-memory graph walk stays in budget") {
+    val v = corpus.localCheckpoint()
+    val (rows, n) = jobs(Similarity.graphExpandCandidates(v, 64, 10,
+      seeds = 3, hops = 3, graphK = 4).collect())
+    // the distributed union → distinct → checkpoint walk it replaced
+    // ran 18 jobs here
+    info(s"graphExpandCandidates $n jobs")
+    assert(rows.nonEmpty)
+    within("Similarity.graphExpandCandidates", n, WalkInMemory)
+  }
+
   private val BuildPq = 24
   private val SearchPq = 9
   private val BuildGraph = 10
   private val SearchBeam = 14
+  private val WalkInMemory = 11
 }

@@ -15,7 +15,8 @@ class SimilaritySpec extends SparkSpec {
     val df = vecs.toDF("a", "b")
     val out = df.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof"))
+      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0),
+        (acc, v) => acc + v).as("hof"))
       .as[(Double, Double)].collect()
     assert(out.forall { case (n, h) => n == h }) // exact, not approx
   }

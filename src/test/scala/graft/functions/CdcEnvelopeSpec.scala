@@ -6,13 +6,13 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
-import graft.cdc.{Envelopes, Parse}
+import graft.cdc.{Envelopes, Parse, ParseJackson}
 
 /** The native envelope decoder's contract, three ways:
   *  1. a semantics table over the kernel (structural edges, escapes,
   *     capture depth, the DuckDB object-verdict rule);
   *  2. a differential run against the `from_json` reference formulation
-  *     (`Parse.parseJackson`) over the fixture envelopes plus a seeded
+  *     (`ParseJackson.parse`) over the fixture envelopes plus a seeded
   *     generated corpus of valid, mutated, and junk inputs;
   *  3. plan shape: the expression must survive codegen with fallback
   *     disabled (the whole point of the native kernel is staying inside
@@ -142,7 +142,7 @@ class CdcEnvelopeSpec extends SparkSpec {
       .toDF("topic", "key", "value")
     val all = fixture.union(gen)
     val native = Parse.parse(all).select("key", "op", "db", "tbl", "_malformed")
-    val jackson = Parse.parseJackson(all).select("key", "op", "db", "tbl", "_malformed")
+    val jackson = ParseJackson.parse(all).select("key", "op", "db", "tbl", "_malformed")
     assert(native.count() == jackson.count())
     val onlyN = native.exceptAll(jackson).collect()
     val onlyJ = jackson.exceptAll(native).collect()
@@ -171,7 +171,7 @@ class CdcEnvelopeSpec extends SparkSpec {
       .toDF("topic", "key", "value")
     val native = Parse.parse(rows)
       .select(col("key"), col("op"), col("db"), col("tbl"), col("_malformed"))
-    val jackson = Parse.parseJackson(rows)
+    val jackson = ParseJackson.parse(rows)
       .select(col("key"), col("op").as("j_op"), col("db").as("j_db"),
         col("tbl").as("j_tbl"), col("_malformed").as("j_malformed"))
     val both = native.join(jackson, "key")

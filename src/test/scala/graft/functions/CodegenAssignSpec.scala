@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import graft.{CodegenSize, SparkSpec}
 import graft.ext.Similarity
 
 /** r17 A/B pins: each custom codegen kernel introduced this round must
@@ -65,11 +66,16 @@ class CodegenAssignSpec extends SparkSpec {
   }
 
   test("CosineArgmaxCell equals the broadcast-join max_by bit-for-bit") {
-    val cents = (0 until 6).map(j => (j * 3L, base(j * 2)._2.toIndexedSeq))
+    // cell 20 plants an exact tie with cell 0: same centroid vector, so
+    // every vector scores both identically (vector 0 at cosine 1)
+    val cents = (0 until 6).map(j => (j * 3L, base(j * 2)._2.toIndexedSeq)) :+
+      ((20L, base(0)._2.toIndexedSeq))
     val got = vdf.select(col("id"),
         CosineArgmaxCell.of(col("vec"), cents.toIndexedSeq).as("b"))
       .select(col("id"), col("b.cell"), col("b.score"))
       .as[(Long, Long, Double)].collect().toSet
+    assert(got.exists { case (id, cell, _) => id == 0L && cell == 0L },
+      "the planted tie did not go to the smaller cell")
     val cdf = cents.toDF("cpart", "cvec")
     val v = vdf.withColumn("vn",
       sqrt(Similarity.dot(col("vec"), col("vec"))))
@@ -86,6 +92,17 @@ class CodegenAssignSpec extends SparkSpec {
       .select(col("id"), col("best.cpart"), col("best.score"))
       .as[(Long, Long, Double)].collect().toSet
     assert(got == want)
+    // second reference: the literal-array argmax kmeansIterated ran —
+    // struct order (score, −cell), so array_max is the argmax with ties
+    // to the smaller cell
+    val best = array_max(array(cents.map { case (cid, cv) =>
+      struct(Similarity.cosine(col("vec"), typedLit(cv)).as("score"),
+        lit(-cid).as("neg"))
+    }: _*))
+    val want2 = vdf.select(col("id"), (lit(0L) - best.getField("neg")),
+        best.getField("score"))
+      .as[(Long, Long, Double)].collect().toSet
+    assert(got == want2)
     // an empty centroid table fails at plan time, naming the
     // precondition, in the kernel and in the assignment that feeds it
     val e1 = intercept[IllegalArgumentException](
@@ -94,6 +111,29 @@ class CodegenAssignSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException](
       Similarity.nearestCell(vdf, cdf.limit(0)))
     assert(e2.getMessage.contains("at least one centroid"))
+  }
+
+  test("kmeans assignment projection stays under the 8,000-byte JIT " +
+      "limit at 4 and at 256 cells") {
+    def maxMethod(cells: Int): Int = {
+      val v = spark.range(2L * cells).select(col("id"),
+        (col("id") % cells).as("part"),
+        array((1 to 8).map(j => sin(col("id") * j.toDouble)): _*).as("vec"))
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      val plan = try {
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        Similarity.kmeansIterated(v, 1).queryExecution.executedPlan
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      val sizes = plan.collect {
+        case w: WholeStageCodegenExec => CodegenSize.maxMethodBytes(w)
+      }
+      assert(sizes.nonEmpty, s"no codegen stage:\n$plan")
+      sizes.max
+    }
+    val sizes = Seq(4, 256).map(k => k -> maxMethod(k))
+    info(s"largest generated method (cells -> bytes): $sizes")
+    assert(sizes.forall(_._2 < CodegenSize.HugeMethodLimit),
+      s"assignment stage past the JIT limit: $sizes")
   }
 
   test("twoLevelAssign (codegen kernel) equals the legacy join chain") {

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.ext.Dedup
+import graft.ext.{Dedup, SimHashRows}
 
 /** The native SimHash60 expression must produce the exact fingerprint
   * of the explode + 60-sum aggregate form — the value is oracle-checked
@@ -17,7 +17,7 @@ class SimHash60Spec extends SparkSpec {
       .toDF("id", "text")
     val native = df.select(col("id"), SimHash60(col("text")).as("sh"))
       .as[(Long, Long)].collect().toMap
-    val viaAgg = Dedup.simhashAgg(
+    val viaAgg = SimHashRows.simhashAgg(
         df.select(col("id"), split(col("text"), " ").as("toks")), "id", "toks")
       .as[(Long, Long)].collect().toMap
     assert(native.keySet == viaAgg.keySet)
@@ -52,7 +52,7 @@ class SimHash60Spec extends SparkSpec {
       .as[(Long, Option[Long])].collect().toMap
     assert(native.keySet == Set(0L, 1L) && native(1L).isEmpty
       && native(0L).nonEmpty)
-    val viaAgg = Dedup.simhashAgg(
+    val viaAgg = SimHashRows.simhashAgg(
         df.select(col("id"), split(col("text"), " ").as("toks")), "id", "toks")
       .as[(Long, Long)].collect().toMap
     assert(viaAgg.keySet == Set(0L), "aggregate form must drop NULL-text docs")
