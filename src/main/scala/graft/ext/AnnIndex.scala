@@ -133,14 +133,19 @@ object AnnIndex {
     * this LAST, after its table writes, with counts read from the
     * written files' footers: a crashed build/append/delete/compact
     * leaves a manifest whose counts fail [[load]]'s check, never a
-    * silently short or stale index.
+    * silently short or stale index. `codes` is the [[IndexFiles.TableMeta]]
+    * the writer read ONCE after its code write and also handed to
+    * [[IndexFiles.clearTombstones]] and [[writeCellStats]]: none of
+    * those writes touches the code table, so a second pass would only
+    * read the same footers again.
     */
   private def writeManifest(spark: SparkSession, dir: String,
-      numSub: Int, subDim: Int): Unit = {
+      numSub: Int, subDim: Int, codes: IndexFiles.TableMeta): Unit = {
     def rows(name: String): Long =
       IndexFiles.tableMeta(spark, dir, name, Label).rows
-    val Seq(nCells, nBook, nVecs, nTomb, nStat) = Seq("centroids",
-      "codebooks", "codes", "tombstones", "cellstats").map(rows)
+    val Seq(nCells, nBook, nTomb, nStat) = Seq("centroids",
+      "codebooks", "tombstones", "cellstats").map(rows)
+    val nVecs = codes.rows
     import spark.implicits._
     Seq((FormatVersion, numSub, subDim, numSub * subDim,
         Similarity.PqCodewords, Similarity.PqTrainIters,
@@ -155,8 +160,8 @@ object AnnIndex {
   }
 
   /** Per-cell PHYSICAL population statistics, summed from the footers
-    * of the WRITTEN code files under each `cell=K` directory (the
-    * manifest discipline; no Spark job but the one-file write) after
+    * of the WRITTEN code files under each `cell=K` directory (`codes`,
+    * see [[writeManifest]]; no Spark job but the one-file write) after
     * every build/append/compact. Deliberately NOT maintained by
     * [[delete]]:
     * adaptive probe targeting is a statistics decision (a deployment
@@ -165,9 +170,10 @@ object AnnIndex {
     * population can only widen a probe set, never return a deleted
     * row.
     */
-  private def writeCellStats(spark: SparkSession, dir: String): Unit = {
+  private def writeCellStats(spark: SparkSession, dir: String,
+      codes: IndexFiles.TableMeta): Unit = {
     import spark.implicits._
-    IndexFiles.tableMeta(spark, dir, "codes", Label).partRows.toSeq
+    codes.partRows.toSeq
       .collect { case (part, n) if n > 0 =>
         require(part.startsWith("cell="),
           s"code file outside a cell=K directory under $dir: '$part'")
@@ -192,9 +198,10 @@ object AnnIndex {
     cw.write.mode("overwrite").parquet(s"$outDir/codebooks.parquet")
     codes.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$outDir/codes.parquet")
-    IndexFiles.clearTombstones(spark, outDir, "codes", Label)
-    writeCellStats(spark, outDir)
-    writeManifest(spark, outDir, numSub, subDim)
+    val written = IndexFiles.tableMeta(spark, outDir, "codes", Label)
+    IndexFiles.clearTombstones(spark, outDir, "codes", written.schema)
+    writeCellStats(spark, outDir, written)
+    writeManifest(spark, outDir, numSub, subDim, written)
   }
 
   /** Load + validate. Throws (IllegalArgumentException) on a missing,
@@ -257,8 +264,9 @@ object AnnIndex {
         idx.codebooks, idx.numSub, idx.subDim)
       .write.mode("append").partitionBy("cell")
       .parquet(s"$dir/codes.parquet")
-    writeCellStats(spark, dir)
-    writeManifest(spark, dir, idx.numSub, idx.subDim)
+    val written = IndexFiles.tableMeta(spark, dir, "codes", Label)
+    writeCellStats(spark, dir, written)
+    writeManifest(spark, dir, idx.numSub, idx.subDim, written)
   }
 
   /** DELETE `ids (id)` from the persisted index (E263) — the soft
@@ -290,7 +298,8 @@ object AnnIndex {
       s"$already ids are already tombstoned — double delete")
     ids.select(col("id"))
       .write.mode("append").parquet(s"$dir/tombstones.parquet")
-    writeManifest(spark, dir, idx.numSub, idx.subDim)
+    writeManifest(spark, dir, idx.numSub, idx.subDim,
+      IndexFiles.tableMeta(spark, dir, "codes", Label))
   }
 
   /** COMPACT the index (E263): physically drop tombstoned code rows
@@ -311,9 +320,10 @@ object AnnIndex {
     idx.liveCodes.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/codes.compacting.parquet")
     IndexFiles.swapIn(spark, dir, "codes")
-    IndexFiles.clearTombstones(spark, dir, "codes", Label)
-    writeCellStats(spark, dir)
-    writeManifest(spark, dir, idx.numSub, idx.subDim)
+    val written = IndexFiles.tableMeta(spark, dir, "codes", Label)
+    IndexFiles.clearTombstones(spark, dir, "codes", written.schema)
+    writeCellStats(spark, dir, written)
+    writeManifest(spark, dir, idx.numSub, idx.subDim, written)
   }
 
   /** Serve top-k for `q (qid, qv)` from the persisted index with the

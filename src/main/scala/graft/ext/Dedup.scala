@@ -36,17 +36,18 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Fan narrow-input plans out to the session's parallelism when the
-    * scan is badly under-partitioned (e.g. a single small parquet file
-    * feeding 32 cores): every downstream map stage — shingle explode,
-    * hashing, checkpoint block writes — otherwise runs serial on one
-    * task. The repartition is CONDITIONAL: on a real multi-file corpus
-    * the scan already has ≥ parallelism splits and this is a no-op, so
-    * the full corpus is never shuffled at 100 TB just to rebalance.
+    * scan has fewer splits than cores (e.g. a single small parquet file
+    * feeding 32 cores, or a union of two feeding 4): every downstream
+    * map stage — shingle explode, hashing, checkpoint block writes —
+    * otherwise leaves cores idle. The repartition is CONDITIONAL: on a
+    * real multi-file corpus the scan already has ≥ parallelism splits
+    * and this is a no-op, so the full corpus is never shuffled at
+    * 100 TB just to rebalance.
     */
   private[graft] def ensureParallel(df: DataFrame, target: Int = 0): DataFrame = {
     val t =
       if (target > 0) target else df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 < t) df.repartition(t) else df
+    if (df.rdd.getNumPartitions < t) df.repartition(t) else df
   }
 
   /** Distinct word n-gram shingles of a whitespace-tokenized text.
@@ -158,12 +159,14 @@ object Dedup {
     * prefilter: band keys are derived from the signature in-plan
     * ([[bandKeys]]), each bucket's (id, sig) structs are collected and
     * sorted by id, and an in-bucket pair (id_a < id_b) is emitted only
-    * when ≥ `minAgree` of the 32 bins agree (`minAgree = 0` emits every
-    * in-bucket pair). A self-join formulation would evaluate the whole
-    * signature pipeline once per join branch (Spark does not share
-    * non-exchanged subplans); here the signature is computed exactly
-    * once and the only shuffle is the bucket groupBy. `distinct`
-    * collapses pairs that collide in several bands. Per-bin
+    * when ≥ `minAgree` of the 32 bins agree. `minAgree = 0` emits every
+    * in-bucket pair, so its buckets carry bare ids and no agreement is
+    * computed: the sorted id sequence of a bucket is the same either
+    * way, hence so are the pairs. A self-join formulation would
+    * evaluate the whole signature pipeline once per join branch (Spark
+    * does not share non-exchanged subplans); here the signature is
+    * computed exactly once and the only shuffle is the bucket groupBy.
+    * `distinct` collapses pairs that collide in several bands. Per-bin
     * collision probability ≈ the pair's true Jaccard, so
     * `minAgree = threshold × 32` is the sketch-side estimate of the
     * verify threshold: it discards the (dominant, by construction)
@@ -178,22 +181,26 @@ object Dedup {
     */
   def lshCandidatesSig(df: DataFrame, idCol: String, sigCol: Column,
                        minAgree: Int): DataFrame = {
-    val e = df.select(
-      struct(col(idCol).as("id"), sigCol.as("sig")).as("rec"),
+    val keepAll = minAgree <= 0
+    val rec =
+      if (keepAll) col(idCol) else struct(col(idCol).as("id"), sigCol.as("sig"))
+    def id(r: Column): Column = if (keepAll) r else r.getField("id")
+    val e = df.select(rec.as("rec"),
       posexplode(bandKeys(sigCol)).as(Seq("band_idx", "band_hash")))
     val buckets = e.groupBy(col("band_idx"), col("band_hash"))
       .agg(sort_array(collect_list(col("rec"))).as("recs"))
       .filter(size(col("recs")) > 1)
       .withColumn("recs", slice(col("recs"), 1, MaxBucketSize))
     val pairs = flatten(transform(col("recs"), (a, i) =>
-      transform(slice(col("recs"), i + 2, size(col("recs"))),
-        b => struct(a.getField("id").as("id_a"), b.getField("id").as("id_b"),
-          sigAgree(a.getField("sig"), b.getField("sig")).as("agree")))))
-    buckets
-      .select(explode(pairs).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.agree"))
-      .distinct()
-      .filter(col("agree") >= minAgree)
+      transform(slice(col("recs"), i + 2, size(col("recs"))), b => {
+        val ids = Seq(id(a).as("id_a"), id(b).as("id_b"))
+        if (keepAll) struct(ids: _*)
+        else struct(ids :+
+          sigAgree(a.getField("sig"), b.getField("sig")).as("agree"): _*)
+      })))
+    val cands = buckets.select(explode(pairs).as("p")).select(col("p.*"))
+    if (keepAll) cands.distinct()
+    else cands.distinct().filter(col("agree") >= minAgree)
       .select(col("id_a"), col("id_b"))
   }
 
@@ -703,10 +710,14 @@ object Dedup {
   def lshRecallMeasured(universe: DataFrame, n: Int,
       taus: Seq[Double]): DataFrame = {
     require(taus.nonEmpty, "need at least one tau")
+    // A fixture universe is a union of two one-row-group scans: two
+    // tasks for the shingle distinct and both signature legs unless it
+    // is spread over the session's cores first.
+    val u = ensureParallel(universe)
     // The truth key is the per-shingle xxhash64 LONG, not the shingle
     // string, so the checkpoint carries 8 bytes/row instead of the
     // n-gram text.
-    val dsh = wordShingleRows(universe, col("id"), col("text"), n)
+    val dsh = wordShingleRows(u, col("id"), col("text"), n)
       .select(col("id"), xxhash64(col("x")).as("k")).distinct()
       .localCheckpoint(false)
     // r17 NEGATIVE RESULT (measured, reverted): routing the exact
@@ -739,7 +750,7 @@ object Dedup {
     // text; minAgree = 0 keeps every in-bucket pair, so recall is the
     // banding's own.
     def bucketed(sig: Column): DataFrame =
-      lshCandidatesSig(universe.select(col("id"), sig.as("sig")), "id",
+      lshCandidatesSig(u.select(col("id"), sig.as("sig")), "id",
         col("sig"), minAgree = 0)
     val configs = Seq(
       "banded32" -> bucketed(

@@ -140,12 +140,16 @@ object GraphIndex {
       pmod(col("src"), lit(buckets.toLong)).cast("int"))
 
   /** Manifest row with the footer row counts of the written tables —
-    * every writer calls this LAST. */
+    * every writer calls this LAST. `vectors` is the footer pass the
+    * writer made once after its vector write, also handed to
+    * [[IndexFiles.clearTombstones]] (neither rewrites the vector table).
+    */
   private def writeManifest(spark: SparkSession, dir: String,
-      dim: Int, graphK: Int, edgeBuckets: Int): Unit = {
-    val Seq(nVecs, nSigs, nEdges, nTomb) =
-      Seq("vectors", "sigs", "edges", "tombstones")
-        .map(IndexFiles.tableMeta(spark, dir, _, Label).rows)
+      dim: Int, graphK: Int, edgeBuckets: Int,
+      vectors: IndexFiles.TableMeta): Unit = {
+    val Seq(nSigs, nEdges, nTomb) = Seq("sigs", "edges", "tombstones")
+      .map(IndexFiles.tableMeta(spark, dir, _, Label).rows)
+    val nVecs = vectors.rows
     import spark.implicits._
     Seq((FormatVersion, dim, graphK, edgeBuckets,
         nVecs, nSigs, nEdges, nTomb))
@@ -173,8 +177,9 @@ object GraphIndex {
         edgeBuckets)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$outDir/edges.parquet")
-    IndexFiles.clearTombstones(spark, outDir, "vectors", Label)
-    writeManifest(spark, outDir, dim, graphK, edgeBuckets)
+    val written = IndexFiles.tableMeta(spark, outDir, "vectors", Label)
+    IndexFiles.clearTombstones(spark, outDir, "vectors", written.schema)
+    writeManifest(spark, outDir, dim, graphK, edgeBuckets, written)
   }
 
   /** Soft-DELETE `ids (id)` (E310, the E263 design for the graph
@@ -201,7 +206,8 @@ object GraphIndex {
       s"$already ids are already tombstoned — double delete")
     ids.select(col("id"))
       .write.mode("append").parquet(s"$dir/tombstones.parquet")
-    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets)
+    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets,
+      IndexFiles.tableMeta(spark, dir, "vectors", Label))
   }
 
   /** COMPACT (E310): physically drop tombstoned vectors, signatures,
@@ -226,8 +232,9 @@ object GraphIndex {
     idx.liveEdges.write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/edges.compacting.parquet")
     IndexFiles.swapIn(spark, dir, "edges")
-    IndexFiles.clearTombstones(spark, dir, "vectors", Label)
-    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets)
+    val written = IndexFiles.tableMeta(spark, dir, "vectors", Label)
+    IndexFiles.clearTombstones(spark, dir, "vectors", written.schema)
+    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets, written)
   }
 
   /** Incrementally APPEND `newVecs (id, part, vec)` to a persisted
@@ -299,7 +306,8 @@ object GraphIndex {
     nv.write.mode("append").parquet(s"$dir/vectors.parquet")
     Similarity.binarySigs(nv, idx.dim)
       .write.mode("append").parquet(s"$dir/sigs.parquet")
-    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets)
+    writeManifest(spark, dir, idx.dim, idx.graphK, idx.edgeBuckets,
+      IndexFiles.tableMeta(spark, dir, "vectors", Label))
   }
 
   /** Load + validate. Throws (IllegalArgumentException) on a missing,

@@ -281,8 +281,11 @@ object TxTable {
       else try readManifest(spark, dir, v - 1).metas
         .filter(_.size >= 0).map(m => m.rel -> m).toMap
       catch { case _: IllegalArgumentException => Map.empty }
+    // one conf and one set of read options for all the new files
+    lazy val conf = spark.sessionState.newHadoopConf()
+    lazy val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val metas = files.map(rel =>
-      prevMetas.getOrElse(rel, footerMeta(spark, dir, rel)))
+      prevMetas.getOrElse(rel, footerMeta(conf, opts, dir, rel)))
     val f = fs(spark, dir)
     val tmp = new Path(dir,
       s"$CommitDirName/.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -656,14 +659,20 @@ object TxTable {
     * Everything else (dates, timestamps, decimals, nested paths) is
     * simply not recorded — absent stats mean "never skip", so the
     * restriction costs pruning opportunity, never correctness.
+    *
+    * `opts` are built once per commit from the session `conf` (the
+    * [[graft.ext.IndexFiles]] footer discipline): the one-argument
+    * parquet file open would build them from a fresh Hadoop
+    * `Configuration` per file.
     */
-  private def footerMeta(spark: SparkSession, dir: String,
+  private def footerMeta(conf: org.apache.hadoop.conf.Configuration,
+      opts: org.apache.parquet.ParquetReadOptions, dir: String,
       rel: String): FileMeta = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
     import scala.jdk.CollectionConverters._
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new Path(dir, rel), spark.sessionState.newHadoopConf())
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      new Path(dir, rel), conf)
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts)
     val footer = try rd.getFooter finally rd.close()
     val acc = scala.collection.mutable.Map.empty[String, ColStat]
     val dropped = scala.collection.mutable.Set.empty[String]

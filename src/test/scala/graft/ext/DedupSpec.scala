@@ -319,6 +319,25 @@ class DedupSpec extends SparkSpec {
     assert(measured.toSet == expected.toSet && measured.length == expected.size)
   }
 
+  test("lshCandidatesSig at minAgree 0 (id-only buckets) emits exactly " +
+      "the agreement path's pairs") {
+    import graft.queries.DedupQueries._
+    val universe = recallUniverse(graft.Tables.documents(spark, sfDir))
+    for (sig <- Seq(MinHashClassicSig(col("text"), WordN, word = true),
+        MinHashSig(col("text"), WordN, word = true))) {
+      val sigs = universe.select(col("id"), sig.as("sig"))
+      val idOnly = Dedup.lshCandidatesSig(sigs, "id", col("sig"), 0)
+      // every in-bucket pair agrees on its band's 4 bins, so minAgree 1
+      // keeps them all — through the (id, sig) structs and the fold
+      val viaAgree = Dedup.lshCandidatesSig(sigs, "id", col("sig"), 1)
+      assert(idOnly.columns.toSeq == Seq("id_a", "id_b"))
+      val (a, b) = (idOnly.as[(Long, Long)].collect(),
+        viaAgree.as[(Long, Long)].collect())
+      assert(a.nonEmpty && a.length == a.toSet.size)
+      assert(a.sorted.toSeq == b.sorted.toSeq)
+    }
+  }
+
   test("docs_lsh_recall: no generated method reaches HotSpot's " +
       "8,000-byte JIT limit") {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
