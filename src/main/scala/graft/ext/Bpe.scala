@@ -18,9 +18,9 @@ import graft.functions.BpeMerge
   * vocabulary table only:
   *   1. adjacent-pair counts weighted by word frequency — one
   *      vocabulary-sized aggregation (the round's only shuffle);
-  *   2. argmax pair — `LIMIT 1` collected to the driver: O(1) rows per
-  *      round, the k-means-centroid discipline (`Similarity
-  *      .kmeansIterated`);
+  *   2. the top-`batch` pairs — `LIMIT batch` collected to the driver:
+  *      O(batch) rows per round, the k-means-centroid discipline
+  *      (`Similarity.kmeansIterated`);
   *   3. rule application — the native [[graft.functions.BpeMerge]]
   *      codegen pass, a pure narrow projection over the vocabulary;
   *   4. `localCheckpoint` — truncates the per-round lineage exactly
@@ -47,7 +47,7 @@ object Bpe {
     */
   val Rounds = 12
 
-  /** One learned merge: rank is 1-based round order. */
+  /** One learned merge: rank is 1-based acceptance order. */
   final case class MergeRule(rank: Int, lhs: String, rhs: String, pairCount: Long)
 
   /** Word-frequency vocabulary with initial per-character symbol
@@ -66,7 +66,7 @@ object Bpe {
     * pair transform: `sequence(1, 0)` would generate a DESCENDING
     * range in Spark (not an empty one) and index out of bounds.
     */
-  private def pairCounts(words: DataFrame): DataFrame =
+  private[ext] def pairCounts(words: DataFrame): DataFrame =
     words.filter(size(col("sym")) >= 2)
       .select(col("freq"), explode(expr(
         "transform(sequence(1, size(sym) - 1), " +
@@ -74,53 +74,29 @@ object Bpe {
       .groupBy(col("p.a").as("lhs"), col("p.b").as("rhs"))
       .agg(sum(col("freq")).as("cnt"))
 
-  /** Learn `rounds` merges; returns the ranked rules and the final
-    * vocabulary (word, freq, sym) — i.e. every word's learned-BPE
-    * segmentation, which IS the tokenizer: encoding a corpus is a
-    * broadcast join against it (or, for out-of-vocabulary words at
-    * inference, replaying the returned rules with [[BpeMerge]]).
-    * Stops early if the vocabulary is fully merged (no pairs left).
-    */
-  def train(docs: DataFrame, rounds: Int = Rounds): (Seq[MergeRule], DataFrame) = {
-    require(rounds >= 1, "need at least one merge round")
-    var words = vocab(docs).localCheckpoint()
-    val rules = Seq.newBuilder[MergeRule]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val best = pairCounts(words)
-        .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (best.isEmpty) {
-        exhausted = true
-      } else {
-        val lhs = best(0).getAs[String]("lhs")
-        val rhs = best(0).getAs[String]("rhs")
-        rules += MergeRule(r, lhs, rhs, best(0).getAs[Long]("cnt"))
-        words = words.select(col("word"), col("freq"),
-          BpeMerge(col("sym"), lit(lhs), lit(rhs)).as("sym"))
-          .localCheckpoint()
-        r += 1
-      }
-    }
-    (rules.result(), words)
-  }
-
-  /** Batched BPE training (round-9 verdict task #6): per driver round,
-    * ONE pair-count aggregation selects the top-`batch` pairs and
-    * applies the longest PREFIX of that ranking that is pairwise
-    * symbol-DISJOINT — pair j is accepted only while none of its three
-    * symbols (lhs, rhs, lhs‖rhs) collides with any earlier accepted
-    * pair's three symbols. Disjoint merges commute: applying one never
-    * creates, destroys, or shifts another's candidate adjacencies, so
-    * their round-start counts equal their would-be sequential counts
-    * and simultaneous application equals sequential application in any
-    * order (BpeSpec pins batched ≡ sequential on the fixture and at
-    * batch = 1 structurally).
+  /** BPE training in `rounds` driver rounds; returns the ranked rules
+    * and the final vocabulary (word, freq, sym) — i.e. every word's
+    * learned-BPE segmentation, which IS the tokenizer: encoding a
+    * corpus is a broadcast join against it (or, for out-of-vocabulary
+    * words at inference, replaying the returned rules with
+    * [[BpeMerge]]). Stops early when no pairs remain.
     *
-    * THE ROUND-COUNT LAW (why this exists): sequential [[train]] costs
-    * one vocabulary aggregation + one O(1) driver sync PER MERGE — a
-    * production tokenizer's 30k–100k merges would mean 30k–100k
+    * Per round, ONE pair-count aggregation selects the top-`batch`
+    * pairs and applies the longest PREFIX of that ranking that is
+    * pairwise symbol-DISJOINT — pair j is accepted only while none of
+    * its three symbols (lhs, rhs, lhs‖rhs) collides with any earlier
+    * accepted pair's three symbols. The top pair is always accepted,
+    * so `batch = 1` is sequential BPE: one argmax merge per round.
+    * Disjoint merges commute: applying one never creates, destroys, or
+    * shifts another's candidate adjacencies, so their round-start
+    * counts equal their would-be sequential counts and simultaneous
+    * application equals sequential application in any order (BpeSpec
+    * pins `batch = 1` against a sequential reference loop, and a
+    * batched run against it on the fixture).
+    *
+    * THE ROUND-COUNT LAW (why `batch` exists): sequential training
+    * costs one vocabulary aggregation + one O(1) driver sync PER MERGE
+    * — a production tokenizer's 30k–100k merges would mean 30k–100k
     * driver-synchronized passes over the vocabulary table. Batching
     * divides that by the realized batch width: driver rounds ≈
     * merges / E[accepted per round], with E[accepted] near `batch` in
@@ -130,19 +106,18 @@ object Bpe {
     * the standard batched-BPE approximation, accepted for exactly this
     * driver-round economics.
     *
-    * Learns up to `batchRounds × batch` merges in `batchRounds` driver
-    * syncs; stops early when no pairs remain.
+    * Learns up to `rounds × batch` merges in `rounds` driver syncs.
     */
-  def trainBatched(docs: DataFrame, batchRounds: Int,
-                   batch: Int): (Seq[MergeRule], DataFrame) = {
-    require(batchRounds >= 1, "need at least one batch round")
+  def train(docs: DataFrame, rounds: Int,
+            batch: Int): (Seq[MergeRule], DataFrame) = {
+    require(rounds >= 1, "need at least one merge round")
     require(batch >= 1, "batch must be positive")
     var words = vocab(docs).localCheckpoint()
     val rules = Seq.newBuilder[MergeRule]
     var rank = 0
     var r = 1
     var exhausted = false
-    while (r <= batchRounds && !exhausted) {
+    while (r <= rounds && !exhausted) {
       val top = pairCounts(words)
         .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
         .limit(batch).collect()
@@ -199,8 +174,9 @@ object Bpe {
     *   - `w{k}`: rebuild — drop rows consumed as a pair's second
     *     element, concatenate at accepted positions, renumber.
     *
-    * The unrolled chain is generated, not hand-written, so the round
-    * count stays a single constant shared with [[train]].
+    * This is [[train]] at `batch = 1`. The unrolled chain is
+    * generated, not hand-written, so the round count stays a single
+    * constant shared with the Spark row.
     */
   def oracleChain(rounds: Int = Rounds): String = {
     val sb = new StringBuilder
@@ -277,7 +253,7 @@ object Bpe {
        |    WHERE d.word IS NULL))""".stripMargin
   }
 
-  /** [[trainBatched]] replayed as unrolled SQL: per round, the
+  /** [[train]] at `batch > 1` replayed as unrolled SQL: per round, the
     * top-`batch` ranking (`tb`), the first conflicted rank (`ct` —
     * a pair conflicts when any of its three symbols collides with an
     * earlier-ranked pair's three symbols), the accepted disjoint

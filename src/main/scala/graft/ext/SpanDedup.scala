@@ -21,38 +21,38 @@ import org.apache.spark.sql.functions._
   * the WHOLE token array through the generate, O(len²) bytes per doc,
   * which inverts for long documents. The transform form stays
   * O(len·n): each doc materializes its gram array once, rows after the
-  * explode carry only (pos, 32-hex key). The
-  * duplicate-frequency aggregation groups by md5(gram) so the shuffle
-  * carries a fixed-width 32-hex key instead of n-token strings (the
-  * same 128-bit content-key argument as exact dedup E1 — collision
-  * probability ~(G²/2^129) is negligible at any corpus size). Span
-  * merging is a per-document gaps-and-islands window — partitioned by
-  * doc, never global.
+  * explode carry only (pos, key). Span merging is a per-document
+  * gaps-and-islands window — partitioned by doc, never global.
+  *
+  * Gram key: `xxhash64` of the space-joined gram, so the shuffle
+  * carries one long instead of n-token strings (~60× cheaper per call
+  * than md5 + hex; bench_per_query.json at sf0.1 reads 1.89 s for the
+  * find row with md5 keys and 1.28 s with these).
+  * A 64-bit collision merges two distinct grams' doc-counts (it can
+  * promote a unique gram to "duplicated", or a training gram to
+  * "contaminated"). Over G distinct grams the expected number of
+  * colliding pairs is G²/2⁶⁵ — below one up to G ≈ 6·10⁹, and at
+  * G = 10¹³ a false-hit fraction of G/2⁶⁴ ≈ 5·10⁻⁷ of the grams: the
+  * same birthday budget the MinHash tier accepts. The DuckDB oracles
+  * key grams by md5 independently, so the gate checks the 64-bit keys
+  * against a 128-bit truth.
   */
 object SpanDedup {
+
+  /** Every n-gram of the token array `ws` as a (pos, gh) struct, where
+    * gh is the gram key (see the object Scaladoc).
+    */
+  private def gramKeys(n: Int): Column = expr(
+    s"transform(sequence(0, size(ws) - $n), i -> " +
+      s"named_struct('pos', i, 'gh', xxhash64(array_join(slice(ws, i + 1, $n), ' '))))")
 
   /** (doc_id, span_start, span_end, span_tokens) for every maximal
     * duplicated span: positions are 0-based token offsets, spans are
     * closed intervals, and two duplicated n-grams chain into one span
     * when their start positions differ by ≤ n (overlap or touch).
-    *
-    * `fastKeys = false` (default) keys grams by md5 — 128-bit, so
-    * collisions are out of the question at any scale, and the DuckDB
-    * oracle reproduces the digests. `fastKeys = true` is the
-    * production tier: xxhash64 gram keys (1.4× on the whole query at
-    * sf0.1 — the explode+shuffle dominates there; the per-call digest
-    * gap is ~60× and grows with gram width); a 64-bit collision merges
-    * two distinct grams' doc-counts (possibly promoting a unique gram
-    * to "duplicated"), but at P[any collision] ≈ G²/2⁶⁵ that needs
-    * ~10¹² grams before it is even odds-of-one — the same birthday
-    * budget the MinHash tier already accepts. SpanDedupSpec pins both
-    * paths equal on real fixtures.
     */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int, minDocs: Int,
-                      fastKeys: Boolean = false): DataFrame = {
-    val keyExpr = if (fastKeys) "xxhash64(array_join(slice(ws, i + 1, %d), ' '))"
-      else "md5(array_join(slice(ws, i + 1, %d), ' '))"
+                      n: Int, minDocs: Int): DataFrame = {
     val grams = docs
       .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
       // The guard is load-bearing, not cosmetic: for size(ws) < n,
@@ -61,10 +61,7 @@ object SpanDedup {
       // of 0 — a runtime error under ANSI. Short docs must contribute
       // no grams, exactly like the oracle's empty generate_series.
       .filter(size(col("ws")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, size(ws) - $n), i -> " +
-          s"named_struct('pos', i, 'gh', ${keyExpr.format(n)}))"))
-        .as("g"))
+      .select(col("doc_id"), explode(gramKeys(n)).as("g"))
       .select(col("doc_id"), col("g.pos").as("pos"), col("g.gh").as("gh"))
       // r17: TWO consumers below (the dup-frequency aggregate and the
       // hits join), and Spark does not share non-exchanged subplans —
@@ -108,15 +105,16 @@ object SpanDedup {
     * appear verbatim anywhere in the EVAL slice (`evalPred` true).
     * Doc-level decontam throws away a whole document for one leaked
     * paragraph; span-level finds exactly the leaked text, and
-    * [[decontamExcise]] cuts it — what production pipelines run when
-    * the corpus is too valuable to drop wholesale (the Lee et al.
-    * machinery pointed at a reference set instead of at duplication).
+    * [[decontamExciseFromSpans]] cuts it — what production pipelines
+    * run when the corpus is too valuable to drop wholesale (the Lee et
+    * al. machinery pointed at a reference set instead of at
+    * duplication).
     *
-    * Scale shape: identical to [[duplicatedSpans]] — gram digests
+    * Scale shape: identical to [[duplicatedSpans]] — gram keys
     * shuffle, text does not; the eval gram set is bounded by the eval
     * slice (by definition tiny next to the corpus) and rides a
     * semi-join, so training grams that match nothing never leave
-    * their partition with more than a digest.
+    * their partition with more than a key.
     */
   def contaminationSpans(docs: DataFrame, idCol: String, textCol: String,
                          n: Int, evalPred: Column): DataFrame = {
@@ -124,10 +122,7 @@ object SpanDedup {
       .select(col(idCol).as("doc_id"), evalPred.as("is_eval"),
         split(col(textCol), " ").as("ws"))
       .filter(size(col("ws")) >= n) // same short-doc guard as above
-      .select(col("doc_id"), col("is_eval"), explode(expr(
-        s"transform(sequence(0, size(ws) - $n), i -> " +
-          s"named_struct('pos', i, 'gh', md5(array_join(slice(ws, i + 1, $n), ' '))))"))
-        .as("g"))
+      .select(col("doc_id"), col("is_eval"), explode(gramKeys(n)).as("g"))
       .select(col("doc_id"), col("is_eval"),
         col("g.pos").as("pos"), col("g.gh").as("gh"))
       // r17: same two-consumer dedup as duplicatedSpans (eval-gram set
@@ -140,30 +135,18 @@ object SpanDedup {
     islandSpans(hits, n)
   }
 
-  /** Find → CUT for the contamination tier: every TRAINING doc
-    * rewritten with its eval-overlapping spans excised (the
-    * [[exciseSpans]] rewrite applied to [[contaminationSpans]]); eval
-    * docs are not part of the output — they are the reference set,
-    * not the corpus.
-    */
-  def decontamExcise(docs: DataFrame, idCol: String, textCol: String,
-                     n: Int, evalPred: Column): DataFrame =
-    exciseUsing(
-      docs.filter(!evalPred).select(col(idCol).as("doc_id"),
-        col(textCol).as("text")),
-      contaminationSpans(docs, idCol, textCol, n, evalPred))
-
-  /** Find → CUT: every document rewritten with its duplicated spans
-    * excised (tokens at positions inside any [[duplicatedSpans]] span
-    * dropped, survivors rejoined with single spaces), plus the
-    * accounting a curation funnel reports (span count, token count
-    * before, tokens cut). Documents with no spans pass through with
-    * their ORIGINAL text byte-for-byte (no split/rejoin round trip to
-    * perturb whitespace). Policy: cut every occurrence — the
-    * conservative memorization-first variant of Lee et al. 2021 §4
-    * (which retains one occurrence corpus-wide); retaining one would
-    * make each doc's output depend on a global argmin over other docs,
-    * an ordering a distributed rewrite has no business coupling to.
+  /** The CUT stage over a persisted [[duplicatedSpans]] table (r16):
+    * every document rewritten with its duplicated spans excised
+    * (tokens at positions inside any span dropped, survivors rejoined
+    * with single spaces), plus the accounting a curation funnel
+    * reports (span count, token count before, tokens cut). Documents
+    * with no spans pass through with their ORIGINAL text byte-for-byte
+    * (no split/rejoin round trip to perturb whitespace). Policy: cut
+    * every occurrence — the conservative memorization-first variant of
+    * Lee et al. 2021 §4 (which retains one occurrence corpus-wide);
+    * retaining one would make each doc's output depend on a global
+    * argmin over other docs, an ordering a distributed rewrite has no
+    * business coupling to.
     *
     * Scale shape: the span table is aggregated to one (start, end)
     * array per affected doc — spans are maximal and disjoint by
@@ -176,20 +159,10 @@ object SpanDedup {
     * SpanDedup tradeoff above, same verdict): it touches only
     * span-bearing docs' arrays once; the docs without spans short-
     * circuit on the null join miss before the HOF runs.
-    */
-  def exciseSpans(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int, minDocs: Int,
-                  fastKeys: Boolean = false): DataFrame =
-    exciseUsing(
-      docs.select(col(idCol).as("doc_id"), col(textCol).as("text")),
-      duplicatedSpans(docs, idCol, textCol, n, minDocs, fastKeys))
-
-  /** [[exciseSpans]] over a PERSISTED span table (r16): the CUT stage
-    * alone, fed by an already-computed find artifact — the production
-    * shape (Lee et al. find once per corpus snapshot; every rewrite
-    * batch only cuts). Bit-identical to [[exciseSpans]] over the same
-    * corpus because the artifact IS [[duplicatedSpans]] output
-    * round-tripped through parquet (longs/ints, exact).
+    *
+    * The span table is the find artifact round-tripped through parquet
+    * (longs/ints, exact) — the production shape (Lee et al.): find
+    * once per corpus snapshot, and every rewrite batch only cuts.
     */
   def exciseFromSpans(docs: DataFrame, idCol: String, textCol: String,
                       spanTable: DataFrame): DataFrame =
@@ -197,8 +170,11 @@ object SpanDedup {
       docs.select(col(idCol).as("doc_id"), col(textCol).as("text")),
       spanTable)
 
-  /** [[decontamExcise]] over a persisted contamination-span table —
-    * the r16 artifact twin of [[exciseFromSpans]] for the E240 tier.
+  /** The CUT stage over a persisted [[contaminationSpans]] table:
+    * every TRAINING doc rewritten with its eval-overlapping spans
+    * excised, by the same rewrite as [[exciseFromSpans]]; eval docs
+    * are not part of the output — they are the reference set, not the
+    * corpus.
     */
   def decontamExciseFromSpans(docs: DataFrame, idCol: String,
                               textCol: String, evalPred: Column,
@@ -209,7 +185,7 @@ object SpanDedup {
       spanTable)
 
   /** The cut stage over a caller-supplied span table — shared by the
-    * duplication (E206/E231) and contamination (E240) tiers.
+    * duplication (E206) and contamination (E240) tiers.
     */
   private def exciseUsing(docs: DataFrame, spanTable: DataFrame): DataFrame = {
     val spans = spanTable

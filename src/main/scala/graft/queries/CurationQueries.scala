@@ -101,23 +101,14 @@ object CurationQueries {
     // third doc → dropped corpus-wide; title and content lines are
     // per-doc unique → kept; clean docs pass through byte-identical.
     //
-    // TWO strategies for one truth (the E186 two-tier precedent):
-    // this row keeps the InSet tier — frequency agg over md5 digests,
-    // bounded set collected to the driver, ridden back as an InSet
-    // over the kept-lines HOF filter (no re-assembly shuffle). Right
-    // when the template dictionary is bounded; on open web text the
-    // repeated-line set is corpus-sized and the driver collect is an
-    // OOM by construction (VERDICT r12 #1) — the join tier below is
-    // the production path and the E239 pipeline serves through it.
-    // LineBoilerSpec pins the two tiers row-identical (exceptAll both
-    // ways empty) and the driver hashes both against the SAME oracle.
+    // Boilerplate membership is a distributed left-anti join on the
+    // line digest (AQE broadcasts the digest table when small and
+    // shuffles it when web-scale), then per-doc re-assembly by
+    // position sort: no driver-side state at any corpus size. On open
+    // web text the repeated-line set is corpus-sized, so a tier that
+    // collects it to the driver cannot ship (SCALING.md, "Round-13
+    // line-boilerplate tier crossover").
     "docs_line_boilerplate" -> ((s, dir) => lineBoilerFrame(s, dir)),
-
-    // E255: the JOIN tier — boilerplate membership as a distributed
-    // left-anti join on the line digest (AQE broadcast when small,
-    // shuffle when web-scale), per-doc re-assembly by position sort.
-    // No driver-side state at any corpus size.
-    "docs_line_boilerplate_join" -> ((s, dir) => lineBoilerFrameJoin(s, dir)),
 
     // E239: the composed web FRONT DOOR — raw (planted) HTML through
     // every round-12 tier in one call: E233 extraction → E236
@@ -128,11 +119,8 @@ object CurationQueries {
     // standalone row registers (one definition, no drift — the
     // bigramLmScores pattern), so the composition is pure plumbing:
     // still one scan-side chain plus the line-frequency aggregation.
-    // Serves through the JOIN tier (VERDICT r12 #1): the composed
-    // pipeline is the production entry point, and at crawl scale the
-    // InSet tier's driver set is the one shape that cannot ship.
     "docs_web_pipeline" -> ((s, dir) => {
-      val lb = lineBoilerFrameJoin(s, dir)
+      val lb = lineBoilerFrame(s, dir)
       val norm = graft.ext.TextOps.foldText(col("text_clean"))
       lb.select(col("doc_id"),
         col("n_kept").as("n_lines_kept"),
@@ -311,26 +299,11 @@ object CurationQueries {
     // E261: Dolma-style DOMAIN blocklist over the canonical-URL tier
     // (VERDICT r12 #7) — the most common web-curation gate after
     // dedup: canonicalize, extract the registered domain, verdict
-    // against the banned-domain set. Literal tier: the list folds
-    // into the plan as an InSet probe (right for bounded curated
-    // lists).
+    // against the banned-domain set. The list folds into the plan as
+    // an InSet probe, the same shape as docs_blocklist.
     "docs_domain_blocklist" -> ((s, dir) =>
       domainFrame(s, dir).select(col("doc_id"), col("domain"),
         col("domain").isInCollection(BlockDomains).as("blocked"))),
-
-    // E261: the dictionary-as-DATA tier (the E186 precedent) — the
-    // SAME verdict via a broadcast left join, for blocklists updated
-    // without re-planning, shared as tables, or too large for the
-    // plan. Same oracle as the literal tier; equality pinned in
-    // CurationGateSpec.
-    "docs_domain_blocklist_join" -> ((s, dir) => {
-      import s.implicits._
-      val bl = broadcast(
-        BlockDomains.toDF("domain").withColumn("hit", lit(true)))
-      domainFrame(s, dir).join(bl, Seq("domain"), "left")
-        .select(col("doc_id"), col("domain"),
-          coalesce(col("hit"), lit(false)).as("blocked"))
-    }),
 
     // Deterministic Bernoulli(0.25) sample — same rows on every run,
     // every engine, every partitioning.
@@ -675,12 +648,10 @@ object CurationQueries {
     // scan as literals (a broadcast in spirit — zero shuffle, zero
     // join; Catalyst rewrites the IN to an O(1)-probe InSet), the
     // per-row work is one pass over the token array plus one
-    // contains() per phrase. SCALING.md ("Blocklist tiers") records
-    // the measured crossover vs the join tier (E186): the literal fold
-    // wins at every size through 10⁵ entries (InSet probes are flat;
-    // only the plan-resident list grows) — the join tier's case is a
-    // dictionary too large or too DYNAMIC to live in the plan
-    // (updated without re-deploying the query), not raw speed.
+    // contains() per phrase. SCALING.md ("Blocklist tiers") measured
+    // this literal fold 1.1–4.4× faster than a broadcast semi-join at
+    // every size from 10 to 10⁵ entries (InSet probes are flat; only
+    // the plan-resident list grows).
     "docs_blocklist" -> ((s, dir) => {
       val ws = TextOps.tokens(col("text"))
       val termHits = size(filter(array_distinct(ws),
@@ -946,48 +917,6 @@ object CurationQueries {
           round(col("pw") / col("z"), 6).as("weight"))
     }),
 
-    // E186: the dictionary-as-DATA blocklist tier — the SAME verdict
-    // as E177's literal-folded projection, but with doc tokens (and
-    // adjacent-bigram phrases) semi-joined against a broadcast
-    // blocklist table. SCALING.md ("Blocklist tiers") records the
-    // literal tier measured faster through 10⁵ entries (InSet probes
-    // are O(1)), so this tier's case is OPERATIONAL, not raw speed: a
-    // dictionary updated without re-planning the query, shared across
-    // jobs as a table, or too large to serialize into every task's
-    // plan. Candidate rows are DISTINCT doc terms, so the join input is
-    // bounded by vocabulary-per-doc, not token count. Equality with
-    // docs_blocklist is pinned in CurationGateSpec — same oracle SQL,
-    // so the driver hashes both against the same truth.
-    "docs_blocklist_join" -> ((s, dir) => {
-      import s.implicits._
-      val docs = Tables.documents(s, dir)
-      val terms = broadcast(BlockTerms.toDF("term"))
-      val phrases = broadcast(BlockPhrases.toDF("phrase"))
-      val ws = TextOps.tokens(col("text"))
-      val termHits = docs
-        .select(col("doc_id"), explode(array_distinct(ws)).as("term"))
-        .join(terms, "term")
-        .groupBy("doc_id").agg(count(lit(1)).cast("int").as("th"))
-      val bigrams = expr(
-        "transform(sequence(1, size(ws) - 1), i -> " +
-          "concat(ws[i - 1], ' ', ws[i]))")
-      val phraseHits = docs
-        .select(col("doc_id"), ws.as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(col("doc_id"),
-          explode(array_distinct(bigrams)).as("phrase"))
-        .join(phrases, "phrase")
-        .groupBy("doc_id").agg(count(lit(1)).cast("int").as("ph"))
-      docs.select(col("doc_id"))
-        .join(termHits, Seq("doc_id"), "left")
-        .join(phraseHits, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("th"), lit(0)).as("n_term_hits"),
-          coalesce(col("ph"), lit(0)).as("n_phrase_hits"))
-        .withColumn("blocked",
-          col("n_term_hits") + col("n_phrase_hits") > 0)
-    }),
-
     // E187: PSI drift audit — Population Stability Index between a
     // reference and a current corpus slice (doc_id parity stands in
     // for two crawl epochs) over fixed-width score bins:
@@ -1168,7 +1097,7 @@ object CurationQueries {
   val WebMinTokens = 20
 
   /** E233's extracted kept-lines ARRAY per doc (decoded visible text,
-    * document order) — the shared front end of both E236 tiers. The
+    * document order) — the front end of [[lineBoilerFrame]]. The
     * array is carried straight from `extract`'s struct instead of
     * re-splitting `text_clean` on '\n': a re-split manufactured a
     * phantom single '' line for a zero-kept doc (ADVICE r12).
@@ -1181,49 +1110,19 @@ object CurationQueries {
       .localCheckpoint(false) // feeds the frequency agg AND the rewrite
 
   /** The E236 chained extract → line-frequency-drop frame, shared by
-    * docs_line_boilerplate and LineBoilerSpec's tier-equality pin —
-    * the InSet TIER: the df ≥ [[LineBoilerDf]] digest set collects to
-    * the driver and rides back as an InSet probe. Correct ONLY while
-    * the boilerplate set is bounded (a curated template dictionary, a
-    * single-site crawl); on open web text the cross-document-repeated
-    * line set is corpus-sized and this tier driver-OOMs by
-    * construction — production callers use [[lineBoilerFrameJoin]]
-    * (VERDICT r12 #1; the E186 two-tier precedent: one truth, two
-    * strategies, crossover measured in SCALING.md).
+    * docs_line_boilerplate and docs_web_pipeline: lines explode WITH
+    * POSITION, the df ≥ [[LineBoilerDf]] digest table stays
+    * distributed and boilerplate membership is a LEFT ANTI join on the
+    * 32-char digest (AQE broadcasts it when small, shuffles when the
+    * template set is web-scale — no driver collect anywhere), then
+    * each doc re-assembles by sorting its surviving (position, line)
+    * structs. Docs whose every line dropped — or that kept zero lines
+    * at extraction — re-enter via a left join on the extract frame
+    * with '' / 0 defaults, matching the oracle's output shape.
+    * Shuffle widths: digests + positions + surviving line text (the
+    * re-assembly must move kept text once).
     */
-  private[queries] def lineBoilerFrame(s: SparkSession, dir: String): DataFrame = {
-    val ex = extractedLines(s, dir)
-    val boiler = ex
-      .select(col("doc_id"), explode(col("lines")).as("line"))
-      .groupBy(md5(col("line")).as("dig"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .filter(col("df") >= LineBoilerDf)
-      .select("dig").collect().map(_.getString(0)).toSeq
-    val keepLine: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (boiler.isEmpty) _ => lit(true)
-      else l => !md5(l).isInCollection(boiler)
-    val kept = filter(col("lines"), keepLine)
-    ex.select(col("doc_id"),
-      array_join(kept, "\n").as("text_clean"),
-      size(kept).cast("long").as("n_kept"),
-      (size(col("lines")) - size(kept)).cast("long").as("n_dropped"))
-  }
-
-  /** The E236 JOIN tier (VERDICT r12 #1) — the scale-safe strategy for
-    * the same truth: lines explode WITH POSITION, the df ≥
-    * [[LineBoilerDf]] digest table stays distributed and boilerplate
-    * membership is a LEFT ANTI join on the 32-char digest (AQE
-    * broadcasts it when small, shuffles when the template set is
-    * web-scale — no driver collect anywhere), then each doc
-    * re-assembles by sorting its surviving (position, line) structs.
-    * Docs whose every line dropped — or that kept zero lines at
-    * extraction — re-enter via a left join on the extract frame with
-    * '' / 0 defaults, so both tiers and the oracle agree on output
-    * shape. Shuffle widths: digests + positions + surviving line text
-    * (the re-assembly must move kept text once; the InSet tier avoids
-    * that at the price of the driver set).
-    */
-  private[queries] def lineBoilerFrameJoin(s: SparkSession, dir: String): DataFrame = {
+  private def lineBoilerFrame(s: SparkSession, dir: String): DataFrame = {
     val ex = extractedLines(s, dir)
     val lx = ex
       .select(col("doc_id"), posexplode(col("lines")).as(Seq("i", "line")))
@@ -1293,13 +1192,6 @@ object CurationQueries {
     */
   private val BlockTerms = Seq("slow", "stream")
   private val BlockPhrases = Seq("big table", "fast merge")
-  // docs_blocklist_join generates adjacent-token BIGRAMS as its join
-  // key, so every phrase must be exactly two tokens — a 3-word entry
-  // would silently diverge the join tier from the literal tier (and
-  // from the shared oracle). Fail fast at class-load instead.
-  require(BlockPhrases.forall(_.split(" ").length == 2),
-    s"BlockPhrases must all be 2-token bigrams (join tier builds " +
-      s"bigram keys only): $BlockPhrases")
 
   // -------------------------------------------------------------------
   // queries (continued): collocations
@@ -1433,7 +1325,7 @@ object CurationQueries {
     */
   /** The E116 canonicalization chain as a full `WITH` prefix ending at
     * `dom(doc_id, url, canonical, domain)` — shared by the
-    * docs_url_canonical oracle and the E261 domain-blocklist tiers.
+    * docs_url_canonical and docs_domain_blocklist oracles.
     * Raw (non-interpolated) string: the regexes carry `\?`/`\.` that
     * an s-interpolator would mangle (the repo's documented escape
     * trap).
@@ -1481,8 +1373,8 @@ object CurationQueries {
       |           '://(?:[^/?#:]*\.)?([^./?#:]+\.[^./?#:]+)(?::[0-9]+)?(?:[/?#]|$)', 1) AS domain
       |  FROM c)""".stripMargin
 
-  /** E261 shared truth for both blocklist tiers — IN-list generated
-    * from [[BlockDomains]].
+  /** E261 docs_domain_blocklist truth — IN-list generated from
+    * [[BlockDomains]].
     */
   private lazy val domainBlocklistSql: String =
     urlChainCte + "\nSELECT doc_id, domain, domain IN (" +
@@ -1517,7 +1409,7 @@ object CurationQueries {
 
   /** The E116 deterministic messy-URL planting (uppercase host,
     * default port, trailing slash, utm params, fragment) — shared by
-    * docs_url_canonical and the E261 domain-blocklist tiers.
+    * docs_url_canonical and docs_domain_blocklist.
     */
   private[queries] def plantedUrl: org.apache.spark.sql.Column =
     concat(
@@ -1724,8 +1616,7 @@ object CurationQueries {
 
   /** E236's line-frequency drop as CTEs over [[htmlChainSql]]'s `kp`,
     * ending at `lb(doc_id, text_clean, n_kept, n_dropped)` — shared by
-    * the standalone rows (BOTH tiers: the InSet and the join strategy
-    * hash against this one truth) and the E239 composition. `lb` is
+    * docs_line_boilerplate and the E239 composition. `lb` is
     * built by LEFT JOIN from the per-doc `cl` frame, not by grouping
     * the exploded lines: a doc whose extraction kept ZERO lines has no
     * exploded rows at all and would otherwise vanish from the output
@@ -1775,17 +1666,9 @@ object CurationQueries {
     // E236: the same chain, then per-line document frequency over the
     // extracted lines and the cross-corpus boilerplate drop. The
     // Spark side groups md5 digests (shuffle width) where the oracle
-    // groups raw lines — equivalent modulo md5 collision, the tier's
+    // groups raw lines — equivalent modulo md5 collision, the row's
     // accepted birthday budget.
     "docs_line_boilerplate" ->
-      s"""WITH $htmlChainSql,
-         |$lineBoilerSql
-         |SELECT doc_id, text_clean, n_kept, n_dropped FROM lb""".stripMargin,
-
-    // E255: the join tier hashes against the IDENTICAL truth — same
-    // SQL, so the driver machine-checks tier equality independently
-    // of LineBoilerSpec's exceptAll pin.
-    "docs_line_boilerplate_join" ->
       s"""WITH $htmlChainSql,
          |$lineBoilerSql
          |SELECT doc_id, text_clean, n_kept, n_dropped FROM lb""".stripMargin,
@@ -1828,11 +1711,9 @@ object CurationQueries {
     "docs_url_canonical" ->
       (urlChainCte + "\nSELECT doc_id, url, canonical, domain FROM dom"),
 
-    // E261: both tiers hash against this one truth (the blocklist is
-    // generated from the same BlockDomains constant the Spark tiers
-    // fold/join).
+    // E261: the blocklist is generated from the same BlockDomains
+    // constant the Spark row folds.
     "docs_domain_blocklist" -> domainBlocklistSql,
-    "docs_domain_blocklist_join" -> domainBlocklistSql,
     "docs_kanon_audit" ->
       s"""SELECT lang, source, n_chars // $KanonBucket AS size_bucket,
          |       CAST(count(*) AS BIGINT) AS n,
@@ -2413,10 +2294,6 @@ object CurationQueries {
          |       round(pw / z.z, 6) AS weight
          |FROM p CROSS JOIN z""".stripMargin,
 
-    // Same truth as docs_blocklist: the join tier must be
-    // hash-identical to the literal tier, so it shares the oracle.
-    "docs_blocklist_join" -> blocklistSql,
-
     "docs_quality_psi" ->
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
          |           FROM documents),
@@ -2531,10 +2408,7 @@ object CurationQueries {
   private def inList(words: Seq[String]): String =
     words.map(w => s"'${w.replace("'", "''")}'").mkString("(", ", ", ")")
 
-  /** The blocklist truth in DuckDB — shared verbatim by the literal
-    * tier (docs_blocklist) and the join tier (docs_blocklist_join):
-    * one oracle, two physical strategies, identical hashes.
-    */
+  /** The docs_blocklist truth in DuckDB. */
   private def blocklistSql: String = {
     val phraseCases = BlockPhrases
       .map(p => s"(CASE WHEN contains(' ' || text || ' ', ' $p ') " +

@@ -32,22 +32,20 @@ object DedupQueries {
   private val MaxHamming = 3
 
 
-  /** Shared duplicated-span FIND artifacts per digest tier (r16): the
-    * excision rows re-ran the whole find stage (gram shuffle + islands
-    * merge) that their sibling find rows already compute — the
-    * artifact is the find output (doc_id, span_start, span_end,
-    * span_tokens — longs/ints, parquet-exact), built once per fixture
-    * state; the find rows (docs_dup_spans / _fast / docs_decontam_spans)
-    * stay LIVE as the definitional tier. Production runs exactly this
-    * split: find once per corpus snapshot, cut per rewrite batch.
+  /** Shared duplicated-span FIND artifacts (r16): the excision rows
+    * re-ran the whole find stage (gram shuffle + islands merge) that
+    * their sibling find rows already compute — the artifact is the
+    * find output (doc_id, span_start, span_end, span_tokens —
+    * longs/ints, parquet-exact), built once per fixture state; the
+    * find rows (docs_dup_spans / docs_decontam_spans) stay LIVE as the
+    * definitional rows. Production runs exactly this split: find once
+    * per corpus snapshot, cut per rewrite batch.
     */
-  private def dupSpansShared(s: SparkSession, dir: String,
-      fast: Boolean): DataFrame = {
-    val key = if (fast) "dup_spans_fast" else "dup_spans_md5"
-    val p = Materialize.once(key, dir) { out =>
+  private def dupSpansShared(s: SparkSession, dir: String): DataFrame = {
+    val p = Materialize.once("dup_spans", dir) { out =>
       graft.ext.SpanDedup.duplicatedSpans(
-        Tables.documents(s, dir), "doc_id", "text", SpanN, 2,
-        fastKeys = fast).write.parquet(s"$out/spans.parquet")
+        Tables.documents(s, dir), "doc_id", "text", SpanN, 2)
+        .write.parquet(s"$out/spans.parquet")
     }
     s.read.parquet(s"$p/spans.parquet")
   }
@@ -354,32 +352,19 @@ object DedupQueries {
     // appears in another document — the granularity used to CUT
     // duplicated passages out of kept documents. Grams are built
     // scan-side (transform over the token array, no explode+window),
-    // the frequency shuffle carries md5(gram) keys, and span merging
-    // is a per-document gaps-and-islands window.
+    // the frequency shuffle carries xxhash64(gram) keys, and span
+    // merging is a per-document gaps-and-islands window. The oracle
+    // keys grams by md5, so the hash check asserts that the 64-bit
+    // keys give exactly the right spans (a key collision is the only
+    // way they could differ; SpanDedup states the budget).
     "docs_dup_spans" -> ((s, dir) =>
       graft.ext.SpanDedup.duplicatedSpans(
         Tables.documents(s, dir), "doc_id", "text", SpanN, 2)),
 
-    // E214: the PRODUCTION span-find tier — xxhash64 gram keys instead
-    // of md5 (round-10 verdict #4). The md5 row above stays as the
-    // oracle-reproducible-digest tier; this registers the fast path
-    // the 100 TB deployment runs (the per-call digest gap is ~60× and
-    // the whole query measured 1.4× at sf0.1, where the gram shuffle
-    // dominates). One truth, two strategies (the E186 pattern): a
-    // 64-bit gram-key collision is the only way the outputs can
-    // differ (~G²/2⁶⁵ — the MinHash tier's accepted birthday budget),
-    // so the oracle IS the md5 tier's SQL and the hash check asserts
-    // the equality instead of assuming it; SpanDedupSpec pins it
-    // row-for-row on the fixtures too.
-    "docs_dup_spans_fast" -> ((s, dir) =>
-      graft.ext.SpanDedup.duplicatedSpans(
-        Tables.documents(s, dir), "doc_id", "text", SpanN, 2,
-        fastKeys = true)),
-
     // E206: span EXCISION — E164's find stage completed into the cut
     // stage Lee et al. built it for: every doc rewritten with its
     // duplicated spans removed (cut-every-occurrence policy; see
-    // SpanDedup.exciseSpans for why retain-one is not distributed-
+    // SpanDedup.exciseFromSpans for why retain-one is not distributed-
     // friendly), with funnel accounting (n_spans, n_tokens,
     // tokens_cut). Span-free docs pass through byte-identical.
     "docs_span_excise" -> ((s, dir) =>
@@ -387,7 +372,7 @@ object DedupQueries {
       // find stage stays live in docs_dup_spans)
       graft.ext.SpanDedup.exciseFromSpans(
         Tables.documents(s, dir), "doc_id", "text",
-        dupSpansShared(s, dir, fast = false))),
+        dupSpansShared(s, dir))),
 
     // E240: SPAN-LEVEL eval decontamination — the surgical variant of
     // E69's doc-level overlap flag: for every training doc, the
@@ -411,17 +396,6 @@ object DedupQueries {
         Tables.documents(s, dir), "doc_id", "text",
         col("doc_id") % CurationQueries.DecontamMod === 0,
         decontamSpansShared(s, dir))),
-
-    // E231: the excision stage on the E214 xxhash64 production keys —
-    // completing the fast tier end to end (find AND cut). Same
-    // one-truth oracle as the md5 row: a 64-bit gram-key collision is
-    // the only possible divergence, so the hash check asserts the
-    // rewritten corpus is byte-identical under either digest.
-    "docs_span_excise_fast" -> ((s, dir) =>
-      // r16: cut over the shared fast-tier find artifact
-      graft.ext.SpanDedup.exciseFromSpans(
-        Tables.documents(s, dir), "doc_id", "text",
-        dupSpansShared(s, dir, fast = true))),
 
     // E174: MinHash estimator accuracy audit — the sketch-tolerance
     // row for the dedup tier (the E66/E74/E92 pattern): for every
@@ -692,10 +666,9 @@ object DedupQueries {
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
        |sh AS (SELECT doc_id, CAST($simhashExpr AS BIGINT) AS simhash FROM d)""".stripMargin
 
-  /** The one span-find truth both the md5 (E164) and xxhash64 (E214)
-    * tiers are checked against: md5 gram keys (the only digest DuckDB
-    * can reproduce), cross-document distinct-count cut, ≤ n island
-    * chaining.
+  /** The E164 span-find truth: md5 gram keys (a 128-bit key DuckDB
+    * computes independently of Spark's xxhash64), cross-document
+    * distinct-count cut, ≤ n island chaining.
     */
   private lazy val dupSpansSql: String =
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -720,8 +693,7 @@ object DedupQueries {
        |       CAST(max(pos) + $SpanN - min(pos) AS INTEGER) AS span_tokens
        |FROM i GROUP BY doc_id, isl""".stripMargin
 
-  /** One excision truth for both the md5 (E206) and xxhash64
-    * (E231) cut tiers (same argument as [[dupSpansSql]]).
+  /** The E206 excision truth (same gram keys as [[dupSpansSql]]).
     */
   private lazy val exciseSpansSql: String =
     s"""WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS ws
@@ -1139,25 +1111,15 @@ object DedupQueries {
          |FROM t, taus, cfg WHERE j >= tau GROUP BY config, tau""".stripMargin
     },
 
-    // Mirrors SpanDedup.duplicatedSpans: same md5 gram key, same
-    // cross-document distinct-count cut, same ≤ n island chaining.
+    // Mirrors SpanDedup.duplicatedSpans: same cross-document
+    // distinct-count cut, same ≤ n island chaining; grams are keyed by
+    // md5 here and by xxhash64 on the Spark side.
     "docs_dup_spans" -> dupSpansSql,
-
-    // E214: the xxhash64 production tier answers the SAME question —
-    // its oracle is the md5 tier's SQL, so the hash check asserts the
-    // two key strategies agree span-for-span (a 64-bit collision is
-    // the only possible divergence; E186's one-truth-two-strategies
-    // pattern).
-    "docs_dup_spans_fast" -> dupSpansSql,
 
     // Same span chain as docs_dup_spans, then the cut replayed flat:
     // positions inside any span anti-joined away, survivors re-joined
     // in position order. Docs with no spans take the original text
     // verbatim (matching Spark's no-round-trip branch); a doc whose
     // every token is cut yields '' via the coalesce.
-    "docs_span_excise" -> exciseSpansSql,
-
-    // E231: the fast-key excision answers the same question -- the
-    // oracle IS the md5 tier's SQL (E214 pattern, cut stage).
-    "docs_span_excise_fast" -> exciseSpansSql)
+    "docs_span_excise" -> exciseSpansSql)
 }

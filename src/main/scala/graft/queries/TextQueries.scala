@@ -452,7 +452,7 @@ object TextQueries {
     // argmax tie-breaks and leftmost-greedy overlap resolution — are
     // value-checked end to end, not just shape-checked.
     "docs_bpe_merges" -> ((s, dir) => {
-      val (rules, _) = Bpe.train(Tables.documents(s, dir))
+      val (rules, _) = Bpe.train(Tables.documents(s, dir), Bpe.Rounds, batch = 1)
       s.createDataFrame(rules)
         .select(col("rank").as("merge_rank"), col("lhs"), col("rhs"),
           concat(col("lhs"), col("rhs")).as("merged"),
@@ -464,13 +464,13 @@ object TextQueries {
     // single vocabulary aggregation yields the top-B ranking, and the
     // longest pairwise symbol-DISJOINT prefix is applied at once, so
     // 30k merges cost ~30k/B corpus-vocabulary passes instead of 30k
-    // (Bpe.trainBatched Scaladoc states the law). Disjoint merges
+    // (Bpe.train's Scaladoc states the law). Disjoint merges
     // commute, so the oracle replays the identical selection in SQL —
     // ranking, conflict cut, simultaneous rebuild — and value-checks
     // every accepted rule; BpeSpec additionally pins batched ≡
     // sequential on this fixture and at batch = 1 structurally.
     "docs_bpe_merges_batched" -> ((s, dir) => {
-      val (rules, _) = Bpe.trainBatched(Tables.documents(s, dir),
+      val (rules, _) = Bpe.train(Tables.documents(s, dir),
         BpeBatchRounds, BpeBatch)
       s.createDataFrame(rules)
         .select(col("rank").as("merge_rank"), col("lhs"), col("rhs"),
@@ -488,7 +488,7 @@ object TextQueries {
     // replay the rule list via bpe_merge).
     "docs_bpe_tokenize" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val (_, words) = Bpe.train(docs)
+      val (_, words) = Bpe.train(docs, Bpe.Rounds, batch = 1)
       val rep = words.select(col("word"), size(col("sym")).cast("long").as("n_sub"))
       val dsub = docs
         .select(col("doc_id"), explode(TextOps.bpeTokens(col("text"))).as("word"))

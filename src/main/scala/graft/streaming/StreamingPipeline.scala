@@ -112,19 +112,10 @@ object StreamingPipeline {
       .drop(s"_r_$keyCol")
   }
 
-  /** Built-in streaming dedup: `dropDuplicatesWithinWatermark` keeps
-    * the first row per key and — unlike plain `dropDuplicates`, whose
-    * key state grows forever on a stream — evicts a key's state once
-    * the watermark passes its event time + lateness. This is the
-    * engine-managed tier of streaming dedup; [[dedupStream]] remains
-    * the arbitrary-state tier (custom values, TTL semantics, replay
-    * suppression beyond the watermark horizon).
-    */
-  def dedupWithinWatermark(df: DataFrame, keys: Seq[String], tsCol: String,
-                           lateness: String): DataFrame =
-    df.withWatermark(tsCol, lateness).dropDuplicatesWithinWatermark(keys)
-
-  /** Deterministic batch twin of [[dedupWithinWatermark]]: finalized-
+  /** Deterministic batch twin of Spark's streaming
+    * `withWatermark(ts, lateness).dropDuplicatesWithinWatermark(keys)`
+    * (which keeps the first row per key and evicts a key's state once
+    * the watermark passes its event time + lateness): finalized-
     * horizon dedup — the earliest row (ties broken by `tieCol`) per key
     * within each epoch-aligned tumbling `horizon` bucket survives.
     *
@@ -149,16 +140,6 @@ object StreamingPipeline {
       .agg(min_by(payload, struct(col(tsCol), col(tieCol))).as("__first"))
       .select(df.columns.map(c => col(s"__first.$c")): _*)
   }
-
-  /** Stream-static enrichment: per micro-batch join of the stream
-    * against a static dimension table. Stateless — no watermark, no
-    * state store; the static side is broadcast (small dims), so each
-    * micro-batch is a map-side hash join and the stream never
-    * shuffles. This is the streaming twin of the batch broadcast-dim
-    * joins in RelationalQueries.
-    */
-  def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
 
   /** Idempotent `foreachBatch` parquet sink: each micro-batch writes a
     * `batch_id=<id>` partition with DYNAMIC partition overwrite, so a
@@ -610,26 +591,4 @@ object StreamingPipeline {
         new HoltProcessor(alpha, oneMinusAlpha, beta, oneMinusBeta),
         TimeMode.None(), OutputMode.Update())
   }
-
-  /** A stopped (or live) streaming checkpoint's state store as a BATCH
-    * DataFrame — Spark 4's `statestore` data source (SPARK-45511). The
-    * operational escape hatch for stateful streaming at scale: query
-    * which keys hold state, how state distributes over partitions
-    * (skew hunting), or join state against a reference table — all
-    * without touching the running query or writing RocksDB tooling.
-    * Options pass through (`batchId` for time travel to an earlier
-    * micro-batch, `operatorId`/`storeName` when a query has several
-    * stateful operators, `joinSide` for stream-stream join state).
-    */
-  def stateSnapshot(spark: SparkSession, checkpoint: String,
-                    options: Map[String, String] = Map.empty): DataFrame =
-    spark.read.format("statestore").options(options).load(checkpoint)
-
-  /** Companion discovery surface: which stateful operators and stores a
-    * checkpoint contains, with their batch-id range — what you read
-    * FIRST to know the valid `operatorId`/`storeName`/`batchId` values
-    * for [[stateSnapshot]].
-    */
-  def stateMetadata(spark: SparkSession, checkpoint: String): DataFrame =
-    spark.read.format("state-metadata").load(checkpoint)
 }

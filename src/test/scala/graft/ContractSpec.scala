@@ -7,6 +7,49 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ContractSpec extends AnyFunSuite {
 
+  /** Every group of rows whose oracle SQL is the same text, with why
+    * each keeps its own row: a shared oracle means the rows answer one
+    * question, so each row must gate a feature the others do not.
+    */
+  private val SharedOracles: Map[Set[String], String] = Map(
+    Set("cdc_parse", "cdc_parse_avro", "cdc_parse_sql") ->
+      "one decode through three input surfaces: JSON, Confluent Avro, SQL",
+    Set("cdc_route", "cdc_route_par", "cdc_route_typed") ->
+      "one route through the DataFrame, repartitioned and typed Dataset plans",
+    Set("cdc_compact", "cdc_merge_apply") ->
+      "cdc_merge_apply gates MergeInto + TxTable",
+    Set("events_idempotent_replay", "events_txsink_replay") ->
+      "two sinks: dynamic partition overwrite and the TxTable commit log",
+    Set("docs_dup_clusters", "docs_dup_clusters_star") ->
+      "two connected-components fixpoints, each faster on some graph shape",
+    Set("rel_top_orders_native", "rel_top_orders_rewrite") ->
+      "the TopKPerKey node and the optimizer rule that plans it",
+    Set("emb_pca_merge", "emb_pca_top") ->
+      "PCA from merged shard moments against the one-pass fit",
+    Set("emb_graph_persisted", "emb_graph_search") ->
+      "the persisted graph index round trip",
+    Set("emb_persisted_topk", "emb_topk_ivfpq_residual") ->
+      "the persisted IVF-PQ index round trip")
+
+  /** Twin rows retired because one tier serves the operator; none of
+    * these may come back as a second row on a shared oracle.
+    */
+  private val RetiredTwins = Set(
+    "docs_blocklist_join", "docs_domain_blocklist_join",
+    "docs_line_boilerplate_join", "docs_dup_spans_fast",
+    "docs_span_excise_fast")
+
+  test("rows that share an oracle are listed with the feature each gates") {
+    val groups = SparkEntry.oracleSql.toSeq.groupMap(_._2)(_._1).values
+      .filter(_.size > 1).map(_.toSet).toSet
+    val unlisted = groups -- SharedOracles.keySet
+    assert(unlisted.isEmpty,
+      s"rows share an oracle without a listed reason: $unlisted")
+    val stale = SharedOracles.keySet -- groups
+    assert(stale.isEmpty, s"listed groups no longer share an oracle: $stale")
+    assert(RetiredTwins.intersect(SparkEntry.queries.keySet).isEmpty)
+  }
+
   test("every registered query has an oracle and every oracle a query") {
     // A query without an oracle silently downgrades to the driver's
     // weaker rows-only check; an oracle without a query is dead SQL

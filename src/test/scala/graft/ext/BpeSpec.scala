@@ -49,7 +49,7 @@ class BpeSpec extends SparkSpec {
     // round 4: (low,er):1 -> (low,er), fully merging "lower";
     // round 5: no pairs left -> exhausted
     val docs = Seq("low low lower").toDF("text")
-    val (rules, words) = Bpe.train(docs, rounds = 8)
+    val (rules, words) = Bpe.train(docs, rounds = 8, batch = 1)
     assert(rules.map(r => (r.rank, r.lhs, r.rhs, r.pairCount)) == Seq(
       (1, "l", "o", 3L), (2, "lo", "w", 3L),
       (3, "e", "r", 1L), (4, "low", "er", 1L)))
@@ -66,7 +66,7 @@ class BpeSpec extends SparkSpec {
 
   test("train stops early when the vocabulary is fully merged") {
     val docs = Seq("ab ab").toDF("text")
-    val (rules, words) = Bpe.train(docs, rounds = 10)
+    val (rules, words) = Bpe.train(docs, rounds = 10, batch = 1)
     assert(rules.map(r => (r.lhs, r.rhs)) == Seq(("a", "b")))
     assert(words.select("sym").as[Seq[String]].head() == Seq("ab"))
   }
@@ -75,7 +75,7 @@ class BpeSpec extends SparkSpec {
       "word below 1 symbol or above its character count, and later " +
       "rounds monotonically coarsen the segmentation") {
     val docs = Tables.documents(spark, sfDir)
-    val (rules, words) = Bpe.train(docs)
+    val (rules, words) = Bpe.train(docs, Bpe.Rounds, batch = 1)
     assert(rules.nonEmpty && rules.map(_.rank) == (1 to rules.size))
     // pair counts never increase in rank order is NOT guaranteed by
     // BPE (a merge can create a more frequent pair), but bounds are:
@@ -92,8 +92,8 @@ class BpeSpec extends SparkSpec {
   test("batched training at batch = 1 IS sequential training " +
       "(structural equivalence: the prefix rule degenerates to argmax)") {
     val docs = Seq("low low lower", "ab ab").toDF("text")
-    val (seq, sw) = Bpe.train(docs, rounds = 6)
-    val (bat, bw) = Bpe.trainBatched(docs, batchRounds = 6, batch = 1)
+    val (seq, sw) = BpeSequential.train(docs, rounds = 6)
+    val (bat, bw) = Bpe.train(docs, rounds = 6, batch = 1)
     assert(bat == seq)
     assert(sw.orderBy("word").collect().toSeq ==
       bw.orderBy("word").collect().toSeq)
@@ -103,7 +103,7 @@ class BpeSpec extends SparkSpec {
       "see comment; value correctness is docs_bpe_merges_batched's " +
       "own oracle, independent of this)") {
     val docs = Tables.documents(spark, sfDir)
-    val (bat, _) = Bpe.trainBatched(docs,
+    val (bat, _) = Bpe.train(docs,
       graft.queries.TextQueries.BpeBatchRounds,
       graft.queries.TextQueries.BpeBatch)
     assert(bat.nonEmpty)
@@ -117,7 +117,7 @@ class BpeSpec extends SparkSpec {
     // diverge. If fixture drift ever trips this assertion, that is the
     // known-benign divergence, not a code bug — the batched tier's
     // values stay oracle-checked by docs_bpe_merges_batched either way.
-    val (seq, _) = Bpe.train(docs, rounds = bat.size)
+    val (seq, _) = BpeSequential.train(docs, rounds = bat.size)
     assert(bat == seq,
       "batched trace diverged from sequential on this fixture — " +
         "expected-possible under fixture drift (see NOTE above), " +

@@ -25,7 +25,8 @@ class DecontamSpanSpec extends SparkSpec {
     // doc 1: "p q r s t" = positions 2..6; 4-gram hits at pos 2 and 3
     // → island [2, 3+n-1=6], 5 tokens
     assert(spans.toSeq == Seq((1L, 2, 6, 5)), spans.mkString(","))
-    val cut = SpanDedup.decontamExcise(docs, "doc_id", "text", n, pred)
+    val cut = SpanDedup.decontamExciseFromSpans(docs, "doc_id", "text", pred,
+        SpanDedup.contaminationSpans(docs, "doc_id", "text", n, pred))
       .select("doc_id", "text_clean", "n_spans", "tokens_cut")
       .as[(Long, String, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(!cut.contains(0L), "eval doc leaked into the corpus output")
@@ -58,5 +59,18 @@ class DecontamSpanSpec extends SparkSpec {
       assert(r.getLong(0) % graft.queries.CurationQueries.DecontamMod != 0,
         s"span in an eval doc ${r.getLong(0)}")
     }
+  }
+
+  test("fixture: xxhash64 gram keys give exactly the spans of a " +
+      "raw-gram reference") {
+    val fixture = graft.Tables.documents(spark, sfDir)
+    val mod = graft.queries.CurationQueries.DecontamMod
+    val got = SpanDedup.contaminationSpans(fixture, "doc_id", "text",
+        graft.queries.DedupQueries.SpanN, col("doc_id") % mod === 0)
+      .as[(Long, Int, Int, Int)].collect().toSet
+    val exact = SpanRows.contaminated(
+      fixture.select("doc_id", "text").as[(Long, String)].collect().toSeq,
+      graft.queries.DedupQueries.SpanN, _ % mod == 0)
+    assert(exact.nonEmpty && got == exact)
   }
 }

@@ -14,6 +14,10 @@ class SpanDedupSpec extends SparkSpec {
     (3L, "c1 c2 c3 c4 c5 c6 c7 c8 c9 c10")  // no duplicated grams
   ).toDF("doc_id", "text")
 
+  private def excise(d: org.apache.spark.sql.DataFrame, n: Int) =
+    SpanDedup.exciseFromSpans(d, "doc_id", "text",
+      SpanDedup.duplicatedSpans(d, "doc_id", "text", n, 2))
+
   private def spans(n: Int) =
     SpanDedup.duplicatedSpans(docs, "doc_id", "text", n, 2)
       .collect()
@@ -51,21 +55,22 @@ class SpanDedupSpec extends SparkSpec {
     assert(SpanDedup.duplicatedSpans(solo, "doc_id", "text", 4, 2).count() == 0)
   }
 
-  test("fast xxhash64 keys produce the same spans as md5 keys on fixtures") {
+  test("xxhash64 gram keys give exactly the spans of a raw-gram " +
+      "reference on the fixture") {
     val fixture = graft.Tables.documents(spark, sfDir)
-    def spansOf(fast: Boolean) =
-      SpanDedup.duplicatedSpans(fixture, "doc_id", "text", 8, 2, fastKeys = fast)
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-        .toSet
-    val md5Spans = spansOf(false)
-    assert(md5Spans.nonEmpty) // the planted near-dups must share spans
-    assert(spansOf(true) == md5Spans)
+    val got = SpanDedup.duplicatedSpans(fixture, "doc_id", "text", 8, 2)
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+      .toSet
+    val exact = SpanRows.duplicated(
+      fixture.select("doc_id", "text").as[(Long, String)].collect().toSeq, 8, 2)
+    assert(exact.nonEmpty) // the planted near-dups must share spans
+    assert(got == exact)
   }
 
   test("exciseSpans cuts exactly the duplicated tokens and passes " +
       "span-free docs through byte-identical") {
-    val out = SpanDedup.exciseSpans(docs, "doc_id", "text", 8, 2)
+    val out = excise(docs, 8)
       .collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
@@ -81,7 +86,7 @@ class SpanDedupSpec extends SparkSpec {
       (2L, "t1 t2 t3 t4 t5 t6 t7 t8"),
       (3L, "u1 u2 u3 u4 u5 u6 u7 u8")
     ).toDF("doc_id", "text")
-    val out = SpanDedup.exciseSpans(twins, "doc_id", "text", 8, 2)
+    val out = excise(twins, 8)
       .collect().map(r => r.getLong(0) -> (r.getLong(3), r.getString(4))).toMap
     assert(out(1L) == (8L, ""))
     assert(out(2L) == (8L, ""))
@@ -90,7 +95,7 @@ class SpanDedupSpec extends SparkSpec {
 
   test("excision accounting cross-foots on the fixture corpus") {
     val fixture = graft.Tables.documents(spark, sfDir)
-    val rows = SpanDedup.exciseSpans(fixture, "doc_id", "text", 8, 2).collect()
+    val rows = excise(fixture, 8).collect()
     assert(rows.exists(_.getLong(3) > 0)) // the planted dups must cut
     rows.foreach { r =>
       val (nSpans, nTok, cut, clean) =

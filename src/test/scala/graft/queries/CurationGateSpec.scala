@@ -198,26 +198,18 @@ class CurationGateSpec extends SparkSpec {
     }
   }
 
-  test("blocklist: the literal tier and the join tier are row-identical " +
-      "(two physical strategies, one truth)") {
-    val lit0 = CurationQueries.queries("docs_blocklist")(spark, sfDir)
-    val join0 = CurationQueries.queries("docs_blocklist_join")(spark, sfDir)
-    assert(lit0.count() == join0.count())
-    assert(lit0.exceptAll(join0).isEmpty && join0.exceptAll(lit0).isEmpty,
-      "blocklist tiers diverge")
-  }
-
-  test("domain blocklist: the literal tier and the join tier are " +
-      "row-identical, and both verdicts fire (E261)") {
-    val lit0 = CurationQueries.queries("docs_domain_blocklist")(spark, sfDir)
-    val join0 = CurationQueries
-      .queries("docs_domain_blocklist_join")(spark, sfDir)
-    assert(lit0.count() == join0.count())
-    assert(lit0.exceptAll(join0).isEmpty && join0.exceptAll(lit0).isEmpty,
-      "domain blocklist tiers diverge")
-    val blocked = lit0.filter(org.apache.spark.sql.functions.col("blocked"))
-      .count()
-    assert(blocked > 0 && blocked < lit0.count(),
+  test("domain blocklist: blocked is exactly membership of the " +
+      "extracted domain in the list, and both verdicts fire (E261)") {
+    val rows = CurationQueries.queries("docs_domain_blocklist")(spark, sfDir)
+      .collect()
+    assert(rows.length == Tables.documents(spark, sfDir).count())
+    rows.foreach { r =>
+      assert(r.getAs[Boolean]("blocked") ==
+        CurationQueries.BlockDomains.contains(r.getAs[String]("domain")),
+        s"doc ${r.getAs[Long]("doc_id")}: verdict disagrees with the list")
+    }
+    val blocked = rows.count(_.getAs[Boolean]("blocked"))
+    assert(blocked > 0 && blocked < rows.length,
       "domain verdict never fires both ways")
   }
 

@@ -53,19 +53,9 @@ class LineBoilerSpec extends SparkSpec {
     assert(keeps > 0 && keeps < 500, "keep verdict never fires both ways")
   }
 
-  test("tier equality: the InSet tier and the join tier are row-" +
-      "identical (exceptAll both ways empty; VERDICT r12 #1)") {
-    val inset = CurationQueries.queries("docs_line_boilerplate")(spark, sfDir)
-    val join = CurationQueries
-      .queries("docs_line_boilerplate_join")(spark, sfDir)
-    assert(inset.exceptAll(join).isEmpty, "InSet rows missing from join tier")
-    assert(join.exceptAll(inset).isEmpty, "join rows missing from InSet tier")
-  }
-
   test("join tier retains every document: n_kept + n_dropped equals " +
       "the extract line count per doc (no doc lost to the inner agg)") {
-    val out = CurationQueries
-      .queries("docs_line_boilerplate_join")(spark, sfDir)
+    val out = CurationQueries.queries("docs_line_boilerplate")(spark, sfDir)
     val ex = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         size(graft.ext.HtmlExtract.extract(CurationQueries.plantedHtml)

@@ -191,8 +191,8 @@ class StreamingSpec extends SparkSpec {
   test("dropDuplicatesWithinWatermark dedups across batches inside the horizon") {
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     val stream = MemoryStream[(String, java.sql.Timestamp)]
-    val q = StreamingPipeline.dedupWithinWatermark(
-        stream.toDF().toDF("k", "ts"), Seq("k"), "ts", "30 minutes")
+    val q = stream.toDF().toDF("k", "ts")
+      .withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(Seq("k"))
       .writeStream.format("memory").queryName("dedup_wm")
       .outputMode(OutputMode.Append).start()
     try {
@@ -220,8 +220,8 @@ class StreamingSpec extends SparkSpec {
       (6L, "d", t(11, 30)),                     // batch 2: watermark → 11:00
       (7L, "a", t(11, 10)), (8L, "c", t(11, 40))) // batch 3: state evicted, kept
     val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingPipeline.dedupWithinWatermark(
-        stream.toDF().toDF("id", "k", "ts"), Seq("k"), "ts", "30 minutes")
+    val q = stream.toDF().toDF("id", "k", "ts")
+      .withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(Seq("k"))
       .writeStream.format("memory").queryName("dedup_wm_twin")
       .outputMode(OutputMode.Append).start()
     try {
@@ -246,15 +246,15 @@ class StreamingSpec extends SparkSpec {
     val rows = Seq((1L, "click"), (2L, "purchase"), (3L, "click"), (4L, "view"))
     val stream = MemoryStream[(Long, String)]
     stream.addData(rows)
-    val q = StreamingPipeline.enrich(
-        stream.toDF().toDF("event_id", "event_type"), dim, "event_type")
+    val q = stream.toDF().toDF("event_id", "event_type")
+      .join(broadcast(dim), Seq("event_type"), "left")
       .writeStream.format("memory").queryName("enrich_stream")
       .outputMode(OutputMode.Append).start()
     val progress = try { q.processAllAvailable(); q.lastProgress } finally q.stop()
     val got = spark.table("enrich_stream")
       .as[(String, Long, Option[Long])].collect().toSet
-    val expected = StreamingPipeline.enrich(
-        rows.toDF("event_id", "event_type"), dim, "event_type")
+    val expected = rows.toDF("event_id", "event_type")
+      .join(broadcast(dim), Seq("event_type"), "left")
       .as[(String, Long, Option[Long])].collect().toSet
     assert(got == expected && got.size == 4)
     // stateless: no state store operators engaged
@@ -400,21 +400,20 @@ class StreamingSpec extends SparkSpec {
 
     // discovery first: the metadata source names the stateful operator
     // and pins the batch range the store covers
-    val meta = StreamingPipeline.stateMetadata(spark, ckpt)
+    val meta = spark.read.format("state-metadata").load(ckpt)
     val op = meta.select("operatorName").as[String].collect().toSet
     assert(op.exists(_.toLowerCase.contains("flatmapgroupswithstate")),
       s"unexpected stateful operators: $op")
 
     // one state row per dedup key, plain DataFrame ops from here on —
     // this is the skew/size audit surface for production checkpoints
-    val state = StreamingPipeline.stateSnapshot(spark, ckpt)
+    val state = spark.read.format("statestore").load(ckpt)
     val keys = state.select("key.*").collect().map(_.getString(0)).toSet
     assert(keys == Set("k1", "k2", "k3"), s"state keys: $keys")
     assert(state.count() == 3)
 
     // time travel: after batch 0 only the first two keys held state
-    val b0 = StreamingPipeline.stateSnapshot(spark, ckpt,
-      Map("batchId" -> "0"))
+    val b0 = spark.read.format("statestore").option("batchId", "0").load(ckpt)
     assert(b0.select("key.*").collect().map(_.getString(0)).toSet ==
       Set("k1", "k2"))
   }
